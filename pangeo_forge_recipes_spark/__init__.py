@@ -13,6 +13,7 @@ Extension operators for large-scale training-data pipelines live under
 multimodal).
 """
 
+from . import _pyworker
 from .aggregation import (
     XarraySchema,
     combine_xarray_schemas,
@@ -56,3 +57,6 @@ from .types import (
 )
 
 __version__ = "0.1.0"
+
+# inside a PySpark worker: stop re-parsing unchanged zip archives per task
+_pyworker.install_if_worker()

@@ -282,7 +282,7 @@ def combine_references(
     ``transforms.py:428-554``).
 
     ``ref_sets`` must be ordered by concat position (the pipeline guarantees
-    this via its range-partitioned ordered reduction). Per-file arrays become
+    this via its position-bucketed ordered reduction). Per-file arrays become
     consecutive chunks along the concat axis; per-file chunk shapes must be
     uniform (except the final file) — same regular-grid constraint real
     kerchunk has.

@@ -6,7 +6,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def _default_driver_mem() -> str:
+    """min(16g, ~40 % of MemTotal): the heap is pinned and pre-touched
+    (see below), so it must fit the host with room for Python workers."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(16 * 1024, total_mb * 2 // 5)}m"
+    except OSError:
+        pass
+    return "16g"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 
 def get_spark(
@@ -27,7 +42,7 @@ def get_spark(
       attempts racing on one chunk's put would still double network IO
       (see reference non-idempotence note, ``transforms.py:680-684``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus) if cpus.isdigit() else 32, 32))
@@ -52,7 +67,8 @@ def get_spark(
         # oscillate 0.6s..3.4s run to run; pinning the heap (Xms == Xmx +
         # AlwaysPreTouch) removes the jitter at any size. 16g holds the
         # cached sf-scale tables plus 32 concurrent task buffers without
-        # old-gen churn, and pre-touches in ~2s at startup.
+        # old-gen churn; smaller hosts get ~40 % of MemTotal, since a
+        # pre-touched heap larger than free memory fails JVM start.
         .config("spark.driver.memory", _DRIVER_MEM)
         .config(
             "spark.driver.extraJavaOptions",

@@ -356,10 +356,14 @@ def determine_schema(
     while cdims:
         dim = cdims.pop()
         fn = _combine_level_fn(dim)
+        if cdims:
+            outer = outer_index_json("index", F.lit(dim.name), F.lit(dim.operation.name))
+        else:
+            # the outermost level strips the last dim: its outer index is
+            # always the empty Index, so group on a literal, not a UDF
+            outer = F.lit(Index().to_json())
         df = (
-            df.withColumn(
-                "outer", outer_index_json("index", F.lit(dim.name), F.lit(dim.operation.name))
-            )
+            df.withColumn("outer", outer)
             .groupBy("outer")
             .applyInPandas(_single_arg(fn), "index string, schema string")
         )
@@ -1418,11 +1422,13 @@ def combine_references_df(
     preprocess: Optional[Callable[[dict], dict]] = None,
 ) -> dict:
     """Order-preserving two-level reduction of per-file references
-    (reference ``CombineReferences``, ``transforms.py:428-554``): global
-    (min,max,count) of positions → range partitioning by position (the
-    built-in rendition of the reference's manual ``bucket_by_position``) →
-    per-partition ordered local combine → driver-side final merge of the
-    few partials.
+    (reference ``CombineReferences``, ``transforms.py:428-554``). Rows are
+    bucketed by ``floor(pos0 / max_refs_per_merge)`` — the reference's
+    ``bucket_by_position`` — in one ``groupBy().applyInPandas`` shuffle;
+    each bucket sorts its rows by position and combines them into one
+    partial, and the driver merges the partials in ``min_pos`` order.
+    No global statistics or range sampling run first, so the per-file
+    scan runs once. Raises ``ValueError`` when there is nothing to combine.
 
     ``preprocess`` (reference ``mzz_kwargs['preprocess']``,
     ``transforms.py:438-447``) rewrites each per-file refs mapping before
@@ -1444,9 +1450,9 @@ def combine_references_df(
     per leaf refs mapping, at the innermost level."""
     import json as _json
 
-    if len(concat_dims) >= 2:
-        from .kerchunkio import combine_references
+    from .kerchunkio import combine_references
 
+    if len(concat_dims) >= 2:
         def make_slice_combine(inner: str, level: int, keys: List[str], pre):
             # factory closure: applyInPandas requires a 1-arg function,
             # and the loop variables must bind per level
@@ -1480,39 +1486,22 @@ def combine_references_df(
         ]
         return combine_references(ordered, [concat_dims[0]])
 
-    stats = refs_df.agg(
-        F.min("pos0").alias("mn"), F.max("pos0").alias("mx"), F.count("*").alias("ct")
-    ).collect()[0]
-    count = stats["ct"]
-    if count == 0:
-        raise ValueError("no references to combine")
-    nbuckets = max(1, -(-count // max_refs_per_merge))
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kerchunkio import combine_references
-
-        rows: List[Tuple[int, dict]] = []
-        for pdf in batches:
-            rows.extend(
-                (int(p), _json.loads(r)) for p, r in zip(pdf["pos0"], pdf["refs"])
-            )
-        if rows:
-            rows.sort(key=lambda t: t[0])
-            combined = combine_references(
-                [r for _, r in rows], concat_dims, preprocess=preprocess
-            )
-            yield pd.DataFrame(
-                {"min_pos": [rows[0][0]], "refs": [_json.dumps(combined)]}
-            )
+    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = sorted(zip(pdf["pos0"], pdf["refs"]), key=lambda t: int(t[0]))
+        combined = combine_references(
+            [_json.loads(r) for _, r in rows], concat_dims, preprocess=preprocess
+        )
+        return pd.DataFrame(
+            {"min_pos": [int(rows[0][0])], "refs": [_json.dumps(combined)]}
+        )
 
     partials = (
-        refs_df.repartitionByRange(nbuckets, "pos0")
-        .sortWithinPartitions("pos0")
-        .mapInPandas(partial, "min_pos long, refs string")
+        refs_df.groupBy(F.floor(F.col("pos0") / max_refs_per_merge))
+        .applyInPandas(partial, "min_pos long, refs string")
         .collect()
     )
-    from .kerchunkio import combine_references
-
+    if not partials:
+        raise ValueError("no references to combine")
     ordered = [
         _json.loads(r["refs"]) for r in sorted(partials, key=lambda r: r["min_pos"])
     ]

@@ -61,6 +61,57 @@ def test_roundtrip_multivariable_merge(spark, tmp_path):
     assert_equal(result.open(), ds)
 
 
+def test_determine_schema_merge_by_concat(spark, tmp_path):
+    """A 2-D MergeDim × ConcatDim schema reduce: the inner (concat) level
+    groups on the stripped index, the outermost (merge) level on the
+    constant empty index. The global schema equals a serial fold of the
+    same per-level combiners."""
+    import pandas as pd
+
+    import pangeo_forge_recipes_spark.transforms as T
+    from pangeo_forge_recipes_spark import Index
+    from pangeo_forge_recipes_spark.aggregation import schema_from_json, schema_to_json
+    from pangeo_forge_recipes_spark.openers import read_schema
+
+    ds = make_ds(nt=6)
+    for v in ("foo", "bar"):
+        for i in range(3):
+            sub = ds.isel(time=slice(2 * i, 2 * i + 2)).drop_vars(
+                [dv for dv in ds.data_vars if dv != v]
+            )
+            write_npz(str(tmp_path / f"{v}_{i}.npz"), sub)
+    pattern = FilePattern(
+        lambda variable, time: str(tmp_path / f"{variable}_{time}.npz"),
+        MergeDim("variable", keys=["foo", "bar"]),
+        ConcatDim("time", keys=[0, 1, 2], nitems_per_file=2),
+        file_type="npz",
+    )
+    dims = pattern.combine_dim_keys
+    got = T.determine_schema(
+        T.read_schemas_df(T.manifest_df(spark, pattern), "npz"), dims
+    )
+
+    pdf = pd.DataFrame(
+        [
+            (i.to_json(), schema_to_json(read_schema(u, pattern.file_type)))
+            for i, u in pattern.items()
+        ],
+        columns=["index", "schema"],
+    )
+    for dim in reversed(dims):
+        outer = [
+            Index({k: v for k, v in Index.from_json(j).items() if k != dim}).to_json()
+            for j in pdf["index"]
+        ]
+        fn = T._combine_level_fn(dim)
+        pdf = pd.concat([fn(g) for _, g in pdf.groupby(pd.Series(outer), sort=True)])
+    assert len(pdf) == 1
+    assert got == schema_from_json(pdf["schema"].iloc[0])
+    assert got["dims"] == {"time": 6, "lat": 18, "lon": 36}
+    assert got["chunks"] == {"time": {0: 2, 1: 2, 2: 2}}
+    assert set(got["data_vars"]) == {"foo", "bar"}
+
+
 def test_roundtrip_inferred_nitems(spark, tmp_path):
     """Files of UNEVEN length with ``nitems_per_file=None``: per-file sizes
     are discovered by the schema pass and offsets come from its prefix sums

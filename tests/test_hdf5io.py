@@ -208,6 +208,61 @@ def test_kerchunk_pipeline_from_netcdf4(spark, tmp_path):
     assert_equal(open_reference_dataset(ref_path), ds)
 
 
+def _netcdf4_13_steps(tmp_path):
+    ds = make_ds(nt=13)
+    paths = _write_split(tmp_path, ds, 1, compress=True, chunks={"time": 1})
+    pattern = pattern_from_file_sequence(
+        paths, "time", nitems_per_file=1, file_type="netcdf4"
+    )
+    return ds, paths, pattern
+
+
+def test_kerchunk_merge_matches_serial_combine(spark, tmp_path):
+    """13 files with max_refs_per_merge=2 leave an uneven last bucket; the
+    bucketed merge must equal one serial combine in position order, byte
+    for byte."""
+    from pangeo_forge_recipes_spark.kerchunkio import (
+        combine_references,
+        write_reference_json,
+    )
+
+    ds, paths, pattern = _netcdf4_13_steps(tmp_path)
+    ref_path = write_combined_reference(
+        spark, pattern, str(tmp_path), "ref", max_refs_per_merge=2
+    )
+    serial = combine_references(
+        [r for p in paths for r in open_with_kerchunk(p, FileType.netcdf4)],
+        ["time"],
+    )
+    expected = write_reference_json(serial, str(tmp_path / "serial.json"))
+    with open(ref_path, "rb") as got, open(expected, "rb") as want:
+        assert got.read() == want.read()
+    assert_equal(open_reference_dataset(ref_path), ds)
+
+
+def test_kerchunk_merge_job_count_and_empty_manifest(spark, tmp_path):
+    """The 1-D merge is one pass over the per-file scan: at most two jobs
+    (the shuffle map stage and the result stage), so each file is opened
+    once. An empty manifest still raises."""
+    from pangeo_forge_recipes_spark import transforms as T
+
+    _, _, pattern = _netcdf4_13_steps(tmp_path)
+    refs = T.open_with_kerchunk_df(
+        T.manifest_df(spark, pattern), pattern.file_type, concat_dims=["time"]
+    )
+    sc = spark.sparkContext
+    group = "kerchunk-merge-job-count"
+    sc.setJobGroup(group, "combine_references_df 1-D")
+    try:
+        T.combine_references_df(refs, ["time"], max_refs_per_merge=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    with pytest.raises(ValueError, match="no references to combine"):
+        T.combine_references_df(refs.limit(0), ["time"], max_refs_per_merge=2)
+
+
 def test_lzf_stream_roundtrip_and_known_vectors():
     from pangeo_forge_recipes_spark.hdf5io import lzf_compress, lzf_decompress
 
