@@ -58,5 +58,6 @@ from .types import (
 
 __version__ = "0.1.0"
 
-# inside a PySpark worker: stop re-parsing unchanged zip archives per task
+# inside a PySpark worker: freeze the import heap out of the post-task
+# collections and stop re-parsing unchanged zip archives per task
 _pyworker.install_if_worker()

@@ -1,4 +1,18 @@
-"""Per-task import-cache guard for PySpark Python workers.
+"""Per-task fixed costs of PySpark Python workers: a frozen import heap
+and an import-cache guard.
+
+Frozen import heap. After every task ``pyspark.daemon`` runs a full
+``gc.collect()`` in the worker. A worker that has imported pandas,
+pyarrow and this package tracks ~77k objects, almost all of them
+module-level and alive for the life of the process; walking them takes
+26-45 ms per task on a 4-vCPU Xeon VM. :func:`install_if_worker` calls
+``gc.freeze()`` once, when the package is imported in a worker, which
+moves every object alive at that point into the permanent generation:
+later collections skip them and take 0.1-0.5 ms. Objects created
+afterwards, task data included, are collected as before. The freeze is
+done on every Python version.
+
+Import-cache guard.
 
 Every Python task starts in ``pyspark.worker_util.setup_spark_files``,
 which ends with ``importlib.invalidate_caches()``. On Python < 3.12 that
@@ -17,17 +31,23 @@ a redeployed archive) is therefore still picked up; an unchanged one is
 no longer re-parsed per task. Python 3.12 made
 ``zipimporter.invalidate_caches`` lazy, so the guard is not needed there.
 
-The package ``__init__`` installs the guard when it is imported inside a
-worker, detected by ``"pyspark.worker" in sys.modules`` (the daemon runs
-as ``__main__``, so ``pyspark.daemon`` never shows up there). The guard
-is deliberately not installed through ``spark.python.daemon.module``:
-that would import the package, and pandas and pyarrow with it, into the
-daemon processes. The first task of each worker therefore still pays one
-full invalidation; the guard covers every later task of a reused worker.
+The package ``__init__`` freezes and installs the guard when it is
+imported inside a worker, detected by ``"pyspark.worker" in sys.modules``
+(the daemon runs as ``__main__``, so ``pyspark.daemon`` never shows up
+there). Both therefore reach only workers that import the package: a
+worker that runs nothing of it (the pickle-mode pool behind
+``spark.createDataFrame(list)``, say) keeps both per-task costs, which is
+why the package builds driver-side frames with ``session.local_df``. Neither is installed through
+``spark.python.daemon.module``: that would import the package, and pandas
+and pyarrow with it, into the daemon processes. The first task of each
+worker therefore still pays one full invalidation and one full
+collection; the freeze and the guard cover every later task of a reused
+worker.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -71,5 +91,8 @@ def install() -> None:
 
 
 def install_if_worker() -> None:
-    if sys.version_info < (3, 12) and "pyspark.worker" in sys.modules:
+    if "pyspark.worker" not in sys.modules:
+        return
+    gc.freeze()
+    if sys.version_info < (3, 12):
         install()

@@ -750,6 +750,8 @@ def dap4_sequences_to_df(
     gather on the driver)."""
     import pandas as pd
 
+    from .session import local_df
+
     if not urls:
         raise ValueError("urls is empty")
     dmr_text = _fetch(urls[0] + ".dmr", timeout).decode()
@@ -797,9 +799,9 @@ def dap4_sequences_to_df(
                     | ({"__url__": pd.Series(dtype="object")} if include_url else {})
                 )
 
-    urls_df = spark.createDataFrame(
-        [(u,) for u in urls], "url string"
-    ).repartition(len(urls), "url")
+    urls_df = local_df(spark, [(u,) for u in urls], "url string").repartition(
+        len(urls), "url"
+    )
     return urls_df.mapInPandas(_read_partition, schema)
 
 

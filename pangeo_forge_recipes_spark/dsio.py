@@ -540,6 +540,7 @@ def verify_zarr(spark, store_or_path, check_values: bool = True):
     """
     from pyspark.sql import Row
 
+    from .session import local_df
     from .zarrio import open_group
 
     group = open_group(_store_for(store_or_path))
@@ -561,8 +562,8 @@ def verify_zarr(spark, store_or_path, check_values: bool = True):
         for idx in _it.product(*[range(n) for n in arr.nchunks]):
             work.append((name, list(idx)))
     if not work:
-        return spark.createDataFrame(
-            [], "array string, chunk_key string, exists boolean, ok boolean, "
+        return local_df(
+            spark, [], "array string, chunk_key string, exists boolean, ok boolean, "
             "nbytes long, error string"
         )
 

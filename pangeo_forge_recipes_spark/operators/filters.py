@@ -30,6 +30,8 @@ from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_df
+
 
 # ---------------------------------------------------------------------------
 # repetition metrics (Gopher-style)
@@ -539,8 +541,8 @@ def domain_blocklist_filter(
     if (blocked is None) == (blocked_df is None):
         raise ValueError("pass exactly one of `blocked` or `blocked_df`")
     if blocked_df is None:
-        blocked_df = df.sparkSession.createDataFrame(
-            [(d,) for d in blocked], "domain string"
+        blocked_df = local_df(
+            df.sparkSession, [(d,) for d in blocked], "domain string"
         )
     bl = blocked_df.select(F.lower(F.col("domain")).alias("__bldom")).distinct()
     return (

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.textexprs import TextExprs
+from ..session import local_df
 
 __all__ = [
     "with_global_order",
@@ -340,9 +341,8 @@ def write_webdataset_shards(
     )
     # materialize the writes; the manifest is tiny (one row per shard)
     rows = manifest.collect()
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        rows, "shard int, n_docs long, n_bytes long, sha256 string"
+    return local_df(
+        df.sparkSession, rows, "shard int, n_docs long, n_bytes long, sha256 string"
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..parallel import materialize_branch_input, spread
+from ..session import local_df
 
 #: Default ceiling on the estimated driver-collected payload of the
 #: broadcast-exact tiers (bytes of the float64 matrix / PQ code table the
@@ -1015,10 +1016,8 @@ def _read_index_rows_s3(spark, path: str, probed) -> DataFrame:
             (k, int(c)) for k in store.list_prefix(f"vectors/centroid={int(c)}")
         )
     if not keys:
-        return spark.createDataFrame(
-            [], "vec_id long, centroid int, codes array<int>"
-        )
-    kdf = spark.createDataFrame(keys, "key string, centroid int").repartition(
+        return local_df(spark, [], "vec_id long, centroid int, codes array<int>")
+    kdf = local_df(spark, keys, "key string, centroid int").repartition(
         min(len(keys), 64)
     )
     root = path
@@ -1159,8 +1158,8 @@ def query_ivf_pq_index(
         # empty queries frame: .isin() with zero literals is a Py4J
         # error, and there is nothing to score — return the empty
         # result with the contract schema (r8 review finding)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, score double"
+        return local_df(
+            spark, [], "query_id long, neighbor_id long, rank int, score double"
         )
     if on_s3:
         # object-store pruning: fetch ONLY probed centroids' part

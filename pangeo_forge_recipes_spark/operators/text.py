@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textexprs import TextExprs
+from ..session import local_df
 
 _S = TextExprs("spark")
 
@@ -158,7 +159,8 @@ def stratified_sample(
         from pyspark.sql.types import DoubleType, StructField, StructType
 
         strata_t = df.schema[strata_col].dataType  # match the source type
-        fr = spark.createDataFrame(
+        fr = local_df(
+            spark,
             [(k, float(v)) for k, v in fractions.items()],
             StructType(
                 [

@@ -6,7 +6,7 @@ keys; ``items()`` yields ``(Index, url)`` pairs.
 
 Spark-first: patterns never materialize driver-side beyond what fits — see
 ``transforms.manifest_df`` which builds the manifest either directly
-(``spark.createDataFrame``) or, for huge patterns, distributed from
+(an Arrow-built JVM ``LocalRelation``) or, for huge patterns, distributed from
 ``spark.range(prod(shape))`` + an unravel UDF so a 10^8-file pattern never
 touches driver memory.
 """

@@ -184,7 +184,9 @@ def coarsen_zarr_level(
     n_regions = len(rows)
     import pandas as pd
 
-    rdf = spark.createDataFrame(rows, "var string, region string")
+    from .session import local_df
+
+    rdf = local_df(spark, rows, "var string, region string")
     width = min(n_regions, spark.sparkContext.defaultParallelism)
     if width > 1:
         rdf = rdf.repartition(width)

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_driver_mem() -> str:
@@ -85,3 +87,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: Union[str, StructType],
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` a DDL string or ``StructType``), built as a typed Arrow
+    table. Below ``spark.sql.execution.arrow.localRelationThreshold`` Spark
+    plans it as a JVM ``LocalRelation`` (``LocalTableScan``) in at most
+    ``defaultParallelism`` slices: no Python task runs to produce it.
+    ``spark.createDataFrame(list)`` instead pickles the rows through a
+    Python RDD, which starts a pickle-mode Python daemon and worker pool
+    of its own next to the one the package's UDFs use. A value that does
+    not fit its column's type raises here; there is no fallback."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_df
+
 # ---------------------------------------------------------------------------
 # CRC-32C (Castagnoli, reflected, poly 0x82F63B78).
 #
@@ -583,9 +585,7 @@ def read_tfrecord(
     paths = _shard_paths(path_or_paths)
     if not paths:
         raise ValueError(f"no TFRecord shards match {path_or_paths!r}")
-    pdf = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(paths)], "ord int, path string"
-    )
+    pdf = local_df(spark, list(enumerate(paths)), "ord int, path string")
     pdf = pdf.repartitionByRange(len(paths), "ord").drop("ord")
 
     fields = []

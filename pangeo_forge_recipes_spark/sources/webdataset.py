@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 WDS_SCHEMA = "shard string, key string, fields map<string, binary>"
 
 
@@ -70,9 +72,7 @@ def read_webdataset(
     paths = _shard_paths(path_or_paths)
     if not paths:
         raise ValueError(f"no WebDataset shards match {path_or_paths!r}")
-    pdf = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(paths)], "ord int, path string"
-    )
+    pdf = local_df(spark, list(enumerate(paths)), "ord int, path string")
     # one shard per task: range-partition on a sequential ordinal (a
     # hash repartition would collide ~1/e of the shards into shared
     # tasks and leave others empty)

@@ -35,6 +35,7 @@ from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,6 +59,7 @@ from .ndset import NDDataset, Variable
 from .openers import open_url, open_with_ndset, open_with_kerchunk, read_schema
 from .patterns import FilePattern, FileType
 from .rechunking import combine_fragments, group_key_to_json, split_fragment
+from .session import local_df
 from .storage import CacheFSSpecTarget, FSSpecTarget
 from .types import CombineOp, Dimension, Index, augment_index_with_start_stop
 from .zarrio import consolidate_metadata as _consolidate_metadata
@@ -80,18 +82,22 @@ _DRIVER_MANIFEST_MAX = 100_000
 
 def manifest_df(spark: SparkSession, pattern: FilePattern) -> DataFrame:
     """DataFrame of ``(index, url)`` rows — the outer product of the
-    pattern's combine-dim keys. Small patterns materialize driver-side;
-    large ones unravel ``spark.range(N)`` inside executors so a 10^8-file
-    pattern never sits in driver memory."""
+    pattern's combine-dim keys, in ``pattern.items()`` order. Small
+    patterns are enumerated on the driver into an Arrow-built JVM
+    ``LocalRelation`` (see :func:`~.session.local_df`), so no Python task
+    runs to produce them; large ones unravel ``spark.range(N)`` inside
+    executors so a 10^8-file pattern never sits in driver memory."""
     n = len(pattern)
     if n <= _DRIVER_MANIFEST_MAX:
         rows = [(idx.to_json(), url) for idx, url in pattern.items()]
-        return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+        return local_df(spark, rows, MANIFEST_SCHEMA)
 
-    bc = spark.sparkContext.broadcast(pattern)
+    # broadcasts pickle by reference; a pattern's format function is often
+    # a closure (``pattern_from_file_sequence``), so ship it cloudpickled
+    bc = spark.sparkContext.broadcast(cloudpickle.dumps(pattern))
 
     def unravel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pat: FilePattern = bc.value
+        pat: FilePattern = cloudpickle.loads(bc.value)
         for pdf in batches:
             idxs = [pat.index_for_flat_position(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
@@ -107,7 +113,7 @@ def prune_manifest(df: DataFrame, pattern: FilePattern, nkeep: int = 2) -> DataF
     ``patterns.py:235-260``), as a filter on the manifest."""
     concat_dims = set(pattern.concat_dims)
 
-    @F.udf("boolean")
+    @F.udf("boolean", useArrow=False)
     def keep(index_json: str) -> bool:
         idx = Index.from_json(index_json)
         return all(
@@ -338,7 +344,7 @@ def determine_schema(
     rows are tiny (KBs); these shuffles move metadata, never data."""
     df = schemas_df
 
-    @F.udf("string")
+    @F.udf("string", useArrow=False)
     def outer_index_json(index_json: str, dim_name: str, dim_op: str) -> str:
         idx = Index.from_json(index_json)
         d = Dimension(dim_name, CombineOp[dim_op])
@@ -394,7 +400,7 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
     reference."""
     seq_lens = _sequence_lens(schema)
 
-    @F.udf("string")
+    @F.udf("string", useArrow=False)
     def augment(index_json: str) -> str:
         index = Index.from_json(index_json)
         new = Index()

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from pangeo_forge_recipes_spark.operators import similarity as sim
 
+from .local_frames import assert_local_scan
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 
@@ -149,6 +151,7 @@ def test_empty_queries_short_circuit(spark, emb, index):
     path, _ = index
     empty = emb.where("vec_id < 0")
     out = sim.query_ivf_pq_index(spark, path, empty, k=3, nprobe=2)
+    assert_local_scan(out)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "neighbor_id", "rank", "score",

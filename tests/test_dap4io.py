@@ -30,6 +30,7 @@ from pangeo_forge_recipes_spark.openers import open_with_ndset, read_schema
 from pangeo_forge_recipes_spark.patterns import FileType
 
 from .data_generation import make_ds
+from .local_frames import assert_local_scan
 
 
 @pytest.fixture(scope="module")
@@ -552,6 +553,7 @@ def test_sequence_to_spark_dataframe(spark):
         df = dap4_sequences_to_df(
             spark, [srv.url_for("a"), srv.url_for("b")], include_url=True
         )
+        assert_local_scan(df)
         assert [f.simpleString() for f in df.schema.fields] == [
             "id:int", "temp:double", "site:string", "__url__:string",
         ]

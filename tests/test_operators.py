@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from pangeo_forge_recipes_spark.operators import dedup, multimodal, similarity, text
 
+from .local_frames import frames_built_locally
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -860,9 +862,10 @@ def test_stratified_sample_exact_and_dual_engine(spark):
     )
     assert got == want
     # fractions variant: exact ceil(f * size) per stratum
-    out_f = stratified_sample(
-        docs, "lang", fractions={k: 0.1 for k in sizes}
-    )
+    with frames_built_locally():
+        out_f = stratified_sample(
+            docs, "lang", fractions={k: 0.1 for k in sizes}
+        )
     cf = {r["lang"]: r["n"] for r in out_f.groupBy("lang").agg(
         F.count("*").alias("n")).collect()}
     import math

@@ -18,6 +18,8 @@ from pangeo_forge_recipes_spark.operators.packing import (
     write_shards,
 )
 
+from .local_frames import assert_local_scan
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -215,12 +217,9 @@ def test_write_webdataset_shards_roundtrip(spark, tmp_path):
     rows = [(i, f"document number {i}", f"lang{i % 3}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     out = str(tmp_path / "wds")
-    manifest = {
-        r["shard"]: r
-        for r in write_webdataset_shards(
-            df, out, n_shards=4, meta_cols=["lang"]
-        ).collect()
-    }
+    shards = write_webdataset_shards(df, out, n_shards=4, meta_cols=["lang"])
+    assert_local_scan(shards)
+    manifest = {r["shard"]: r for r in shards.collect()}
     assert sum(r["n_docs"] for r in manifest.values()) == 60
     seen = {}
     for shard, r in manifest.items():

@@ -18,6 +18,8 @@ from pangeo_forge_recipes_spark.pyramid import (
     store_to_pyramid,
 )
 
+from .local_frames import frames_built_locally
+
 
 def _grid_ds(nt=4, nlat=8, nlon=12):
     """Closed-form field: foo[t, y, x] = 1000*t + 10*y + x — block means
@@ -56,10 +58,13 @@ def base_store(spark, tmp_path):
 
 def test_pyramid_levels_exact(spark, base_store):
     tmp, pattern, ds = base_store
-    result = store_to_pyramid(
-        spark, pattern, str(tmp / "t"), "pyr.zarr", levels=3,
-        target_chunks={"time": 2, "lat": 4, "lon": 4},
-    )
+    # the manifest and each coarsened level's region list
+    with frames_built_locally() as made:
+        result = store_to_pyramid(
+            spark, pattern, str(tmp / "t"), "pyr.zarr", levels=3,
+            target_chunks={"time": 2, "lat": 4, "lon": 4},
+        )
+    assert len(made) == 3
     assert len(result.level_paths) == 3
     # level 0 is the native store
     l0 = result.open(0)

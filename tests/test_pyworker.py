@@ -1,10 +1,15 @@
-"""The per-task import-cache guard (``_pyworker``): unchanged zip
-archives are not re-read on ``importlib.invalidate_caches()``, changed
-ones are, and the package installs the guard in every Python worker."""
+"""Per-task worker costs (``_pyworker``): the import-cache guard leaves
+unchanged zip archives unread on ``importlib.invalidate_caches()`` and
+re-reads changed ones, and the package installs it in every Python
+worker; the package freezes the import heap in every worker, and only
+there."""
 
 from __future__ import annotations
 
+import gc
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -14,11 +19,12 @@ import pytest
 
 from pangeo_forge_recipes_spark import _pyworker
 
-pytestmark = pytest.mark.skipif(
+zip_guard = pytest.mark.skipif(
     sys.version_info >= (3, 12), reason="zipimporter caches lazily from 3.12"
 )
 
 
+@zip_guard
 def test_guard_skips_unchanged_zip_and_rereads_changed(tmp_path, monkeypatch):
     zpath = tmp_path / "mods.zip"
     with zipfile.ZipFile(zpath, "w") as z:
@@ -58,6 +64,7 @@ def test_guard_skips_unchanged_zip_and_rereads_changed(tmp_path, monkeypatch):
     assert m_b.VALUE == "b"
 
 
+@zip_guard
 def test_guard_installed_in_every_worker(spark):
     def probe(batches):
         import os
@@ -76,3 +83,44 @@ def test_guard_installed_in_every_worker(spark):
     )
     assert len(rows) == 64
     assert all(r["installed"] for r in rows), {r["pid"] for r in rows if not r["installed"]}
+
+
+def test_import_heap_frozen_in_every_worker(spark):
+    def probe(batches):
+        import gc
+        import os
+
+        import pangeo_forge_recipes_spark  # noqa: F401  (as any package UDF)
+
+        for pdf in batches:
+            n = len(pdf)
+            yield pd.DataFrame(
+                {"pid": [os.getpid()] * n, "frozen": [gc.get_freeze_count()] * n}
+            )
+
+    rows = (
+        spark.range(0, 64, 1, numPartitions=8)
+        .mapInPandas(probe, "pid long, frozen long")
+        .collect()
+    )
+    assert len(rows) == 64
+    assert all(r["frozen"] > 0 for r in rows), {r["pid"] for r in rows if not r["frozen"]}
+
+
+def test_driver_import_does_not_freeze():
+    import pangeo_forge_recipes_spark
+
+    assert gc.get_freeze_count() == 0
+    repo = os.path.dirname(os.path.dirname(pangeo_forge_recipes_spark.__file__))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import gc, pangeo_forge_recipes_spark; print(gc.get_freeze_count())",
+        ],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "0"

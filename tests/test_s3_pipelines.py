@@ -25,6 +25,7 @@ from pangeo_forge_recipes_spark.storage import CacheFSSpecTarget, FSSpecTarget
 
 from .data_generation import make_ds, split_ds_into_files
 from .fake_s3 import FakeS3
+from .local_frames import assert_local_scan
 
 
 @pytest.fixture(scope="module")
@@ -231,6 +232,9 @@ def test_ivf_pq_index_on_s3(spark, s3):
             and "list-type" not in qq
         }
         assert len(fetched) <= 2
+        # the probed part keys, and the empty frame when none match
+        for probed in (range(16), []):
+            assert_local_scan(sim._read_index_rows_s3(spark, "s3://annidx/idx", probed))
         # append with the saved model, then appended ids are queryable
         n = sim.append_to_ivf_pq_index(hi, "s3://annidx/idx")
         assert n == hi.count()

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from pangeo_forge_recipes_spark.sources import tfrecord as tfr
 
+from .local_frames import assert_local_scan
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 
@@ -129,6 +131,7 @@ def test_write_read_roundtrip(spark, corpus, tmp_path):
         path,
         {"doc_id": "int64", "text": "string", "lang": "string", "n_chars": "int64"},
     )
+    assert_local_scan(back)
     got = {
         r["doc_id"]: (r["text"], r["lang"], r["n_chars"])
         for r in back.collect()

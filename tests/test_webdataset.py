@@ -18,6 +18,8 @@ from pangeo_forge_recipes_spark.sources import (
     read_webdataset,
 )
 
+from .local_frames import assert_local_scan
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -35,6 +37,7 @@ def test_webdataset_roundtrip(spark, docs, tmp_path):
     )
     assert manifest.count() == 4
     out = read_webdataset(spark, path)
+    assert_local_scan(out)
     dec = decode_webdataset_text(out)
     got = {r["key"]: (r["text"], r["meta_json"]) for r in dec.collect()}
     want = {str(r["doc_id"]): r for r in docs.collect()}
