@@ -3204,12 +3204,13 @@ def _zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _spill_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE shuffle's alternative execution path driver-graded end-to-end
     (r10 VERDICT ask #1): the zarr round-trip oracle re-run with
-    ``rechunk_shuffle="spill"`` forced — decode once, spill raw pieces
-    to target-adjacent scratch, metadata-only exchange, range-read on
-    combine (transforms.open_split_spill_df / rechunk_spill_and_store).
-    Chunks are deliberately MISALIGNED with the file grain (4 files x 2
-    steps -> chunks of 5) so every target chunk combines fragments from
-    multiple sources through the spill wire format. The query asserts
+    ``rechunk_shuffle="spill"`` forced — decode once, spill each piece's
+    NDS1 frame to target-adjacent scratch, metadata-only exchange,
+    range-read on combine (transforms.open_split_spill_df /
+    rechunk_and_store). Chunks are deliberately MISALIGNED with the file
+    grain (4 files x 2 steps -> chunks of 5) so every target chunk
+    combines fragments from multiple sources through the spill wire
+    format. The query asserts
     full element equality against the generator AND that the scratch
     prefix was removed; the oracle recomputes the position-weighted
     checksums by pure numpy."""

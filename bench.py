@@ -409,16 +409,18 @@ def _bench_zarr_throughput(spark) -> dict:
         # stage attribution of the shuffled path (one shot each, warm):
         # split_only = decode+split+serialize+Arrow-out; +exchange adds
         # the shuffle write/read (JVM-side agg, payloads never return to
-        # Python); +combine adds the Arrow return + deserialize + concat
+        # Python); +combine_write adds the Arrow return + deserialize +
+        # concat + region write into a throwaway store
         from pyspark.sql import functions as F
 
+        from pangeo_forge_recipes_spark.dsio import schema_to_zarr
         from pangeo_forge_recipes_spark.transforms import (
-            combine_fragments_df,
             determine_schema,
             index_items,
             manifest_df,
             open_split_fragments_df,
             read_schemas_df,
+            rechunk_and_store,
         )
 
         sess = spark.newSession()
@@ -450,15 +452,19 @@ def _bench_zarr_throughput(spark) -> dict:
             .agg(F.count("*").alias("n"), F.sum(F.length("payload")).alias("b"))
         )
         stages["split_plus_exchange"] = round(time.perf_counter() - t0, 2)
+        breakdown_store = os.path.join(tmp, "breakdown.zarr")
+        schema_to_zarr(schema, breakdown_store, target_chunks=chunks)
         t0 = time.perf_counter()
         _noop(
-            combine_fragments_df(
+            rechunk_and_store(
                 open_split_fragments_df(
                     indexed, "npz", target_chunks=chunks, schema=schema
-                )
+                ),
+                breakdown_store,
             )
         )
-        stages["split_exchange_combine"] = round(time.perf_counter() - t0, 2)
+        stages["split_exchange_combine_write"] = round(time.perf_counter() - t0, 2)
+        shutil.rmtree(breakdown_store, ignore_errors=True)
         out["shuffled_stage_breakdown"] = stages
 
         # reference mode on its TARGET workload: chunk-lazy zarr sources

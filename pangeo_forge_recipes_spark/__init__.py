@@ -37,13 +37,10 @@ from .pyramid import store_to_pyramid
 from .storage import CacheFSSpecTarget, FlatFSSpecTarget, FSSpecTarget
 from .transforms import (
     StoreResult,
-    combine_fragments_df,
     determine_schema,
     index_items,
     manifest_df,
-    open_with_ndset_df,
     read_schemas_df,
-    split_fragments_df,
     store_to_zarr,
     write_combined_reference,
 )

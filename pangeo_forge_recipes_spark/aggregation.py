@@ -13,7 +13,7 @@ exactly so its unit tests transfer as the spec.
 
 In the Spark engine, schemas travel as JSON strings inside DataFrames and
 are reduced with a commutative/associative combiner (see
-``combiners.py`` / ``transforms.determine_schema``) — the Spark rendition
+``transforms._combine_level_fn`` / ``transforms.determine_schema``) — the Spark rendition
 of Beam's ``CombinePerKey`` tree (reference ``transforms.py:276-301``).
 """
 
@@ -34,8 +34,8 @@ def dataset_to_schema(ds: NDDataset) -> XarraySchema:
     """Schema of one fragment (reference ``aggregation.py:20-37``).
 
     Eager fragments carry no chunk layout, so ``chunks`` starts empty; the
-    per-dim sequence chunks are injected by the combiner (reference
-    ``combiners.py:36-44``)."""
+    per-dim sequence chunks are injected by the level combiner ``transforms._combine_level_fn``
+    (reference ``combiners.py:36-44``)."""
     d = ds.to_dict()
     return {
         "attrs": d["attrs"],

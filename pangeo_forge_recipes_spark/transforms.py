@@ -11,9 +11,12 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   on Spark that would force caching opened fragments across stages, so the
   metadata pre-pass is the scale-correct equivalent (same semantics:
   the combine kernel errors on any inconsistency either way);
-* the rechunk is the engine's **single data shuffle**:
-  ``groupBy(group_key).applyInPandas`` (reference flags the same GroupByKey
-  as the one perf hazard, ``transforms.py:414``);
+* the rechunk is the engine's **single data shuffle**, one pipeline in
+  every mode: pieces (open → split → explode by variable) → transport →
+  one write kernel. The payload and spill modes group on the chunk key
+  with ``groupBy(group_key).applyInArrow``; the reference mode
+  range-partitions its ``(group_key, url)`` rows (reference flags the
+  same GroupByKey as the one perf hazard, ``transforms.py:414``);
 * combine + region-write are **fused in the same task** — a combined chunk
   is written where it is assembled and never crosses another exchange
   (Beam gets this via runner fusion; we get it by construction), only tiny
@@ -28,10 +31,9 @@ from __future__ import annotations
 
 import hashlib
 import os
-import pickle
 from collections import OrderedDict
-from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple, Union
+from dataclasses import dataclass
+from typing import Callable, Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -55,17 +57,16 @@ from .dsio import (
     store_dataset_fragment,
     zarr_group_schema,
 )
-from .ndset import NDDataset, Variable
+from .ndset import NDDataset
 from .openers import open_url, open_with_ndset, open_with_kerchunk, read_schema
 from .patterns import FilePattern, FileType
 from .rechunking import combine_fragments, group_key_to_json, split_fragment
 from .session import local_df
-from .storage import CacheFSSpecTarget, FSSpecTarget
+from .storage import CacheFSSpecTarget, FSSpecTarget, open_output_stream, url_range_get
 from .types import CombineOp, Dimension, Index, augment_index_with_start_stop
 from .zarrio import consolidate_metadata as _consolidate_metadata
 
 MANIFEST_SCHEMA = "index string, url string"
-FRAGMENT_SCHEMA = "index string, payload binary"
 SPLIT_SCHEMA = "group_key string, index string, payload binary"
 REFS_SCHEMA = "group_key string, index string, url string"
 STATUS_SCHEMA = "group_key string, index string, n_vars int, nbytes bigint"
@@ -160,66 +161,6 @@ def open_urls_with_fsspec(
 
 
 # ---------------------------------------------------------------------------
-# open stage (reference ``OpenWithXarray``, ``transforms.py:216-246``)
-# ---------------------------------------------------------------------------
-
-
-def open_with_ndset_df(
-    df: DataFrame,
-    file_type: Union[str, FileType] = FileType.npz,
-    load: bool = True,
-    copy_to_local: bool = False,
-    xarray_open_kwargs: Optional[dict] = None,
-    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-) -> DataFrame:
-    """Open each manifest row as an NDDataset fragment → ``(index, payload)``
-    rows with pickled payloads. ``preprocess`` is the user-UDF surface
-    (reference preprocessors, ``docs/composition/transforms.md:47-55``) —
-    an arbitrary ``f(Index, NDDataset) -> (Index, NDDataset)``."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
-
-    def open_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_idx, out_payload = [], []
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url,
-                    file_type=ft,
-                    load=load,
-                    copy_to_local=copy_to_local,
-                    xarray_open_kwargs=xarray_open_kwargs,
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                out_idx.append(index.to_json())
-                out_payload.append(ds.to_bytes())
-            yield pd.DataFrame({"index": out_idx, "payload": out_payload})
-
-    return df.mapInPandas(open_batch, FRAGMENT_SCHEMA)
-
-
-def map_fragments(
-    df: DataFrame,
-    fn: Callable[[Index, NDDataset], Tuple[Index, NDDataset]],
-) -> DataFrame:
-    """Lift ``f(Index, NDDataset) -> (Index, NDDataset)`` over a fragment
-    DataFrame — the ``@recipe_transform`` preprocessor surface (SURVEY
-    §2.10)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idx_out, payload_out = [], []
-            for idx_json, payload in zip(pdf["index"], pdf["payload"]):
-                index, ds = fn(Index.from_json(idx_json), NDDataset.from_bytes(payload))
-                idx_out.append(index.to_json())
-                payload_out.append(ds.to_bytes())
-            yield pd.DataFrame({"index": idx_out, "payload": payload_out})
-
-    return df.mapInPandas(run, FRAGMENT_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
 # schema pass (reference ``DetermineSchema``, ``transforms.py:276-301``)
 # ---------------------------------------------------------------------------
 
@@ -248,25 +189,6 @@ def read_schemas_df(
             )
 
     return df.mapInPandas(scan, "index string, schema string")
-
-
-def schemas_from_fragments(df: DataFrame) -> DataFrame:
-    """``DatasetToSchema`` (reference ``transforms.py:270-273``): schema rows
-    from already-opened fragments."""
-
-    def conv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "index": pdf["index"],
-                    "schema": [
-                        schema_to_json(dataset_to_schema(NDDataset.from_bytes(p)))
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(conv, "index string, schema string")
 
 
 def preprocessed_schemas_df(
@@ -415,7 +337,12 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
 
 
 # ---------------------------------------------------------------------------
-# rechunk (reference ``Rechunk``, ``transforms.py:401-417``)
+# rechunk (reference ``Rechunk``, ``transforms.py:401-417``): every mode is
+# pieces → transport → one write kernel. ``_pieces`` turns a manifest row
+# into single-variable pieces keyed by target chunk ⊕ variable; payload,
+# reference and spill differ only in how a piece reaches its group, and the
+# aligned path writes each piece as a one-piece group. ``_write_group``
+# combines and writes a group the same way for all four.
 # ---------------------------------------------------------------------------
 
 
@@ -436,10 +363,11 @@ def _owns_variable(sub_idx: Index, var_dims) -> bool:
 
 
 def _explode_by_variable(sub_idx: Index, sub_ds: NDDataset):
-    """Yield (suffix, single-variable dataset) obeying write ownership —
-    the shared sharding rule for BOTH write paths, so ``StoreResult`` stats
-    mean the same thing (one unit = one chunk × one owned variable, each
-    byte counted once) whether or not the rechunk shuffle ran."""
+    """Yield (suffix, single-variable dataset) obeying write ownership:
+    one unit = one chunk × one owned variable, so shuffle groups hold one
+    variable's chunk, coordinate payloads travel only from their owner
+    (reference ``writers.py:57-69,110-122`` applied at split time), and
+    ``StoreResult`` counts each byte once in every mode."""
     for name, var in sub_ds.data_vars.items():
         if _owns_variable(sub_idx, var.dims):
             yield f"d:{name}", NDDataset({name: var}, {}, {}, dict(var.sizes))
@@ -449,30 +377,103 @@ def _explode_by_variable(sub_idx: Index, sub_ds: NDDataset):
                 yield f"c:{name}", NDDataset({}, {name: var}, {}, dict(var.sizes))
 
 
-def split_fragments_df(
-    df: DataFrame,
-    target_chunks: Optional[Dict[str, int]] = None,
-    schema: Optional[XarraySchema] = None,
-) -> DataFrame:
-    """FlatMap each fragment into per-target-chunk sub-fragments keyed by
-    group key (reference ``split_fragment``)."""
+def _pieces(
+    idx_json: str,
+    url: str,
+    file_type: Union[str, FileType],
+    target_chunks: Optional[Dict[str, int]],
+    schema: Optional[XarraySchema],
+    xarray_open_kwargs: Optional[dict],
+    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]],
+    load: bool = True,
+) -> Iterator[Tuple[str, Index, NDDataset]]:
+    """Open → [preprocess] → :func:`split_fragment` → explode one
+    manifest row into ``(group_key, sub_index, single_var_dataset)``
+    pieces; ``group_key`` is the target chunk's key ⊕ ``|d:<var>`` or
+    ``|c:<coord>``. The split is a pure function of the index and the
+    chunk grid, so re-running it yields the same keys (what the reference
+    shuffle relies on)."""
+    ds = open_with_ndset(
+        url,
+        file_type=FileType(file_type),
+        load=load,
+        xarray_open_kwargs=xarray_open_kwargs,
+    )
+    index = Index.from_json(idx_json)
+    if preprocess is not None:
+        index, ds = preprocess(index, ds)
+    for gk, (sub_idx, sub_ds) in split_fragment(
+        (index, ds), target_chunks=target_chunks, schema=schema
+    ):
+        gk_json = group_key_to_json(gk)
+        for suffix, single in _explode_by_variable(sub_idx, sub_ds):
+            yield f"{gk_json}|{suffix}", sub_idx, single
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for idx_json, payload in zip(pdf["index"], pdf["payload"]):
-                fragment = (Index.from_json(idx_json), NDDataset.from_bytes(payload))
-                keys, idxs, payloads = [], [], []
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    fragment, target_chunks=target_chunks, schema=schema
-                ):
-                    keys.append(group_key_to_json(gk))
-                    idxs.append(sub_idx.to_json())
-                    payloads.append(sub_ds.to_bytes())
-                yield pd.DataFrame(
-                    {"group_key": keys, "index": idxs, "payload": payloads}
-                )
 
-    return df.mapInPandas(split, SPLIT_SCHEMA)
+def _write_group(
+    key: str, frags: List[Tuple[Index, NDDataset]], store_path: str
+) -> dict:
+    """The one write kernel: combine a group's pieces into its target
+    chunk (a one-piece group passes through unchanged), write its aligned
+    region, and return the group's status row."""
+    index, ds = combine_fragments(None, frags)
+    store_dataset_fragment((index, ds), store_path)
+    return {
+        "group_key": key,
+        "index": index.to_json(),
+        "n_vars": len(ds.data_vars),
+        "nbytes": int(sum(v.data.nbytes for v in ds.variables.values())),
+    }
+
+
+def _frame_size(parts) -> int:
+    return sum(memoryview(p).nbytes for p in parts)
+
+
+#: a binary column's offsets are int32, so one split batch carries at most
+#: this many payload bytes; a batch is flushed before it would pass them
+_SPLIT_BATCH_BYTES = 2**31 - 1
+
+
+def _frame_batches(
+    pieces: Iterator[Tuple[str, Index, NDDataset]]
+) -> Iterator["pa.RecordBatch"]:
+    """Pack pieces into :data:`SPLIT_SCHEMA` record batches whose payload
+    column is built over ONE buffer that each NDS1 frame part is written
+    into directly — one Python-side copy per payload byte. Raises
+    ``ValueError`` naming the group key when a single frame is over
+    :data:`_SPLIT_BATCH_BYTES`."""
+    import pyarrow as pa
+
+    def batch(keys, idxs, data, offsets) -> "pa.RecordBatch":
+        payload = pa.Array.from_buffers(
+            pa.binary(),
+            len(keys),
+            [None, pa.py_buffer(np.asarray(offsets, dtype=np.int32)), pa.py_buffer(data)],
+        )
+        return pa.RecordBatch.from_arrays(
+            [pa.array(keys, pa.string()), pa.array(idxs, pa.string()), payload],
+            names=["group_key", "index", "payload"],
+        )
+
+    keys, idxs, data, offsets = [], [], bytearray(), [0]
+    for key, sub_idx, single in pieces:
+        parts = single.frame_parts()
+        size = _frame_size(parts)
+        if size > _SPLIT_BATCH_BYTES:
+            raise ValueError(
+                f"piece {key!r} frames to {size} bytes, over the "
+                f"{_SPLIT_BATCH_BYTES}-byte limit of one Arrow binary batch"
+            )
+        if keys and len(data) + size > _SPLIT_BATCH_BYTES:
+            yield batch(keys, idxs, data, offsets)
+            keys, idxs, data, offsets = [], [], bytearray(), [0]
+        keys.append(key)
+        idxs.append(sub_idx.to_json())
+        for part in parts:
+            data += part
+        offsets.append(len(data))
+    yield batch(keys, idxs, data, offsets)
 
 
 def open_split_fragments_df(
@@ -480,234 +481,63 @@ def open_split_fragments_df(
     file_type: Union[str, FileType] = FileType.npz,
     target_chunks: Optional[Dict[str, int]] = None,
     schema: Optional[XarraySchema] = None,
-    load: bool = True,
-    copy_to_local: bool = False,
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-    by_variable: bool = True,
 ) -> DataFrame:
-    """Fused open → [preprocess] → split in ONE Arrow stage. Functionally
-    ``split_fragments_df(open_with_ndset_df(df))``, but the MB-scale
-    fragment payload stays inside a single Python worker pass instead of
-    round-tripping JVM↔Python between stages — at 100 TB those extra
-    crossings are pure wasted bandwidth (Beam gets the same effect from
-    runner fusion; here we fuse structurally).
-
-    ``by_variable=True`` additionally shards each sub-fragment per variable
-    (key = chunk ⊕ variable): shuffle groups shrink from one-chunk-×-ALL-vars
-    to one-chunk-×-one-var, so task memory is bounded by a single variable's
-    chunk, parallelism multiplies by the variable count, and coordinate
-    payloads — which the whole-fragment layout ships redundantly with every
-    fragment — travel only from their designated owner (the write-side
-    ownership rules of reference ``writers.py:57-69,110-122`` applied at
-    split time).
-
-    r13 (guide §4.2): the stage is ``mapInArrow`` and each output batch's
-    payload column is built directly over ONE accumulated data buffer
-    (``pa.Array.from_buffers`` with the NDS1 frame parts written straight
-    into a bytearray) — the pre-r13 pandas return re-copied every payload
-    byte a second time during the pandas→Arrow conversion. Combined with
-    the NDS1 frame, each payload byte now crosses the split stage with
-    exactly one Python-side copy."""
-    import pyarrow as pa
-
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
+    """Payload split: open → [preprocess] → split in ONE ``mapInArrow``
+    stage, emitting ``(group_key, index, payload)`` rows whose payload is
+    the piece's NDS1 frame. The MB-scale bytes cross JVM↔Python once
+    before the shuffle; each source file's pieces leave as one record
+    batch (more only past :data:`_SPLIT_BATCH_BYTES`)."""
 
     def open_split(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        out_schema = pa.schema(
-            [
-                ("group_key", pa.string()),
-                ("index", pa.string()),
-                ("payload", pa.binary()),
-            ]
-        )
         for batch in batches:
-            idx_col = batch.column("index")
-            url_col = batch.column("url")
-            for i in range(batch.num_rows):
-                idx_json = idx_col[i].as_py()
-                url = url_col[i].as_py()
-                ds = open_with_ndset(
-                    url,
-                    file_type=ft,
-                    load=load,
-                    copy_to_local=copy_to_local,
-                    xarray_open_kwargs=xarray_open_kwargs,
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                keys, idxs = [], []
-                data = bytearray()
-                offsets = [0]
-
-                def emit(key: str, idx_str: str, single: NDDataset) -> None:
-                    nonlocal data
-                    keys.append(key)
-                    idxs.append(idx_str)
-                    for part in single.frame_parts():
-                        data += part
-                    offsets.append(len(data))
-
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    gk_json = group_key_to_json(gk)
-                    sub_json = sub_idx.to_json()
-                    if by_variable:
-                        for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                            emit(f"{gk_json}|{suffix}", sub_json, single)
-                    else:
-                        emit(gk_json, sub_json, sub_ds)
-                payload_arr = pa.Array.from_buffers(
-                    pa.binary(),
-                    len(keys),
-                    [
-                        None,
-                        pa.py_buffer(np.asarray(offsets, dtype=np.int32)),
-                        pa.py_buffer(data),
-                    ],
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(keys, pa.string()), pa.array(idxs, pa.string()), payload_arr],
-                    schema=out_schema,
+            for idx_json, url in zip(
+                batch.column("index").to_pylist(), batch.column("url").to_pylist()
+            ):
+                yield from _frame_batches(
+                    _pieces(idx_json, url, file_type, target_chunks, schema,
+                            xarray_open_kwargs, preprocess)
                 )
 
     return df.mapInArrow(open_split, SPLIT_SCHEMA)
-
-
-def open_split_store_df(
-    df: DataFrame,
-    store_path: str,
-    file_type: Union[str, FileType] = FileType.npz,
-    target_chunks: Optional[Dict[str, int]] = None,
-    schema: Optional[XarraySchema] = None,
-    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-    xarray_open_kwargs: Optional[dict] = None,
-) -> DataFrame:
-    """Zero-shuffle fast path: open → [preprocess] → split → write, all in
-    one map stage. Valid only when every split sub-fragment is a complete
-    target chunk (``_chunks_aligned_with_files``) — then the groupBy would
-    place exactly one fragment per group and the shuffle would move every
-    byte across the cluster for nothing. ``combine_fragments`` still runs
-    per sub-fragment to keep the validation identical."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url, file_type=ft, xarray_open_kwargs=xarray_open_kwargs
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                keys, idxs, nvars, nbytes = [], [], [], []
-                for gk, sub in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    out_index, out_ds = combine_fragments(gk, [sub])
-                    gk_json = group_key_to_json(gk)
-                    # same ownership sharding as the shuffled path: unowned
-                    # variables (coords repeated in every source file) are
-                    # neither re-written nor double-counted, and status rows
-                    # mean chunk × owned-variable on both paths
-                    for suffix, single in _explode_by_variable(out_index, out_ds):
-                        store_dataset_fragment((out_index, single), store_path)
-                        keys.append(f"{gk_json}|{suffix}")
-                        idxs.append(out_index.to_json())
-                        nvars.append(len(single.data_vars))
-                        nbytes.append(
-                            int(
-                                sum(
-                                    v.data.nbytes
-                                    for v in single.variables.values()
-                                )
-                            )
-                        )
-                yield pd.DataFrame(
-                    {
-                        "group_key": keys,
-                        "index": idxs,
-                        "n_vars": nvars,
-                        "nbytes": nbytes,
-                    }
-                )
-
-    return df.mapInPandas(run, STATUS_SCHEMA)
-
-
-def combine_fragments_df(df_split: DataFrame) -> DataFrame:
-    """THE shuffle: co-locate all sub-fragments of one target chunk and
-    reassemble (reference GroupByKey + ``combine_fragments``,
-    ``transforms.py:406-417``). Returns combined ``(index, payload)``
-    fragments (used in tests; production uses the fused
-    :func:`rechunk_and_store`)."""
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        frags = [
-            (Index.from_json(i), NDDataset.from_bytes(p))
-            for i, p in zip(pdf["index"], pdf["payload"])
-        ]
-        index, ds = combine_fragments(None, frags)
-        return pd.DataFrame({"index": [index.to_json()], "payload": [ds.to_bytes()]})
-
-    return df_split.groupBy("group_key").applyInPandas(combine, FRAGMENT_SCHEMA)
 
 
 def rechunk_and_store(
     df_split: DataFrame,
     target_store_path: str,
 ) -> DataFrame:
-    """Fused combine+write: each group assembles its target chunk and writes
-    its aligned region in the same task (reference stages
-    ``transforms.py:414`` + ``StoreDatasetFragments``; Beam fuses them at
-    runtime, we fuse them structurally). Only tiny status rows return.
+    """Fused combine+write for the payload and spill shuffles: each
+    ``groupBy(group_key)`` group assembles its target chunk and writes
+    its aligned region in the same task (reference ``transforms.py:414``
+    + ``StoreDatasetFragments``); only status rows return.
 
-    The group crosses JVM→Python as ARROW data (``applyInArrow``), not
-    pandas: the MB-scale payload cells deserialize straight from the
-    Arrow buffers (``BinaryScalar.as_buffer()`` — no per-cell ``bytes``
-    materialization and no pandas block consolidation). r13 (guide
-    §4.2): with the NDS1 raw frame (``NDDataset.to_bytes``) the
-    deserialization is a ZERO-COPY ``np.frombuffer`` view over the Arrow
-    buffer — the only combine-side copy left per payload byte is the
-    assembly into the target chunk, where pre-r13 the pickle load
-    re-allocated every fragment first (one extra full copy of the
-    corpus, and the dominant combine cost when host page faults are
-    slow)."""
+    The group crosses JVM→Python as Arrow data (``applyInArrow``). A
+    row's NDS1 frame is its ``payload`` cell, read as a zero-copy
+    ``np.frombuffer`` view over the Arrow buffer — or, for spill rows
+    with ``url`` set, one range-get of ``(url, offset, length)``."""
     import pyarrow as pa
 
+    has_url = "url" in df_split.columns
+    status_schema = pa.schema(
+        [("group_key", pa.string()), ("index", pa.string()),
+         ("n_vars", pa.int32()), ("nbytes", pa.int64())]
+    )
+
     def combine_write(tbl: "pa.Table") -> "pa.Table":
-        idx_col = tbl.column("index")
-        payload_col = tbl.column("payload")
         frags = []
-        for chunk_i, chunk_p in zip(idx_col.chunks, payload_col.chunks):
-            for i in range(len(chunk_i)):
-                frags.append(
-                    (
-                        Index.from_json(chunk_i[i].as_py()),
-                        NDDataset.from_bytes(chunk_p[i].as_buffer()),
-                    )
-                )
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return pa.table(
-            {
-                "group_key": [tbl.column("group_key")[0].as_py()],
-                "index": [index.to_json()],
-                "n_vars": [len(ds.data_vars)],
-                "nbytes": [nbytes],
-            },
-            schema=pa.schema(
-                [
-                    ("group_key", pa.string()),
-                    ("index", pa.string()),
-                    ("n_vars", pa.int32()),
-                    ("nbytes", pa.int64()),
-                ]
-            ),
-        )
+        for batch in tbl.to_batches():
+            idx_col, payload_col = batch.column("index"), batch.column("payload")
+            urls = batch.column("url").to_pylist() if has_url else [None] * batch.num_rows
+            for i, url in enumerate(urls):
+                if url:
+                    off, length = batch.column("offset")[i].as_py(), batch.column("length")[i].as_py()
+                    buf = url_range_get(url, off, length)
+                else:
+                    buf = payload_col[i].as_buffer()
+                frags.append((Index.from_json(idx_col[i].as_py()), NDDataset.from_bytes(buf)))
+        row = _write_group(tbl.column("group_key")[0].as_py(), frags, target_store_path)
+        return pa.Table.from_pylist([row], schema=status_schema)
 
     return df_split.groupBy("group_key").applyInArrow(combine_write, STATUS_SCHEMA)
 
@@ -731,31 +561,21 @@ def open_split_refs_df(
     100 TB that removes the double shuffle-disk write/read of the whole
     corpus and both Python↔JVM payload crossings, trading them for a
     second targeted read of each source file."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
 
     def split_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keys, idxs, urls = [], [], []
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                # a user preprocessor may touch array DATA (where,
-                # coarsen, ...), which lazy views don't support — open
-                # eagerly when one is present; metadata-only otherwise
-                ds = open_with_ndset(
-                    url, file_type=ft, load=preprocess is not None,
-                    xarray_open_kwargs=xarray_open_kwargs,
+            rows = [
+                (key, idx_json, url)
+                for idx_json, url in zip(pdf["index"], pdf["url"])
+                # a user preprocessor may touch array DATA (where, coarsen,
+                # ...), which lazy views don't support — open eagerly when
+                # one is present; metadata-only otherwise
+                for key, _, _ in _pieces(
+                    idx_json, url, file_type, target_chunks, schema,
+                    xarray_open_kwargs, preprocess, load=preprocess is not None,
                 )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    gk_json = group_key_to_json(gk)
-                    for suffix, _single in _explode_by_variable(sub_idx, sub_ds):
-                        keys.append(f"{gk_json}|{suffix}")
-                        idxs.append(idx_json)
-                        urls.append(url)
-            yield pd.DataFrame({"group_key": keys, "index": idxs, "url": urls})
+            ]
+            yield pd.DataFrame(rows, columns=["group_key", "index", "url"])
 
     return df.mapInPandas(split_keys, REFS_SCHEMA)
 
@@ -764,7 +584,7 @@ def open_split_refs_df(
 # write path: groups land on workers in key-hash order, so consecutive
 # tasks frequently revisit the same file. Two entries bound memory at two
 # source files per worker; Spark Python workers are single-threaded.
-_REFS_OPEN_CACHE: "OrderedDict[Tuple[str, str], Tuple[Index, NDDataset]]" = (
+_REFS_OPEN_CACHE: "OrderedDict[Tuple[str, str, str], Dict[str, tuple]]" = (
     OrderedDict()
 )
 _REFS_OPEN_CACHE_CAP = 2
@@ -781,11 +601,10 @@ def rechunk_refs_and_store(
 ) -> DataFrame:
     """Combine+write for the reference shuffle: each group re-opens its
     source files (process-level LRU), re-runs the deterministic
-    :func:`split_fragment`, keeps only its own pieces, then assembles and
-    writes exactly like :func:`rechunk_and_store`. Determinism of the
+    :func:`_pieces`, takes only its own pieces, then combines and writes
+    them with the same kernel as every other mode. Determinism of the
     split (pure function of index ⊕ chunk grid) is what makes shuffling
     references instead of payloads sound."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
     # distinct token per pipeline run: reused Python workers keep the
     # module-level cache alive across jobs, and (url, idx_json) alone
     # would serve a STALE dataset to a later run with a different
@@ -793,11 +612,11 @@ def rechunk_refs_and_store(
     run_token = os.urandom(8).hex()
 
     def open_pieces(url: str, idx_json: str) -> Dict[str, tuple]:
-        """Open + preprocess + split + explode ONCE per source file,
-        cached as ``{full_group_key: (sub_index, single_var_dataset)}``
-        — each group takes its piece by exact key lookup, so there is
-        no group-key re-parsing (variable names may contain '|') and
-        the per-file split work is O(pieces), not O(groups × pieces)."""
+        """Pieces of one source file, cached as ``{group_key: (sub_index,
+        single_var_dataset)}`` — each group takes its piece by exact key
+        lookup, so there is no group-key re-parsing (variable names may
+        contain '|') and the per-file split work is O(pieces), not
+        O(groups × pieces)."""
         key = (run_token, url, idx_json)
         hit = _REFS_OPEN_CACHE.get(key)
         if hit is not None:
@@ -810,22 +629,13 @@ def rechunk_refs_and_store(
         # ignore the flag and read once per file as before. A user
         # preprocessor may touch array DATA, which lazy views don't
         # support — open eagerly when one is present.
-        ds = open_with_ndset(
-            url,
-            file_type=ft,
-            load=preprocess is not None,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
-        index = Index.from_json(idx_json)
-        if preprocess is not None:
-            index, ds = preprocess(index, ds)
-        pieces: Dict[str, tuple] = {}
-        for gk, (sub_idx, sub_ds) in split_fragment(
-            (index, ds), target_chunks=target_chunks, schema=schema
-        ):
-            gk_json = group_key_to_json(gk)
-            for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                pieces[f"{gk_json}|{suffix}"] = (sub_idx, single)
+        pieces = {
+            gk: (sub_idx, single)
+            for gk, sub_idx, single in _pieces(
+                idx_json, url, file_type, target_chunks, schema,
+                xarray_open_kwargs, preprocess, load=preprocess is not None,
+            )
+        }
         _REFS_OPEN_CACHE[key] = pieces
         while len(_REFS_OPEN_CACHE) > _REFS_OPEN_CACHE_CAP:
             _REFS_OPEN_CACHE.popitem(last=False)
@@ -836,15 +646,7 @@ def rechunk_refs_and_store(
         # resolve to a piece — a KeyError here means source files changed
         # between the split and write stages
         frags = [open_pieces(url, idx_json)[gk_full] for idx_json, url in rows]
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return {
-            "group_key": gk_full,
-            "index": index.to_json(),
-            "n_vars": len(ds.data_vars),
-            "nbytes": nbytes,
-        }
+        return _write_group(gk_full, frags, target_store_path)
 
     # range-partition + in-partition sort instead of a hash groupBy: all
     # suffixes of one chunk — and lexicographically adjacent chunks, which
@@ -882,58 +684,23 @@ def rechunk_refs_and_store(
 # ---------------------------------------------------------------------------
 # spill shuffle — eager formats made chunk-lazy for the price of one
 # scratch write (r9 verdict #5: in payload mode the corpus crosses
-# Python→JVM, the shuffle, and JVM→Python — measured on the 800 MB
-# fixture the JVM↔Python transport IS the tax (python-side pickling is
-# <10% of it). Spill mode decodes each source ONCE, writes each spilled
-# piece's raw C-order bytes to a scratch object next to the target,
-# shuffles O(#fragments) metadata rows, and write tasks range-read
-# exactly their pieces — the reference-mode exchange pattern, available
-# to formats that cannot byte-range-serve their own chunks.)
+# Python→JVM, the shuffle, and JVM→Python, and that transport is the
+# tax). Spill mode decodes each source ONCE, writes each spilled piece's
+# NDS1 frame to a scratch object next to the target, shuffles
+# O(#fragments) metadata rows, and the payload-mode combine range-reads
+# exactly its pieces — the reference-mode exchange pattern, available to
+# formats that cannot byte-range-serve their own chunks.
 # ---------------------------------------------------------------------------
 
 SPILL_SCHEMA = (
-    "group_key string, index string, meta binary, payload binary, "
+    "group_key string, index string, payload binary, "
     "url string, offset bigint, length bigint"
 )
 
-#: pieces at or below this many bytes ride the shuffle inline (coords,
-#: tiny edge chunks) — a scratch round-trip per 100-byte coordinate
-#: would be pure request overhead
+#: pieces whose frame is at most this many bytes ride the shuffle inline
+#: (coords, tiny edge chunks) — a scratch round-trip per 100-byte
+#: coordinate would be pure request overhead
 SPILL_INLINE_BYTES = 1 << 20
-
-
-def _spill_meta(single: NDDataset) -> Tuple[dict, "np.ndarray"]:
-    """(reconstruction meta, array) for a single-variable dataset — the
-    skeleton that rides the metadata shuffle while the array bytes sit
-    in scratch."""
-    if single.data_vars:
-        role, (name, var) = "d", next(iter(single.data_vars.items()))
-    else:
-        role, (name, var) = "c", next(iter(single.coords.items()))
-    data = np.ascontiguousarray(var.data)
-    meta = {
-        "role": role,
-        "name": name,
-        "dims": tuple(var.dims),
-        "attrs": dict(var.attrs),
-        "encoding": dict(var.encoding),
-        "dtype": data.dtype.str,
-        "shape": data.shape,
-        "sizes": dict(var.sizes),
-    }
-    return meta, data
-
-
-def _unspill(meta: dict, buf) -> NDDataset:
-    """Rebuild the single-variable dataset from its meta + raw bytes
-    (zero-copy view over the fetched buffer)."""
-    arr = np.frombuffer(buf, dtype=np.dtype(meta["dtype"])).reshape(
-        meta["shape"]
-    )
-    var = Variable(meta["dims"], arr, dict(meta["attrs"]), dict(meta["encoding"]))
-    if meta["role"] == "d":
-        return NDDataset({meta["name"]: var}, {}, {}, dict(meta["sizes"]))
-    return NDDataset({}, {meta["name"]: var}, {}, dict(meta["sizes"]))
 
 
 def open_split_spill_df(
@@ -946,110 +713,77 @@ def open_split_spill_df(
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
 ) -> DataFrame:
     """Open → [preprocess] → split → SPILL: each source file decodes
-    exactly once; every owned piece's raw bytes append to ONE scratch
-    object per source (keyed by the source's index, so task retries
-    rewrite the same object — idempotent), and the emitted rows carry
-    only ``(group_key, index, meta, scratch_url, offset, length)``.
-    Pieces ≤ :data:`SPILL_INLINE_BYTES` ship inline instead."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
+    exactly once; every piece's NDS1 frame appends to ONE scratch object
+    per source (keyed by the source's index, so task retries rewrite the
+    same object — idempotent), and the emitted rows carry only
+    ``(group_key, index, scratch_url, offset, length)``. Frames of at most
+    :data:`SPILL_INLINE_BYTES` ship inline in ``payload`` instead.
+    :func:`rechunk_and_store` combines either kind of row."""
 
     def split_spill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .storage import open_output_stream
-
         for pdf in batches:
             for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url, file_type=ft, xarray_open_kwargs=xarray_open_kwargs
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                rows = {
-                    "group_key": [],
-                    "index": [],
-                    "meta": [],
-                    "payload": [],
-                    "url": [],
-                    "offset": [],
-                    "length": [],
-                }
                 scratch_url = (
                     scratch_root.rstrip("/")
                     + "/spill-"
                     + hashlib.md5(idx_json.encode()).hexdigest()
                     + ".raw"
                 )
-                spilled: List[Tuple[bytes]] = []
-                pos = 0
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
+                rows, spilled, pos = [], [], 0
+                for key, sub_idx, single in _pieces(
+                    idx_json, url, file_type, target_chunks, schema,
+                    xarray_open_kwargs, preprocess,
                 ):
-                    gk_json = group_key_to_json(gk)
-                    for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                        rows["group_key"].append(f"{gk_json}|{suffix}")
-                        rows["index"].append(sub_idx.to_json())
-                        meta, data = _spill_meta(single)
-                        raw = data.tobytes()
-                        rows["meta"].append(pickle.dumps(meta, protocol=5))
-                        if len(raw) <= SPILL_INLINE_BYTES:
-                            rows["payload"].append(raw)
-                            rows["url"].append("")
-                            rows["offset"].append(-1)
-                            rows["length"].append(-1)
-                        else:
-                            spilled.append(raw)
-                            rows["payload"].append(b"")
-                            rows["url"].append(scratch_url)
-                            rows["offset"].append(pos)
-                            rows["length"].append(len(raw))
-                            pos += len(raw)
+                    parts = single.frame_parts()
+                    size = _frame_size(parts)
+                    if size <= SPILL_INLINE_BYTES:
+                        rows.append((key, sub_idx.to_json(), b"".join(parts), "", -1, -1))
+                    else:
+                        spilled.append(parts)
+                        rows.append((key, sub_idx.to_json(), b"", scratch_url, pos, size))
+                        pos += size
                 if spilled:
                     with open_output_stream(scratch_url) as f:
-                        for raw in spilled:
-                            f.write(raw)
-                yield pd.DataFrame(rows)
+                        for parts in spilled:
+                            for part in parts:
+                                f.write(part)
+                yield pd.DataFrame(
+                    rows,
+                    columns=["group_key", "index", "payload", "url", "offset", "length"],
+                )
 
     return df.mapInPandas(split_spill, SPILL_SCHEMA)
 
 
-def rechunk_spill_and_store(
-    df_spill: DataFrame,
-    target_store_path: str,
+def open_split_store_df(
+    df: DataFrame,
+    store_path: str,
+    file_type: Union[str, FileType] = FileType.npz,
+    target_chunks: Optional[Dict[str, int]] = None,
+    schema: Optional[XarraySchema] = None,
+    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
+    xarray_open_kwargs: Optional[dict] = None,
 ) -> DataFrame:
-    """Combine+write for the spill shuffle: each group range-reads its
-    pieces from scratch (O(its bytes), raw dtype — zero parse), rebuilds
-    the sub-fragments, and assembles/writes exactly like
-    :func:`rechunk_and_store`. The corpus never rides the Spark shuffle
-    and never crosses Python↔JVM."""
+    """Zero-shuffle fast path: open → [preprocess] → split → write, all in
+    one map stage. Valid only when every piece is a complete target chunk
+    (``_chunks_aligned_with_files``) — then the groupBy would place
+    exactly one piece per group and the shuffle would move every byte
+    across the cluster for nothing. Each piece goes through the same
+    write kernel as a one-piece group."""
 
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .storage import url_range_get
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for idx_json, url in zip(pdf["index"], pdf["url"]):
+                rows = [
+                    _write_group(key, [(sub_idx, single)], store_path)
+                    for key, sub_idx, single in _pieces(
+                        idx_json, url, file_type, target_chunks, schema,
+                        xarray_open_kwargs, preprocess,
+                    )
+                ]
+                yield pd.DataFrame(rows, columns=["group_key", "index", "n_vars", "nbytes"])
 
-        frags = []
-        for idx_json, meta_b, payload, url, off, length in zip(
-            pdf["index"],
-            pdf["meta"],
-            pdf["payload"],
-            pdf["url"],
-            pdf["offset"],
-            pdf["length"],
-        ):
-            meta = pickle.loads(meta_b)
-            buf = payload if not url else url_range_get(url, int(off), int(length))
-            frags.append((Index.from_json(idx_json), _unspill(meta, buf)))
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return pd.DataFrame(
-            {
-                "group_key": [pdf["group_key"].iloc[0]],
-                "index": [index.to_json()],
-                "n_vars": [len(ds.data_vars)],
-                "nbytes": [nbytes],
-            }
-        )
-
-    return df_spill.groupBy("group_key").applyInPandas(combine, STATUS_SCHEMA)
+    return df.mapInPandas(run, STATUS_SCHEMA)
 
 
 def _cleanup_scratch(scratch_root: str) -> None:
@@ -1185,9 +919,9 @@ def store_to_zarr(
     their source files directly (exchange volume drops from O(data) to
     O(#fragments); sources are read a second time, but only the needed
     pieces for chunk-lazy formats). ``"spill"`` decodes each source
-    once, writes every spilled piece's raw bytes to a scratch object
+    once, writes every spilled piece's NDS1 frame to a scratch object
     next to the target, ships metadata rows, and write tasks
-    range-read exactly their pieces (one extra transient write+read of
+    range-read exactly their frames (one extra transient write+read of
     the corpus on target-adjacent storage; scratch removed when the
     run completes). At 100 TB payload mode is the one that does NOT
     scale: it writes+reads the entire corpus through shuffle storage
@@ -1323,7 +1057,7 @@ def store_to_zarr(
             preprocess=preprocess,
             xarray_open_kwargs=xarray_open_kwargs,
         )
-        statuses = rechunk_spill_and_store(spill, store_path)
+        statuses = rechunk_and_store(spill, store_path)
     elif shuffled:
         split = open_split_fragments_df(
             indexed,

@@ -65,12 +65,17 @@ def test_determine_schema_merge_by_concat(spark, tmp_path):
     """A 2-D MergeDim × ConcatDim schema reduce: the inner (concat) level
     groups on the stripped index, the outermost (merge) level on the
     constant empty index. The global schema equals a serial fold of the
-    same per-level combiners."""
+    same per-level combiners; an uneven concat level keeps each
+    position's length."""
     import pandas as pd
 
     import pangeo_forge_recipes_spark.transforms as T
-    from pangeo_forge_recipes_spark import Index
-    from pangeo_forge_recipes_spark.aggregation import schema_from_json, schema_to_json
+    from pangeo_forge_recipes_spark import CombineOp, Dimension, Index, Position
+    from pangeo_forge_recipes_spark.aggregation import (
+        dataset_to_schema,
+        schema_from_json,
+        schema_to_json,
+    )
     from pangeo_forge_recipes_spark.openers import read_schema
 
     ds = make_ds(nt=6)
@@ -110,6 +115,20 @@ def test_determine_schema_merge_by_concat(spark, tmp_path):
     assert got["dims"] == {"time": 6, "lat": 18, "lon": 36}
     assert got["chunks"] == {"time": {0: 2, 1: 2, 2: 2}}
     assert set(got["data_vars"]) == {"foo", "bar"}
+
+    # uneven concat level (4/4/2 steps): the level combiner injects each
+    # position's own length as its sequence chunk
+    time = Dimension("time", CombineOp.CONCAT)
+    uneven = pd.DataFrame(
+        [
+            (Index({time: Position(pos)}).to_json(), schema_to_json(dataset_to_schema(make_ds(nt=nt))))
+            for pos, nt in [(0, 4), (1, 4), (2, 2)]
+        ],
+        columns=["index", "schema"],
+    )
+    out = schema_from_json(T._combine_level_fn(time)(uneven)["schema"].iloc[0])
+    assert out["dims"]["time"] == 10
+    assert out["chunks"]["time"] == {0: 4, 1: 4, 2: 2}
 
 
 def test_roundtrip_inferred_nitems(spark, tmp_path):
@@ -536,28 +555,75 @@ def test_pattern_from_glob_natural_order(tmp_path, spark):
         pattern_from_glob(str(tmp_path / "none*.npz"), "time")
 
 
+def _store_files(root) -> dict:
+    """Every file under a store, as ``{relative path: bytes}``."""
+    import os
+
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = f.read()
+    return out
+
+
 @pytest.mark.parametrize("target_chunks", [{"time": 3}, {"time": 4}])
-def test_reference_shuffle_equals_payload_shuffle(spark, tmp_path, target_chunks):
-    """rechunk_shuffle='reference' moves (group_key, index, url) rows
-    through THE shuffle and re-reads sources on the write side — the
-    store must be byte-equal in content to the payload-shuffle store."""
+def test_reference_shuffle_equals_payload_shuffle(
+    spark, tmp_path, target_chunks, monkeypatch
+):
+    """Every rechunk mode runs the same pieces → write kernel pipeline,
+    so the stores are byte-identical file for file: payload, reference
+    (re-reads sources on the write side), spill with pieces inline and
+    with every piece through scratch, and the aligned no-shuffle path
+    (files cut at the chunk grain). The spill combine is the payload
+    mode's ``applyInArrow`` kernel, not a pandas one."""
+    import pangeo_forge_recipes_spark.transforms as T
+
     ds = make_ds(nt=10)
-    paths = split_ds_into_files(ds, str(tmp_path), items_per_file=2)
+    paths = split_ds_into_files(ds, str(tmp_path / "src"), items_per_file=2)
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
-    ref = store_to_zarr(
-        spark, pattern, str(tmp_path / "t1"), "store.zarr",
-        target_chunks=target_chunks, rechunk_shuffle="reference",
+    combined = []
+    real_combine = T.rechunk_and_store
+    monkeypatch.setattr(
+        T, "rechunk_and_store",
+        lambda *a, **k: combined.append(real_combine(*a, **k)) or combined[-1],
     )
-    pay = store_to_zarr(
-        spark, pattern, str(tmp_path / "t2"), "store.zarr",
-        target_chunks=target_chunks, rechunk_shuffle="payload",
+
+    def run(name, pat=pattern, mode="payload"):
+        return store_to_zarr(
+            spark, pat, str(tmp_path / name), "store.zarr",
+            target_chunks=target_chunks, rechunk_shuffle=mode,
+        )
+
+    results = {
+        "payload": run("payload"),
+        "reference": run("reference", mode="reference"),
+        "spill": run("spill", mode="spill"),
+    }
+    plan = combined[-1]._jdf.queryExecution().optimizedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    with monkeypatch.context() as m:
+        m.setattr(T, "SPILL_INLINE_BYTES", 0)
+        results["spill_scratch"] = run("spill_scratch", mode="spill")
+    aligned_paths = split_ds_into_files(
+        ds, str(tmp_path / "src_aligned"), items_per_file=target_chunks["time"]
     )
-    assert ref.shuffled and pay.shuffled
-    assert_equal(ref.open(), ds)
-    assert ref.n_chunks_written == pay.n_chunks_written
-    assert ref.bytes_written == pay.bytes_written
+    results["aligned"] = run(
+        "aligned", pat=pattern_from_file_sequence(aligned_paths, "time", file_type="npz")
+    )
+
+    assert not results["aligned"].shuffled
+    assert all(r.shuffled for k, r in results.items() if k != "aligned")
+    assert_equal(results["payload"].open(), ds)
+    expected = _store_files(results["payload"].path)
+    for name, r in results.items():
+        assert _store_files(r.path) == expected, name
+        assert r.n_chunks_written == results["payload"].n_chunks_written, name
+        assert r.bytes_written == results["payload"].bytes_written, name
 
 
 def test_reference_shuffle_with_preprocess_and_shards(spark, tmp_path):
@@ -766,15 +832,15 @@ def test_kerchunk_multi_dim_single_axis_kernel_still_raises(tmp_path):
 
 
 def test_spill_shuffle_scratch_path(spark, tmp_path, monkeypatch):
-    """Force every piece through scratch (inline threshold 0): raw
-    bytes land in one scratch object per source, the exchange carries
+    """Force every piece through scratch (inline threshold 0): NDS1
+    frames land in one scratch object per source, the exchange carries
     metadata only, the store round-trips exactly, and scratch is
     removed after the run."""
     import pangeo_forge_recipes_spark.transforms as T
 
     monkeypatch.setattr(T, "SPILL_INLINE_BYTES", 0)
     seen = {}
-    real = T.rechunk_spill_and_store
+    real = T.rechunk_and_store
 
     def spy(df_spill, store_path):
         # materialize the split rows once to inspect what the shuffle
@@ -788,7 +854,7 @@ def test_spill_shuffle_scratch_path(spark, tmp_path, monkeypatch):
             store_path,
         )
 
-    monkeypatch.setattr(T, "rechunk_spill_and_store", spy)
+    monkeypatch.setattr(T, "rechunk_and_store", spy)
     ds = make_ds(nt=6)
     paths = split_ds_into_files(ds, str(tmp_path), items_per_file=2)
     pattern = pattern_from_file_sequence(
@@ -837,33 +903,36 @@ def test_spill_shuffle_inline_small_pieces(spark, tmp_path):
     assert not (tmp_path / "scratch").exists()  # nothing was spilled
 
 
-def test_spill_wire_roundtrip_dtypes():
-    """_spill_meta/_unspill preserve dims/attrs/encoding and values
-    across dtypes incl. byte-order variants, datetimes and bools (the
-    raw-bytes wire that replaces pickle on the spill shuffle)."""
-    import numpy as np
+def test_split_batches_flush_before_int32_offsets(tmp_path, monkeypatch):
+    """The payload split's binary column has int32 offsets: a batch is
+    flushed before its buffer would pass the byte limit, the rows stay
+    the same and in the same order, and a single frame over the limit
+    raises naming its group key."""
+    import pyarrow as pa
 
-    from pangeo_forge_recipes_spark.ndset import NDDataset, Variable
-    from pangeo_forge_recipes_spark.transforms import _spill_meta, _unspill
+    import pangeo_forge_recipes_spark.transforms as T
+    from pangeo_forge_recipes_spark import CombineOp, Dimension, Index, IndexedPosition
 
-    cases = [
-        ("d", np.arange(24, dtype="<f8").reshape(2, 3, 4)),
-        ("d", np.arange(6, dtype=">i4").reshape(3, 2)),
-        ("c", np.array(["2020-01-01", "2020-01-02"], dtype="M8[ns]")),
-        ("d", np.array([True, False, True])),
-        ("d", np.float32([0.5, -1.25, 3.0])),
-    ]
-    for role, arr in cases:
-        dims = tuple(f"d{i}" for i in range(arr.ndim))
-        var = Variable(dims, arr, {"a": 1}, {"e": "x"})
-        single = (
-            NDDataset({"v": var}, {}, {}, dict(var.sizes))
-            if role == "d"
-            else NDDataset({}, {"v": var}, {}, dict(var.sizes))
-        )
-        meta, data = _spill_meta(single)
-        back = _unspill(meta, data.tobytes())
-        got = (back.data_vars if role == "d" else back.coords)["v"]
-        assert got.dims == dims
-        np.testing.assert_array_equal(np.asarray(got.data), np.asarray(arr))
-        assert got.attrs == {"a": 1} and got.encoding == {"e": "x"}
+    ds = make_ds(nt=4)
+    (path,) = split_ds_into_files(ds, str(tmp_path), items_per_file=4)
+    idx_json = Index(
+        {Dimension("time", CombineOp.CONCAT): IndexedPosition(0, dimsize=4)}
+    ).to_json()
+
+    def batches():
+        pieces = T._pieces(idx_json, path, "npz", {"time": 1}, None, None, None)
+        return list(T._frame_batches(pieces))
+
+    whole = batches()
+    assert len(whole) == 1
+    frames = whole[0].column("payload").to_pylist()
+    limit = 2 * max(len(f) for f in frames)  # ~11 KB
+    monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", limit)
+    flushed = batches()
+    assert len(flushed) > 2
+    assert all(sum(map(len, b.column("payload").to_pylist())) <= limit for b in flushed)
+    assert pa.Table.from_batches(flushed).equals(pa.Table.from_batches(whole))
+
+    monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", max(len(f) for f in frames) - 1)
+    with pytest.raises(ValueError, match=r"\|d:bar' frames to \d+ bytes"):
+        batches()

@@ -16,7 +16,6 @@ from pangeo_forge_recipes_spark.aggregation import (
     schema_to_json,
 )
 from pangeo_forge_recipes_spark.chunk_grid import ChunkAxis, ChunkGrid
-from pangeo_forge_recipes_spark.combiners import CombineXarraySchemas, MinMaxCountCombineFn
 from pangeo_forge_recipes_spark.ndset import assert_equal
 from pangeo_forge_recipes_spark.rechunking import combine_fragments, split_fragment
 from pangeo_forge_recipes_spark.types import (
@@ -169,29 +168,37 @@ def test_combine_schemas_errors():
 
 
 def test_combiner_accumulator_protocol():
-    """The explicit CombineFn-style protocol (reference combiners.py:15-66)."""
+    """The per-level schema combiner of ``determine_schema`` as an
+    accumulator: two partial groups (positions {0} and {1, 2}) fold
+    separately, then merge; the uneven 4/4/2 concat keeps each position's
+    length (reference ``combiners.py:15-66``). Pure pandas, no session."""
+    import pandas as pd
+
+    from pangeo_forge_recipes_spark.transforms import _combine_level_fn
+
     dim = Dimension("time", CombineOp.CONCAT)
-    fn = CombineXarraySchemas(dim)
+    fn = _combine_level_fn(dim)
     items = []
     for pos, nt in [(0, 4), (1, 4), (2, 2)]:
         ds = make_ds(nt=nt)
-        items.append((Index({dim: Position(pos)}), dataset_to_schema(ds)))
-    acc1 = fn.create_accumulator()
-    acc1 = fn.add_input(acc1, items[0])
-    acc2 = fn.create_accumulator()
-    acc2 = fn.add_input(acc2, items[1])
-    acc2 = fn.add_input(acc2, items[2])
-    out = fn.extract_output(fn.merge_accumulators([acc1, acc2]))
+        index_json = Index({dim: Position(pos)}).to_json()
+        items.append((index_json, schema_to_json(dataset_to_schema(ds))))
+
+    def fold(group):
+        out = fn(pd.DataFrame(group, columns=["index", "schema"]))
+        assert len(out) == 1
+        assert Index.from_json(out["index"][0]) == Index()
+        return schema_from_json(out["schema"][0])
+
+    acc1 = fold(items[:1])
+    acc2 = fold(items[1:])
+    assert acc1["chunks"]["time"] == {0: 4}
+    assert acc2["chunks"]["time"] == {1: 4, 2: 2}
+    out = combine_xarray_schemas(acc1, acc2, concat_dim="time")
     assert out["dims"]["time"] == 10
     assert out["chunks"]["time"] == {0: 4, 1: 4, 2: 2}
-
-
-def test_min_max_count_fn():
-    fn = MinMaxCountCombineFn
-    acc = fn.create_accumulator()
-    for v in [5, 3, 9]:
-        acc = fn.add_input(acc, v)
-    assert fn.extract_output(acc) == (3, 9, 3)
+    # a single group in shuffled order folds to the same schema
+    assert fold([items[2], items[0], items[1]]) == out
 
 
 def test_determine_target_chunks():

@@ -53,6 +53,35 @@ def test_raw_frame_roundtrip_with_datetime_and_attrs():
     assert back.attrs == {"title": "frame"}
 
 
+@pytest.mark.parametrize(
+    "role, arr",
+    [
+        ("d", np.arange(24, dtype="<f8").reshape(2, 3, 4)),
+        ("d", np.arange(6, dtype=">i4").reshape(3, 2)),
+        ("c", np.array(["2020-01-01", "2020-01-02"], dtype="M8[ns]")),
+        ("d", np.array([True, False, True])),
+        ("d", np.float32([0.5, -1.25, 3.0])),
+    ],
+    ids=["f8-3d", "big-endian-i4", "M8-coord", "bool", "f4"],
+)
+def test_single_variable_frame_roundtrip(role, arr):
+    """The rechunk shuffles ship one variable per frame: dims, attrs,
+    encoding, dtype (byte order included) and values survive for data
+    variables and coords alike."""
+    dims = tuple(f"d{i}" for i in range(arr.ndim))
+    var = Variable(dims, arr, {"a": 1}, {"e": "x"})
+    group = {"v": var}
+    single = NDDataset(group, {}, {}, dict(var.sizes)) if role == "d" else NDDataset({}, group, {}, dict(var.sizes))
+    b = single.to_bytes()
+    assert b[:4] == _NDS_MAGIC
+    back = NDDataset.from_bytes(b)
+    got = (back.data_vars if role == "d" else back.coords)["v"]
+    assert got.dims == dims and got.data.dtype == arr.dtype
+    np.testing.assert_array_equal(got.data, arr)
+    assert got.attrs == {"a": 1} and got.encoding == {"e": "x"}
+    assert back.sizes == single.sizes
+
+
 def test_from_bytes_accepts_memoryview_and_arrow_buffer():
     pa = pytest.importorskip("pyarrow")
     ds = _sample()

@@ -579,9 +579,9 @@ def test_glob_regex_single_level_property(segments, meta):
 )
 @settings(max_examples=100, deadline=None)
 def test_spill_wire_property(ndim, dtype, seed):
-    """Spill wire round-trip for arbitrary small shapes/dtypes."""
+    """NDS1 round-trip of a single-variable piece (the frame the payload
+    and spill shuffles ship) for arbitrary small shapes/dtypes."""
     from pangeo_forge_recipes_spark.ndset import NDDataset, Variable
-    from pangeo_forge_recipes_spark.transforms import _spill_meta, _unspill
 
     rng = np.random.RandomState(seed % (2**31))
     shape = tuple(rng.randint(1, 4) for _ in range(ndim))
@@ -592,8 +592,7 @@ def test_spill_wire_property(ndim, dtype, seed):
     dims = tuple(f"d{i}" for i in range(ndim))
     var = Variable(dims, arr)
     single = NDDataset({"v": var}, {}, {}, dict(var.sizes))
-    meta, data = _spill_meta(single)
-    back = _unspill(meta, data.tobytes())
-    np.testing.assert_array_equal(
-        np.asarray(back.data_vars["v"].data), np.asarray(arr)
-    )
+    back = NDDataset.from_bytes(single.to_bytes())
+    got = back.data_vars["v"]
+    assert got.dims == dims and got.data.dtype == arr.dtype
+    np.testing.assert_array_equal(np.asarray(got.data), np.asarray(arr))
