@@ -44,7 +44,8 @@ import xml.etree.ElementTree as ET
 from typing import Dict, Iterator, Optional, Tuple
 from urllib.parse import quote, unquote, urlparse
 
-from .s3io import _RETRY_STATUSES, S3Store, _pooled_send
+from .s3io import S3Store, _pooled_send
+from .storage import _RETRY_STATUSES
 
 __all__ = [
     "AzureClient",
@@ -53,18 +54,11 @@ __all__ = [
     "AzureStore",
     "configure_spark_azure",
     "generate_service_sas",
-    "is_azure_url",
     "parse_azure_url",
 ]
 
 _API_VERSION = "2021-08-06"
 _LIST_PAGE = 5000  # List Blobs maxresults ceiling (public API limit)
-
-
-def is_azure_url(path: str) -> bool:
-    """True for ``abfs://``/``abfss://``/``az://`` urls (the adlfs
-    conventions the reference's users write in their FilePatterns)."""
-    return str(path).startswith(("abfs://", "abfss://", "az://"))
 
 
 def parse_azure_url(url: str) -> Tuple[Optional[str], str, str]:

@@ -41,12 +41,12 @@ bit-exactly, or raises), used by the tests to exercise the scanner.
 
 from __future__ import annotations
 
-import os
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
 from .ndset import NDDataset, Variable
+from .storage import open_seekable, ref_url
 
 # (discipline, parameterCategory, parameterNumber) -> cfgrib-style shortName
 _SHORTNAMES = {
@@ -114,14 +114,9 @@ def scan_grib2_messages(path: str) -> List[dict]:
     Range GETs: the walk transfers O(headers + bitmaps), not the file —
     the NOMADS/HRRR kerchunk-from-remote-GRIB pattern."""
     out: List[dict] = []
-    from .storage import is_remote_url, open_range_file
-
-    if is_remote_url(str(path)):
-        f = open_range_file(path)
-        size = f.size
-    else:
-        f = open(path, "rb")
-        size = os.path.getsize(path)
+    f = open_seekable(path)
+    size = f.seek(0, 2)
+    f.seek(0)
     with f:
         pos = 0
         while pos < size:
@@ -1199,10 +1194,7 @@ def scan_grib2(
     msgs = scan_grib2_messages(path)
     groups, times, grid = _group_messages(msgs, filter_by_keys)
     (ydim, xdim), space_coords = _grid_parts(grid)
-    if str(path).startswith(("http://", "https://", "s3://", "gs://", "abfs://", "abfss://", "az://")):
-        url = path  # refs point at the remote source: range-GET reads
-    else:
-        url = f"file://{os.path.abspath(path)}"
+    url = ref_url(path)
     nt, nj, ni = len(times), grid["nj"], grid["ni"]
     # non-dim coords (the 2-D lat/lon of a projected grid) are declared
     # via the group 'coordinates' attribute, the engine's convention for

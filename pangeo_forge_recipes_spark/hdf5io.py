@@ -41,7 +41,6 @@ format spec, used by the tests to exercise the scanner end-to-end.
 from __future__ import annotations
 
 import json
-import os
 import struct
 import zlib
 from typing import Dict, List, Optional, Tuple
@@ -50,6 +49,7 @@ import numpy as np
 
 from .cfcalendar import is_standard_calendar
 from .ndset import NDDataset, Variable, decode_cf_datetime
+from .storage import open_seekable, ref_url
 
 _SIGNATURE = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -63,15 +63,10 @@ _UNDEF = 0xFFFFFFFFFFFFFFFF
 class _Reader:
     def __init__(self, path: str):
         self.path = path
-        from .storage import is_remote_url, open_range_file
-
-        if is_remote_url(str(path)):
-            # remote archive: the header walk runs over block-cached
-            # Range GETs — a scan transfers O(header) bytes, never the
-            # file (chunk data later range-reads through ReferenceStore)
-            self.f = open_range_file(path)
-        else:
-            self.f = open(path, "rb")
+        # a remote archive's header walk runs over block-cached Range
+        # GETs — a scan transfers O(header) bytes, never the file (chunk
+        # data later range-reads through ReferenceStore)
+        self.f = open_seekable(path)
         self._parse_superblock()
         # address -> dataset info (for DIMENSION_LIST reference resolution)
         self.datasets: Dict[str, dict] = {}
@@ -862,10 +857,7 @@ def scan_hdf5(path: str, inline_threshold: int = 300) -> dict:
 
     reader = _Reader(path)
     try:
-        if str(path).startswith(("http://", "https://", "s3://", "gs://", "abfs://", "abfss://", "az://")):
-            url = path  # refs point at the remote source: range-GET reads
-        else:
-            url = f"file://{os.path.abspath(path)}"
+        url = ref_url(path)
         refs: Dict[str, object] = {}
         entries = {}
         for name, info in reader.datasets.items():

@@ -18,6 +18,7 @@ combined reference directly readable through :func:`~.dsio.open_zarr_group`
 from __future__ import annotations
 
 import base64
+import io
 import json
 import os
 import struct
@@ -26,6 +27,7 @@ from typing import Dict, Iterator, List, Optional
 
 import numpy as np
 
+from .storage import is_object_url, open_binary, open_output_stream, ref_url, url_range_get
 from .zarrio import _DTYPE_TO_ZARR, Store, ZARR_JSON
 
 RefValue = object  # str (inline) | [url, offset, length]
@@ -102,7 +104,7 @@ def scan_npz(path: str, inline_threshold: int = 300) -> dict:
     from .dsio import npz_schema
 
     schema = npz_schema(path)
-    url = f"file://{os.path.abspath(path)}"
+    url = ref_url(path)
     refs: Dict[str, RefValue] = {}
     group_meta = {"zarr_format": 3, "node_type": "group", "attributes": dict(schema["attrs"])}
     non_dim_coords = [
@@ -209,21 +211,9 @@ class ReferenceStore(Store):
                 return base64.b64decode(val[7:])
             return val.encode()
         url, offset, length = val
-        if url.startswith(("http://", "https://")):
-            # chunk-lazy over http: one Range GET per chunk — a read
-            # touches O(chunk) bytes of the remote source, never the file
-            from .storage import http_range_get
-
-            return http_range_get(url, int(offset), int(length))
-        if url.startswith(("s3://", "gs://", "abfs://", "abfss://", "az://")):
-            # same chunk-lazy contract over the object store
-            from .storage import url_range_get
-
-            return url_range_get(url, int(offset), int(length))
-        path = url[len("file://"):] if url.startswith("file://") else url
-        with open(path, "rb") as f:
-            f.seek(int(offset))
-            return f.read(int(length))
+        # chunk-lazy: one range read per chunk — over http or an object
+        # store a read touches O(chunk) bytes of the source, never the file
+        return url_range_get(url, int(offset), int(length))
 
     def exists(self, key: str) -> bool:
         return key in self.refs
@@ -249,8 +239,6 @@ def open_reference_dataset(path_or_refs, load: bool = True):
     from .dsio import open_zarr_group
 
     if isinstance(path_or_refs, str):
-        from .storage import open_binary
-
         with open_binary(path_or_refs) as f:
             path_or_refs = json.load(f)
     if isinstance(path_or_refs, dict) and (
@@ -401,8 +389,6 @@ def combine_references(
 def write_reference_json(refs: dict, outpath: str) -> str:
     """Serialize combined references to ``reference.json`` (reference
     ``writers.py:174-179``). Local paths or ``s3://`` urls."""
-    from .storage import open_output_stream
-
     with open_output_stream(outpath) as f:
         f.write(json.dumps(refs).encode("utf-8"))
     return outpath
@@ -439,33 +425,19 @@ def write_reference_parquet(refs: dict, outpath: str, refs_per_component: int = 
             "size": pa.array(sizes, pa.int64()),
         }
     )
-    from .storage import is_object_url, open_output_stream
-
-    if is_object_url(outpath):
-        with open_output_stream(os.path.join(outpath, "refs.parquet")) as f:
-            pq.write_table(t, f, row_group_size=refs_per_component)
-        return outpath
-    os.makedirs(outpath, exist_ok=True)
-    pq.write_table(t, os.path.join(outpath, "refs.parquet"), row_group_size=refs_per_component)
+    with open_output_stream(os.path.join(outpath, "refs.parquet")) as f:
+        pq.write_table(t, f, row_group_size=refs_per_component)
     return outpath
 
 
 def read_reference_parquet(path: str) -> dict:
     import pyarrow.parquet as pq
 
-    from .storage import is_object_url
-
+    src = os.path.join(path, "refs.parquet")
     if is_object_url(path):
-        import io as _io
-
-        from .storage import _object_client_parts
-
-        client, bucket, key = _object_client_parts(
-            os.path.join(path, "refs.parquet"), None
-        )
-        t = pq.read_table(_io.BytesIO(client.get_object(bucket, key)))
-    else:
-        t = pq.read_table(os.path.join(path, "refs.parquet"))
+        with open_binary(src) as f:
+            src = io.BytesIO(f.read())
+    t = pq.read_table(src)
     refs: Dict[str, RefValue] = {}
     for row in t.to_pylist():
         if row["inline_value"] is not None:

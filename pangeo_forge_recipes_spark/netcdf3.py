@@ -35,7 +35,6 @@ Type mapping notes (CDF-1/2 classic has no 64-bit integers):
 from __future__ import annotations
 
 import json
-import os
 import struct
 from typing import Dict, List, Optional, Tuple
 
@@ -44,6 +43,7 @@ import numpy as np
 from .aggregation import XarraySchema
 from .cfcalendar import is_standard_calendar
 from .ndset import NDDataset, Variable, decode_cf_datetime, encode_cf_datetime
+from .storage import open_seekable, ref_url
 
 NC_BYTE, NC_CHAR, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE = 1, 2, 3, 4, 5, 6
 # CDF-5 (pnetcdf lineage) additional external types
@@ -516,26 +516,16 @@ def scan_netcdf3(path: str, inline_threshold: int = 300) -> dict:
     from .kerchunkio import _array_meta, _inline
     from .zarrio import _DTYPE_TO_ZARR, ZARR_JSON
 
-    def _open_src():
-        # http(s) sources scan in place over block-cached Range GETs:
-        # the header parse transfers O(header) bytes, never the file
-        from .storage import is_remote_url, open_range_file
-
-        if is_remote_url(str(path)):
-            return open_range_file(path)
-        return open(path, "rb")
-
-    with _open_src() as f:
+    # remote sources scan in place over block-cached Range GETs: the
+    # header parse transfers O(header) bytes, never the file
+    with open_seekable(path) as f:
         header = _parse_header(f)
     if any(v["record"] for v in header["variables"]):
         raise NotImplementedError(
             "record variables interleave across the file; re-written fixed "
             "layout required for byte-range references"
         )
-    if str(path).startswith(("http://", "https://", "s3://", "gs://", "abfs://", "abfss://", "az://")):
-        url = path  # refs point at the remote source: range-GET reads
-    else:
-        url = f"file://{os.path.abspath(path)}"
+    url = ref_url(path)
     coords, _ = _split_roles(header)
     gattrs = dict(header["attrs"])
     declared = gattrs.pop("coordinates", None)
@@ -563,7 +553,7 @@ def scan_netcdf3(path: str, inline_threshold: int = 300) -> dict:
         chunk_key = "/".join([v["name"], "c"] + ["0"] * len(v["shape"]))
         inline: Optional[str] = None
         if nbytes <= inline_threshold:
-            with _open_src() as f:
+            with open_seekable(path) as f:
                 f.seek(v["begin"])
                 inline = _inline(f.read(nbytes), inline_threshold)
         refs[chunk_key] = (

@@ -1,37 +1,45 @@
-"""File openers: url → bytes/local path → NDDataset or kerchunk references.
+"""File openers: url → NDDataset, schema or kerchunk references.
 
 Parity layer for reference ``pangeo_forge_recipes/openers.py:16-254``.
-Engine-native formats (``zarr``, ``npz``, ``netcdf3`` via the engine's own
-pure-numpy classic reader in :mod:`..netcdf3`, ``netcdf4``/HDF5 via the
-pure-Python byte-range scanner in :mod:`..hdf5io`, ``grib`` via the
-pure-Python GRIB2 reader in :mod:`..grib2io`, ``opendap`` via the
-pure-Python DAP2 wire client in :mod:`..dap2io`) open for real,
-keeping the reference's engine-selection table (``openers.py:40-47``)
-intact with every row live.
+:data:`READERS` is the engine table (reference ``openers.py:40-47``): one
+row per :class:`FileType` giving the format's open, schema and scan
+callables, all engine-native — ``npz`` and ``zarr`` through the engine's
+own stores, ``netcdf3`` through the pure-numpy classic reader in
+:mod:`..netcdf3`, ``netcdf4``/HDF5 through the pure-Python byte-range
+walker in :mod:`..hdf5io`, ``grib`` through the pure-Python GRIB2 reader
+in :mod:`..grib2io`, ``opendap`` through the DAP2/DAP4 wire client in
+:mod:`..dap4io`, and ``kerchunk`` reference files. A row also names the
+operations that read a remote source in place; every other remote read
+goes through one temp download (:func:`_read_source`). Which transport a
+url takes is decided in :mod:`.storage` alone.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import shutil
 import tempfile
-from typing import Optional
+from dataclasses import dataclass
+from typing import Callable, Optional
 
-from .aggregation import XarraySchema
+from .aggregation import XarraySchema, dataset_to_schema
 from .dsio import npz_schema, open_zarr_group, read_npz, zarr_group_schema
 from .ndset import NDDataset
 from .patterns import FileType
-from .storage import CacheFSSpecTarget, _add_query_string_secrets
-
-# engine-per-file-type map, mirroring reference ``openers.py:40-47``
-OPEN_ENGINES = {
-    FileType.netcdf3: "native",  # engine-internal pure-numpy classic reader
-    FileType.netcdf4: "native",  # engine-internal pure-Python HDF5 walker
-    FileType.opendap: "native",  # engine-internal pure-Python DAP2 client
-    FileType.grib: "native",  # engine-internal pure-Python GRIB2 reader
-    FileType.zarr: "zarr",
-    FileType.npz: "npz",
-    FileType.kerchunk: "kerchunk",
-}
+from .storage import (
+    CacheFSSpecTarget,
+    _add_query_string_secrets,
+    _open_url_raw,
+    is_http_url,
+    is_object_url,
+    is_remote_url,
+    local_path,
+    open_binary,
+    ref_url,
+    store_for,
+    url_range_get,
+)
 
 
 def open_url(
@@ -49,47 +57,6 @@ def open_url(
     if secrets:
         return _add_query_string_secrets(fname, secrets)
     return fname
-
-
-def _local_path(url: str) -> str:
-    return url[len("file://"):] if url.startswith("file://") else url
-
-
-def _is_http(url: str) -> bool:
-    return url.startswith(("http://", "https://"))
-
-
-def _is_remote(url: str) -> bool:
-    """Urls read over the network in place: http(s), s3/gs, or azure."""
-    return _is_http(url) or url.startswith(
-        ("s3://", "gs://", "abfs://", "abfss://", "az://")
-    )
-
-
-def _materialize_local(
-    url: str, file_type: FileType, open_kwargs: Optional[dict] = None
-) -> tuple:
-    """Resolve a url to a local path for path-based readers. ``http(s)://``
-    streams to a NamedTemporaryFile (the un-cached open path — recipes
-    that open the same file repeatedly should pass ``cache=`` so the
-    byte cache pays the transfer once); so do ``s3://`` objects.
-    Returns ``(path, is_temp)``."""
-    if not _is_remote(url):
-        return _local_path(url), False
-    from .storage import _open_url_raw
-
-    suffix = f".{file_type.value}" if file_type != FileType.unknown else ""
-    tmp = tempfile.NamedTemporaryFile(suffix=suffix, delete=False)
-    try:
-        with _open_url_raw(url, None, **(open_kwargs or {})) as src:
-            while True:
-                block = src.read(16 * 1024 * 1024)
-                if not block:
-                    break
-                tmp.write(block)
-    finally:
-        tmp.close()
-    return tmp.name, True
 
 
 def _grib_filter(kw: dict) -> Optional[dict]:
@@ -119,24 +86,19 @@ def sniff_file_type(url: str) -> FileType:
     * GRIB2: ``GRIB``; npz: zip ``PK\\x03\\x04``;
     * kerchunk: a JSON document (leading ``{``).
     """
-    if _is_remote(url):
-        from .storage import url_range_get
-        from .zarrio import _store_for
-
-        store = _store_for(url)
+    if is_remote_url(url):
+        store = store_for(url)
         if store.exists("zarr.json") or store.exists(".zgroup"):
             return FileType.zarr
-        head = url_range_get(url, 0, 8)
     else:
-        path = _local_path(url)
+        path = local_path(url)
         if os.path.isdir(path):
             if os.path.exists(os.path.join(path, "zarr.json")) or os.path.exists(
                 os.path.join(path, ".zgroup")
             ):
                 return FileType.zarr
             raise ValueError(f"{url}: directory without zarr metadata")
-        with open(path, "rb") as f:
-            head = f.read(8)
+    head = url_range_get(url, 0, 8)
     if head[:8] == _HDF5_SIG:
         return FileType.netcdf4
     if head[:3] == b"CDF" and head[3:4] in (b"\x01", b"\x02", b"\x05"):
@@ -148,21 +110,12 @@ def sniff_file_type(url: str) -> FileType:
     if head[:1] in (b"{", b" ", b"\n"):
         return FileType.kerchunk
     # HDF5 userblock: the signature may sit at 512 * 2^k
-    def _read_at(off: int, n: int) -> bytes:
-        if _is_remote(url):
-            from .storage import url_range_get
-
-            try:
-                return url_range_get(url, off, n)
-            except Exception:
-                return b""
-        with open(_local_path(url), "rb") as f:
-            f.seek(off)
-            return f.read(n)
-
     off = 512
     while off <= (1 << 22):
-        sig = _read_at(off, 8)
+        try:
+            sig = url_range_get(url, off, 8)
+        except OSError:  # a server may refuse a range past EOF
+            break
         if sig == _HDF5_SIG:
             return FileType.netcdf4
         if len(sig) < 8:
@@ -178,100 +131,188 @@ def _resolve_type(url: str, file_type: FileType) -> FileType:
     return sniff_file_type(url) if file_type == FileType.unknown else file_type
 
 
+@dataclass(frozen=True)
+class Reader:
+    """One row of :data:`READERS`. ``open(path, load, kw)``,
+    ``schema(path, kw)`` and ``scan(path, inline_threshold, kw)`` take a
+    local path, or the remote url itself for the ops named in
+    ``in_place``; ``kw`` are the caller's opener kwargs. ``scan=None``:
+    the format has no reference scanner. ``lazy`` formats honour
+    ``load=False`` with byte-ranges into the source, so their temp
+    download must outlive the open."""
+
+    open: Callable
+    schema: Callable
+    scan: Optional[Callable] = None
+    in_place: frozenset = frozenset()
+    lazy: bool = False
+
+
+def _fn(module: str, name: str) -> Callable:
+    """``module.name``, imported at the call: the format readers stay out
+    of the package import."""
+    return getattr(importlib.import_module(f".{module}", __package__), name)
+
+
+def _scan_zarr(path: str, inline_threshold: int, kw: dict) -> dict:
+    if is_http_url(path):
+        # scanning needs a key LISTING, which http cannot provide (and a
+        # remote zarr store already reads in place through HTTPStore) —
+        # fail with the story instead of a confusing 404 on the dir url
+        raise NotImplementedError(
+            "kerchunk-scanning a REMOTE zarr store is not supported (http "
+            "has no key listing) — read it directly: open_zarr_group(url) "
+            "/ spark.read.format('zarr').load(url), or scan the store "
+            "where it was written"
+        )
+    if is_object_url(path):
+        # object stores CAN list keys — scan the store in place: metadata
+        # objects inline, chunk objects reference the url whole-object
+        return _fn("kerchunkio", "scan_zarr_store")(
+            store_for(path), path, inline_threshold=inline_threshold
+        )
+    return _fn("kerchunkio", "scan_zarr")(path, inline_threshold=inline_threshold)
+
+
+_ALL_OPS = frozenset({"open", "schema", "scan"})
+
+#: the engine table, mirroring reference ``openers.py:40-47``
+READERS = {
+    FileType.npz: Reader(
+        open=lambda p, load, kw: read_npz(p, load=load),
+        schema=lambda p, kw: npz_schema(p),
+        scan=lambda p, n, kw: _fn("kerchunkio", "scan_npz")(p, inline_threshold=n),
+        lazy=True,
+    ),
+    # a zarr store is a url PREFIX, not a single file: it reads in place
+    # through its Store (consolidated metadata = one GET for the group
+    # walk; lazy opens range-GET chunks)
+    FileType.zarr: Reader(
+        open=lambda p, load, kw: open_zarr_group(p, load=load),
+        schema=lambda p, kw: zarr_group_schema(p),
+        scan=_scan_zarr,
+        in_place=_ALL_OPS,
+        lazy=True,
+    ),
+    # the classic-netCDF scan parses one header block in place
+    FileType.netcdf3: Reader(
+        open=lambda p, load, kw: _fn("netcdf3", "read_netcdf3")(p),
+        schema=lambda p, kw: _fn("netcdf3", "netcdf3_schema")(p),
+        scan=lambda p, n, kw: _fn("netcdf3", "scan_netcdf3")(p, inline_threshold=n),
+        in_place=frozenset({"scan"}),
+    ),
+    # the HDF5 header walk runs over block-cached Range GETs and chunk
+    # data range-reads through the virtual store — no download
+    FileType.netcdf4: Reader(
+        open=lambda p, load, kw: _fn("hdf5io", "read_hdf5")(p),
+        schema=lambda p, kw: _fn("hdf5io", "hdf5_schema")(p),
+        scan=lambda p, n, kw: _fn("hdf5io", "scan_hdf5")(p, inline_threshold=n),
+        in_place=_ALL_OPS,
+    ),
+    # the GRIB2 scan skips section-7 payloads via seek, so a remote scan
+    # transfers O(headers + bitmaps) — the NOMADS/HRRR kerchunk shape
+    FileType.grib: Reader(
+        open=lambda p, load, kw: _fn("grib2io", "read_grib2")(
+            p, filter_by_keys=_grib_filter(kw)
+        ),
+        schema=lambda p, kw: _fn("grib2io", "grib2_schema")(
+            p, filter_by_keys=_grib_filter(kw)
+        ),
+        scan=lambda p, n, kw: _fn("grib2io", "scan_grib2")(
+            p, inline_threshold=n, filter_by_keys=_grib_filter(kw)
+        ),
+        in_place=frozenset({"scan"}),
+    ),
+    # opendap is remote by definition (reference skips fsspec for it too,
+    # ``openers.py:230``): projection + isel push column/row pruning to
+    # the server, so only the subset crosses the wire. The protocol
+    # auto-negotiates (one .dmr probe per process): DAP4 where served,
+    # DAP2 fallback — pass protocol="dap2"/"dap4" to pin
+    FileType.opendap: Reader(
+        open=lambda p, load, kw: _fn("dap4io", "open_dap")(
+            p,
+            projection=kw.get("projection"),
+            isel=kw.get("isel"),
+            protocol=kw.get("protocol", "auto"),
+            checksums=kw.get("checksums", False),
+        ),
+        schema=lambda p, kw: _fn("dap4io", "dap_schema")(
+            p, protocol=kw.get("protocol", "auto")
+        ),
+        in_place=frozenset({"open", "schema"}),
+    ),
+    # no metadata fast path: the schema is a full open's
+    FileType.kerchunk: Reader(
+        open=lambda p, load, kw: _fn("kerchunkio", "open_reference_dataset")(
+            p, load=load
+        ),
+        schema=lambda p, kw: dataset_to_schema(
+            _fn("kerchunkio", "open_reference_dataset")(p)
+        ),
+        lazy=True,
+    ),
+}
+
+
+def _read_source(
+    url: str,
+    file_type: FileType,
+    op: str,
+    read: Callable,
+    open_kwargs: Optional[dict] = None,
+    keep_temp: bool = False,
+):
+    """``read(path_or_url)`` for one op on one source. A local url reads
+    its path; a remote url is read in place when the format's row says
+    so, else it streams to a temp file first (the un-cached path — pass
+    ``cache=`` upstream so the byte cache pays the transfer once per
+    url). The temp is removed afterwards unless ``keep_temp``, and a
+    scan's references to it are rewritten to the ORIGINAL url, so every
+    later chunk read is a range read of the source: scan once,
+    range-read forever."""
+    if not is_remote_url(url):
+        return read(local_path(url))
+    if op in READERS[file_type].in_place:
+        return read(url)
+    tmp = tempfile.NamedTemporaryFile(suffix=f".{file_type.value}", delete=False)
+    try:
+        with tmp, _open_url_raw(url, None, **(open_kwargs or {})) as src:
+            shutil.copyfileobj(src, tmp, 16 * 1024 * 1024)
+        out = read(tmp.name)
+    finally:
+        if not keep_temp:
+            try:
+                os.unlink(tmp.name)
+            except OSError:
+                pass
+    if op == "scan":
+        temp_url = ref_url(tmp.name)
+        table = out.get("refs", out)
+        for key, val in table.items():
+            if isinstance(val, list) and val and val[0] == temp_url:
+                table[key] = [url] + val[1:]
+    return out
+
+
 def open_with_ndset(
     url: str,
     file_type: FileType = FileType.npz,
     load: bool = True,
-    copy_to_local: bool = False,
     xarray_open_kwargs: Optional[dict] = None,
 ) -> NDDataset:
     """Open one source file as an NDDataset (reference ``open_with_xarray``,
     ``openers.py:207-254``). ``load=True`` materializes data before the
     fragment crosses an exchange — mandatory in Spark, where a fragment must
     be fully serializable (the reference documents the same hazard at
-    ``openers.py:248-252``).
-
-    ``http(s)://`` urls stream to a local temp file first (one GET per
-    open — pass ``cache=`` upstream so the byte cache pays the transfer
-    once per url); the temp is removed once the open is eager. Remote
-    zarr DIRECTORIES are not single files — read them through kerchunk
-    references (whose chunk gets range-GET the source) or a cache."""
+    ``openers.py:248-252``). Remote sources read in place or from a temp
+    download as :data:`READERS` says; a temp download that a lazy
+    (``load=False``) open still reads from is not removed."""
     file_type = _resolve_type(url, file_type)
     kw = dict(xarray_open_kwargs or {})
-    if file_type == FileType.opendap:
-        from .dap4io import open_dap
-
-        # opendap is remote-by-definition: no cache/copy_to_local step
-        # (reference skips fsspec for it too, ``openers.py:230``).
-        # projection + isel push column/row pruning to the server: only
-        # the subset crosses the wire. Protocol auto-negotiates (one
-        # .dmr probe per process): DAP4 where served, DAP2 fallback —
-        # pass protocol="dap2"/"dap4" to pin
-        return open_dap(
-            url,
-            projection=kw.get("projection"),
-            isel=kw.get("isel"),
-            protocol=kw.get("protocol", "auto"),
-            checksums=kw.get("checksums", False),
-        )
-    if _is_remote(url) and file_type == FileType.zarr:
-        # a zarr store over http/s3 is a url PREFIX, not a single file:
-        # read it in place through HTTPStore (consolidated metadata =
-        # one GET for the group walk; lazy opens range-GET chunks)
-        return open_zarr_group(url, load=load)
-    if _is_remote(url) and file_type == FileType.netcdf4:
-        # HDF5 reads in place too: the header walk runs over
-        # block-cached Range GETs and chunk data range-reads through
-        # the virtual store — no download
-        from .hdf5io import read_hdf5
-
-        return read_hdf5(url)
-    path, is_temp = _materialize_local(url, file_type, kw)
-    if copy_to_local and not is_temp:
-        suffix = f".{file_type.value}" if file_type != FileType.unknown else ""
-        tmp = tempfile.NamedTemporaryFile(suffix=suffix, delete=False)
-        with open(path, "rb") as src:
-            tmp.write(src.read())
-        tmp.close()
-        path = tmp.name
-    # formats without a load= knob decode eagerly — their temp download
-    # can always be removed after the open; npz/zarr/kerchunk keep the
-    # temp alive when load=False leaves lazy byte-ranges into it
-    eager = load or file_type in (
-        FileType.netcdf3, FileType.netcdf4, FileType.grib
-    )
-    try:
-        if file_type == FileType.npz:
-            return read_npz(path, load=load)
-        if file_type == FileType.zarr:
-            return open_zarr_group(path, load=load)
-        if file_type == FileType.netcdf3:
-            from .netcdf3 import read_netcdf3
-
-            return read_netcdf3(path)
-        if file_type == FileType.netcdf4:
-            from .hdf5io import read_hdf5
-
-            return read_hdf5(path)
-        if file_type == FileType.grib:
-            from .grib2io import read_grib2
-
-            return read_grib2(path, filter_by_keys=_grib_filter(kw))
-        if file_type == FileType.kerchunk:
-            from .kerchunkio import open_reference_dataset
-
-            return open_reference_dataset(path, load=load)
-    finally:
-        if is_temp and eager:
-            try:
-                os.unlink(path)
-            except OSError:
-                pass
-    engine = OPEN_ENGINES.get(file_type)
-    raise NotImplementedError(
-        f"file_type={file_type.value!r} needs the {engine!r} engine, which is "
-        "not installed in this environment. Natively supported: npz, zarr, "
-        "kerchunk."
+    reader = READERS[file_type]
+    return _read_source(
+        url, file_type, "open", lambda p: reader.open(p, load, kw), kw,
+        keep_temp=reader.lazy and not load,
     )
 
 
@@ -284,64 +325,11 @@ def read_schema(
     pipeline (the Spark rendition of the reference's lazy ``load=False``
     open at ``transforms.py:230``: here we never touch array payloads).
     Reader options that change the visible dataset (e.g. the GRIB message
-    filter) apply to the schema too.
-
-    Over ``http(s)://`` the whole file streams to a temp first (pass
-    ``cache=`` upstream so the schema pass and the open pass share one
-    transfer); opendap stays header-only over the wire either way."""
+    filter) apply to the schema too."""
     file_type = _resolve_type(url, file_type)
-    if _is_remote(url) and file_type not in (
-        FileType.opendap, FileType.zarr, FileType.netcdf4
-    ):
-        # (zarr urls pass through: zarr_group_schema walks the remote
-        # store's consolidated metadata in place — one GET; netcdf4
-        # passes through: the HDF5 header walk range-reads in place)
-        path, _ = _materialize_local(url, file_type, xarray_open_kwargs)
-        try:
-            return read_schema(
-                f"file://{path}", file_type, xarray_open_kwargs
-            )
-        finally:
-            try:
-                os.unlink(path)
-            except OSError:
-                pass
-    path = _local_path(url)
-    if file_type == FileType.npz:
-        return npz_schema(path)
-    if file_type == FileType.zarr:
-        return zarr_group_schema(path)
-    if file_type == FileType.netcdf3:
-        from .netcdf3 import netcdf3_schema
-
-        return netcdf3_schema(path)
-    if file_type == FileType.netcdf4:
-        from .hdf5io import hdf5_schema
-
-        return hdf5_schema(path)
-    if file_type == FileType.grib:
-        from .grib2io import grib2_schema
-
-        return grib2_schema(
-            path, filter_by_keys=_grib_filter(xarray_open_kwargs or {})
-        )
-    if file_type == FileType.opendap:
-        from .dap4io import dap_schema
-
-        return dap_schema(
-            url, protocol=(xarray_open_kwargs or {}).get("protocol", "auto")
-        )
-    # fall back to a full open for formats without a metadata fast path
-    return _full_schema(url, file_type, xarray_open_kwargs)
-
-
-def _full_schema(
-    url: str, file_type: FileType, xarray_open_kwargs: Optional[dict] = None
-) -> XarraySchema:
-    from .aggregation import dataset_to_schema
-
-    return dataset_to_schema(
-        open_with_ndset(url, file_type, xarray_open_kwargs=xarray_open_kwargs)
+    kw = dict(xarray_open_kwargs or {})
+    return _read_source(
+        url, file_type, "schema", lambda p: READERS[file_type].schema(p, kw), kw
     )
 
 
@@ -349,8 +337,6 @@ def open_with_kerchunk(
     url: str,
     file_type: FileType = FileType.npz,
     inline_threshold: int = 300,
-    storage_options: Optional[dict] = None,
-    remote_protocol: Optional[str] = None,
     kerchunk_open_kwargs: Optional[dict] = None,
 ) -> list:
     """Scan one file into kerchunk-style reference dicts (reference
@@ -361,12 +347,8 @@ def open_with_kerchunk(
     + chunk-B-tree walk, analog of kerchunk's ``SingleHdf5ToZarr``) and
     grib2 (whole-message chunks via the ``grib2-msg`` codec, analog of
     kerchunk's ``scan_grib``; ``kerchunk_open_kwargs['filter_by_keys']``
-    pushes the message filter into the scan).
-
-    ``http(s)://`` sources scan from a one-shot temp download, then the
-    emitted byte ranges are rewritten to point at the ORIGINAL url — so
-    every later chunk read is a Range GET against the remote source
-    (never the vanished temp): scan once, range-read forever."""
+    pushes the message filter into the scan). Emitted byte ranges always
+    point at ``url``, never at a temp download."""
     if str(url).endswith(".dmrpp"):
         # a DMR++ sidecar IS the scan (NASA EOSDIS convention): parse
         # the byte-range annotations, read ZERO bytes of the archive.
@@ -374,7 +356,6 @@ def open_with_kerchunk(
         # mirror; a sidecar without dmrpp:href falls back to the
         # convention that it sits next to its data object
         from .dap4io import MissingDmrppHref, scan_dmrpp
-        from .storage import open_binary
 
         with open_binary(url) as f:
             text = f.read().decode()
@@ -386,101 +367,15 @@ def open_with_kerchunk(
             # (malformed offsets, out-of-grid positions) propagate
             return [scan_dmrpp(text, data_url=str(url)[: -len(".dmrpp")])]
     file_type = _resolve_type(url, file_type)
-    from .kerchunkio import scan_npz, scan_zarr
-
-    if _is_remote(url) and file_type == FileType.netcdf4:
-        # HDF5 scans a REMOTE archive in place: the header walk is a
-        # handful of block Range GETs and the emitted refs point at the
-        # http url already — no download, no rewrite
-        from .hdf5io import scan_hdf5
-
-        return [scan_hdf5(url, inline_threshold=inline_threshold)]
-    if _is_remote(url) and file_type == FileType.netcdf3:
-        # classic netCDF too: one header block + refs at the remote url
-        from .netcdf3 import scan_netcdf3
-
-        return [scan_netcdf3(url, inline_threshold=inline_threshold)]
-    if _is_remote(url) and file_type == FileType.grib:
-        # GRIB2 scans skip section-7 payloads via seek, so a remote scan
-        # transfers O(headers + bitmaps) — the NOMADS/HRRR kerchunk shape
-        from .grib2io import scan_grib2
-
-        return [
-            scan_grib2(
-                url,
-                inline_threshold=inline_threshold,
-                filter_by_keys=_grib_filter(kerchunk_open_kwargs or {}),
-            )
-        ]
-    if _is_http(url) and file_type == FileType.zarr:
-        # scanning needs a key LISTING, which http cannot provide (and a
-        # remote zarr store already reads in place through HTTPStore) —
-        # fail with the story instead of a confusing 404 on the dir url
+    kw = dict(kerchunk_open_kwargs or {})
+    scan = READERS[file_type].scan
+    if scan is None:
         raise NotImplementedError(
-            "kerchunk-scanning a REMOTE zarr store is not supported (http "
-            "has no key listing) — read it directly: open_zarr_group(url) "
-            "/ spark.read.format('zarr').load(url), or scan the store "
-            "where it was written"
+            f"kerchunk scanning of file_type={file_type.value!r} is not "
+            "supported; supported here: npz, zarr, netcdf3, netcdf4, grib"
         )
-    if url.startswith(("s3://", "gs://", "abfs://", "abfss://", "az://")) and file_type == FileType.zarr:
-        # s3 CAN list keys — scan the store in place: metadata objects
-        # inline, chunk objects reference the s3 url whole-object
-        from .kerchunkio import scan_zarr_store
-        from .zarrio import _store_for
-
-        return [
-            scan_zarr_store(
-                _store_for(url), url, inline_threshold=inline_threshold
-            )
-        ]
-    if _is_remote(url):
-        path, _ = _materialize_local(url, file_type, kerchunk_open_kwargs)
-        try:
-            refs_list = open_with_kerchunk(
-                f"file://{path}",
-                file_type,
-                inline_threshold=inline_threshold,
-                storage_options=storage_options,
-                remote_protocol=remote_protocol,
-                kerchunk_open_kwargs=kerchunk_open_kwargs,
-            )
-        finally:
-            try:
-                os.unlink(path)
-            except OSError:
-                pass
-        temp_url = f"file://{os.path.abspath(path)}"
-        for refs in refs_list:
-            table = refs.get("refs", refs)
-            for key, val in table.items():
-                if isinstance(val, list) and val and val[0] == temp_url:
-                    table[key] = [url] + val[1:]
-        return refs_list
-
-    path = _local_path(url)
-    if file_type == FileType.npz:
-        return [scan_npz(path, inline_threshold=inline_threshold)]
-    if file_type == FileType.zarr:
-        return [scan_zarr(path, inline_threshold=inline_threshold)]
-    if file_type == FileType.netcdf3:
-        from .netcdf3 import scan_netcdf3
-
-        return [scan_netcdf3(path, inline_threshold=inline_threshold)]
-    if file_type == FileType.netcdf4:
-        from .hdf5io import scan_hdf5
-
-        return [scan_hdf5(path, inline_threshold=inline_threshold)]
-    if file_type == FileType.grib:
-        from .grib2io import scan_grib2
-
-        return [
-            scan_grib2(
-                path,
-                inline_threshold=inline_threshold,
-                filter_by_keys=_grib_filter(kerchunk_open_kwargs or {}),
-            )
-        ]
-    raise NotImplementedError(
-        f"kerchunk scanning of file_type={file_type.value!r} is not "
-        "supported; supported here: npz, zarr, netcdf3, netcdf4, grib"
-    )
+    return [
+        _read_source(
+            url, file_type, "scan", lambda p: scan(p, inline_threshold, kw), kw
+        )
+    ]

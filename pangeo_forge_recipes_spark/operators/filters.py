@@ -73,22 +73,6 @@ def with_repetition_metrics(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def _word_ngrams(col: str, n: int) -> str:
-    """SQL expression: array of space-joined word ``n``-grams of ``col``.
-    Empty array when the document has fewer than ``n`` tokens (the
-    ``filter`` guard keeps every ``slice`` strictly in range under ANSI
-    mode). The split array is bound once via a single-element-array
-    ``transform`` — inlining it in the per-element ``slice`` would
-    re-split the text per n-gram, O(tokens²) per document."""
-    n_tok = "size(t)"
-    upper = f"greatest({n_tok} - {n - 1}, 1)"
-    idx = f"filter(sequence(1, {upper}), i -> i + {n - 1} <= {n_tok})"
-    body = f"transform({idx}, i -> concat_ws(' ', slice(t, i, {n})))"
-    return (
-        f"element_at(transform(array(split({col}, ' ')), t -> {body}), 1)"
-    )
-
-
 def top_ngram_fraction(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -81,7 +81,7 @@ class FileType(AutoName):
     CDF-5) via ``netcdf3.py``, ``netcdf4`` via the native HDF5 reader
     (``hdf5io.py``), ``grib`` via ``grib2io.py``, ``opendap`` via the DAP2
     client (``dap2io.py``), ``kerchunk`` via ``kerchunkio.py``. The engine
-    map lives at ``openers.py:26-34``."""
+    table is ``openers.READERS``."""
 
     grib = auto()
     kerchunk = auto()

@@ -41,12 +41,10 @@ import xml.etree.ElementTree as ET
 from typing import Dict, Iterator, List, Optional, Tuple
 from urllib.parse import quote, urlparse
 
+from .storage import _RETRY_STATUSES
 from .zarrio import Store
 
 _S3_TIMEOUT_S = 60.0
-# transient statuses worth retrying (matches storage._RETRY_STATUSES;
-# not imported to keep this module importable standalone on executors)
-_RETRY_STATUSES = frozenset({429, 500, 502, 503, 504})
 _EMPTY_SHA256 = hashlib.sha256(b"").hexdigest()
 #: S3 multipart minimum part size is 5 MiB (all but the last part);
 #: 8 MiB keeps request count low without holding big buffers. Objects
@@ -67,10 +65,6 @@ def parse_s3_url(url: str) -> Tuple[str, str]:
 def url_service(url: str) -> str:
     """``"s3"`` or ``"gs"`` — which object service a url addresses."""
     return "gs" if str(url).startswith("gs://") else "s3"
-
-
-def is_s3_url(path: str) -> bool:
-    return str(path).startswith("s3://")
 
 
 def _uri_encode(s: str, *, keep_slash: bool) -> str:

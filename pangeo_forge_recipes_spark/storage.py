@@ -1,9 +1,17 @@
-"""Storage targets and input caching.
+"""Source access: the one module that maps a url to a transport.
+
+:func:`url_kind` classifies every path as local, http or object store,
+and :func:`store_for` is the one scheme -> :class:`~.zarrio.Store`
+dispatch (local, http, S3/GCS-interop SigV4, GCS OAuth2, Azure) that
+zarr IO, targets, byte-range reads and output streams go through. The
+readers take their transport from here: :func:`open_seekable` for the
+header walkers, :func:`url_range_get` for reference chunk reads,
+:func:`ref_url` for the url a kerchunk reference carries.
 
 Parity layer for reference ``pangeo_forge_recipes/storage.py:74-228``:
 ``FSSpecTarget`` becomes a thin path-rooted target over the engine's
-:class:`~.zarrio.Store` interface (local paths today; an object-store Store
-slots in identically on a cluster — keys are relative paths either way).
+:class:`~.zarrio.Store` interface (keys are relative paths whether the
+root is a local directory or an object-store prefix).
 """
 
 from __future__ import annotations
@@ -51,44 +59,93 @@ def _add_query_string_secrets(fname: str, secrets: dict) -> str:
     return parsed._replace(query=query).geturl()
 
 
-def is_s3_url(path: str) -> bool:
-    """True for object-store urls the native SigV4 client serves:
-    ``s3://`` and ``gs://`` (GCS interoperability mode — the XML API
-    speaks the S3 protocol with HMAC keys). String test only; the
-    adapter imports lazily at the call that needs it."""
-    return str(path).startswith(("s3://", "gs://"))
+#: url schemes the native object-store clients serve (s3io/gcsio/azureio)
+_OBJECT_SCHEMES = ("s3", "gs", "abfs", "abfss", "az")
+#: the adlfs conventions the reference's fsspec contract accepts
+#: (reference ``storage.py:16``)
+_AZURE_SCHEMES = ("abfs", "abfss", "az")
 
 
-def is_azure_url(path: str) -> bool:
-    """True for Azure Blob urls the native SharedKey/SAS client serves:
-    ``abfs://``/``abfss://``/``az://`` (the adlfs conventions the
-    reference's fsspec contract accepts, reference ``storage.py:16``)."""
-    return str(path).startswith(("abfs://", "abfss://", "az://"))
+def url_scheme(path: str) -> str:
+    """Transport scheme of a path: ``http``/``https`` or an object-store
+    scheme (``s3``, ``gs``, ``abfs``, ``abfss``, ``az``), else ``""`` — a
+    local path or ``file://`` url. A local filename's ``?``, ``#`` or
+    ``:`` is never read as url syntax."""
+    scheme, sep, _ = str(path).partition("://")
+    if sep and scheme in ("http", "https") + _OBJECT_SCHEMES:
+        return scheme
+    return ""
+
+
+def url_kind(path: str) -> str:
+    """``"local"``, ``"http"`` or ``"object"``: the transport a path
+    takes. Every module asks this module, never the url string."""
+    scheme = url_scheme(path)
+    if not scheme:
+        return "local"
+    return "http" if scheme in ("http", "https") else "object"
+
+
+def is_http_url(path: str) -> bool:
+    """True for http(s):// urls."""
+    return url_kind(path) == "http"
 
 
 def is_object_url(path: str) -> bool:
     """Any object-store url this engine reads/writes natively."""
-    return is_s3_url(path) or is_azure_url(path)
+    return url_kind(path) == "object"
 
 
-def object_store_for(root_url: str, **kwargs) -> Store:
-    """:class:`Store` for an object-store root url, scheme-dispatched:
-    ``s3://`` -> SigV4 client; ``gs://`` -> native OAuth2
-    service-account client when those credentials resolve (standard
-    ``GOOGLE_APPLICATION_CREDENTIALS``), else the HMAC-interop SigV4
-    path; ``abfs://``/``az://`` -> SharedKey client."""
-    if is_azure_url(root_url):
+def is_remote_url(path: str) -> bool:
+    """True for any url this engine reads over the network in place."""
+    return url_kind(path) != "local"
+
+
+def local_path(url: str) -> str:
+    """Filesystem path of a local path or ``file://`` url."""
+    url = str(url)
+    return url[len("file://") :] if url.startswith("file://") else url
+
+
+def ref_url(path: str) -> str:
+    """The url kerchunk references into ``path`` carry: a remote url as
+    given (chunk reads range-GET the source), a local path as an
+    absolute ``file://`` url."""
+    if is_remote_url(path):
+        return str(path)
+    return f"file://{os.path.abspath(local_path(path))}"
+
+
+def store_for(url: str, **kwargs) -> Store:
+    """:class:`Store` for a root url — the one scheme dispatch:
+    ``http(s)://`` -> read-only :class:`HTTPStore`; ``abfs://``/
+    ``abfss://``/``az://`` -> SharedKey/SAS client; ``gs://`` -> native
+    OAuth2 service-account client when those credentials resolve
+    (standard ``GOOGLE_APPLICATION_CREDENTIALS``), else the HMAC-interop
+    SigV4 path; ``s3://`` -> SigV4 client; a local path -> LocalStore.
+    ``kwargs`` are client options; omitted, credentials resolve from the
+    standard environment variables."""
+    scheme = url_scheme(url)
+    if scheme in ("http", "https"):
+        return HTTPStore(url, open_kwargs=kwargs)
+    if scheme in _AZURE_SCHEMES:
         from .azureio import AzureStore
 
-        return AzureStore(root_url, **_azure_client_kwargs(kwargs))
-    if str(root_url).startswith("gs://"):
+        return AzureStore(url, **_client_kwargs(_AZURE_CLIENT_KEYS, kwargs))
+    if scheme == "gs":
         from .gcsio import GCSStore, oauth_credentials_available
 
         if oauth_credentials_available(kwargs):
-            return GCSStore(root_url, **_gcs_client_kwargs(kwargs))
-    from .s3io import S3Store
+            return GCSStore(url, **_client_kwargs(_GCS_CLIENT_KEYS, kwargs))
+    if scheme:
+        from .s3io import S3Store
 
-    return S3Store(root_url, **_s3_client_kwargs(kwargs))
+        return S3Store(url, **_client_kwargs(_S3_CLIENT_KEYS, kwargs))
+    return LocalStore(url)
+
+
+#: the name the object-store callers use
+object_store_for = store_for
 
 
 @dataclass
@@ -118,28 +175,9 @@ class FSSpecTarget:
     def _full_path(self, path: str) -> str:
         return os.path.join(self.root_path, path)
 
-    # -- object-store dispatch -------------------------------------------
     @property
-    def _is_s3(self) -> bool:
-        """Object-store root? (name kept from the s3-only era; covers
-        s3://, gs://, abfs://, az://)."""
+    def _is_object(self) -> bool:
         return is_object_url(self.root_path)
-
-    def _s3_store(self):
-        if is_azure_url(self.root_path):
-            from .azureio import AzureStore
-
-            return AzureStore(self.root_path, **_azure_client_kwargs(self.fsspec_kwargs))
-        if str(self.root_path).startswith("gs://"):
-            from .gcsio import GCSStore, oauth_credentials_available
-
-            if oauth_credentials_available(self.fsspec_kwargs):
-                return GCSStore(
-                    self.root_path, **_gcs_client_kwargs(self.fsspec_kwargs)
-                )
-        from .s3io import S3Store
-
-        return S3Store(self.root_path, **_s3_client_kwargs(self.fsspec_kwargs))
 
     def _rel(self, path: str) -> str:
         """Key of ``path`` relative to the root (object-store form)."""
@@ -150,18 +188,16 @@ class FSSpecTarget:
         return full[len(root) :].lstrip("/")
 
     def get_mapper(self) -> Store:
-        if self._is_s3:
-            return self._s3_store()
-        return LocalStore(self.root_path)
+        return store_for(self.root_path, **self.fsspec_kwargs)
 
     def exists(self, path: str) -> bool:
-        if self._is_s3:
-            return self._s3_store().exists(self._rel(path))
+        if self._is_object:
+            return self.get_mapper().exists(self._rel(path))
         return os.path.exists(self._full_path(path))
 
     def rm(self, path: str, recursive: bool = False) -> None:
-        if self._is_s3:
-            store = self._s3_store()
+        if self._is_object:
+            store = self.get_mapper()
             rel = self._rel(path)
             if recursive:
                 # slash-terminate so "a" never sweeps up sibling "ab"
@@ -175,21 +211,21 @@ class FSSpecTarget:
             os.remove(full)
 
     def makedir(self, path: str) -> None:
-        if self._is_s3:
+        if self._is_object:
             return  # object stores have no directories
         os.makedirs(self._full_path(path), exist_ok=True)
 
     def size(self, path: str) -> int:
-        if self._is_s3:
-            return self._s3_store().size(self._rel(path))
+        if self._is_object:
+            return self.get_mapper().size(self._rel(path))
         return os.path.getsize(self._full_path(path))
 
     def open(self, path: str, **kwargs):
         mode = kwargs.get("mode", "rb")
-        if self._is_s3:
+        if self._is_object:
             from .s3io import S3WriteBuffer
 
-            store = self._s3_store()
+            store = self.get_mapper()
             rel = self._rel(path)
             if "w" in mode:
                 return S3WriteBuffer(store, rel)
@@ -201,11 +237,10 @@ class FSSpecTarget:
         return open(full, **kwargs)
 
     def get_fsspec_remote_protocol(self) -> str:
-        if is_azure_url(self.root_path):
+        scheme = url_scheme(self.root_path)
+        if scheme in _AZURE_SCHEMES:
             return "abfs"
-        if str(self.root_path).startswith("gs://"):
-            return "gs"
-        return "s3" if self._is_s3 else "file"
+        return scheme if scheme in ("s3", "gs") else "file"
 
 
 class FlatFSSpecTarget(FSSpecTarget):
@@ -492,24 +527,19 @@ class S3RangeFile(HTTPRangeFile):
         )
 
 
-def is_remote_url(path: str) -> bool:
-    """True for any url this engine reads over the network in place."""
-    return is_http_url(path) or is_object_url(path)
-
-
 def url_range_get(
     url: str, offset: int, length: int, secrets: dict | None = None, **open_kwargs
 ) -> bytes:
     """One byte-range read of a url — http(s), s3, azure, or a local
     path / ``file://`` url (seek+read)."""
-    if is_object_url(url):
+    kind = url_kind(url)
+    if kind == "object":
         client, bucket, key = _object_client_parts(url, open_kwargs)
         end = offset + length - 1
         return client.get_object(bucket, key, rng=f"bytes={offset}-{end}")
-    if is_http_url(url):
+    if kind == "http":
         return http_range_get(url, offset, length, secrets, **open_kwargs)
-    path = url[len("file://") :] if url.startswith("file://") else url
-    with open(path, "rb") as f:
+    with open(local_path(url), "rb") as f:
         f.seek(offset)
         return f.read(length)
 
@@ -521,6 +551,16 @@ def open_range_file(url: str, **open_kwargs):
     if is_object_url(url):
         return S3RangeFile(url, **open_kwargs)
     return HTTPRangeFile(url, **open_kwargs)
+
+
+def open_seekable(path: str):
+    """Seekable binary file for a byte-walking header reader (HDF5,
+    netCDF3, GRIB2): a local path opens directly; a remote url opens the
+    block-cached range reader, so a header walk transfers O(headers),
+    never the file."""
+    if is_remote_url(path):
+        return open_range_file(path)
+    return open(local_path(path), "rb")
 
 
 class HTTPStore(Store):
@@ -617,11 +657,6 @@ _S3_CLIENT_KEYS = (
 )
 
 
-def _s3_client_kwargs(open_kwargs: dict | None) -> dict:
-    kw = open_kwargs or {}
-    return {k: kw[k] for k in _S3_CLIENT_KEYS if k in kw}
-
-
 _AZURE_CLIENT_KEYS = (
     "account_name",
     "account_key",
@@ -629,11 +664,6 @@ _AZURE_CLIENT_KEYS = (
     "endpoint_url",
     "connection_string",
 )
-
-
-def _azure_client_kwargs(open_kwargs: dict | None) -> dict:
-    kw = open_kwargs or {}
-    return {k: kw[k] for k in _AZURE_CLIENT_KEYS if k in kw}
 
 
 _GCS_CLIENT_KEYS = (
@@ -645,34 +675,17 @@ _GCS_CLIENT_KEYS = (
 )
 
 
-def _gcs_client_kwargs(open_kwargs: dict | None) -> dict:
+def _client_kwargs(keys: tuple, open_kwargs: dict | None) -> dict:
     kw = open_kwargs or {}
-    return {k: kw[k] for k in _GCS_CLIENT_KEYS if k in kw}
+    return {k: kw[k] for k in keys if k in kw}
 
 
 def _object_client_parts(url: str, open_kwargs: dict | None):
     """``(client, bucket_or_container, key)`` for any object-store url —
-    the scheme dispatch every byte-level consumer (range reads, size
-    probes, streams, shard listings) shares."""
-    if is_azure_url(url):
-        from .azureio import AzureClient, parse_azure_url
-
-        account, container, key = parse_azure_url(url)
-        kw = _azure_client_kwargs(open_kwargs)
-        if account:
-            kw.setdefault("account_name", account)
-        return AzureClient(**kw), container, key
-    from .s3io import S3Client, parse_s3_url, url_service
-
-    bucket, key = parse_s3_url(url)
-    if str(url).startswith("gs://"):
-        from .gcsio import GCSClient, oauth_credentials_available
-
-        if oauth_credentials_available(open_kwargs):
-            return GCSClient(**_gcs_client_kwargs(open_kwargs)), bucket, key
-    kw = _s3_client_kwargs(open_kwargs)
-    kw.setdefault("service", url_service(url))
-    return S3Client(**kw), bucket, key
+    the byte-level face of :func:`store_for` that range reads, size
+    probes, streams and shard listings share."""
+    store = store_for(url, **(open_kwargs or {}))
+    return store.client, store.bucket, store.prefix
 
 
 def _s3_open_stream(url: str, open_kwargs: dict | None):
@@ -693,7 +706,7 @@ def _open_url_raw(fname: str, secrets: dict | None, **open_kwargs):
         return open(parsed.path or fname, "rb")
     if parsed.scheme in ("http", "https"):
         return _http_open(fname, open_kwargs)
-    if parsed.scheme in ("s3", "gs", "abfs", "abfss", "az"):
+    if parsed.scheme in _OBJECT_SCHEMES:
         return _s3_open_stream(fname, open_kwargs)
     raise NotImplementedError(
         f"url scheme {parsed.scheme!r} is not supported; supported schemes: "
@@ -701,18 +714,12 @@ def _open_url_raw(fname: str, secrets: dict | None, **open_kwargs):
     )
 
 
-def is_http_url(path: str) -> bool:
-    """True for http(s):// urls — the shared scheme test for readers
-    that accept either local paths or urls."""
-    return path.startswith("http://") or path.startswith("https://")
-
-
 def shard_label(path: str) -> str:
     """Stable display label for a shard path: local paths keep their
     basename; urls keep host+path (query stripped) so two shards with
     the same basename under different prefixes never collapse into one
     label (review finding: presigned per-directory layouts)."""
-    if is_http_url(path) or is_object_url(path):
+    if is_remote_url(path):
         parsed = urlparse(path)
         return f"{parsed.netloc}{parsed.path}"
     return os.path.basename(path.rstrip("/"))
@@ -724,7 +731,7 @@ def open_shard_stream(path: str, open_kwargs: dict | None = None):
     directly — routing them through urlparse would misread filenames
     containing '?', '#', or a colon-bearing first segment (review
     finding)."""
-    if is_http_url(path) or is_object_url(path):
+    if is_remote_url(path):
         # 'secrets' rides INSIDE open_kwargs on the shard-reader surface
         # (read_tfrecord/read_webdataset docs) — pop it into the
         # positional slot or _open_url_raw sees it twice (r8 review
@@ -774,7 +781,7 @@ def _remote_size(fname: str, secrets: dict | None, **open_kwargs) -> int:
         except urllib.error.HTTPError:
             pass
         return -1
-    if parsed.scheme in ("s3", "gs", "abfs", "abfss", "az"):
+    if parsed.scheme in _OBJECT_SCHEMES:
         client, bucket, key = _object_client_parts(fname, open_kwargs)
         n = client.head_object(bucket, key)
         return -1 if n is None else n
@@ -797,9 +804,8 @@ def open_output_stream(path: str, open_kwargs: dict | None = None):
         from .s3io import S3WriteBuffer
 
         scheme, _, rest = path.partition("://")
-        bucket = rest.split("/", 1)[0]
-        key = rest.split("/", 1)[1] if "/" in rest else ""
-        store = object_store_for(f"{scheme}://{bucket}", **(open_kwargs or {}))
+        bucket, _, key = rest.partition("/")
+        store = store_for(f"{scheme}://{bucket}", **(open_kwargs or {}))
         return S3WriteBuffer(store, key)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     return open(path, "wb")

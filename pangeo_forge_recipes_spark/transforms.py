@@ -169,59 +169,29 @@ def read_schemas_df(
     df: DataFrame,
     file_type: Union[str, FileType] = FileType.npz,
     xarray_open_kwargs: Optional[dict] = None,
-) -> DataFrame:
-    """Metadata-only per-file schemas: ``(index, schema)`` rows. Reads file
-    headers/zarr.json only — array payloads are never touched."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "index": pdf["index"],
-                    "schema": [
-                        schema_to_json(
-                            read_schema(u, ft, xarray_open_kwargs=xarray_open_kwargs)
-                        )
-                        for u in pdf["url"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(scan, "index string, schema string")
-
-
-def preprocessed_schemas_df(
-    df: DataFrame,
-    file_type: Union[str, FileType] = FileType.npz,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-    xarray_open_kwargs: Optional[dict] = None,
 ) -> DataFrame:
-    """Schema pass for preprocessed pipelines: open lazily (where the format
-    supports it), apply the user preprocessor, and emit only the KB-scale
-    schema JSON — fragment payloads never serialize or cross Arrow.
-    Reference order Open | Preprocessor | DetermineSchema
-    (``transforms.py:276-301``) without a full-data pass."""
+    """Per-file schemas: ``(index, schema)`` rows. Without ``preprocess``
+    it reads file headers/zarr.json only — array payloads are never
+    touched. With one, the schema must describe the PREPROCESSED
+    fragments (reference order Open | Preprocessor | DetermineSchema,
+    ``transforms.py:276-301``): each file opens eagerly — a preprocessor
+    may touch array DATA (where, coarsen, ...), which the chunk-lazy views
+    don't support — and only the KB-scale schema JSON leaves the task."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
+
+    def schema_row(idx_json: str, url: str) -> Tuple[str, str]:
+        if preprocess is None:
+            schema = read_schema(url, ft, xarray_open_kwargs=xarray_open_kwargs)
+            return idx_json, schema_to_json(schema)
+        ds = open_with_ndset(url, file_type=ft, xarray_open_kwargs=xarray_open_kwargs)
+        index, ds = preprocess(Index.from_json(idx_json), ds)
+        return index.to_json(), schema_to_json(dataset_to_schema(ds))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_idx, out_schema = [], []
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                # a user preprocessor may touch array DATA (where,
-                # coarsen, ...), which the chunk-lazy views (r6:
-                # load=False is now REAL for zarr/kerchunk) don't
-                # support — open eagerly when one is present
-                ds = open_with_ndset(
-                    url, file_type=ft, load=preprocess is not None,
-                    xarray_open_kwargs=xarray_open_kwargs,
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                out_idx.append(index.to_json())
-                out_schema.append(schema_to_json(dataset_to_schema(ds)))
-            yield pd.DataFrame({"index": out_idx, "schema": out_schema})
+            rows = [schema_row(i, u) for i, u in zip(pdf["index"], pdf["url"])]
+            yield pd.DataFrame(rows, columns=["index", "schema"])
 
     return df.mapInPandas(scan, "index string, schema string")
 
@@ -272,14 +242,6 @@ def determine_schema(
         d = Dimension(dim_name, CombineOp[dim_op])
         return Index({k: v for k, v in idx.items() if k != d}).to_json()
 
-    def _single_arg(fn):
-        # applyInPandas passes (key, pdf) to two-parameter functions; force
-        # the single-argument form
-        def wrapper(pdf):
-            return fn(pdf)
-
-        return wrapper
-
     cdims = list(combine_dims)
     while cdims:
         dim = cdims.pop()
@@ -293,7 +255,7 @@ def determine_schema(
         df = (
             df.withColumn("outer", outer)
             .groupBy("outer")
-            .applyInPandas(_single_arg(fn), "index string, schema string")
+            .applyInPandas(fn, "index string, schema string")
         )
     rows = df.collect()
     if len(rows) != 1:
@@ -980,17 +942,12 @@ def store_to_zarr(
 
     # pass 1: global schema. Header-only when no preprocessor; with one,
     # the schema must describe the PREPROCESSED fragments (reference order:
-    # Open | Preprocessor | StoreToZarr→DetermineSchema) — opened lazily,
-    # schema-only output, so source bytes are not read twice
-    if preprocess is None:
-        schemas = read_schemas_df(
-            manifest, file_type, xarray_open_kwargs=xarray_open_kwargs
-        )
-    else:
-        schemas = preprocessed_schemas_df(
-            manifest, file_type, preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
+    # Open | Preprocessor | StoreToZarr→DetermineSchema) — schema-only
+    # output, so fragment payloads never cross Arrow twice
+    schemas = read_schemas_df(
+        manifest, file_type, xarray_open_kwargs=xarray_open_kwargs,
+        preprocess=preprocess,
+    )
     schema = determine_schema(schemas, pattern.combine_dim_keys)
 
     if dynamic_chunking_fn:

@@ -211,36 +211,9 @@ def _fletcher32_verify_strip(buf: bytes) -> bytes:
 def _store_for(path_or_store) -> Store:
     if isinstance(path_or_store, Store):
         return path_or_store
-    path = str(path_or_store)
-    if path.startswith(("http://", "https://")):
-        # remote read path: consolidated metadata makes the group walk
-        # one GET; chunk reads are one GET each (ranges for shards)
-        from .storage import HTTPStore
+    from .storage import store_for
 
-        return HTTPStore(path)
-    if path.startswith("gs://"):
-        # native OAuth2 service-account auth when those credentials
-        # resolve (standard GOOGLE_APPLICATION_CREDENTIALS), else the
-        # HMAC-interop SigV4 path (GS_ACCESS_KEY_ID keys)
-        from .gcsio import GCSStore, oauth_credentials_available
-
-        if oauth_credentials_available(None):
-            return GCSStore(path)
-        from .s3io import S3Store
-
-        return S3Store(path)
-    if path.startswith("s3://"):
-        # full read/write object-store path via the AWS env vars;
-        # region writes touch disjoint keys — no coordination
-        from .s3io import S3Store
-
-        return S3Store(path)
-    if path.startswith(("abfs://", "abfss://", "az://")):
-        # Azure Blob via SharedKey/SAS (AZURE_STORAGE_* env vars)
-        from .azureio import AzureStore
-
-        return AzureStore(path)
-    return LocalStore(path)
+    return store_for(str(path_or_store))
 
 
 def _encode_fill(value, dtype: np.dtype):

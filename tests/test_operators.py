@@ -472,12 +472,15 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
     assert (10_000, 10_001) in {(r["id_a"], r["id_b"]) for r in pairs}
 
 
-def test_minhash_candidates_match_bruteforce_buckets(spark):
+@pytest.mark.parametrize("materialize", ["checkpoint", "persist"])
+def test_minhash_candidates_match_bruteforce_buckets(spark, monkeypatch, materialize):
     """r12 restructure guard: the window/collect_list candidate engine
     must emit EXACTLY the pairs the bucket definition implies — for
     every (band, band_hash) bucket, all ordered pairs when the bucket is
     at or under the cap, the min-id star otherwise — deduped across
-    bands."""
+    bands. Both branch-input strategies of
+    ``parallel.materialize_branch_input`` run it."""
+    monkeypatch.setenv("SPARK_GRAFT_BRANCH_MATERIALIZE", materialize)
     rng = np.random.RandomState(3)
     vocab = ["alpha", "beta", "gamma", "delta", "spark", "query", "data"]
     rows = [
@@ -486,10 +489,12 @@ def test_minhash_candidates_match_bruteforce_buckets(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     banded = dedup.minhash_band_hashes(df, num_perm=16, bands=4)
     cap = 5
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_candidates(banded, bucket_cap=cap).collect()
-    }
+    cand = dedup.minhash_lsh_candidates(banded, bucket_cap=cap)
+    got = {(r["id_a"], r["id_b"]) for r in cand.collect()}
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert ("InMemoryTableScan" in plan) == (materialize == "persist"), plan
+    if materialize == "persist":
+        banded.sparkSession.catalog.clearCache()
     buckets: dict = {}
     for r in banded.collect():
         buckets.setdefault((r["band"], r["band_hash"]), []).append(r["doc_id"])
