@@ -11,10 +11,13 @@ errors, never coercions (dim-size mismatch, overlapping chunk positions,
 same-variable merge collisions, differing dims) — matching the reference
 exactly so its unit tests transfer as the spec.
 
-In the Spark engine, schemas travel as JSON strings inside DataFrames and
-are reduced with a commutative/associative combiner (see
-``transforms._combine_level_fn`` / ``transforms.determine_schema``) — the Spark rendition
-of Beam's ``CombinePerKey`` tree (reference ``transforms.py:276-301``).
+In the Spark engine, schemas travel as JSON strings inside DataFrames. Each
+task folds its partition along the innermost combine dim with the level
+combiner ``transforms._combine_level_fn``; the driver merges those partial
+folds with :func:`combine_xarray_schemas` and folds the outer levels
+(``transforms.determine_schema``) — Beam's ``CombinePerKey`` tree (reference
+``transforms.py:276-301``) with no shuffle, which works because the
+combiner is commutative and associative.
 """
 
 from __future__ import annotations

@@ -269,11 +269,11 @@ def combine_references(
     virtual store (the engine's ``MultiZarrToZarr.translate()``; reference
     ``transforms.py:428-554``).
 
-    ``ref_sets`` must be ordered by concat position (the pipeline guarantees
-    this via its position-bucketed ordered reduction). Per-file arrays become
-    consecutive chunks along the concat axis; per-file chunk shapes must be
-    uniform (except the final file) — same regular-grid constraint real
-    kerchunk has.
+    ``ref_sets`` must be ordered by concat position (the pipeline's
+    ``transforms.combine_references_df`` merges position-ordered runs).
+    Per-file arrays become consecutive chunks along the concat axis;
+    per-file chunk shapes must be uniform (except the final file) — same
+    regular-grid constraint real kerchunk has.
 
     ``preprocess`` (the ``mzz_kwargs['preprocess']`` hook of reference
     ``transforms.py:438-447``) rewrites each per-file refs mapping
@@ -283,10 +283,9 @@ def combine_references(
     if len(concat_dims) != 1:
         raise NotImplementedError(
             "combine_references merges along exactly one concat dim per "
-            "call (same limit as kerchunk MultiZarrToZarr); two-dim "
+            "call (same limit as kerchunk MultiZarrToZarr); multi-dim "
             "patterns nest it via transforms.combine_references_df / "
-            "write_combined_reference (outer slices -> inner combine -> "
-            "outer combine); for 3+ dims use the Zarr path (store_to_zarr)"
+            "write_combined_reference (innermost dim first, outermost last)"
         )
     concat_dim = concat_dims[0]
     if not ref_sets:

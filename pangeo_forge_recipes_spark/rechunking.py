@@ -3,7 +3,7 @@
 Semantics-parity reimplementation of reference ``pangeo_forge_recipes/
 rechunking.py:17-242``. These pure functions run inside Spark tasks:
 ``split_fragment`` inside a flatMap stage, ``combine_fragments`` inside
-``groupBy(group_key).applyInPandas`` — the engine's single data shuffle
+``groupBy(group_key).applyInArrow`` — the engine's single data shuffle
 (the reference flags the same GroupByKey as *the* perf hazard,
 ``transforms.py:414``).
 """

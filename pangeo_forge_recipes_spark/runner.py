@@ -40,16 +40,6 @@ from typing import Callable, Dict, List, Optional, Union
 
 from .patterns import FilePattern
 
-#: deploy-time injection map — mirror of reference ``injections.py``:
-#: which Recipe fields the runner fills from which config section.
-def get_injection_specs() -> dict:
-    return {
-        "Recipe": {
-            "target_root": "TARGET_STORAGE",
-            "cache": "INPUT_CACHE_STORAGE",
-        },
-    }
-
 
 @dataclass
 class Recipe:

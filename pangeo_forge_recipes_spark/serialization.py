@@ -1,15 +1,14 @@
 """Deterministic hashing helpers (reference ``pangeo_forge_recipes/
-serialization.py:23-72``): stable sha256 of dicts/dataclasses, used for the
+serialization.py:9-53``): stable sha256 of dicts, used for the
 FilePattern merkle list that powers incremental append detection."""
 
 from __future__ import annotations
 
 from collections.abc import Collection
-from dataclasses import asdict, is_dataclass
 from enum import Enum
 from hashlib import sha256
 from json import dumps
-from typing import Any, List, Sequence
+from typing import Any, Sequence
 
 
 def either_encode_or_hash(obj: Any):
@@ -44,13 +43,3 @@ def dict_drop_empty(pairs: Sequence[Sequence]) -> dict:
         (k, v) for k, v in pairs if not (v is None or (not v and isinstance(v, Collection)))
     )
 
-
-def dataclass_sha256(dclass: Any, ignore_keys: List[str]) -> bytes:
-    """Stable sha256 of a dataclass instance (reference
-    ``serialization.py:56-72``)."""
-    if not is_dataclass(dclass) or isinstance(dclass, type):
-        raise ValueError("dclass must be an instance of a dataclass")
-    d = asdict(dclass, dict_factory=dict_drop_empty)
-    for k in ignore_keys:
-        d.pop(k, None)
-    return dict_to_sha256(d)

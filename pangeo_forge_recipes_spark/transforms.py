@@ -11,6 +11,10 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   on Spark that would force caching opened fragments across stages, so the
   metadata pre-pass is the scale-correct equivalent (same semantics:
   the combine kernel errors on any inconsistency either way);
+* the metadata reduces — the schema and the kerchunk references — are
+  **map-side partial folds finished on the driver**, one job each and no
+  shuffle (reference combine-globally and bucketed reduces,
+  ``transforms.py:276-301,428-554``);
 * the rechunk is the engine's **single data shuffle**, one pipeline in
   every mode: pieces (open → split → explode by variable) → transport →
   one write kernel. The payload and spill modes group on the chunk key
@@ -226,41 +230,50 @@ def _combine_level_fn(dim: Dimension) -> Callable[[pd.DataFrame], pd.DataFrame]:
     return combine
 
 
+def _fold_level(pdf: pd.DataFrame, dim: Dimension) -> pd.DataFrame:
+    """Fold ``(index, schema)`` rows along ``dim``: one
+    :func:`_combine_level_fn` row per outer index (the index without
+    ``dim``)."""
+    fn = _combine_level_fn(dim)
+    outer = [
+        Index({k: v for k, v in Index.from_json(j).items() if k != dim}).to_json()
+        for j in pdf["index"]
+    ]
+    return pd.concat([fn(g) for _, g in pdf.groupby(outer, sort=False)], ignore_index=True)
+
+
 def determine_schema(
     schemas_df: DataFrame, combine_dims: List[Dimension]
 ) -> XarraySchema:
     """Multi-dimensional schema reduction → the single global schema
-    (reference ``DetermineSchema``, ``transforms.py:276-301``): one
-    ``groupBy(outer_index).applyInPandas`` level per combine dim, innermost
-    first — the Spark rendition of ``_NestDim`` + ``CombinePerKey``. Schema
-    rows are tiny (KBs); these shuffles move metadata, never data."""
-    df = schemas_df
+    (reference ``DetermineSchema``, ``transforms.py:276-301``) without a
+    shuffle: one ``mapInPandas`` folds each partition's rows along the
+    innermost dim per outer index, the driver collects these partials (at
+    most partitions × outer indexes of KB-scale rows) and merges the ones
+    that share an outer index with ``combine_xarray_schemas``, then folds
+    the outer levels in-process. ``combine_dims`` is outermost first."""
+    *outer_dims, inner = combine_dims
+    concat_dim = inner.name if inner.operation == CombineOp.CONCAT else None
 
-    @F.udf("string", useArrow=False)
-    def outer_index_json(index_json: str, dim_name: str, dim_op: str) -> str:
-        idx = Index.from_json(index_json)
-        d = Dimension(dim_name, CombineOp[dim_op])
-        return Index({k: v for k, v in idx.items() if k != d}).to_json()
+    def partial_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if pdfs:
+            yield _fold_level(pd.concat(pdfs, ignore_index=True), inner)
 
-    cdims = list(combine_dims)
-    while cdims:
-        dim = cdims.pop()
-        fn = _combine_level_fn(dim)
-        if cdims:
-            outer = outer_index_json("index", F.lit(dim.name), F.lit(dim.operation.name))
-        else:
-            # the outermost level strips the last dim: its outer index is
-            # always the empty Index, so group on a literal, not a UDF
-            outer = F.lit(Index().to_json())
-        df = (
-            df.withColumn("outer", outer)
-            .groupBy("outer")
-            .applyInPandas(fn, "index string, schema string")
+    partials = schemas_df.mapInPandas(partial_fold, "index string, schema string").collect()
+    if not partials:
+        raise ValueError("schema reduction produced 0 rows, expected 1")
+    merged: Dict[str, XarraySchema] = {}
+    for key, schema_json in partials:
+        merged[key] = combine_xarray_schemas(
+            merged.get(key), schema_from_json(schema_json), concat_dim=concat_dim
         )
-    rows = df.collect()
-    if len(rows) != 1:
-        raise ValueError(f"schema reduction produced {len(rows)} rows, expected 1")
-    return schema_from_json(rows[0]["schema"])
+    pdf = pd.DataFrame(
+        {"index": list(merged), "schema": [schema_to_json(s) for s in merged.values()]}
+    )
+    for dim in reversed(outer_dims):
+        pdf = _fold_level(pdf, dim)
+    return schema_from_json(pdf["schema"].iloc[0])
 
 
 # ---------------------------------------------------------------------------
@@ -860,9 +873,9 @@ def store_to_zarr(
     """End-to-end Zarr pipeline (reference ``StoreToZarr``,
     ``transforms.py:638-725``):
 
-    manifest → [cache] → schema pre-pass (metadata only, treeAggregate-style
-    reduce) → driver Zarr template init → IndexItems → open (+user
-    preprocessor) → split → shuffle-combine-write (fused) → post-passes.
+    manifest → [cache] → schema pre-pass (metadata only, no shuffle) →
+    driver Zarr template init → IndexItems → open (+user preprocessor) →
+    split → shuffle-combine-write (fused) → post-passes.
 
     ``target_shards`` (elements per stored object along the named dims,
     multiples of ``target_chunks``) writes data variables in the zarr v3
@@ -1118,91 +1131,76 @@ def combine_references_df(
     max_refs_per_merge: int = 5,
     preprocess: Optional[Callable[[dict], dict]] = None,
 ) -> dict:
-    """Order-preserving two-level reduction of per-file references
-    (reference ``CombineReferences``, ``transforms.py:428-554``). Rows are
-    bucketed by ``floor(pos0 / max_refs_per_merge)`` — the reference's
-    ``bucket_by_position`` — in one ``groupBy().applyInPandas`` shuffle;
-    each bucket sorts its rows by position and combines them into one
-    partial, and the driver merges the partials in ``min_pos`` order.
-    No global statistics or range sampling run first, so the per-file
-    scan runs once. Raises ``ValueError`` when there is nothing to combine.
+    """Order-preserving reduction of per-file references (reference
+    ``CombineReferences``, ``transforms.py:428-554``) for any number of
+    concat dims, without a shuffle. ``concat_dims[0]`` is the OUTERMOST
+    axis, read from column ``pos0`` (the reference's HRRR step×time
+    family, ``examples/feedstock/hrrr_kerchunk_concat_step.py``, is 2-D).
 
-    ``preprocess`` (reference ``mzz_kwargs['preprocess']``,
-    ``transforms.py:438-447``) rewrites each per-file refs mapping before
-    any merging; it runs executor-side on the leaf references exactly
-    once (never re-applied to merged partials) and must be picklable.
+    One ``mapInPandas`` streams each partition's rows into partials: a
+    partial combines, along the innermost dim, a run of CONSECUTIVE
+    innermost positions that share the outer positions and one
+    ``floor(pos / max_refs_per_merge)`` bucket (the reference's
+    ``bucket_by_position``); any gap closes the run, so the result does
+    not depend on partitioning or row order, and a task holds at most
+    ``max_refs_per_merge`` leaves. ``preprocess`` (reference
+    ``mzz_kwargs['preprocess']``, ``transforms.py:438-447``) rewrites each
+    leaf refs mapping exactly once, executor-side, and must be picklable.
 
-    Multiple concat dims (the reference's HRRR step×time family,
-    ``examples/feedstock/hrrr_kerchunk_concat_step.py``, is the 2-D
-    case) nest the ordered reduce recursively, innermost dim first:
-    ``concat_dims[0]`` is the OUTERMOST axis, ``concat_dims[-1]`` the
-    innermost — each level is one ``applyInPandas`` shuffle grouped by
-    the still-outer position columns, combining that level's slices in
-    position order; the final (outermost) level merges driver-side
-    exactly like the 1-D path. One shuffle per level beyond the first;
-    the driver holds O(#outermost-slices) partials — the same envelope
-    as the 1-D collect. Each slice must tile its level's extent
-    identically (virtual concat cannot rechunk; the per-level checks in
-    ``combine_references`` enforce it). ``preprocess`` runs exactly once
-    per leaf refs mapping, at the innermost level."""
+    The driver sorts the partials by position and merges them one level
+    at a time, outermost level last; it holds the combined refs anyway.
+    Each slice must tile its level's extent identically (virtual concat
+    cannot rechunk; ``combine_references`` checks it). Raises
+    ``ValueError`` when there is nothing to combine."""
     import json as _json
 
     from .kerchunkio import combine_references
 
-    if len(concat_dims) >= 2:
-        def make_slice_combine(inner: str, level: int, keys: List[str], pre):
-            # factory closure: applyInPandas requires a 1-arg function,
-            # and the loop variables must bind per level
-            def slice_combine(pdf: pd.DataFrame) -> pd.DataFrame:
-                rows = sorted(
-                    zip(pdf[f"pos{level}"], pdf["refs"]),
-                    key=lambda t: int(t[0]),
-                )
-                combined = combine_references(
-                    [_json.loads(r) for _, r in rows], [inner], preprocess=pre
-                )
-                out = {k: [int(pdf[k].iloc[0])] for k in keys}
-                out["refs"] = [_json.dumps(combined)]
-                return pd.DataFrame(out)
+    pos_cols = [f"pos{k}" for k in range(len(concat_dims))]
+    inner = concat_dims[-1]
 
-            return slice_combine
+    def runs(batches: Iterator[pd.DataFrame]) -> Iterator[Tuple[tuple, List[dict]]]:
+        key = start = last = None
+        leaves: List[dict] = []
+        for pdf in batches:
+            for *pos, refs in zip(*(pdf[c] for c in pos_cols), pdf["refs"]):
+                pos = tuple(int(p) for p in pos)
+                run_key = (pos[:-1], pos[-1] // max_refs_per_merge)
+                if leaves and (run_key != key or pos[-1] != last + 1):
+                    yield start, leaves
+                    leaves = []
+                if not leaves:
+                    key, start = run_key, pos
+                last = pos[-1]
+                leaves.append(_json.loads(refs))
+        if leaves:
+            yield start, leaves
 
-        cur = refs_df
-        for level in range(len(concat_dims) - 1, 0, -1):
-            keys = [f"pos{k}" for k in range(level)]
-            pre = preprocess if level == len(concat_dims) - 1 else None
-            out_schema = ", ".join(f"{k} long" for k in keys) + ", refs string"
-            cur = cur.groupBy(*keys).applyInPandas(
-                make_slice_combine(concat_dims[level], level, keys, pre),
-                out_schema,
-            )
-
-        slices = cur.collect()
-        ordered = [
-            _json.loads(r["refs"]) for r in sorted(slices, key=lambda r: r["pos0"])
+    def partial_merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = [
+            (*start, _json.dumps(combine_references(leaves, [inner], preprocess=preprocess)))
+            for start, leaves in runs(batches)
         ]
-        return combine_references(ordered, [concat_dims[0]])
+        if rows:
+            yield pd.DataFrame(rows, columns=[*pos_cols, "refs"])
 
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = sorted(zip(pdf["pos0"], pdf["refs"]), key=lambda t: int(t[0]))
-        combined = combine_references(
-            [_json.loads(r) for _, r in rows], concat_dims, preprocess=preprocess
-        )
-        return pd.DataFrame(
-            {"min_pos": [int(rows[0][0])], "refs": [_json.dumps(combined)]}
-        )
-
-    partials = (
-        refs_df.groupBy(F.floor(F.col("pos0") / max_refs_per_merge))
-        .applyInPandas(partial, "min_pos long, refs string")
-        .collect()
-    )
+    out_schema = "".join(f"{c} long, " for c in pos_cols) + "refs string"
+    partials = refs_df.mapInPandas(partial_merge, out_schema).collect()
     if not partials:
         raise ValueError("no references to combine")
-    ordered = [
-        _json.loads(r["refs"]) for r in sorted(partials, key=lambda r: r["min_pos"])
-    ]
-    return combine_references(ordered, concat_dims)
+    level = sorted(
+        ((tuple(r[c] for c in pos_cols), _json.loads(r["refs"])) for r in partials),
+        key=lambda t: t[0],
+    )
+    for k in reversed(range(len(concat_dims))):
+        slices: Dict[tuple, List[dict]] = {}
+        for pos, refs in level:
+            slices.setdefault(pos[:k], []).append(refs)
+        level = [
+            (outer, combine_references(refs, [concat_dims[k]]))
+            for outer, refs in slices.items()
+        ]
+    return level[0][1]
 
 
 def write_combined_reference(

@@ -4,6 +4,9 @@ full pipeline → Zarr → assert equal to the in-memory original."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 import pytest
 
 from pangeo_forge_recipes_spark import (
@@ -61,12 +64,13 @@ def test_roundtrip_multivariable_merge(spark, tmp_path):
     assert_equal(result.open(), ds)
 
 
-def test_determine_schema_merge_by_concat(spark, tmp_path):
-    """A 2-D MergeDim × ConcatDim schema reduce: the inner (concat) level
-    groups on the stripped index, the outermost (merge) level on the
-    constant empty index. The global schema equals a serial fold of the
-    same per-level combiners; an uneven concat level keeps each
-    position's length."""
+def test_determine_schema_merge_by_concat(spark, tmp_path, monkeypatch):
+    """A 2-D MergeDim × ConcatDim schema reduce: tasks fold the inner
+    (concat) level per outer index, the driver merges those partials and
+    folds the outer (merge) level. It runs as exactly one job with no
+    Exchange, and an empty input raises. The global schema equals a
+    serial fold of the same per-level combiners; an uneven concat level
+    keeps each position's length."""
     import pandas as pd
 
     import pangeo_forge_recipes_spark.transforms as T
@@ -92,9 +96,27 @@ def test_determine_schema_merge_by_concat(spark, tmp_path):
         file_type="npz",
     )
     dims = pattern.combine_dim_keys
-    got = T.determine_schema(
-        T.read_schemas_df(T.manifest_df(spark, pattern), "npz"), dims
-    )
+    schemas_df = T.read_schemas_df(T.manifest_df(spark, pattern), "npz")
+    plans = []
+    real_collect = type(schemas_df).collect
+
+    def collect(df):
+        rows = real_collect(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(type(schemas_df), "collect", collect)
+    sc = spark.sparkContext
+    group = "determine-schema-job-count"
+    sc.setJobGroup(group, "determine_schema 2-D")
+    try:
+        got = T.determine_schema(schemas_df, dims)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+    with pytest.raises(ValueError, match="0 rows"):
+        T.determine_schema(schemas_df.limit(0), dims)
 
     pdf = pd.DataFrame(
         [
@@ -795,9 +817,16 @@ def test_kerchunk_two_concat_dims_preprocess(spark, tmp_path):
 
 
 def test_kerchunk_three_concat_dims(spark, tmp_path):
-    """3-D kerchunk combine (r8: the nested ordered reduce is recursive —
-    innermost dim reduces first, one shuffle per level, outermost merges
-    driver-side). Full element equality against the source hypercube."""
+    """3-D kerchunk combine: the ordered reduce merges innermost dim
+    first, outermost last. Full element equality against the source
+    hypercube, and reference.json bytes equal to a serial nested
+    combine."""
+    from pangeo_forge_recipes_spark.kerchunkio import (
+        combine_references,
+        scan_npz,
+        write_reference_json,
+    )
+
     ds = make_ds(nt=4)
     for t in range(2):
         for la in range(2):
@@ -820,6 +849,25 @@ def test_kerchunk_three_concat_dims(spark, tmp_path):
         concat_dims=["time", "lat", "lon"],
     )
     assert_equal(open_reference_dataset(out), ds)
+
+    # byte for byte the serial nested combine, innermost dim first
+    def leaf(t, la, lo):
+        return scan_npz(str(tmp_path / f"t{t}_l{la}_o{lo}.npz"))
+
+    serial = combine_references(
+        [
+            combine_references(
+                [combine_references([leaf(t, la, lo) for lo in range(2)], ["lon"])
+                 for la in range(2)],
+                ["lat"],
+            )
+            for t in range(2)
+        ],
+        ["time"],
+    )
+    expected = write_reference_json(serial, str(tmp_path / "serial.json"))
+    with open(out, "rb") as got, open(expected, "rb") as want:
+        assert got.read() == want.read()
 
 
 def test_kerchunk_multi_dim_single_axis_kernel_still_raises(tmp_path):
@@ -936,3 +984,35 @@ def test_split_batches_flush_before_int32_offsets(tmp_path, monkeypatch):
     monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", max(len(f) for f in frames) - 1)
     with pytest.raises(ValueError, match=r"\|d:bar' frames to \d+ bytes"):
         batches()
+
+
+TRANSFORMS = os.path.join(
+    os.path.dirname(os.path.dirname(__file__)), "pangeo_forge_recipes_spark", "transforms.py"
+)
+# shuffling DataFrame calls -> the top-level functions of transforms.py
+# allowed to make them
+SHUFFLE_OWNERS = {
+    "groupBy": {"rechunk_and_store", "rechunk_refs_and_store"},
+    "repartitionByRange": {"rechunk_and_store", "rechunk_refs_and_store"},
+    "repartition": {"open_urls_with_fsspec"},
+}
+
+
+def test_transforms_shuffles_only_in_the_rechunk():
+    """The README's "one data shuffle": in transforms.py, groupBy and
+    repartitionByRange appear only in the rechunk write stages, and
+    repartition only in open_urls_with_fsspec's concurrency cap."""
+    with open(TRANSFORMS) as f:
+        tree = ast.parse(f.read(), TRANSFORMS)
+    offenders = []
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in SHUFFLE_OWNERS
+                and owner not in SHUFFLE_OWNERS[node.func.attr]
+            ):
+                offenders.append(f"{owner}:{node.lineno} {node.func.attr}")
+    assert not offenders, f"shuffles outside the rechunk: {offenders}"

@@ -241,9 +241,9 @@ def test_kerchunk_merge_matches_serial_combine(spark, tmp_path):
 
 
 def test_kerchunk_merge_job_count_and_empty_manifest(spark, tmp_path):
-    """The 1-D merge is one pass over the per-file scan: at most two jobs
-    (the shuffle map stage and the result stage), so each file is opened
-    once. An empty manifest still raises."""
+    """The 1-D merge is one pass over the per-file scan and shuffles
+    nothing: exactly one job, so each file is opened once. An empty
+    manifest still raises."""
     from pangeo_forge_recipes_spark import transforms as T
 
     _, _, pattern = _netcdf4_13_steps(tmp_path)
@@ -257,10 +257,76 @@ def test_kerchunk_merge_job_count_and_empty_manifest(spark, tmp_path):
         T.combine_references_df(refs, ["time"], max_refs_per_merge=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
     with pytest.raises(ValueError, match="no references to combine"):
         T.combine_references_df(refs.limit(0), ["time"], max_refs_per_merge=2)
+
+
+@pytest.mark.parametrize("case", ["netcdf4_1d", "grib_2d"])
+def test_metadata_reduces_independent_of_partitioning(spark, tmp_path, case):
+    """determine_schema and combine_references_df give one schema and a
+    reference.json byte-identical to a serial combine (2-D: per time
+    slice along latitude, then along time) whatever the manifest's
+    partitioning and row order: as built, coalesce(1), repartition(7)."""
+    from pangeo_forge_recipes_spark import ConcatDim, FilePattern
+    from pangeo_forge_recipes_spark import transforms as T
+    from pangeo_forge_recipes_spark.grib2io import write_grib2
+    from pangeo_forge_recipes_spark.kerchunkio import (
+        combine_references,
+        write_reference_json,
+    )
+
+    from .test_grib2io import make_grib_ds
+
+    if case == "netcdf4_1d":
+        _, paths, pattern = _netcdf4_13_steps(tmp_path)
+        serial = combine_references(
+            [open_with_kerchunk(p, FileType.netcdf4)[0] for p in paths], ["time"]
+        )
+    else:
+        ds = make_grib_ds(nt=4)
+        slices = []
+        for ti in range(2):
+            row = []
+            for li in range(3):
+                path = str(tmp_path / f"t{ti}_l{li}.grib2")
+                sub = ds.isel(time=slice(2 * ti, 2 * ti + 2), latitude=slice(2 * li, 2 * li + 2))
+                write_grib2(path, sub)
+                row.append(open_with_kerchunk(path, FileType.grib)[0])
+            slices.append(combine_references(row, ["latitude"]))
+        serial = combine_references(slices, ["time"])
+        pattern = FilePattern(
+            lambda time, latitude: str(tmp_path / f"t{time}_l{latitude}.grib2"),
+            ConcatDim("time", keys=[0, 1], nitems_per_file=2),
+            ConcatDim("latitude", keys=[0, 1, 2], nitems_per_file=2),
+            file_type="grib",
+        )
+    with open(write_reference_json(serial, str(tmp_path / "serial.json")), "rb") as f:
+        want = f.read()
+
+    layouts = {
+        "as_built": lambda m: m,
+        "coalesce1": lambda m: m.coalesce(1),
+        "repartition7": lambda m: m.repartition(7),
+    }
+    schemas = []
+    for name, layout in layouts.items():
+        manifest = layout(T.manifest_df(spark, pattern))
+        schemas.append(
+            T.determine_schema(
+                T.read_schemas_df(manifest, pattern.file_type), pattern.combine_dim_keys
+            )
+        )
+        refs = T.combine_references_df(
+            T.open_with_kerchunk_df(
+                manifest, pattern.file_type, concat_dims=pattern.concat_dims
+            ),
+            pattern.concat_dims,
+        )
+        with open(write_reference_json(refs, str(tmp_path / f"{name}.json")), "rb") as f:
+            assert f.read() == want, name
+    assert all(s == schemas[0] for s in schemas)
 
 
 def test_lzf_stream_roundtrip_and_known_vectors():
