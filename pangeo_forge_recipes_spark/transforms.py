@@ -5,6 +5,13 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
 
 * the file matrix is a **DataFrame manifest** ``(index, url)`` — built
   distributed for huge patterns (``spark.range`` + unravel);
+* every per-file step is a **batch-iterator function** over Arrow record
+  batches, and consecutive steps are **fused in Python** into one
+  ``mapInArrow`` (``_map_batches``). Catalyst fuses JVM operators but
+  gives each Python node of a task its own worker process; Beam's runner
+  fuses ``ParDo`` chains. So a stage runs its Python steps — e.g.
+  unravel → prune → schema scan → partial fold, or index → open → split —
+  in one worker per task;
 * the schema reduction is a **two-pass design**: pass 1 reads *metadata
   only* (no array payloads) and reduces tiny schema rows; pass 2 streams
   data. The reference opens lazily once and trusts Beam fusion — at 100 TB
@@ -41,6 +48,7 @@ from typing import Callable, Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,10 +82,80 @@ MANIFEST_SCHEMA = "index string, url string"
 SPLIT_SCHEMA = "group_key string, index string, payload binary"
 REFS_SCHEMA = "group_key string, index string, url string"
 STATUS_SCHEMA = "group_key string, index string, n_vars int, nbytes bigint"
+SCHEMAS_SCHEMA = "index string, schema string"
 
 # threshold above which the manifest is generated distributed rather than
 # enumerated on the driver
 _DRIVER_MANIFEST_MAX = 100_000
+
+
+# ---------------------------------------------------------------------------
+# Python steps: every per-row step below is a batch-iterator function
+# (Arrow record batches in, Arrow record batches out) run through
+# ``_map_batches``, which composes consecutive steps into one Python node
+# ---------------------------------------------------------------------------
+
+BatchFn = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "int": pa.int32(),
+    "bigint": pa.int64(),
+    "long": pa.int64(),
+}
+
+# the key under which ``_map_batches`` records ``(source, steps)`` in the
+# ``__dict__`` of each DataFrame it returns
+_STEPS = "_pfr_python_steps"
+
+
+def _batch(ddl: str, columns) -> pa.RecordBatch:
+    """One record batch of ``ddl`` (a flat DDL string over the types in
+    :data:`_ARROW_TYPES`) from its ``columns``, given in ``ddl`` order;
+    an empty ``columns`` gives an empty batch."""
+    fields = [f.split() for f in ddl.split(",")]
+    columns = list(columns) or [[] for _ in fields]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, _ARROW_TYPES[t]) for col, (_, t) in zip(columns, fields, strict=True)],
+        names=[name for name, _ in fields],
+    )
+
+
+def _rows(batch: pa.RecordBatch, *names: str) -> Iterator[tuple]:
+    """The values of ``batch``'s ``names`` columns, row by row."""
+    return zip(*(batch.column(name).to_pylist() for name in names))
+
+
+def _compose(fns: Tuple[BatchFn, ...]) -> BatchFn:
+    def steps(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for fn in fns:
+            batches = fn(batches)
+        return batches
+
+    steps.__name__ = "+".join(fn.__name__ for fn in fns)
+    return steps
+
+
+def _map_batches(df: DataFrame, fn: BatchFn, schema: str) -> DataFrame:
+    """Run the Python step ``fn`` over ``df``, emitting rows of ``schema``.
+
+    Spark gives every Python node of a task its own Python worker
+    process, and it does not fuse adjacent ones: two steps in a row would
+    hold two ~140 MB workers per task. So when ``df`` is itself a
+    DataFrame this function returned (not one derived from it, and not
+    persisted), ``fn`` joins that DataFrame's steps in ONE ``mapInArrow``
+    over their common source — Beam's fusion of ``ParDo`` chains, done in
+    Python. The chain is recorded in the returned DataFrame's
+    ``__dict__``; it is read there because ``DataFrame.__getattr__``
+    looks unknown names up as columns through the JVM."""
+    source, fns = df.__dict__.get(_STEPS, (df, ()))
+    if df.is_cached:
+        source, fns = df, ()
+    fns = (*fns, fn)
+    out = source.mapInArrow(_compose(fns), schema)
+    out.__dict__[_STEPS] = (source, fns)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -101,33 +179,35 @@ def manifest_df(spark: SparkSession, pattern: FilePattern) -> DataFrame:
     # a closure (``pattern_from_file_sequence``), so ship it cloudpickled
     bc = spark.sparkContext.broadcast(cloudpickle.dumps(pattern))
 
-    def unravel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def unravel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pat: FilePattern = cloudpickle.loads(bc.value)
-        for pdf in batches:
-            idxs = [pat.index_for_flat_position(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"index": [i.to_json() for i in idxs], "url": [pat[i] for i in idxs]}
-            )
+        for batch in batches:
+            idxs = [pat.index_for_flat_position(i) for i in batch.column("id").to_pylist()]
+            yield _batch(MANIFEST_SCHEMA, [[i.to_json() for i in idxs], [pat[i] for i in idxs]])
 
-    return spark.range(n).mapInPandas(unravel, MANIFEST_SCHEMA)
+    return _map_batches(spark.range(n), unravel, MANIFEST_SCHEMA)
 
 
 def prune_manifest(df: DataFrame, pattern: FilePattern, nkeep: int = 2) -> DataFrame:
     """Keep the first ``nkeep`` positions of each concat dim — the
     DataFrame-side equivalent of ``FilePattern.prune`` (reference
-    ``patterns.py:235-260``), as a filter on the manifest."""
+    ``patterns.py:235-260``), as a filtering step on the manifest that
+    fuses with the steps around it."""
     concat_dims = set(pattern.concat_dims)
 
-    @F.udf("boolean", useArrow=False)
     def keep(index_json: str) -> bool:
-        idx = Index.from_json(index_json)
         return all(
             pos.value < nkeep
-            for dim, pos in idx.items()
+            for dim, pos in Index.from_json(index_json).items()
             if dim.name in concat_dims
         )
 
-    return df.filter(keep("index"))
+    def prune(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            kept = [row for row in _rows(batch, "index", "url") if keep(row[0])]
+            yield _batch(MANIFEST_SCHEMA, zip(*kept))
+
+    return _map_batches(df, prune, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -146,22 +226,22 @@ def open_urls_with_fsspec(
     ``transforms.py:140-175``). ``max_concurrency`` caps simultaneous
     source-server connections by limiting partitions — Spark's rendition of
     ``MapWithConcurrencyLimit`` (``transforms.py:93-136``), with better
-    balance than the reference's random-key grouping."""
+    balance than the reference's random-key grouping. The resolve step
+    runs after that repartition and fuses with the steps that follow."""
     if isinstance(cache, str):
         cache = CacheFSSpecTarget.from_url(cache)
     if max_concurrency:
         df = df.repartition(max_concurrency)
 
-    def resolve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["url"] = [
+    def resolve(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls = [
                 open_url(u, cache=cache, secrets=secrets, open_kwargs=open_kwargs)
-                for u in pdf["url"]
+                for u in batch.column("url").to_pylist()
             ]
-            yield pdf
+            yield _batch(MANIFEST_SCHEMA, [batch.column("index").to_pylist(), urls])
 
-    return df.mapInPandas(resolve, MANIFEST_SCHEMA)
+    return _map_batches(df, resolve, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -181,7 +261,9 @@ def read_schemas_df(
     fragments (reference order Open | Preprocessor | DetermineSchema,
     ``transforms.py:276-301``): each file opens eagerly — a preprocessor
     may touch array DATA (where, coarsen, ...), which the chunk-lazy views
-    don't support — and only the KB-scale schema JSON leaves the task."""
+    don't support — and only the KB-scale schema JSON leaves the task.
+    :func:`determine_schema`'s partial fold runs in the same Python
+    step."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
 
     def schema_row(idx_json: str, url: str) -> Tuple[str, str]:
@@ -192,12 +274,12 @@ def read_schemas_df(
         index, ds = preprocess(Index.from_json(idx_json), ds)
         return index.to_json(), schema_to_json(dataset_to_schema(ds))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [schema_row(i, u) for i, u in zip(pdf["index"], pdf["url"])]
-            yield pd.DataFrame(rows, columns=["index", "schema"])
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [schema_row(i, u) for i, u in _rows(batch, "index", "url")]
+            yield _batch(SCHEMAS_SCHEMA, zip(*rows))
 
-    return df.mapInPandas(scan, "index string, schema string")
+    return _map_batches(df, scan, SCHEMAS_SCHEMA)
 
 
 def _combine_level_fn(dim: Dimension) -> Callable[[pd.DataFrame], pd.DataFrame]:
@@ -247,7 +329,8 @@ def determine_schema(
 ) -> XarraySchema:
     """Multi-dimensional schema reduction → the single global schema
     (reference ``DetermineSchema``, ``transforms.py:276-301``) without a
-    shuffle: one ``mapInPandas`` folds each partition's rows along the
+    shuffle: a partial fold, fused into the step that produced
+    ``schemas_df``, folds each partition's rows along the
     innermost dim per outer index, the driver collects these partials (at
     most partitions × outer indexes of KB-scale rows) and merges the ones
     that share an outer index with ``combine_xarray_schemas``, then folds
@@ -255,12 +338,16 @@ def determine_schema(
     *outer_dims, inner = combine_dims
     concat_dim = inner.name if inner.operation == CombineOp.CONCAT else None
 
-    def partial_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if pdfs:
-            yield _fold_level(pd.concat(pdfs, ignore_index=True), inner)
+    def partial_fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = {"index": [], "schema": []}
+        for batch in batches:
+            for c, col in rows.items():
+                col += batch.column(c).to_pylist()
+        if rows["index"]:
+            pdf = _fold_level(pd.DataFrame(rows), inner)
+            yield _batch(SCHEMAS_SCHEMA, [pdf["index"].tolist(), pdf["schema"].tolist()])
 
-    partials = schemas_df.mapInPandas(partial_fold, "index string, schema string").collect()
+    partials = _map_batches(schemas_df, partial_fold, SCHEMAS_SCHEMA).collect()
     if not partials:
         raise ValueError("schema reduction produced 0 rows, expected 1")
     merged: Dict[str, XarraySchema] = {}
@@ -294,10 +381,9 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
     ``IndexItems`` + ``augment_index_with_start_stop``,
     ``transforms.py:304-328``, ``patterns.py:66-82``). The (tiny) prefix-sum
     table is captured in the closure — the broadcast side input of the
-    reference."""
+    reference. A batch step: it fuses with the split that follows it."""
     seq_lens = _sequence_lens(schema)
 
-    @F.udf("string", useArrow=False)
     def augment(index_json: str) -> str:
         index = Index.from_json(index_json)
         new = Index()
@@ -308,7 +394,12 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
             new[dimkey] = dimval
         return new.to_json()
 
-    return df.withColumn("index", augment("index"))
+    def index(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            idxs = [augment(j) for j in batch.column("index").to_pylist()]
+            yield _batch(MANIFEST_SCHEMA, [idxs, batch.column("url").to_pylist()])
+
+    return _map_batches(df, index, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -412,15 +503,14 @@ _SPLIT_BATCH_BYTES = 2**31 - 1
 
 def _frame_batches(
     pieces: Iterator[Tuple[str, Index, NDDataset]]
-) -> Iterator["pa.RecordBatch"]:
+) -> Iterator[pa.RecordBatch]:
     """Pack pieces into :data:`SPLIT_SCHEMA` record batches whose payload
     column is built over ONE buffer that each NDS1 frame part is written
     into directly — one Python-side copy per payload byte. Raises
     ``ValueError`` naming the group key when a single frame is over
     :data:`_SPLIT_BATCH_BYTES`."""
-    import pyarrow as pa
 
-    def batch(keys, idxs, data, offsets) -> "pa.RecordBatch":
+    def batch(keys, idxs, data, offsets) -> pa.RecordBatch:
         payload = pa.Array.from_buffers(
             pa.binary(),
             len(keys),
@@ -459,23 +549,21 @@ def open_split_fragments_df(
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
 ) -> DataFrame:
-    """Payload split: open → [preprocess] → split in ONE ``mapInArrow``
-    stage, emitting ``(group_key, index, payload)`` rows whose payload is
-    the piece's NDS1 frame. The MB-scale bytes cross JVM↔Python once
+    """Payload split: open → [preprocess] → split in ONE Python step
+    (fused with :func:`index_items` before it), emitting ``(group_key,
+    index, payload)`` rows whose payload is the piece's NDS1 frame. The MB-scale bytes cross JVM↔Python once
     before the shuffle; each source file's pieces leave as one record
     batch (more only past :data:`_SPLIT_BATCH_BYTES`)."""
 
-    def open_split(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def open_split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for idx_json, url in zip(
-                batch.column("index").to_pylist(), batch.column("url").to_pylist()
-            ):
+            for idx_json, url in _rows(batch, "index", "url"):
                 yield from _frame_batches(
                     _pieces(idx_json, url, file_type, target_chunks, schema,
                             xarray_open_kwargs, preprocess)
                 )
 
-    return df.mapInArrow(open_split, SPLIT_SCHEMA)
+    return _map_batches(df, open_split, SPLIT_SCHEMA)
 
 
 def rechunk_and_store(
@@ -491,15 +579,13 @@ def rechunk_and_store(
     row's NDS1 frame is its ``payload`` cell, read as a zero-copy
     ``np.frombuffer`` view over the Arrow buffer — or, for spill rows
     with ``url`` set, one range-get of ``(url, offset, length)``."""
-    import pyarrow as pa
-
     has_url = "url" in df_split.columns
     status_schema = pa.schema(
         [("group_key", pa.string()), ("index", pa.string()),
          ("n_vars", pa.int32()), ("nbytes", pa.int64())]
     )
 
-    def combine_write(tbl: "pa.Table") -> "pa.Table":
+    def combine_write(tbl: pa.Table) -> pa.Table:
         frags = []
         for batch in tbl.to_batches():
             idx_col, payload_col = batch.column("index"), batch.column("payload")
@@ -537,11 +623,11 @@ def open_split_refs_df(
     corpus and both Python↔JVM payload crossings, trading them for a
     second targeted read of each source file."""
 
-    def split_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def split_keys(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = [
                 (key, idx_json, url)
-                for idx_json, url in zip(pdf["index"], pdf["url"])
+                for idx_json, url in _rows(batch, "index", "url")
                 # a user preprocessor may touch array DATA (where, coarsen,
                 # ...), which lazy views don't support — open eagerly when
                 # one is present; metadata-only otherwise
@@ -550,9 +636,9 @@ def open_split_refs_df(
                     xarray_open_kwargs, preprocess, load=preprocess is not None,
                 )
             ]
-            yield pd.DataFrame(rows, columns=["group_key", "index", "url"])
+            yield _batch(REFS_SCHEMA, zip(*rows))
 
-    return df.mapInPandas(split_keys, REFS_SCHEMA)
+    return _map_batches(df, split_keys, REFS_SCHEMA)
 
 
 # per-worker-process LRU of opened+preprocessed sources for the reference
@@ -629,14 +715,12 @@ def rechunk_refs_and_store(
     # the same worker, so the per-process open cache turns the "one open
     # per group" cost into ~one open per file per partition. Groups stay
     # whole because repartitionByRange keys each group to one partition.
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cur_key: Optional[str] = None
         cur_rows: List[Tuple[str, str]] = []
         done: List[dict] = []
-        for pdf in batches:
-            for gk, idx_json, url in zip(
-                pdf["group_key"], pdf["index"], pdf["url"]
-            ):
+        for batch in batches:
+            for gk, idx_json, url in _rows(batch, "group_key", "index", "url"):
                 if gk != cur_key:
                     if cur_key is not None:
                         done.append(combine_write(cur_key, cur_rows))
@@ -645,7 +729,7 @@ def rechunk_refs_and_store(
         if cur_key is not None:
             done.append(combine_write(cur_key, cur_rows))
         if done:
-            yield pd.DataFrame(done)
+            yield _batch(STATUS_SCHEMA, zip(*(row.values() for row in done)))
 
     nparts = int(
         df_refs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -653,7 +737,7 @@ def rechunk_refs_and_store(
     part = df_refs.repartitionByRange(nparts, "group_key").sortWithinPartitions(
         "group_key"
     )
-    return part.mapInPandas(run, STATUS_SCHEMA)
+    return part.mapInArrow(run, STATUS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -695,9 +779,9 @@ def open_split_spill_df(
     :data:`SPILL_INLINE_BYTES` ship inline in ``payload`` instead.
     :func:`rechunk_and_store` combines either kind of row."""
 
-    def split_spill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
+    def split_spill(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for idx_json, url in _rows(batch, "index", "url"):
                 scratch_url = (
                     scratch_root.rstrip("/")
                     + "/spill-"
@@ -722,12 +806,9 @@ def open_split_spill_df(
                         for parts in spilled:
                             for part in parts:
                                 f.write(part)
-                yield pd.DataFrame(
-                    rows,
-                    columns=["group_key", "index", "payload", "url", "offset", "length"],
-                )
+                yield _batch(SPILL_SCHEMA, zip(*rows))
 
-    return df.mapInPandas(split_spill, SPILL_SCHEMA)
+    return _map_batches(df, split_spill, SPILL_SCHEMA)
 
 
 def open_split_store_df(
@@ -746,19 +827,19 @@ def open_split_store_df(
     across the cluster for nothing. Each piece goes through the same
     write kernel as a one-piece group."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
+    def split_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for idx_json, url in _rows(batch, "index", "url"):
                 rows = [
-                    _write_group(key, [(sub_idx, single)], store_path)
+                    _write_group(key, [(sub_idx, single)], store_path).values()
                     for key, sub_idx, single in _pieces(
                         idx_json, url, file_type, target_chunks, schema,
                         xarray_open_kwargs, preprocess,
                     )
                 ]
-                yield pd.DataFrame(rows, columns=["group_key", "index", "n_vars", "nbytes"])
+                yield _batch(STATUS_SCHEMA, zip(*rows))
 
-    return df.mapInPandas(run, STATUS_SCHEMA)
+    return _map_batches(df, split_write, STATUS_SCHEMA)
 
 
 def _cleanup_scratch(scratch_root: str) -> None:
@@ -1090,7 +1171,8 @@ def open_with_kerchunk_df(
     ``(index, pos0..pos{n-1}, refs)`` rows (reference
     ``OpenWithKerchunk``, ``transforms.py:178-213``). ``pos{k}`` is the
     file's ordinal along ``concat_dims[k]`` (outermost first); a 1-D
-    pattern emits just ``pos0``."""
+    pattern emits just ``pos0``. :func:`combine_references_df`'s partial
+    merge runs in the same Python step."""
     import json as _json
 
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
@@ -1098,10 +1180,10 @@ def open_with_kerchunk_df(
     n = max(1, len(dims))
     pos_cols = [f"pos{k}" for k in range(n)]
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             out: Dict[str, list] = {c: [] for c in ["index", *pos_cols, "refs"]}
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
+            for idx_json, url in _rows(batch, "index", "url"):
                 index = Index.from_json(idx_json)
                 poss = []
                 for k in range(n):
@@ -1119,10 +1201,10 @@ def open_with_kerchunk_df(
                     for c, p in zip(pos_cols, poss):
                         out[c].append(p)
                     out["refs"].append(_json.dumps(ref))
-            yield pd.DataFrame(out)
+            yield _batch(schema, out.values())
 
     schema = "index string, " + ", ".join(f"{c} long" for c in pos_cols) + ", refs string"
-    return df.mapInPandas(scan, schema)
+    return _map_batches(df, scan, schema)
 
 
 def combine_references_df(
@@ -1137,8 +1219,9 @@ def combine_references_df(
     axis, read from column ``pos0`` (the reference's HRRR step×time
     family, ``examples/feedstock/hrrr_kerchunk_concat_step.py``, is 2-D).
 
-    One ``mapInPandas`` streams each partition's rows into partials: a
-    partial combines, along the innermost dim, a run of CONSECUTIVE
+    One Python step, fused with the scan of :func:`open_with_kerchunk_df`,
+    streams each partition's rows into partials: a partial combines,
+    along the innermost dim, a run of CONSECUTIVE
     innermost positions that share the outer positions and one
     ``floor(pos / max_refs_per_merge)`` bucket (the reference's
     ``bucket_by_position``); any gap closes the run, so the result does
@@ -1159,12 +1242,12 @@ def combine_references_df(
     pos_cols = [f"pos{k}" for k in range(len(concat_dims))]
     inner = concat_dims[-1]
 
-    def runs(batches: Iterator[pd.DataFrame]) -> Iterator[Tuple[tuple, List[dict]]]:
+    def runs(batches: Iterator[pa.RecordBatch]) -> Iterator[Tuple[tuple, List[dict]]]:
         key = start = last = None
         leaves: List[dict] = []
-        for pdf in batches:
-            for *pos, refs in zip(*(pdf[c] for c in pos_cols), pdf["refs"]):
-                pos = tuple(int(p) for p in pos)
+        for batch in batches:
+            for *pos, refs in _rows(batch, *pos_cols, "refs"):
+                pos = tuple(pos)
                 run_key = (pos[:-1], pos[-1] // max_refs_per_merge)
                 if leaves and (run_key != key or pos[-1] != last + 1):
                     yield start, leaves
@@ -1176,16 +1259,16 @@ def combine_references_df(
         if leaves:
             yield start, leaves
 
-    def partial_merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rows = [
             (*start, _json.dumps(combine_references(leaves, [inner], preprocess=preprocess)))
             for start, leaves in runs(batches)
         ]
         if rows:
-            yield pd.DataFrame(rows, columns=[*pos_cols, "refs"])
+            yield _batch(out_schema, zip(*rows))
 
     out_schema = "".join(f"{c} long, " for c in pos_cols) + "refs string"
-    partials = refs_df.mapInPandas(partial_merge, out_schema).collect()
+    partials = _map_batches(refs_df, partial_merge, out_schema).collect()
     if not partials:
         raise ValueError("no references to combine")
     level = sorted(

@@ -1,0 +1,293 @@
+"""One Python worker per task: Spark gives every Python node of a task its
+own worker process and never fuses adjacent ones, so the pipeline composes
+its Python steps itself (``transforms._map_batches``). These tests walk the
+physical plans a run executes and assert that no Python node feeds another
+without an ``Exchange`` between them; they also inject one task failure
+into the fused stages and check that the retried run writes the same
+bytes as a clean one."""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+from pangeo_forge_recipes_spark import (
+    assert_equal,
+    pattern_from_file_sequence,
+    store_to_zarr,
+    write_combined_reference,
+)
+from pangeo_forge_recipes_spark import transforms as T
+
+from .data_generation import make_ds, split_ds_into_files
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# node names of Spark's Python execs: MapInArrow, MapInPandas,
+# BatchEvalPython, ArrowEvalPython, FlatMapGroupsInArrow, ...
+PYTHON_NODE = re.compile(r"(InArrow|InPandas|EvalPython)\b")
+EXCHANGE_NODE = re.compile(r"(Exchange|QueryStage)\b")
+
+
+def _plan_tree(plan: str):
+    """``(name, children)`` nodes of a physical plan's tree string. A
+    node's name is the first word after the tree-drawing prefix and any
+    whole-stage-codegen marker ``*(n)``; a Python node's name also names
+    its function (``MapInArrow scan+partial_fold``)."""
+    root = ("<root>", [])
+    stack = [(-1, root)]
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        depth = len(line) - len(body)
+        name, _, rest = re.sub(r"^\*\(\d+\)\s*", "", body).partition(" ")
+        if PYTHON_NODE.search(name):
+            name += " " + re.match(r"\[?([\w+]*)", rest).group(1)
+        node = (name, [])
+        while stack[-1][0] >= depth:
+            stack.pop()
+        stack[-1][1][1].append(node)
+        stack.append((depth, node))
+    return root
+
+
+def stacked_python_nodes(plan: str):
+    """Sorted ``(upper, lower)`` pairs of Python nodes in ``plan`` where
+    ``lower`` feeds ``upper`` within one stage, i.e. with no exchange
+    between them."""
+    pairs = set()
+
+    def below(upper, node):
+        for child in node[1]:
+            if EXCHANGE_NODE.search(child[0]):
+                continue
+            if PYTHON_NODE.search(child[0]):
+                pairs.add((upper, child[0]))
+            else:
+                below(upper, child)
+
+    def walk(node):
+        if PYTHON_NODE.search(node[0]):
+            below(node[0], node)
+        for child in node[1]:
+            walk(child)
+
+    walk(_plan_tree(plan))
+    return sorted(pairs)
+
+
+@pytest.fixture
+def executed_plans(spark, monkeypatch):
+    """Physical plans of every ``collect`` made from here on: the
+    pipeline's actions (the schema and reference partials, the write
+    statuses) all go through it."""
+    plans = []
+    cls = type(spark.range(1))
+    real = cls.collect
+
+    def collect(df):
+        rows = real(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", collect)
+    return plans
+
+
+def _npz_pattern(tmp_path):
+    ds = make_ds(nt=12)
+    paths = split_ds_into_files(ds, str(tmp_path / "src"), items_per_file=2)
+    return ds, pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
+
+
+def _keep(index, ds):
+    return index, ds
+
+
+STORE_CASES = {
+    "payload": dict(target_chunks={"time": 3}, rechunk_shuffle="payload"),
+    "reference": dict(target_chunks={"time": 3}, rechunk_shuffle="reference"),
+    "spill": dict(target_chunks={"time": 3}, rechunk_shuffle="spill"),
+    "aligned": dict(target_chunks={"time": 2}),
+    "prune": dict(target_chunks={"time": 3}, prune=2),
+    "max_concurrency": dict(target_chunks={"time": 3}, max_concurrency=2),
+    "preprocess": dict(target_chunks={"time": 3}, preprocess=_keep),
+    "distributed_manifest": dict(target_chunks={"time": 3}, rechunk_shuffle="payload"),
+}
+
+
+@pytest.mark.parametrize("case", list(STORE_CASES))
+def test_store_to_zarr_runs_one_python_node_per_stage(
+    spark, tmp_path, monkeypatch, executed_plans, case
+):
+    if case == "distributed_manifest":
+        monkeypatch.setattr(T, "_DRIVER_MANIFEST_MAX", 0)
+    ds, pattern = _npz_pattern(tmp_path)
+    result = store_to_zarr(spark, pattern, str(tmp_path / "t"), "s.zarr", **STORE_CASES[case])
+    assert result.shuffled == (case != "aligned")
+    want = ds.isel(time=slice(0, 4)) if case == "prune" else ds
+    assert_equal(result.open(), want)
+    assert len(executed_plans) == 2  # schema partials, write statuses
+    assert all(PYTHON_NODE.search(plan) for plan in executed_plans)
+    pairs = [pair for plan in executed_plans for pair in stacked_python_nodes(plan)]
+    assert not pairs, pairs
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_write_combined_reference_runs_one_python_node(
+    spark, tmp_path, monkeypatch, executed_plans, distributed
+):
+    if distributed:
+        monkeypatch.setattr(T, "_DRIVER_MANIFEST_MAX", 0)
+    _, pattern = _npz_pattern(tmp_path)
+    write_combined_reference(spark, pattern, str(tmp_path / "t"), "refs")
+    (plan,) = executed_plans
+    assert PYTHON_NODE.search(plan)
+    pairs = stacked_python_nodes(plan)
+    assert not pairs, pairs
+
+
+def test_steps_compose_only_along_an_unmodified_chain(spark, tmp_path):
+    """A caller's own composition of the public steps fuses too; a
+    DataFrame derived from a step's output, or a persisted one, starts a
+    new chain over itself."""
+    _, pattern = _npz_pattern(tmp_path)
+    manifest = T.manifest_df(spark, pattern)
+    schema = T.determine_schema(T.read_schemas_df(manifest, "npz"), pattern.combine_dim_keys)
+    split = T.open_split_refs_df(T.index_items(manifest, schema), "npz",
+                                 target_chunks={"time": 3}, schema=schema)
+
+    def python_nodes(df):
+        return PYTHON_NODE.findall(df._jdf.queryExecution().executedPlan().toString())
+
+    assert len(python_nodes(split)) == 1
+    want = sorted(split.collect())
+    derived = T.open_split_refs_df(
+        T.index_items(manifest, schema).filter("url IS NOT NULL"), "npz",
+        target_chunks={"time": 3}, schema=schema,
+    )
+    assert len(python_nodes(derived)) == 2
+    indexed = T.index_items(manifest, schema).persist()
+    try:
+        cached = T.open_split_refs_df(indexed, "npz", target_chunks={"time": 3}, schema=schema)
+        assert "InMemoryTableScan" in cached._jdf.queryExecution().executedPlan().toString()
+        assert sorted(derived.collect()) == sorted(cached.collect()) == want
+    finally:
+        indexed.unpersist()
+
+
+def test_plan_guard_flags_stacked_python_nodes():
+    """The guard itself: two Python nodes in one stage are a pair; an
+    exchange (or a query stage after AQE) between them is not."""
+    stacked = textwrap.dedent("""\
+        HashAggregate(keys=[], functions=[count(1)])
+        +- MapInArrow split(index#1, url#2)#9, [group_key#3]
+           +- *(1) Project [index#1, url#2]
+              +- BatchEvalPython [augment(index#1)#5], [pythonUDF0#8]
+                 +- LocalTableScan [index#1, url#2]
+        """)
+    assert stacked_python_nodes(stacked) == [("MapInArrow split", "BatchEvalPython augment")]
+    separated = textwrap.dedent("""\
+        FlatMapGroupsInArrow [group_key#3], combine_write(...)
+        :- Sort [group_key#3 ASC NULLS FIRST], false, 0
+        :  +- Exchange hashpartitioning(group_key#3, 4), ENSURE_REQUIREMENTS
+        :     +- MapInArrow split(index#1, url#2)#9, [group_key#3]
+        +- LocalTableScan [x#1]
+        """)
+    assert stacked_python_nodes(separated) == []
+
+
+# ---------------------------------------------------------------------------
+# task retry: a fused stage that fails once writes the same bytes
+# ---------------------------------------------------------------------------
+
+RETRY_SCRIPT = """
+import hashlib, json, os, sys
+from pyspark import TaskContext
+from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr, write_combined_reference
+from pangeo_forge_recipes_spark.session import get_spark
+
+src, out, marker = sys.argv[1:4]
+paths = sorted(os.path.join(src, f) for f in os.listdir(src))
+victim = paths[len(paths) // 2]
+pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
+
+
+def fail_once(what):
+    ctx = TaskContext.get()
+    if ctx is not None and ctx.attemptNumber() == 0:
+        with open(os.path.join(marker, f"{what}-{ctx.stageId()}-{os.getpid()}"), "w"):
+            pass
+        raise RuntimeError(f"injected {what} failure")
+
+
+def preprocess(index, ds, flaky):
+    # the schema pass sees file positions, the split element offsets
+    (position,) = index.values()
+    if flaky and position.value == paths.index(victim) * (2 if position.indexed else 1):
+        fail_once("store")
+    return index, ds
+
+
+def refs_preprocess(refs, flaky):
+    if flaky and any(victim in json.dumps(v) for v in refs.values()):
+        fail_once("refs")
+    return refs
+
+
+def digest(path):
+    root = os.path.dirname(path) if os.path.isfile(path) else path
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    return {os.path.relpath(f, root): hashlib.sha256(open(f, "rb").read()).hexdigest()
+            for f in files}
+
+
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+got = {}
+for flaky in (False, True):
+    store = store_to_zarr(
+        spark, pattern, out, f"store_{flaky}.zarr", target_chunks={"time": 3},
+        preprocess=lambda i, d, flaky=flaky: preprocess(i, d, flaky),
+    )
+    ref = write_combined_reference(
+        spark, pattern, out, f"refs_{flaky}", max_refs_per_merge=2,
+        preprocess=lambda r, flaky=flaky: refs_preprocess(r, flaky),
+    )
+    got[str(flaky)] = {"store": digest(store.path), "reference": digest(ref)}
+spark.stop()
+print(json.dumps(got))
+"""
+
+
+def test_fused_stage_task_retry_writes_identical_bytes(tmp_path):
+    """On ``local[2,2]`` (one retry per task) a ``preprocess`` raises on a
+    task's first attempt for one chosen file: once in the fused schema
+    scan+fold task and once in the fused index+split task of a payload
+    bake, and a refs ``preprocess`` once in the fused kerchunk scan+merge
+    task. The retried runs write a store and a ``reference.json``
+    sha256-identical to a clean run."""
+    ds = make_ds(nt=12)
+    split_ds_into_files(ds, str(tmp_path / "src"), items_per_file=2)
+    marker = tmp_path / "failures"
+    marker.mkdir()
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", RETRY_SCRIPT, str(tmp_path / "src"), str(tmp_path / "out"),
+         str(marker)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    failures = sorted(name.split("-")[0] for name in os.listdir(marker))
+    # the schema pass and the split each fail one task; the scan+merge one
+    assert failures == ["refs", "store", "store"], failures
+    assert got["True"] == got["False"]
+    assert len(got["True"]["store"]) > 5 and got["True"]["reference"]

@@ -70,11 +70,17 @@ def test_image_phash_dataframe(spark, images):
     assert out == out2
 
 
-def test_near_dup_matches_brute_force(spark, images):
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in ih.phash_near_dup(images, max_hamming=6).collect()
-    }
+@pytest.mark.parametrize("materialize", ["checkpoint", "persist"])
+def test_near_dup_matches_brute_force(spark, images, monkeypatch, materialize):
+    """Both branch-input strategies of ``parallel.materialize_branch_input``
+    (``hamming_near_dup`` feeds its signatures to two plan branches)."""
+    monkeypatch.setenv("SPARK_GRAFT_BRANCH_MATERIALIZE", materialize)
+    near = ih.phash_near_dup(images, max_hamming=6)
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in near.collect()}
+    plan = near._jdf.queryExecution().executedPlan().toString()
+    assert ("InMemoryTableScan" in plan) == (materialize == "persist"), plan
+    if materialize == "persist":
+        spark.catalog.clearCache()
     hashes = {r["doc_id"]: r["phash"] for r in ih.image_phash(images).collect()}
     ids = sorted(hashes)
     want = {

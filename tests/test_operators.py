@@ -43,8 +43,22 @@ def test_exact_dedup(docs):
     assert len(out) == 6  # 7 docs, one exact pair
 
 
-def test_minhash_dedup_finds_near_dups(docs):
-    pairs = dedup.minhash_dedup(docs, threshold=0.5, bands=16, num_perm=64).collect()
+def _branch_input_plan_check(df, materialize: str) -> None:
+    """The plan of ``df`` scans a cached relation exactly when its branch
+    inputs were persisted (``SPARK_GRAFT_BRANCH_MATERIALIZE=persist``);
+    the cache is cleared afterwards so later tests start without it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("InMemoryTableScan" in plan) == (materialize == "persist"), plan
+    if materialize == "persist":
+        df.sparkSession.catalog.clearCache()
+
+
+@pytest.mark.parametrize("materialize", ["checkpoint", "persist"])
+def test_minhash_dedup_finds_near_dups(docs, monkeypatch, materialize):
+    monkeypatch.setenv("SPARK_GRAFT_BRANCH_MATERIALIZE", materialize)
+    out = dedup.minhash_dedup(docs, threshold=0.5, bands=16, num_perm=64)
+    pairs = out.collect()
+    _branch_input_plan_check(out, materialize)
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (0, 100) in found  # exact dup → jaccard 1.0
     assert (0, 101) in found  # near dup
@@ -162,9 +176,13 @@ def test_estimate_collect_bytes(vectors):
     assert (rows, width, est) == (41, 8, 41 * 8)
 
 
-def test_lsh_ann_recall(vectors):
+@pytest.mark.parametrize("materialize", ["checkpoint", "persist"])
+def test_lsh_ann_recall(vectors, monkeypatch, materialize):
+    monkeypatch.setenv("SPARK_GRAFT_BRANCH_MATERIALIZE", materialize)
     exact = similarity.brute_force_topk(vectors, vectors, k=1).collect()
-    approx = similarity.lsh_ann_topk(vectors, k=1, nbits=4).collect()
+    topk = similarity.lsh_ann_topk(vectors, k=1, nbits=4)
+    approx = topk.collect()
+    _branch_input_plan_check(topk, materialize)
     exact_nn = {r["vec_id"]: r["neighbor_id"] for r in exact}
     approx_nn = {r["vec_id"]: r["neighbor_id"] for r in approx}
     # near-identical pair lands in the same bucket → recalled
@@ -491,10 +509,7 @@ def test_minhash_candidates_match_bruteforce_buckets(spark, monkeypatch, materia
     cap = 5
     cand = dedup.minhash_lsh_candidates(banded, bucket_cap=cap)
     got = {(r["id_a"], r["id_b"]) for r in cand.collect()}
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert ("InMemoryTableScan" in plan) == (materialize == "persist"), plan
-    if materialize == "persist":
-        banded.sparkSession.catalog.clearCache()
+    _branch_input_plan_check(cand, materialize)
     buckets: dict = {}
     for r in banded.collect():
         buckets.setdefault((r["band"], r["band_hash"]), []).append(r["doc_id"])
