@@ -3529,18 +3529,19 @@ def _grouped_png_media(docs: DataFrame) -> DataFrame:
     so the only pairs within the hamming threshold are the constructed
     ones; closed-form group structure is what the SQL oracle replays)."""
     import numpy as np
-    import pandas as pd
 
+    from pangeo_forge_recipes_spark.parallel import arrow_batch, map_batches
     from pangeo_forge_recipes_spark.pngio import encode_png_batch
 
     W = H = 32
+    schema = "doc_id long, media binary"
 
     def build(batches):
         idx = np.arange(W * H, dtype=np.uint64)
         k1 = np.uint64(0x9E3779B97F4A7C15)
         k2 = np.uint64(0xC2B2AE3D27D4EB4F)
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy(np.int64)
+        for batch in batches:
+            ids = batch.column("doc_id").to_numpy().astype(np.int64, copy=False)
             seeds = (ids - ids % 3).astype(np.uint64)
             # whole-batch pixel synthesis + whole-batch filter
             # prediction (encode_png_batch): per image only the deflate
@@ -3550,10 +3551,9 @@ def _grouped_png_media(docs: DataFrame) -> DataFrame:
             h *= k2
             h ^= h >> np.uint64(29)
             px = (h % np.uint64(256)).astype(np.uint8).reshape(-1, H, W)
-            media = [bytearray(b) for b in encode_png_batch(px)]
-            yield pd.DataFrame({"doc_id": ids, "media": media})
+            yield arrow_batch(schema, [ids, encode_png_batch(px)])
 
-    return docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    return map_batches(docs, build, schema, ["doc_id"])
 
 
 def _grouped_wav_media(docs: DataFrame) -> DataFrame:
@@ -3566,18 +3566,19 @@ def _grouped_wav_media(docs: DataFrame) -> DataFrame:
     the constructed ones — closed-form group structure the SQL oracle
     replays. The bytes on the wire are genuine 16-bit PCM RIFF/WAVE."""
     import numpy as np
-    import pandas as pd
 
     from pangeo_forge_recipes_spark.audioio import encode_wav_batch
+    from pangeo_forge_recipes_spark.parallel import arrow_batch, map_batches
 
     N = 512
+    schema = "doc_id long, media binary"
 
     def build(batches):
         idx = np.arange(N, dtype=np.uint64)
         k1 = np.uint64(0x9E3779B97F4A7C15)
         k2 = np.uint64(0xC2B2AE3D27D4EB4F)
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy(np.int64)
+        for batch in batches:
+            ids = batch.column("doc_id").to_numpy().astype(np.int64, copy=False)
             seeds = (ids - ids % 4).astype(np.uint64)
             h = seeds[:, None] * k1 + idx[None, :] * k2
             h ^= h >> np.uint64(33)
@@ -3586,10 +3587,9 @@ def _grouped_wav_media(docs: DataFrame) -> DataFrame:
             x = (h % np.uint64(65536)).astype(np.float64) / 65536.0 - 0.5
             # one vectorized encode pass over the whole batch (r13,
             # guide §4.2) — per-row bytes identical to per-clip encode_wav
-            media = [bytearray(b) for b in encode_wav_batch(x, 8000, bits=16)]
-            yield pd.DataFrame({"doc_id": ids, "media": media})
+            yield arrow_batch(schema, [ids, encode_wav_batch(x, 8000, bits=16)])
 
-    return docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    return map_batches(docs, build, schema, ["doc_id"])
 
 
 def _audio_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:

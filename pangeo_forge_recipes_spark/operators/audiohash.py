@@ -12,9 +12,10 @@ must reorder band energies across the segment's rank median to flip a
 bit, so re-encoded/noisy copies land within a small Hamming radius
 while different material disagrees on ~a third of the 64 cells.
 
-Distributed shape: hashing is one ``mapInPandas`` over the binary
-media column through :func:`.multimodal.decode_audio` (the engine's
-own WAV codec) — O(n log n) in clip samples, no shuffle; pairs come
+Distributed shape: hashing is an Arrow batch step that
+:func:`..parallel.map_batches` fuses with :func:`.multimodal.decode_audio`
+(the engine's own WAV codec), and with any media step before it, into
+one ``mapInArrow`` — O(n log n) in clip samples, no shuffle; pairs come
 from :func:`.dedup.hamming_near_dup` (one banded exchange, window
 bucket stats, star fallback). All float64 numpy — deterministic.
 """
@@ -24,9 +25,10 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from ..parallel import arrow_batch, map_batches
 from .dedup import hamming_near_dup
 from .multimodal import decode_audio
 
@@ -148,16 +150,19 @@ def audio_fingerprint(
     """Map-side fingerprint: ``(id_col, afp long)`` — one row per clip,
     decoded through the engine's WAV codec (non-audio payloads take the
     deterministic fake path, so mixed corpora keep flowing)."""
-    decoded = decode_audio(
-        df.select(df[id_col].alias("doc_id"), df[media_col].alias("media"))
-    )
+    if (id_col, media_col) != ("doc_id", "media"):
+        df = df.select(df[id_col].alias("doc_id"), df[media_col].alias("media"))
+    decoded = decode_audio(df)
+    schema = "doc_id long, afp long"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = fingerprint_bits_batch(list(pdf["samples"]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "afp": out.view(np.int64)})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = fingerprint_bits_batch(
+                list(batch.column("samples").to_numpy(zero_copy_only=False))
+            )
+            yield arrow_batch(schema, [batch.column("doc_id"), out.view(np.int64)])
 
-    out = decoded.mapInPandas(run, "doc_id long, afp long")
+    out = map_batches(decoded, run, schema)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -11,9 +11,11 @@ radius while distinct images sit near 32.
 
 Distributed shape:
 
-* **Hash map-side** — one ``mapInPandas`` over the binary media column
-  (decoding through the engine's own PNG/JPEG/J2K codecs via
-  :func:`.multimodal.decode_image`); O(1) work per image, no shuffle.
+* **Hash map-side** — an Arrow batch step that
+  :func:`..parallel.map_batches` fuses with
+  :func:`.multimodal.decode_image` (the engine's own PNG/JPEG/J2K
+  codecs), and with any media step before it, into one ``mapInArrow``;
+  O(1) work per image, no shuffle.
 * **Near-dup via banded Hamming** — :func:`.dedup.hamming_near_dup`,
   the SAME engine the text SimHash path uses: one banded exchange,
   window-function bucket stats, per-member JVM pair expansion,
@@ -31,9 +33,10 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from ..parallel import arrow_batch, map_batches
 from .dedup import hamming_near_dup
 from .multimodal import decode_image
 
@@ -97,24 +100,26 @@ def image_phash(
     """Map-side pHash: ``(id_col, phash long)`` — one row per image.
     The 64-bit hash rides as a signed long (Spark has no unsigned);
     Hamming math downstream is bit-pattern-only so the sign is inert."""
-    decoded = decode_image(
-        df.select(df[id_col].alias("doc_id"), df[media_col].alias("media")),
-        keep_dims=True,
-    )
+    if (id_col, media_col) != ("doc_id", "media"):
+        df = df.select(df[id_col].alias("doc_id"), df[media_col].alias("media"))
+    decoded = decode_image(df, keep_dims=True)
+    schema = "doc_id long, phash long"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = np.empty(len(pdf), dtype=np.uint64)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            hashes = np.empty(batch.num_rows, dtype=np.uint64)
             for i, (px, h, w) in enumerate(
-                zip(pdf["pixels"], pdf["height"], pdf["width"])
+                zip(
+                    batch.column("pixels").to_numpy(zero_copy_only=False),
+                    batch.column("height").to_pylist(),
+                    batch.column("width").to_pylist(),
+                )
             ):
-                img = np.asarray(px, dtype=np.float64).reshape(int(h), int(w))
+                img = np.asarray(px, dtype=np.float64).reshape(h, w)
                 hashes[i] = phash_bits(img)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "phash": hashes.view(np.int64)}
-            )
+            yield arrow_batch(schema, [batch.column("doc_id"), hashes.view(np.int64)])
 
-    out = decoded.mapInPandas(run, "doc_id long, phash long")
+    out = map_batches(decoded, run, schema)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -1,6 +1,8 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
-decode / feature-extract / resize / frame-sample stages as Arrow-batched
-``mapInPandas`` transforms.
+decode / feature-extract / resize / frame-sample stages as Arrow batch
+steps on :func:`..parallel.map_batches`, so a chain of them (e.g.
+``resize_images(attach_png_media(docs))``) runs as ONE ``mapInArrow`` —
+one Python worker per task, not one per stage.
 
 PNG, JPEG and WAV payloads all decode for REAL with no external
 library: :mod:`..pngio` (zlib inflate + per-row unfilter),
@@ -23,13 +25,33 @@ import hashlib
 from typing import Iterator, Optional, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..parallel import arrow_batch, map_batches
 
 MEDIA_SCHEMA = (
     "doc_id long, media binary, format string, width int, height int, n_frames int"
 )
+
+
+def _ids(batch: pa.RecordBatch, name: str = "doc_id") -> np.ndarray:
+    """``batch``'s id column ``name`` as int64."""
+    return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def _blobs(batch: pa.RecordBatch) -> list:
+    """``batch``'s ``media`` payloads as ``bytes`` values."""
+    return batch.column("media").to_pylist()
+
+
+def _media_batch(ids, blobs, fmt: str, width, height, n_frames) -> pa.RecordBatch:
+    n = len(ids)
+    return arrow_batch(
+        MEDIA_SCHEMA,
+        [ids, blobs, [fmt] * n, [width] * n, [height] * n, [n_frames] * n],
+    )
 
 
 def attach_fake_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -61,14 +83,14 @@ def attach_png_media(
 
     n = width * height
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx = np.arange(n, dtype=np.int64)
         rows_r = np.arange(height, dtype=np.int64)
-        for pdf in batches:
+        for batch in batches:
             # whole-batch pixel + filter synthesis, whole-batch filter
             # prediction (encode_png_batch): per image only the deflate
             # + chunk assembly remain Python-side
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = _ids(batch, id_col)
             px = ((ids[:, None] * 31 + idx[None, :] * 7) % 256).astype(
                 np.uint8
             )
@@ -76,18 +98,9 @@ def attach_png_media(
             blobs = encode_png_batch(
                 px.reshape(-1, height, width), filters
             )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "media": blobs,
-                    "format": ["image/png"] * len(pdf),
-                    "width": np.full(len(pdf), width, dtype="int32"),
-                    "height": np.full(len(pdf), height, dtype="int32"),
-                    "n_frames": np.ones(len(pdf), dtype="int32"),
-                }
-            )
+            yield _media_batch(ids, blobs, "image/png", width, height, 1)
 
-    return df.select(id_col).mapInPandas(build, MEDIA_SCHEMA)
+    return map_batches(df, build, MEDIA_SCHEMA, [id_col])
 
 
 def attach_wav_media(
@@ -103,43 +116,36 @@ def attach_wav_media(
     really parse."""
     from ..audioio import encode_wav_batch
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx = np.arange(n_samples, dtype=np.int64)
-        for pdf in batches:
+        for batch in batches:
             # whole-batch synthesis + ONE vectorized encode pass (r13,
             # guide §4.2): same elementwise math per clip as the former
             # per-doc loop, so the bytes on the wire are identical
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = _ids(batch, id_col)
             periods = (8 + ids % 23)[:, None]
             tri = (
                 np.abs((idx[None, :] % periods) * 2.0 / periods - 1.0) * 2.0 - 1.0
             )
             blobs = encode_wav_batch(tri * 0.5, sample_rate, bits=16)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "media": blobs,
-                    "format": ["audio/wav"] * len(pdf),
-                    "width": np.full(len(pdf), n_samples, dtype="int32"),
-                    "height": np.ones(len(pdf), dtype="int32"),
-                    "n_frames": np.full(len(pdf), n_samples, dtype="int32"),
-                }
-            )
+            yield _media_batch(ids, blobs, "audio/wav", n_samples, 1, n_samples)
 
-    return df.select(id_col).mapInPandas(build, MEDIA_SCHEMA)
+    return map_batches(df, build, MEDIA_SCHEMA, [id_col])
 
 
 def decode_audio(df: DataFrame) -> DataFrame:
     """Decode binary → (doc_id, samples array<float>, sample_rate, channels)
-    via mapInPandas. RIFF/WAVE blobs (signature-sniffed) decode for REAL
-    through :mod:`..audioio`; other payloads take the deterministic
-    sha256 fake (keeping non-audio rows flowing through the same plan)."""
+    as one Arrow batch step. RIFF/WAVE blobs (signature-sniffed) decode
+    for REAL through :mod:`..audioio`; other payloads take the
+    deterministic sha256 fake (keeping non-audio rows flowing through the
+    same plan)."""
+    schema = "doc_id long, samples array<float>, sample_rate int, channels int"
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..audioio import decode_wav, decode_wav_batch
 
-        for pdf in batches:
-            blobs = [bytes(b) for b in pdf["media"]]
+        for batch in batches:
+            blobs = _blobs(batch)
             samples: list = [None] * len(blobs)
             rates = np.zeros(len(blobs), dtype="int32")
             chans = np.zeros(len(blobs), dtype="int32")
@@ -152,9 +158,9 @@ def decode_audio(df: DataFrame) -> DataFrame:
                 if b[:4] == b"RIFF" and b[8:12] == b"WAVE"
             ]
             if wav_idx:
-                batch = decode_wav_batch([blobs[i] for i in wav_idx])
-                if batch is not None:
-                    mono, rate, ch = batch
+                decoded = decode_wav_batch([blobs[i] for i in wav_idx])
+                if decoded is not None:
+                    mono, rate, ch = decoded
                     for j, i in enumerate(wav_idx):
                         samples[i] = mono[j]
                         rates[i] = rate
@@ -171,50 +177,36 @@ def decode_audio(df: DataFrame) -> DataFrame:
                     digest = hashlib.sha256(blob).digest()
                     fake = np.frombuffer((digest * 2)[:64], dtype=np.uint8)
                     samples[i] = fake.astype("float32") / 255.0 - 0.5
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "samples": samples,
-                    "sample_rate": rates,
-                    "channels": chans,
-                }
-            )
+            yield arrow_batch(schema, [_ids(batch), samples, rates, chans])
 
-    return df.select("doc_id", "media").mapInPandas(
-        decode, "doc_id long, samples array<float>, sample_rate int, channels int"
-    )
+    return map_batches(df, decode, schema, ["doc_id", "media"])
 
 
 def audio_features(decoded: DataFrame) -> DataFrame:
     """Per-clip features over decoded samples: duration, RMS energy,
     zero-crossing rate, peak amplitude — the audio analogue of
     :func:`extract_features`."""
+    schema = (
+        "doc_id long, duration_s double, rms double, "
+        "zero_crossing_rate double, peak double"
+    )
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def feats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             dur, rms, zcr, peak = [], [], [], []
-            for px, rate in zip(pdf["samples"], pdf["sample_rate"]):
+            for px, rate in zip(
+                batch.column("samples").to_numpy(zero_copy_only=False),
+                batch.column("sample_rate").to_numpy(zero_copy_only=False),
+            ):
                 arr = np.asarray(px, dtype="float64")
                 n = max(arr.size, 1)
                 dur.append(arr.size / rate if rate else 0.0)
                 rms.append(float(np.sqrt(np.mean(arr**2))) if arr.size else 0.0)
                 zcr.append(float(np.count_nonzero(np.diff(np.signbit(arr)))) / n)
                 peak.append(float(np.max(np.abs(arr))) if arr.size else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "duration_s": np.array(dur, dtype="float64"),
-                    "rms": np.array(rms, dtype="float64"),
-                    "zero_crossing_rate": np.array(zcr, dtype="float64"),
-                    "peak": np.array(peak, dtype="float64"),
-                }
-            )
+            yield arrow_batch(schema, [_ids(batch), dur, rms, zcr, peak])
 
-    return decoded.mapInPandas(
-        feats,
-        "doc_id long, duration_s double, rms double, "
-        "zero_crossing_rate double, peak double",
-    )
+    return map_batches(decoded, feats, schema, ["doc_id", "samples", "sample_rate"])
 
 
 def attach_jpeg_media(
@@ -229,33 +221,25 @@ def attach_jpeg_media(
     error stays within quantization bounds tests can assert."""
     from ..jpegio import encode_jpeg
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yy, xx = np.mgrid[0:height, 0:width]
-        for pdf in batches:
+        for batch in batches:
+            ids = _ids(batch, id_col)
             blobs = []
-            for d in pdf[id_col]:
+            for d in ids:
                 img = (128 + 60 * np.sin((xx + int(d)) / 5.0) * np.cos(yy / 4.0)).astype(
                     np.uint8
                 )
                 blobs.append(encode_jpeg(img, quality=95, subsample=subsample))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "media": blobs,
-                    "format": ["image/jpeg"] * len(pdf),
-                    "width": np.full(len(pdf), width, dtype="int32"),
-                    "height": np.full(len(pdf), height, dtype="int32"),
-                    "n_frames": np.ones(len(pdf), dtype="int32"),
-                }
-            )
+            yield _media_batch(ids, blobs, "image/jpeg", width, height, 1)
 
-    return df.select(id_col).mapInPandas(build, MEDIA_SCHEMA)
+    return map_batches(df, build, MEDIA_SCHEMA, [id_col])
 
 
 def decode_image(df: DataFrame, keep_dims: bool = False) -> DataFrame:
-    """Decode binary → (doc_id, pixels array<float>) via mapInPandas.
-    With ``keep_dims=True`` the grayscale (height, width) ride along as
-    int columns so shape-aware consumers (e.g. the pHash DCT in
+    """Decode binary → (doc_id, pixels array<float>) as one Arrow batch
+    step. With ``keep_dims=True`` the grayscale (height, width) ride
+    along as int columns so shape-aware consumers (e.g. the pHash DCT in
     :mod:`.imagehash`) can reshape the flat pixels.
 
     PNG blobs (signature-sniffed) decode for REAL through
@@ -271,9 +255,13 @@ def decode_image(df: DataFrame, keep_dims: bool = False) -> DataFrame:
     from ..jpegio import decode_jpeg
     from ..pngio import PNG_SIGNATURE, decode_png, decode_png_batch
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [bytes(b) for b in pdf["media"]]
+    schema = "doc_id long, pixels array<float>"
+    if keep_dims:
+        schema += ", height int, width int"
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            blobs = _blobs(batch)
             pixels: list = [None] * len(blobs)
             dims: list = [None] * len(blobs)
             # same-shape plain-8-bit PNGs (the common corpus case) decode
@@ -283,9 +271,9 @@ def decode_image(df: DataFrame, keep_dims: bool = False) -> DataFrame:
                 i for i, b in enumerate(blobs) if b[:8] == PNG_SIGNATURE
             ]
             if png_idx:
-                batch = decode_png_batch([blobs[i] for i in png_idx])
-                if batch is not None:
-                    fb = batch.astype("float32")
+                decoded = decode_png_batch([blobs[i] for i in png_idx])
+                if decoded is not None:
+                    fb = decoded.astype("float32")
                     if fb.ndim == 4:  # channel-average to grayscale
                         fb = fb.mean(axis=3)
                     flat = fb.reshape(len(png_idx), -1) / 255.0
@@ -316,16 +304,12 @@ def decode_image(df: DataFrame, keep_dims: bool = False) -> DataFrame:
                 if keep_dims:
                     dims[i] = arr.shape
                 pixels[i] = arr.ravel() / 255.0
-            cols = {"doc_id": pdf["doc_id"], "pixels": pixels}
+            cols = [_ids(batch), pixels]
             if keep_dims:
-                cols["height"] = [d[0] for d in dims]
-                cols["width"] = [d[1] for d in dims]
-            yield pd.DataFrame(cols)
+                cols += [[d[0] for d in dims], [d[1] for d in dims]]
+            yield arrow_batch(schema, cols)
 
-    schema = "doc_id long, pixels array<float>"
-    if keep_dims:
-        schema += ", height int, width int"
-    return df.select("doc_id", "media").mapInPandas(decode, schema)
+    return map_batches(df, decode, schema, ["doc_id", "media"])
 
 
 def extract_features(
@@ -336,10 +320,18 @@ def extract_features(
     ``keep_pixels=True`` passes the pixel array through so a consumer
     needing both representations gets them from ONE decode pass instead
     of two subtrees re-running the decode."""
+    schema = (
+        "doc_id long, pixels array<float>, features array<float>"
+        if keep_pixels
+        else "doc_id long, features array<float>"
+    )
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            px_list = [np.asarray(p, dtype="float32") for p in pdf["pixels"]]
+    def feats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            px_list = [
+                np.asarray(p, dtype="float32")
+                for p in batch.column("pixels").to_numpy(zero_copy_only=False)
+            ]
             lens = {p.shape[0] for p in px_list}
             if len(lens) == 1 and next(iter(lens)) % dim == 0:
                 # equal-length, evenly divisible: ONE stacked reshape-mean
@@ -355,42 +347,32 @@ def extract_features(
                     )
                     for arr in px_list
                 ]
-            cols = {"doc_id": pdf["doc_id"]}
-            if keep_pixels:
-                cols["pixels"] = pdf["pixels"]
-            cols["features"] = out
-            yield pd.DataFrame(cols)
+            cols = [_ids(batch), px_list, out] if keep_pixels else [_ids(batch), out]
+            yield arrow_batch(schema, cols)
 
-    schema = (
-        "doc_id long, pixels array<float>, features array<float>"
-        if keep_pixels
-        else "doc_id long, features array<float>"
-    )
-    return decoded.mapInPandas(feats, schema)
+    return map_batches(decoded, feats, schema, ["doc_id", "pixels"])
 
 
 def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
     """'Video' frame sampling: slice the binary payload into n_frames
     segments, keep every ``every``-th → one row per kept frame."""
+    schema = "doc_id long, frame int, frame_bytes binary"
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             ids, frame_idx, frame_bytes = [], [], []
-            for doc_id, blob, n in zip(pdf["doc_id"], pdf["media"], pdf["n_frames"]):
-                blob = bytes(blob)
+            for doc_id, blob, n in zip(
+                _ids(batch), _blobs(batch), batch.column("n_frames").to_pylist()
+            ):
                 n = max(int(n), 1)
                 size = max(len(blob) // n, 1)
                 for i in range(0, n, every):
                     ids.append(doc_id)
                     frame_idx.append(i)
                     frame_bytes.append(blob[i * size : (i + 1) * size])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame": frame_idx, "frame_bytes": frame_bytes}
-            )
+            yield arrow_batch(schema, [ids, frame_idx, frame_bytes])
 
-    return df.select("doc_id", "media", "n_frames").mapInPandas(
-        frames, "doc_id long, frame int, frame_bytes binary"
-    )
+    return map_batches(df, frames, schema, ["doc_id", "media", "n_frames"])
 
 
 def _resize_plane_batch(
@@ -459,9 +441,14 @@ def resize_images(
         if m not in ("nearest", "bilinear"):
             raise ValueError(f"resize method {m!r} (nearest | bilinear)")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [bytes(b) for b in pdf["media"]]
+    schema = "doc_id long, pixels array<float>, width int, height int"
+    if multi:
+        schema = "method string, " + schema
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids = _ids(batch)
+            blobs = _blobs(batch)
             # decode once per image into float64 grayscale planes
             grays: list = [None] * len(blobs)
             png_idx = [
@@ -469,9 +456,9 @@ def resize_images(
             ]
             png_batch = None
             if png_idx:
-                batch = decode_png_batch([blobs[i] for i in png_idx])
-                if batch is not None:
-                    png_batch = batch.astype("float64")
+                decoded = decode_png_batch([blobs[i] for i in png_idx])
+                if decoded is not None:
+                    png_batch = decoded.astype("float64")
                     if png_batch.ndim == 4:
                         png_batch = png_batch.mean(axis=3)
             if png_batch is None:
@@ -512,21 +499,12 @@ def resize_images(
                     planes[i] = (rs / 255.0).astype("float32").ravel()
                 return planes
 
+            n = len(blobs)
             for m in method_list:
-                out = {
-                    "doc_id": pdf["doc_id"],
-                    "pixels": resized_planes(m),
-                    "width": np.full(len(blobs), out_w, dtype="int32"),
-                    "height": np.full(len(blobs), out_h, dtype="int32"),
-                }
-                if multi:
-                    out = {"method": np.repeat(m, len(blobs)), **out}
-                yield pd.DataFrame(out)
+                cols = [ids, resized_planes(m), [out_w] * n, [out_h] * n]
+                yield arrow_batch(schema, [[m] * n, *cols] if multi else cols)
 
-    schema = "doc_id long, pixels array<float>, width int, height int"
-    if multi:
-        schema = "method string, " + schema
-    return df.select("doc_id", "media").mapInPandas(run, schema)
+    return map_batches(df, run, schema, ["doc_id", "media"])
 
 
 def media_stats(df: DataFrame) -> DataFrame:

@@ -7,11 +7,11 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   distributed for huge patterns (``spark.range`` + unravel);
 * every per-file step is a **batch-iterator function** over Arrow record
   batches, and consecutive steps are **fused in Python** into one
-  ``mapInArrow`` (``_map_batches``). Catalyst fuses JVM operators but
-  gives each Python node of a task its own worker process; Beam's runner
-  fuses ``ParDo`` chains. So a stage runs its Python steps — e.g.
-  unravel → prune → schema scan → partial fold, or index → open → split —
-  in one worker per task;
+  ``mapInArrow`` (``parallel.map_batches``, which the media operators
+  share). Catalyst fuses JVM operators but gives each Python node of a
+  task its own worker process; Beam's runner fuses ``ParDo`` chains. So
+  a stage runs its Python steps — e.g. unravel → prune → schema scan →
+  partial fold, or index → open → split — in one worker per task;
 * the schema reduction is a **two-pass design**: pass 1 reads *metadata
   only* (no array payloads) and reduces tiny schema rows; pass 2 streams
   data. The reference opens lazily once and trusts Beam fusion — at 100 TB
@@ -71,6 +71,7 @@ from .dsio import (
 )
 from .ndset import NDDataset
 from .openers import open_url, open_with_ndset, open_with_kerchunk, read_schema
+from .parallel import arrow_batch, map_batches
 from .patterns import FilePattern, FileType
 from .rechunking import combine_fragments, group_key_to_json, split_fragment
 from .session import local_df
@@ -92,70 +93,14 @@ _DRIVER_MANIFEST_MAX = 100_000
 # ---------------------------------------------------------------------------
 # Python steps: every per-row step below is a batch-iterator function
 # (Arrow record batches in, Arrow record batches out) run through
-# ``_map_batches``, which composes consecutive steps into one Python node
+# ``parallel.map_batches``, which composes consecutive steps into one
+# Python node
 # ---------------------------------------------------------------------------
-
-BatchFn = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
-
-_ARROW_TYPES = {
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "int": pa.int32(),
-    "bigint": pa.int64(),
-    "long": pa.int64(),
-}
-
-# the key under which ``_map_batches`` records ``(source, steps)`` in the
-# ``__dict__`` of each DataFrame it returns
-_STEPS = "_pfr_python_steps"
-
-
-def _batch(ddl: str, columns) -> pa.RecordBatch:
-    """One record batch of ``ddl`` (a flat DDL string over the types in
-    :data:`_ARROW_TYPES`) from its ``columns``, given in ``ddl`` order;
-    an empty ``columns`` gives an empty batch."""
-    fields = [f.split() for f in ddl.split(",")]
-    columns = list(columns) or [[] for _ in fields]
-    return pa.RecordBatch.from_arrays(
-        [pa.array(col, _ARROW_TYPES[t]) for col, (_, t) in zip(columns, fields, strict=True)],
-        names=[name for name, _ in fields],
-    )
 
 
 def _rows(batch: pa.RecordBatch, *names: str) -> Iterator[tuple]:
     """The values of ``batch``'s ``names`` columns, row by row."""
     return zip(*(batch.column(name).to_pylist() for name in names))
-
-
-def _compose(fns: Tuple[BatchFn, ...]) -> BatchFn:
-    def steps(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for fn in fns:
-            batches = fn(batches)
-        return batches
-
-    steps.__name__ = "+".join(fn.__name__ for fn in fns)
-    return steps
-
-
-def _map_batches(df: DataFrame, fn: BatchFn, schema: str) -> DataFrame:
-    """Run the Python step ``fn`` over ``df``, emitting rows of ``schema``.
-
-    Spark gives every Python node of a task its own Python worker
-    process, and it does not fuse adjacent ones: two steps in a row would
-    hold two ~140 MB workers per task. So when ``df`` is itself a
-    DataFrame this function returned (not one derived from it, and not
-    persisted), ``fn`` joins that DataFrame's steps in ONE ``mapInArrow``
-    over their common source — Beam's fusion of ``ParDo`` chains, done in
-    Python. The chain is recorded in the returned DataFrame's
-    ``__dict__``; it is read there because ``DataFrame.__getattr__``
-    looks unknown names up as columns through the JVM."""
-    source, fns = df.__dict__.get(_STEPS, (df, ()))
-    if df.is_cached:
-        source, fns = df, ()
-    fns = (*fns, fn)
-    out = source.mapInArrow(_compose(fns), schema)
-    out.__dict__[_STEPS] = (source, fns)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -183,9 +128,9 @@ def manifest_df(spark: SparkSession, pattern: FilePattern) -> DataFrame:
         pat: FilePattern = cloudpickle.loads(bc.value)
         for batch in batches:
             idxs = [pat.index_for_flat_position(i) for i in batch.column("id").to_pylist()]
-            yield _batch(MANIFEST_SCHEMA, [[i.to_json() for i in idxs], [pat[i] for i in idxs]])
+            yield arrow_batch(MANIFEST_SCHEMA, [[i.to_json() for i in idxs], [pat[i] for i in idxs]])
 
-    return _map_batches(spark.range(n), unravel, MANIFEST_SCHEMA)
+    return map_batches(spark.range(n), unravel, MANIFEST_SCHEMA)
 
 
 def prune_manifest(df: DataFrame, pattern: FilePattern, nkeep: int = 2) -> DataFrame:
@@ -205,9 +150,9 @@ def prune_manifest(df: DataFrame, pattern: FilePattern, nkeep: int = 2) -> DataF
     def prune(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             kept = [row for row in _rows(batch, "index", "url") if keep(row[0])]
-            yield _batch(MANIFEST_SCHEMA, zip(*kept))
+            yield arrow_batch(MANIFEST_SCHEMA, zip(*kept))
 
-    return _map_batches(df, prune, MANIFEST_SCHEMA)
+    return map_batches(df, prune, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -239,9 +184,9 @@ def open_urls_with_fsspec(
                 open_url(u, cache=cache, secrets=secrets, open_kwargs=open_kwargs)
                 for u in batch.column("url").to_pylist()
             ]
-            yield _batch(MANIFEST_SCHEMA, [batch.column("index").to_pylist(), urls])
+            yield arrow_batch(MANIFEST_SCHEMA, [batch.column("index").to_pylist(), urls])
 
-    return _map_batches(df, resolve, MANIFEST_SCHEMA)
+    return map_batches(df, resolve, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -277,9 +222,9 @@ def read_schemas_df(
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             rows = [schema_row(i, u) for i, u in _rows(batch, "index", "url")]
-            yield _batch(SCHEMAS_SCHEMA, zip(*rows))
+            yield arrow_batch(SCHEMAS_SCHEMA, zip(*rows))
 
-    return _map_batches(df, scan, SCHEMAS_SCHEMA)
+    return map_batches(df, scan, SCHEMAS_SCHEMA)
 
 
 def _combine_level_fn(dim: Dimension) -> Callable[[pd.DataFrame], pd.DataFrame]:
@@ -345,9 +290,9 @@ def determine_schema(
                 col += batch.column(c).to_pylist()
         if rows["index"]:
             pdf = _fold_level(pd.DataFrame(rows), inner)
-            yield _batch(SCHEMAS_SCHEMA, [pdf["index"].tolist(), pdf["schema"].tolist()])
+            yield arrow_batch(SCHEMAS_SCHEMA, [pdf["index"].tolist(), pdf["schema"].tolist()])
 
-    partials = _map_batches(schemas_df, partial_fold, SCHEMAS_SCHEMA).collect()
+    partials = map_batches(schemas_df, partial_fold, SCHEMAS_SCHEMA).collect()
     if not partials:
         raise ValueError("schema reduction produced 0 rows, expected 1")
     merged: Dict[str, XarraySchema] = {}
@@ -397,9 +342,9 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
     def index(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             idxs = [augment(j) for j in batch.column("index").to_pylist()]
-            yield _batch(MANIFEST_SCHEMA, [idxs, batch.column("url").to_pylist()])
+            yield arrow_batch(MANIFEST_SCHEMA, [idxs, batch.column("url").to_pylist()])
 
-    return _map_batches(df, index, MANIFEST_SCHEMA)
+    return map_batches(df, index, MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -563,7 +508,7 @@ def open_split_fragments_df(
                             xarray_open_kwargs, preprocess)
                 )
 
-    return _map_batches(df, open_split, SPLIT_SCHEMA)
+    return map_batches(df, open_split, SPLIT_SCHEMA)
 
 
 def rechunk_and_store(
@@ -636,9 +581,9 @@ def open_split_refs_df(
                     xarray_open_kwargs, preprocess, load=preprocess is not None,
                 )
             ]
-            yield _batch(REFS_SCHEMA, zip(*rows))
+            yield arrow_batch(REFS_SCHEMA, zip(*rows))
 
-    return _map_batches(df, split_keys, REFS_SCHEMA)
+    return map_batches(df, split_keys, REFS_SCHEMA)
 
 
 # per-worker-process LRU of opened+preprocessed sources for the reference
@@ -729,7 +674,7 @@ def rechunk_refs_and_store(
         if cur_key is not None:
             done.append(combine_write(cur_key, cur_rows))
         if done:
-            yield _batch(STATUS_SCHEMA, zip(*(row.values() for row in done)))
+            yield arrow_batch(STATUS_SCHEMA, zip(*(row.values() for row in done)))
 
     nparts = int(
         df_refs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -806,9 +751,9 @@ def open_split_spill_df(
                         for parts in spilled:
                             for part in parts:
                                 f.write(part)
-                yield _batch(SPILL_SCHEMA, zip(*rows))
+                yield arrow_batch(SPILL_SCHEMA, zip(*rows))
 
-    return _map_batches(df, split_spill, SPILL_SCHEMA)
+    return map_batches(df, split_spill, SPILL_SCHEMA)
 
 
 def open_split_store_df(
@@ -837,9 +782,9 @@ def open_split_store_df(
                         xarray_open_kwargs, preprocess,
                     )
                 ]
-                yield _batch(STATUS_SCHEMA, zip(*rows))
+                yield arrow_batch(STATUS_SCHEMA, zip(*rows))
 
-    return _map_batches(df, split_write, STATUS_SCHEMA)
+    return map_batches(df, split_write, STATUS_SCHEMA)
 
 
 def _cleanup_scratch(scratch_root: str) -> None:
@@ -1201,10 +1146,10 @@ def open_with_kerchunk_df(
                     for c, p in zip(pos_cols, poss):
                         out[c].append(p)
                     out["refs"].append(_json.dumps(ref))
-            yield _batch(schema, out.values())
+            yield arrow_batch(schema, out.values())
 
     schema = "index string, " + ", ".join(f"{c} long" for c in pos_cols) + ", refs string"
-    return _map_batches(df, scan, schema)
+    return map_batches(df, scan, schema)
 
 
 def combine_references_df(
@@ -1265,10 +1210,10 @@ def combine_references_df(
             for start, leaves in runs(batches)
         ]
         if rows:
-            yield _batch(out_schema, zip(*rows))
+            yield arrow_batch(out_schema, zip(*rows))
 
     out_schema = "".join(f"{c} long, " for c in pos_cols) + "refs string"
-    partials = _map_batches(refs_df, partial_merge, out_schema).collect()
+    partials = map_batches(refs_df, partial_merge, out_schema).collect()
     if not partials:
         raise ValueError("no references to combine")
     level = sorted(

@@ -1,10 +1,11 @@
 """One Python worker per task: Spark gives every Python node of a task its
-own worker process and never fuses adjacent ones, so the pipeline composes
-its Python steps itself (``transforms._map_batches``). These tests walk the
-physical plans a run executes and assert that no Python node feeds another
-without an ``Exchange`` between them; they also inject one task failure
-into the fused stages and check that the retried run writes the same
-bytes as a clean one."""
+own worker process and never fuses adjacent ones, so the pipeline and the
+media operators compose their Python steps themselves
+(``parallel.map_batches``). These tests walk the physical plans a run
+executes and assert that no Python node feeds another without an
+``Exchange`` between them; they also inject one task failure into the
+fused stages and check that the retried run writes the same bytes, or
+returns the same rows, as a clean one."""
 
 from __future__ import annotations
 
@@ -24,10 +25,15 @@ from pangeo_forge_recipes_spark import (
     write_combined_reference,
 )
 from pangeo_forge_recipes_spark import transforms as T
+from pangeo_forge_recipes_spark.operators import multimodal
 
 from .data_generation import make_ds, split_ds_into_files
+from .test_plans import SF_DIR
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry  # noqa: E402
 
 # node names of Spark's Python execs: MapInArrow, MapInPandas,
 # BatchEvalPython, ArrowEvalPython, FlatMapGroupsInArrow, ...
@@ -83,21 +89,45 @@ def stacked_python_nodes(plan: str):
     return sorted(pairs)
 
 
+def python_nodes(plan: str):
+    """Names of the Python nodes in ``plan``, e.g. ``MapInArrow build+run``."""
+    names = []
+
+    def walk(node):
+        if PYTHON_NODE.search(node[0]):
+            names.append(node[0])
+        for child in node[1]:
+            walk(child)
+
+    walk(_plan_tree(plan))
+    return names
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture
 def executed_plans(spark, monkeypatch):
-    """Physical plans of every ``collect`` made from here on: the
-    pipeline's actions (the schema and reference partials, the write
-    statuses) all go through it."""
+    """Physical plans of every ``collect``, ``localCheckpoint`` and
+    ``checkpoint`` made from here on: the pipeline's actions (the schema
+    and reference partials, the write statuses) and the operators'
+    branch materializations all go through them."""
     plans = []
     cls = type(spark.range(1))
-    real = cls.collect
 
-    def collect(df):
-        rows = real(df)
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return rows
+    def record(name):
+        real = getattr(cls, name)
 
-    monkeypatch.setattr(cls, "collect", collect)
+        def action(df, *args, **kwargs):
+            out = real(df, *args, **kwargs)
+            plans.append(_plan(df))
+            return out
+
+        monkeypatch.setattr(cls, name, action)
+
+    for name in ("collect", "localCheckpoint", "checkpoint"):
+        record(name)
     return plans
 
 
@@ -164,23 +194,75 @@ def test_steps_compose_only_along_an_unmodified_chain(spark, tmp_path):
     split = T.open_split_refs_df(T.index_items(manifest, schema), "npz",
                                  target_chunks={"time": 3}, schema=schema)
 
-    def python_nodes(df):
-        return PYTHON_NODE.findall(df._jdf.queryExecution().executedPlan().toString())
-
-    assert len(python_nodes(split)) == 1
+    assert len(python_nodes(_plan(split))) == 1
     want = sorted(split.collect())
     derived = T.open_split_refs_df(
         T.index_items(manifest, schema).filter("url IS NOT NULL"), "npz",
         target_chunks={"time": 3}, schema=schema,
     )
-    assert len(python_nodes(derived)) == 2
+    assert len(python_nodes(_plan(derived))) == 2
     indexed = T.index_items(manifest, schema).persist()
     try:
         cached = T.open_split_refs_df(indexed, "npz", target_chunks={"time": 3}, schema=schema)
-        assert "InMemoryTableScan" in cached._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in _plan(cached)
         assert sorted(derived.collect()) == sorted(cached.collect()) == want
     finally:
         indexed.unpersist()
+
+
+# the media queries whose operator chains stacked Python nodes before the
+# operators moved onto ``map_batches``, with the one fused node each runs
+MEDIA_QUERIES = {
+    "resize_images": "MapInArrow build+run",
+    "multimodal_audio": "MapInArrow build+decode",
+    "multimodal_features": "MapInArrow build+decode+feats",
+    "phash_near_dup": "MapInArrow build+decode+run",
+    "audio_near_dup": "MapInArrow build+decode+run",
+}
+
+
+@pytest.mark.parametrize("name", list(MEDIA_QUERIES))
+def test_media_queries_run_one_python_node_per_stage(spark, executed_plans, name):
+    """Each media query's operator chain runs as ONE Python node: the
+    near-dup chains in their signature table's ``localCheckpoint``, the
+    others in the final ``collect``."""
+    assert entry.queries()[name](spark, SF_DIR).collect()
+    nodes = {node for plan in executed_plans for node in python_nodes(plan)}
+    assert nodes == {MEDIA_QUERIES[name]}, nodes
+    pairs = [pair for plan in executed_plans for pair in stacked_python_nodes(plan)]
+    assert not pairs, pairs
+
+
+def test_media_steps_compose_only_along_an_unmodified_chain(spark):
+    """The operators' chain rule: ``resize_images(attach_png_media(docs))``
+    plans one Python node; a ``.filter``-derived or a persisted media
+    frame starts a new chain, so it plans two; all three give the same
+    rows. The chain's first step still sees only the columns it reads:
+    ``text`` is projected away in the JVM, under the ``MapInArrow``."""
+    docs = spark.range(0, 40, numPartitions=2).selectExpr(
+        "id AS doc_id", "repeat('x', CAST(id AS INT)) AS text"
+    )
+    fused = multimodal.resize_images(multimodal.attach_png_media(docs))
+    plan = _plan(fused)
+    assert python_nodes(plan) == ["MapInArrow build+run"]
+    (arrow_line,) = [line for line in plan.splitlines() if "MapInArrow" in line]
+    assert "text" not in arrow_line
+    (top,) = _plan_tree(plan)[1]
+    assert [child[0] for child in top[1]] == ["Project"]
+    want = sorted(fused.collect())
+
+    derived = multimodal.resize_images(
+        multimodal.attach_png_media(docs).filter("doc_id >= 0")
+    )
+    assert len(python_nodes(_plan(derived))) == 2
+    media = multimodal.attach_png_media(docs).persist()
+    try:
+        cached = multimodal.resize_images(media)
+        assert "InMemoryTableScan" in _plan(cached)
+        assert len(python_nodes(_plan(cached))) == 2
+        assert sorted(derived.collect()) == sorted(cached.collect()) == want
+    finally:
+        media.unpersist()
 
 
 def test_plan_guard_flags_stacked_python_nodes():
@@ -291,3 +373,67 @@ def test_fused_stage_task_retry_writes_identical_bytes(tmp_path):
     assert failures == ["refs", "store", "store"], failures
     assert got["True"] == got["False"]
     assert len(got["True"]["store"]) > 5 and got["True"]["reference"]
+
+
+OPERATOR_RETRY_SCRIPT = """
+import json, os, sys
+from pyspark import TaskContext
+from pangeo_forge_recipes_spark.operators.imagehash import image_phash
+from pangeo_forge_recipes_spark.operators.multimodal import attach_png_media, resize_images
+from pangeo_forge_recipes_spark.parallel import map_batches
+from pangeo_forge_recipes_spark.session import get_spark
+
+marker = sys.argv[1]
+
+
+def checked(flaky):
+    def check(batches):
+        ctx = TaskContext.get()
+        for batch in batches:
+            if flaky and ctx.partitionId() == 1 and ctx.attemptNumber() == 0:
+                with open(os.path.join(marker, f"{ctx.stageId()}-{os.getpid()}"), "w"):
+                    pass
+                raise RuntimeError("injected check failure")
+            yield batch
+    return check
+
+
+def rows(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("MapInArrow"), sorted(json.dumps(list(r)) for r in df.collect())
+
+
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+docs = spark.range(0, 48, numPartitions=4).withColumnRenamed("id", "doc_id")
+got = {}
+for flaky in (False, True):
+    media = attach_png_media(map_batches(docs, checked(flaky), "doc_id long", ["doc_id"]))
+    got[str(flaky)] = {
+        "resize": rows(resize_images(media, methods=("bilinear", "nearest"))),
+        "phash": rows(image_phash(media)),
+    }
+spark.stop()
+print(json.dumps(got))
+"""
+
+
+def test_fused_operator_chain_task_retry_returns_identical_rows(tmp_path):
+    """On ``local[2,2]`` (one retry per task) a user step on
+    ``map_batches`` raises on the first attempt of one partition. It
+    fuses with ``attach_png_media`` and then with ``resize_images`` or
+    ``image_phash`` into one Python node, so each action fails one fused
+    task once; the retried runs return the same rows as a clean one."""
+    marker = tmp_path / "failures"
+    marker.mkdir()
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", OPERATOR_RETRY_SCRIPT, str(marker)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    # one failed task in each of the two actions' stages
+    assert len({name.split("-")[0] for name in os.listdir(marker)}) == 2, os.listdir(marker)
+    assert got["True"] == got["False"]
+    for nodes, rows in got["True"].values():
+        assert nodes == 1 and len(rows) >= 48
