@@ -1,5 +1,6 @@
 """Instrumented replica of bench.py's concurrent suite: per-query
-start/end offsets under 16-thread FAIR submission, sorted by finish.
+start/end offsets under one-thread-per-core FAIR submission, sorted by
+finish. Session shape and warm-up are bench.py's.
 
 Usage: python tools/time_concurrent.py <sf_dir>
 Env: TC_ROUNDS (default 2) — suite repetitions (round 0 warms).
@@ -16,25 +17,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 import bench
-from pangeo_forge_recipes_spark.session import get_spark
+from bench import _materialize, bench_session, warm_session
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(
-        app_name="pfrs-timeconcurrent", master="local[32]",
-        shuffle_partitions=8,
-    )
+    spark, cpus = bench_session("pfrs-timeconcurrent")
     qs = entrymod.queries()
-    entrymod._register(spark, sf_dir)
-    for t in entrymod.TABLES:
-        try:
-            spark.table(t).count()
-        except Exception:
-            pass
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_session(spark, sf_dir)
 
     def min_job_ms() -> float:
         walls = []
@@ -75,9 +65,7 @@ def main() -> None:
         t0 = time.perf_counter()
         for name in batt:
             for _ in range(2):
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                _materialize(qs[name](spark, sf_dir))
         print(
             f"BATTERY done in {time.perf_counter() - t0:.1f}s", flush=True
         )
@@ -96,13 +84,11 @@ def main() -> None:
 
         def run(name: str) -> None:
             s = time.perf_counter() - t0
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            _materialize(qs[name](spark, sf_dir))
             e = time.perf_counter() - t0
             spans[name] = (s, e)
 
-        with ThreadPoolExecutor(max_workers=16) as pool:
+        with ThreadPoolExecutor(max_workers=cpus) as pool:
             list(pool.map(run, headline))
         wall = time.perf_counter() - t0
         print(f"ROUND {r} wall={wall:.2f}s", flush=True)
@@ -154,7 +140,7 @@ def main() -> None:
                 f"run={run_ms / 1000:.1f}s cpu={cpu_ms / 1000:.1f}s "
                 f"deser={deser_ms / 1000:.1f}s gc={gc_ms / 1000:.1f}s "
                 f"ser={ser_ms / 1000:.1f}s fetch={fetch_ms / 1000:.1f}s "
-                f"wall*32={wall * 32:.0f}s",
+                f"wall*cpus={wall * cpus:.0f}s",
                 flush=True,
             )
           except Exception as exc:  # noqa: BLE001 — diagnostic only
