@@ -18,16 +18,19 @@ Design for correctness parity:
   by PURE NUMPY from the same generator — an independent single-node
   check of the distributed pipeline output.
 
-The driver grades at most 50 queries, so ``queries()`` registers exactly
-50, highest-priority (reference-parity pipelines) first. Every query name
-maps to a SURVEY.md §2 operator or a charter extension operator; see the
-comment on each entry.
+``_catalog()`` is the one table of matched pairs, name -> (Spark query,
+DuckDB oracle SQL). ``queries()`` and ``oracle_sql()`` are its two
+projections over ``GRADED``, the 50 names the driver grades (its cap),
+reference-parity pipelines first. Every name maps to a SURVEY.md §2
+operator or a charter extension operator.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import tempfile
 import threading
 from collections.abc import Callable
@@ -100,11 +103,29 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
     _REGISTERED[id(spark)] = os.path.abspath(sf_dir)
 
 
+def _scratch(prefix: str) -> str:
+    """A new temp directory, removed when the process exits: the returned
+    DataFrames may read their fixture files lazily, after the call."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def _npz_files(tmp: str, ds, per: int) -> list[str]:
+    """Write ``ds`` to ``tmp`` as npz files f0, f1, ... of ``per`` time
+    steps each; return their paths."""
+    from pangeo_forge_recipes_spark.dsio import write_npz
+
+    paths = []
+    for i in range(0, ds.sizes["time"], per):
+        paths.append(os.path.join(tmp, f"f{i // per}.npz"))
+        write_npz(paths[-1], ds.isel(time=slice(i, i + per)))
+    return paths
+
+
 # ---------------------------------------------------------------------------
 # shared ANSI SQL (identical text for Spark and DuckDB)
 # ---------------------------------------------------------------------------
-
-_D2 = "CAST({x} AS DECIMAL(18,2))"
 
 
 def _shared_sql() -> dict[str, str]:
@@ -593,28 +614,9 @@ ORDER BY time_pos, variable
 
 # operators.dedup.minhash_dedup: LSH recall on this corpus is exactly 1
 # (every true pair has jaccard >= 0.92; miss probability (1-0.92^4)^16 ~ 2e-9),
-# so the ground-truth all-pairs exact char-5-gram Jaccard at the same 0.5
-# threshold IS the expected output. Hashed grams + a 2x-size prefilter keep
-# the oracle O(pairs) with cheap integer intersects.
+# so dedup_clusters' oracle builds its edges from the ground-truth all-pairs
+# exact char-5-gram Jaccard at the same 0.5 threshold.
 _MINHASH_THRESHOLD = 0.5
-_MINHASH_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(length(lower(text))-3, 2)),
-                                      i -> hash(substring(lower(text), i, 5)))) AS grams,
-         len(list_distinct(list_transform(range(1, greatest(length(lower(text))-3, 2)),
-                                      i -> hash(substring(lower(text), i, 5))))) AS ng
-  FROM documents
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         len(list_intersect(a.grams, b.grams)) AS i, a.ng AS na, b.ng AS nb
-  FROM sh a JOIN sh b
-    ON a.doc_id < b.doc_id AND a.ng * 2 >= b.ng AND b.ng * 2 >= a.ng
-)
-SELECT id_a, id_b, CAST(i AS DOUBLE)/(na+nb-i) AS jaccard
-FROM pairs WHERE i * 2 >= (na + nb - i)
-ORDER BY id_a, id_b
-""".strip()
 
 # operators.dedup.simhash_dedup: the 4x16-bit band pigeonhole is exact for
 # hamming <= 3, so all-pairs over independently recomputed signatures
@@ -862,11 +864,7 @@ def _pipeline_oracle_sql() -> dict[str, str]:
     def rows_sql(rows: list[tuple], cols: list[tuple[str, str]]) -> str:
         sel = []
         for r in rows:
-            parts = [
-                f"CAST({v!r} AS {t}) AS {name}" if t == "VARCHAR"
-                else f"CAST({v!r} AS {t}) AS {name}"
-                for v, (name, t) in zip(r, cols)
-            ]
+            parts = [f"CAST({v!r} AS {t}) AS {name}" for v, (name, t) in zip(r, cols)]
             sel.append("SELECT " + ", ".join(parts))
         return "\nUNION ALL\n".join(sel)
 
@@ -1053,34 +1051,6 @@ def _events_stream_source(spark: SparkSession, sf_dir: str, query_name: str) -> 
     return raw
 
 
-def _events_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.8 Structured Streaming: the hourly rollup computed by an
-    event-time windowed STREAMING aggregation (availableNow micro-batches
-    over the events parquet, watermarked), checked against the same DuckDB
-    oracle as the batch rollup — streaming and batch must agree exactly."""
-    from pangeo_forge_recipes_spark.streaming.append import watermarked_event_rollup
-
-    raw = _events_stream_source(spark, sf_dir, "_events_rollup_stream")
-    rolled = watermarked_event_rollup(raw)
-    query = (
-        rolled.writeStream.format("memory")
-        .queryName("_events_rollup_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return (
-        spark.table("_events_rollup_stream")
-        .select(
-            F.col("window_start").alias("hour"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
 def _events_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.8 / charter: custom stateful streaming operator
     (applyInPandasWithState day-gap sessionization) — must hash-match the
@@ -1104,38 +1074,6 @@ def _events_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_sessions").alias("n_sessions"),
             F.max("n_events").alias("n_events"),
         )
-    )
-
-
-_DEDUP_STREAM_ORACLE = """
-SELECT event_type, COUNT(*) AS n_unique
-FROM (SELECT DISTINCT user_id, event_type, ts FROM events) t
-GROUP BY event_type
-ORDER BY event_type
-""".strip()
-
-
-def _events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.8: streaming exact dedup (watermark-bounded dropDuplicates
-    state) — first-arrival rows stream into the sink, then a batch count
-    per type must equal the batch DISTINCT oracle."""
-    from pangeo_forge_recipes_spark.streaming.append import streaming_dedup
-
-    raw = _events_stream_source(spark, sf_dir, "_events_dedup_stream")
-    query = (
-        streaming_dedup(raw, keys=["user_id", "event_type", "ts"])
-        .select("user_id", "event_type", "ts")
-        .writeStream.format("memory")
-        .queryName("_events_dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return (
-        spark.table("_events_dedup_stream")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_unique"))
     )
 
 
@@ -1299,10 +1237,9 @@ def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the verified MinHash pair set feeds two graded queries (pairs + cluster
-# resolution); memoize the persisted DataFrame per (session, sf_dir) so a
-# concurrent bench/driver run computes the CPU-bound signature pipeline
-# once, exactly like a shared materialized CTE
+# the verified MinHash pair set feeds dedup_clusters; memoize the persisted
+# DataFrame per (session, sf_dir) so repeated and concurrent runs compute
+# the CPU-bound signature pipeline once, like a shared materialized CTE
 _MINHASH_PAIRS: dict[tuple[int, str], DataFrame] = {}
 _MINHASH_PAIRS_LOCK = threading.Lock()
 
@@ -1311,7 +1248,7 @@ def _minhash_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pangeo_forge_recipes_spark.operators.dedup import minhash_dedup
 
     key = (id(spark), os.path.abspath(sf_dir))
-    # lock so concurrent bench threads (pairs + clusters) build it once
+    # lock so concurrent bench threads build it once
     with _MINHASH_PAIRS_LOCK:
         cached = _MINHASH_PAIRS.get(key)
         if cached is not None and _REGISTERED.get(id(spark)) == key[1]:
@@ -1320,16 +1257,9 @@ def _minhash_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = minhash_dedup(
             spark.table("documents"), threshold=_MINHASH_THRESHOLD
         ).persist()
-        pairs.count()  # materialize under the lock: both callers reuse it
+        pairs.count()  # materialize under the lock: every caller reuses it
         _MINHASH_PAIRS[key] = pairs
     return pairs
-
-
-def _minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full MinHash-LSH pipeline (signatures → bands → candidates → exact
-    verify) — oracle is ground-truth all-pairs Jaccard, so this row also
-    proves LSH recall 1.0 on the graded corpus."""
-    return _minhash_pairs_for(spark, sf_dir)
 
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2023,7 +1953,7 @@ def _webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="pfrs_wds_")
+    tmp = _scratch("pfrs_wds_")
     docs = spark.table("documents")
     write_webdataset_shards(
         docs, tmp, n_shards=_WDS_SHARDS, meta_cols=["lang", "source"]
@@ -2055,7 +1985,7 @@ def _tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="pfrs_tfr_")
+    tmp = _scratch("pfrs_tfr_")
     docs = spark.table("documents")
     plain = os.path.join(tmp, "plain")
     gz = os.path.join(tmp, "gz")
@@ -2109,7 +2039,7 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register(spark, sf_dir)
     rows = spark.table("documents").select("doc_id", "text").collect()
-    tmp = tempfile.mkdtemp(prefix="pfrs_warc_")
+    tmp = _scratch("pfrs_warc_")
     per = (len(rows) + _WARC_FILES - 1) // _WARC_FILES
     for i in range(_WARC_FILES):
         chunk = rows[i * per : (i + 1) * per]
@@ -2714,7 +2644,7 @@ def _zarr_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pangeo_forge_recipes_spark.sources import register_zarr_source
     from pangeo_forge_recipes_spark.zarrio import open_group
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_zsrc_")
+    tmp = _scratch("pfrs_entry_zsrc_")
     nt, nx = 16, 12
     t = np.arange(nt)
     x = np.arange(nx)
@@ -2791,7 +2721,7 @@ def _zarr_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_zw_")
+    tmp = _scratch("pfrs_entry_zw_")
     agg_sql = f"""
         SELECT CAST(datediff(CAST(ts AS DATE), DATE'2024-01-01') AS BIGINT) AS day,
                CAST({_ETYPE_CASE} AS BIGINT) AS etype,
@@ -2885,47 +2815,6 @@ def _ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings")
     books = np.array(_PQ_CODEBOOKS, dtype=np.float64)
     return pq_topk(emb, k=_PQ_K, codebooks=books)
-
-
-def _pq_oracle_sql() -> str:
-    rows = ",\n    ".join(
-        f"({j}, {c}, {list(cent)})"
-        for j, book in enumerate(_PQ_CODEBOOKS)
-        for c, cent in enumerate(book)
-    )
-    return f"""
-WITH ve AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-vecs AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / greatest(sqrt(list_dot_product(e, e)), 1e-12)) AS vn
-  FROM ve),
-books(j, c, cent) AS (VALUES
-    {rows}),
-dists AS (
-  SELECT v.vec_id, b.j, b.c,
-         list_sum(list_transform(range(1, 9),
-             i -> (vn[b.j*8 + i] - b.cent[i]) * (vn[b.j*8 + i] - b.cent[i]))) AS d2
-  FROM vecs v CROSS JOIN books b),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT vec_id, j, c,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d2, c) AS rn
-    FROM dists) WHERE rn = 1),
-luts AS (
-  SELECT v.vec_id AS qid, b.j, b.c,
-         list_sum(list_transform(range(1, 9), i -> vn[b.j*8 + i] * b.cent[i])) AS lv
-  FROM vecs v CROSS JOIN books b),
-scores AS (
-  SELECT l.qid AS vec_id, x.vec_id AS neighbor_id, SUM(l.lv) AS score
-  FROM codes x JOIN luts l ON l.j = x.j AND l.c = x.c AND l.qid <> x.vec_id
-  GROUP BY 1, 2),
-ranked AS (
-  SELECT vec_id, neighbor_id, score,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, neighbor_id) AS rank
-  FROM scores)
-SELECT vec_id, neighbor_id, CAST(rank AS INT) AS rank, ROUND(score, 4) AS score
-FROM ranked WHERE rank <= {_PQ_K}
-""".strip()
 
 
 def _ivf_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3171,17 +3060,12 @@ def _zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy oracle recomputes independently — a permuting/zeroing combine
     cannot pass."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_")
+    tmp = _scratch("pfrs_entry_")
     ds = make_ds(nt=6)
-    paths = []
-    for i in range(3):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
     result = store_to_zarr(spark, pattern, tmp, "out.zarr", target_chunks={"time": 3})
     rt = result.open()
@@ -3215,17 +3099,12 @@ def _spill_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix was removed; the oracle recomputes the position-weighted
     checksums by pure numpy."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_spill_")
+    tmp = _scratch("pfrs_entry_spill_")
     ds = make_ds(nt=8)
-    paths = []
-    for i in range(4):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
@@ -3264,18 +3143,13 @@ def _kerchunk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the numpy oracle (round-2 ask: the count-only summary could not
     catch a scrambling combine)."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence, write_combined_reference
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.kerchunkio import open_reference_dataset
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_k_")
+    tmp = _scratch("pfrs_entry_k_")
     ds = make_ds(nt=6)
-    paths = []
-    for i in range(3):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
     ref = write_combined_reference(spark, pattern, tmp, "ref", max_refs_per_merge=2)
     rt = open_reference_dataset(ref)
@@ -3304,12 +3178,11 @@ def _pyramid_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight from range() cross joins (independent work, same closed
     form). Multiscales root metadata is asserted in-query."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.ndset import NDDataset, Variable
     from pangeo_forge_recipes_spark.pyramid import store_to_pyramid
     from pangeo_forge_recipes_spark.zarrio import ZARR_JSON, _store_for
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_pyr_")
+    tmp = _scratch("pfrs_entry_pyr_")
     nt, nlat, nlon = _PYR_NT, _PYR_NLAT, _PYR_NLON
     t = np.arange(nt, dtype="int64")
     foo = (
@@ -3325,11 +3198,7 @@ def _pyramid_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lon": Variable(("lon",), np.arange(nlon, dtype="float64")),
         },
     )
-    paths = []
-    for i in range(2):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
@@ -3397,19 +3266,14 @@ def _pyramid_oracle_sql() -> str:
 def _append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.8 incremental append: build from half the files, append
     the rest with append_dim offsets, verify against the full dataset
-    (rows-only check; reference transforms.py:673-693)."""
+    (reference transforms.py:673-693)."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_a_")
+    tmp = _scratch("pfrs_entry_a_")
     ds = make_ds(nt=8)
-    paths = []
-    for i in range(4):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     first = pattern_from_file_sequence(paths[:2], "time", nitems_per_file=2, file_type="npz")
     store_to_zarr(spark, first, tmp, "a.zarr", target_chunks={"time": 2},
                   consolidate_coords=False)
@@ -3424,20 +3288,15 @@ def _append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rechunk_existing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §3.3 entry point C: re-store an existing Zarr store with new
-    target chunks via a 1-element zarr pattern (rows-only check)."""
+    target chunks via a 1-element zarr pattern."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from pangeo_forge_recipes_spark.zarrio import open_group
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_r_")
+    tmp = _scratch("pfrs_entry_r_")
     ds = make_ds(nt=6)
-    paths = []
-    for i in range(6):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(i, i + 1)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 1)
     fine = store_to_zarr(
         spark,
         pattern_from_file_sequence(paths, "time", nitems_per_file=1, file_type="npz"),
@@ -3456,9 +3315,8 @@ def _rechunk_existing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.4 DetermineSchema: distributed multi-dim schema reduction,
-    summarized as (dim, size) rows (rows-only check)."""
+    summarized as (dim, size) rows."""
     from pangeo_forge_recipes_spark import pattern_from_file_sequence
-    from pangeo_forge_recipes_spark.dsio import write_npz
     from pangeo_forge_recipes_spark.transforms import (
         determine_schema,
         manifest_df,
@@ -3466,13 +3324,9 @@ def _schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_s_")
+    tmp = _scratch("pfrs_entry_s_")
     ds = make_ds(nt=8)
-    paths = []
-    for i in range(4):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
     pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
     schemas = read_schemas_df(manifest_df(spark, pattern), pattern.file_type)
     schema = determine_schema(schemas, pattern.combine_dim_keys)
@@ -3487,18 +3341,14 @@ def _stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch fixture before summarizing."""
     from pangeo_forge_recipes_spark.ndset import assert_equal
     from pangeo_forge_recipes_spark.streaming.append import stream_append_to_zarr
-    from pangeo_forge_recipes_spark.dsio import open_zarr_group, write_npz
+    from pangeo_forge_recipes_spark.dsio import open_zarr_group
     from tests.data_generation import make_ds
 
-    tmp = tempfile.mkdtemp(prefix="pfrs_entry_sa_")
+    tmp = _scratch("pfrs_entry_sa_")
     manifest_dir = os.path.join(tmp, "manifest")
     os.makedirs(manifest_dir)
     ds = make_ds(nt=8)
-    paths = []
-    for i in range(4):
-        p = os.path.join(tmp, f"f{i}.npz")
-        write_npz(p, ds.isel(time=slice(2 * i, 2 * i + 2)))
-        paths.append(p)
+    paths = _npz_files(tmp, ds, 2)
 
     def run_batch(batch_idx: int, file_idx: list[int]) -> None:
         lines = "".join(f"{2 * i},{paths[i]}\n" for i in file_idx)
@@ -3518,7 +3368,7 @@ def _stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-9 rotation slots
+# media near-dup, classifier scoring, stratified sampling, streaming Hamming
 # ---------------------------------------------------------------------------
 
 
@@ -3642,7 +3492,7 @@ FROM documents a JOIN documents b
 """.strip()
 
 
-#: pinned closed-form weights for the graded classifier-inference slot:
+#: pinned closed-form weights for the graded classifier-inference query:
 #: fixed, discriminative-ish, and embeddable as SQL literals (dim 256)
 _QC_DIM = 256
 _QC_W = [((i * 37) % 101 - 50) / 100.0 for i in range(_QC_DIM)]
@@ -3801,6 +3651,143 @@ WHERE b.doc_id <> mn.first_doc_id
 
 
 # ---------------------------------------------------------------------------
+# the catalog: one name -> (query, oracle) table
+# ---------------------------------------------------------------------------
+
+#: the names the driver grades (its cap is 50), in grading order
+GRADED = (
+    "zarr_source_scan",
+    "pipeline_zarr_roundtrip",
+    "pipeline_kerchunk_roundtrip",
+    "pipeline_append_roundtrip",
+    "pipeline_rechunk_existing",
+    "pipeline_schema_inference",
+    "pipeline_stream_append",
+    "pipeline_spill_roundtrip",
+    "pyramid_roundtrip",
+    "multimodal_features",
+    "quality_classifier_score",
+    "multimodal_audio",
+    "remove_duplicate_spans",
+    "dedup_clusters",
+    "dedup_simhash",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "ivf_pq_topk",
+    "embedding_near_dup",
+    "semantic_dedup_pairs",
+    "manifest_outer_product",
+    "dedup_ngram_spans",
+    "bloom_dedup_reference",
+    "pack_sequences",
+    "tfrecord_roundtrip",
+    "dsir_select",
+    "gopher_c4_filter",
+    "phash_near_dup",
+    "bpe_tokenize",
+    "dedup_lines",
+    "mix_corpora",
+    "stratified_sample",
+    "quality_filter",
+    "webdataset_roundtrip",
+    "decontaminate",
+    "c4_clean",
+    "scrub_pii",
+    "dedup_minhash_stream",
+    "warc_roundtrip",
+    "snapshot_delta",
+    "resize_images",
+    "domain_cap_sample",
+    "zarr_writer_roundtrip",
+    "audio_near_dup",
+    "streaming_hamming_dedup",
+    "events_sessions_stream",
+    "streaming_domain_cap",
+    "asof_last_order",
+    "range_join_orders",
+    "skew_salted_join",
+)
+
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+def _catalog() -> dict[str, tuple[Query, str]]:
+    """name -> (Spark query, DuckDB SQL computing the same result): every
+    matched pair, the ``GRADED`` ones and the ungraded ones that
+    ``bench.py`` times and ``tests/test_shared_sql_parity.py`` checks."""
+    shared = _shared_sql()
+    text_duck = _text_sql("duckdb")
+    pipeline = _pipeline_oracle_sql()
+    table = {n: (_sql_query(sql), sql) for n, sql in shared.items()}
+    table.update(
+        {n: (_sql_query(sql), text_duck[n]) for n, sql in _text_sql("spark").items()}
+    )
+    table.update(
+        {
+            "zarr_source_scan": (_zarr_source_scan, _ZARR_SOURCE_ORACLE),
+            "pipeline_zarr_roundtrip": (_zarr_roundtrip, pipeline["pipeline_zarr_roundtrip"]),
+            "pipeline_kerchunk_roundtrip": (_kerchunk_roundtrip, pipeline["pipeline_kerchunk_roundtrip"]),
+            "pipeline_append_roundtrip": (_append_roundtrip, pipeline["pipeline_append_roundtrip"]),
+            "pipeline_rechunk_existing": (_rechunk_existing, pipeline["pipeline_rechunk_existing"]),
+            "pipeline_schema_inference": (_schema_inference, pipeline["pipeline_schema_inference"]),
+            "pipeline_stream_append": (_stream_append, pipeline["pipeline_stream_append"]),
+            "pipeline_spill_roundtrip": (_spill_roundtrip, pipeline["pipeline_spill_roundtrip"]),
+            "pyramid_roundtrip": (_pyramid_roundtrip, _pyramid_oracle_sql()),
+            "multimodal_features": (_multimodal_features, _MULTIMODAL_FEATURES_ORACLE),
+            "quality_classifier_score": (_quality_classifier_q, _quality_classifier_oracle()),
+            "multimodal_audio": (_multimodal_audio, _AUDIO_ORACLE),
+            "remove_duplicate_spans": (_remove_dup_spans_q, _span_removal_oracle()),
+            "dedup_clusters": (_dedup_clusters, _CLUSTERS_ORACLE),
+            "dedup_simhash": (_simhash, _SIMHASH_ORACLE),
+            "ann_lsh_topk": (_lsh_ann, _lsh_oracle_sql()),
+            "ann_ivf_topk": (_ivf_topk, _IVF_ORACLE),
+            "ivf_pq_topk": (_ivf_pq_q, _ivf_pq_oracle_sql()),
+            "embedding_near_dup": (_near_dup, _NEAR_DUP_ORACLE),
+            "semantic_dedup_pairs": (_semantic_dedup_q, _semdedup_oracle()),
+            "manifest_outer_product": (_manifest_query, _MANIFEST_ORACLE),
+            "dedup_ngram_spans": (_ngram_span_dedup, _span_dedup_oracle()),
+            "bloom_dedup_reference": (_bloom_dedup_q, _BLOOM_ORACLE),
+            "pack_sequences": (_pack_sequences_q, _pack_oracle()),
+            "tfrecord_roundtrip": (_tfrecord_roundtrip, _TFR_ORACLE),
+            "dsir_select": (_dsir_select_q, _dsir_oracle()),
+            "gopher_c4_filter": (_gopher_c4_q, _gopher_oracle()),
+            "phash_near_dup": (_phash_near_dup_q, _PHASH_NEAR_DUP_ORACLE),
+            "bpe_tokenize": (_bpe_tokenize_q, _bpe_oracle()),
+            "dedup_lines": (_dedup_lines_q, _dedup_lines_oracle()),
+            "mix_corpora": (_mix_corpora_q, _mix_corpora_oracle()),
+            "stratified_sample": (_stratified_sample_q, _STRATIFIED_SAMPLE_ORACLE),
+            "quality_filter": (_quality_filter_q, _quality_filter_oracle()),
+            "webdataset_roundtrip": (_webdataset_roundtrip, _WDS_ORACLE),
+            "decontaminate": (_decontaminate_q, _decontaminate_oracle()),
+            "c4_clean": (_c4_clean_q, _c4_clean_oracle()),
+            "scrub_pii": (_scrub_pii_q, _scrub_pii_oracle()),
+            "dedup_minhash_stream": (_stream_minhash_q, _STREAM_MINHASH_ORACLE),
+            "warc_roundtrip": (_warc_roundtrip, _WARC_ORACLE),
+            "snapshot_delta": (_snapshot_delta_q, _snapshot_delta_oracle()),
+            "resize_images": (_resize_images_q, _resize_images_oracle()),
+            "domain_cap_sample": (_domain_cap_q, _domain_cap_oracle()),
+            "zarr_writer_roundtrip": (_zarr_writer_roundtrip, _ZARR_WRITER_ORACLE),
+            "audio_near_dup": (_audio_near_dup_q, _AUDIO_NEAR_DUP_ORACLE),
+            "streaming_hamming_dedup": (_stream_hamming_q, _STREAM_HAMMING_ORACLE),
+            "events_sessions_stream": (_events_sessions_stream, shared["events_sessions"]),
+            "streaming_domain_cap": (_stream_domain_cap_q, _STREAM_DOMAIN_CAP_ORACLE),
+            "asof_last_order": (_asof_last_order, _ASOF_ORACLE),
+            "range_join_orders": (_range_join_orders, _RANGE_JOIN_ORACLE),
+            "skew_salted_join": (_skew_salted_join, _SKEW_JOIN_ORACLE),
+            # ungraded
+            "events_props_json": (_sql_query(_props_json_sql("spark")), _props_json_sql("duckdb")),
+            "multimodal_stats": (_multimodal_stats, _MULTIMODAL_ORACLE),
+            "corpus_shards": (_corpus_shards, _shards_oracle()),
+            "perplexity_buckets": (_perplexity_buckets_q, _perplexity_buckets_oracle()),
+            "ann_cosine_topk": (_ann_topk, _ANN_ORACLE),
+            "url_dedup": (_url_dedup_q, _url_dedup_oracle()),
+            "chunk_documents": (_chunk_documents_q, _chunk_documents_oracle()),
+        }
+    )
+    return table
+
+
+# ---------------------------------------------------------------------------
 # contract functions
 # ---------------------------------------------------------------------------
 
@@ -3812,371 +3799,13 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 queries (the driver's grading cap), priority-ordered:
-    the reference-parity pipeline queries and the hash-family extension
-    operators first, the shared-SQL/tabular battery after. Every entry has
-    an oracle_sql() twin — zero rows-only checks."""
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    shared = _shared_sql()
-    # round-7 rotation: q1_pricing_summary (still the entry() flagship
-    # and warm in the parity suite) yields its slot to zarr_source_scan —
-    # the spark.read.format("zarr") DataSource relation with chunk-grain
-    # predicate pruning asserted in-query, the last §2 surface with no
-    # CORRECTNESS row
-    out["zarr_source_scan"] = _zarr_source_scan
-    # reference-parity core: the Zarr/kerchunk/append pipelines
-    out["pipeline_zarr_roundtrip"] = _zarr_roundtrip
-    out["pipeline_kerchunk_roundtrip"] = _kerchunk_roundtrip
-    out["pipeline_append_roundtrip"] = _append_roundtrip
-    out["pipeline_rechunk_existing"] = _rechunk_existing
-    out["pipeline_schema_inference"] = _schema_inference
-    out["pipeline_stream_append"] = _stream_append
-    # round-11 rotation: dedup_exact (the plain md5 hash-groupBy — its
-    # GROUP BY/dedup shape stays graded via dedup_lines, decontaminate
-    # and mix_corpora's md5 draws; the dialect pair stays dual-engine
-    # warm in test_shared_sql_parity.py AND timed in bench
-    # extra_matched) yields its slot to pipeline_spill_roundtrip — the
-    # spill execution path of THE shuffle was the last full alternative
-    # implementation of the most correctness-critical operator with no
-    # driver-graded CORRECTNESS slot (r10 VERDICT ask #1)
-    out["pipeline_spill_roundtrip"] = _spill_roundtrip
-    # round-10 rotation: text_doc_metrics (per-row text-metric exprs —
-    # the shape stays graded via gopher_c4_filter / quality_filter /
-    # c4_clean; its dialect-pair text stays dual-engine warm in
-    # test_shared_sql_parity.py AND timed in bench extra_matched) yields
-    # its slot to pyramid_roundtrip — the reference injections'
-    # StoreToPyramid (injections.py:10), the one r9 feature without a
-    # CORRECTNESS slot
-    out["pyramid_roundtrip"] = _pyramid_roundtrip
-    # multimodal + hash-family extension operators
-    out["multimodal_features"] = _multimodal_features
-    # round-6 rotation (second pass): ann_pq_topk — the compressed ANN
-    # tier, last ungraded similarity operator — takes multimodal_stats'
-    # slot (the sha-fake blob-plumbing aggregate; genuine decode paths
-    # stay graded via multimodal_features + multimodal_audio)
-    # round-9 rotation: ann_pq_topk (asymmetric-distance PQ) yields its
-    # slot to quality_classifier_score — PQ codes/LUT scoring stays
-    # graded through ivf_pq_topk (the IVFxPQ composite) and warm in
-    # pytest; the classifier inference path (hashed featurization +
-    # broadcast-weights scoring) was the last pytest-only text operator
-    out["quality_classifier_score"] = _quality_classifier_q
-    out["multimodal_audio"] = _multimodal_audio
-    # round-8 rotation: dedup_minhash_pairs (its banded-LSH shape stays
-    # graded via dedup_minhash_stream + dedup_clusters and warm in
-    # pytest) yields its slot to remove_duplicate_spans — the span
-    # REMOVAL transform ("Deduplicating Training Data" rewrite side),
-    # previously pytest-only; ann_cosine_topk (the broadcast-exact tier
-    # — stays the bench extra-matched query and warm in the parity
-    # suite; its dispatch is graded via ann_topk_auto's pytest) yields
-    # its slot to ivf_pq_topk — the billion-vector IVF×PQ composition
-    out["remove_duplicate_spans"] = _remove_dup_spans_q
-    out["dedup_clusters"] = _dedup_clusters
-    out["dedup_simhash"] = _simhash
-    out["ann_lsh_topk"] = _lsh_ann
-    out["ann_ivf_topk"] = _ivf_topk
-    out["ivf_pq_topk"] = _ivf_pq_q
-    out["embedding_near_dup"] = _near_dup
-    out["semantic_dedup_pairs"] = _semantic_dedup_q
-    out["manifest_outer_product"] = _manifest_query
-    # training-data assembly: span dedup, sequence packing, shard layout
-    out["dedup_ngram_spans"] = _ngram_span_dedup
-    out["bloom_dedup_reference"] = _bloom_dedup_q
-    out["pack_sequences"] = _pack_sequences_q
-    # round-8 rotation (second pass): corpus_shards (md5 shard layout +
-    # per-shard stats — its shard_assign expression and aggregate shape
-    # stay graded INSIDE tfrecord_roundtrip's writer and warm in
-    # test_packing.py) yields its slot to tfrecord_roundtrip — the
-    # TFRecord wire-format loop (CRC framing + Example codec), which
-    # strictly supersedes the rotated shape
-    out["tfrecord_roundtrip"] = _tfrecord_roundtrip
-    # data-selection + hygiene composites (round-3 rotation: these were
-    # pytest-only; events_minmax_count (trivial single-row agg) and the
-    # batch events_sessions (its oracle still grades via the streaming
-    # twin) yield their slots)
-    out["dsir_select"] = _dsir_select_q
-    out["gopher_c4_filter"] = _gopher_c4_q
-    # round-5 rotation: url_dedup (canonicalize + window dedup) and
-    # bpe_tokenize (pinned-merge segmentation) take the q4/q13 slots —
-    # those shapes stay covered by q18/q22/the rollup and warm in
-    # test_shared_sql_parity.py
-    # round-9 rotation: url_dedup yields its slot to phash_near_dup —
-    # canonicalize+window-dedup stays graded via snapshot_delta
-    # (canonical url join) and domain_cap_sample (host parsing), warm in
-    # pytest; image decode -> pHash -> banded-Hamming was pytest-only
-    out["phash_near_dup"] = _phash_near_dup_q
-    out["bpe_tokenize"] = _bpe_tokenize_q
-    # text_fingerprints (per-row fingerprint exprs that text_doc_metrics'
-    # shape already exercises) yields its slot to dedup_lines — the CCNet
-    # corpus-level boilerplate removal; its dialect-pair text stays warm
-    # in test_shared_sql_parity.py
-    out["dedup_lines"] = _dedup_lines_q
-    # round-5 rotation (second pass): mix_corpora (domain-mixture
-    # sampling) and chunk_documents (context-window chunking) take the
-    # topk_customers / q19_disjunctive_revenue slots — plain top-k stays
-    # graded through mix_corpora's TakeOrdered draws and q3/q18's
-    # orderBy+limit; disjunctive filter-agg through q1/corpus_clean. Both
-    # rotated-out texts stay warm in test_shared_sql_parity.py
-    out["mix_corpora"] = _mix_corpora_q
-    # round-9 rotation: chunk_documents yields its slot to
-    # stratified_sample — the window/prefix-sum chunk machinery stays
-    # graded via pack_sequences and warm in pytest; exact per-stratum
-    # md5-order sampling was pytest-only
-    out["stratified_sample"] = _stratified_sample_q
-    # round-5 rotation (third pass): quality_filter — the last ungraded
-    # LLM-pipeline operator family — takes sample_split_stats' slot (its
-    # md5-bucket determinism is graded through mix_corpora's draws and
-    # stays warm in the parity suite)
-    out["quality_filter"] = _quality_filter_q
-    # round-6 rotation: webdataset_roundtrip (the shard writer+reader
-    # loop, last pytest-only training-data component) and decontaminate
-    # (benchmark 13-gram hygiene) take the q5_local_supplier_volume /
-    # window_running_total slots — the multi-join shape stays graded via
-    # q3/q18, the window shape via events_multi_grain_rollup and the
-    # parity suite; both rotated-out texts stay warm in
-    # test_shared_sql_parity.py
-    out["webdataset_roundtrip"] = _webdataset_roundtrip
-    out["decontaminate"] = _decontaminate_q
-    # round-6 rotation (second pass): the hygiene pair c4_clean +
-    # scrub_pii (the last pytest-only corpus-cleaning operators) and the
-    # streaming LSH near-dup flagger take the q22_inactive_customers /
-    # set_ops_customers / text_langid slots — anti-join+correlated-agg
-    # shapes stay graded via decontaminate/dedup_lines/q18, set-ops and
-    # langid texts stay warm in test_shared_sql_parity.py
-    out["c4_clean"] = _c4_clean_q
-    out["scrub_pii"] = _scrub_pii_q
-    out["dedup_minhash_stream"] = _stream_minhash_q
-    # round-6 rotation (third pass): warc_roundtrip — the Common Crawl
-    # ingestion path, last pytest-only source — takes events_props_json's
-    # slot (the JSON-extraction shape stays graded inside
-    # webdataset_roundtrip's meta_json projection; the props SQL joins
-    # the parity suite)
-    out["warc_roundtrip"] = _warc_roundtrip
-    # round-6 rotation (fourth pass): snapshot_delta — incremental
-    # crawl-snapshot classification, a new operator family — takes
-    # q3_unshipped_revenue's slot (its 3-way join+agg+topk shape stays
-    # graded via q18 and warm in the parity suite)
-    out["snapshot_delta"] = _snapshot_delta_q
-    # round-7 rotation: q18_large_orders and corpus_clean (join+having
-    # top-k and disjunctive filter shapes stay graded via
-    # events_multi_grain_rollup / mix_corpora / gopher_c4_filter; both
-    # texts warm in test_shared_sql_parity.py) yield their slots to
-    # resize_images — the last pytest-only multimodal stage — and
-    # domain_cap_sample — the C4-style per-host balance step
-    out["resize_images"] = _resize_images_q
-    out["domain_cap_sample"] = _domain_cap_q
-    # round-7 rotation (second pass): events_multi_grain_rollup (the
-    # GROUPING SETS shape; its text stays dual-engine warm in the parity
-    # suite and time-window aggs stay graded via the streaming rollup
-    # twin) yields its slot to zarr_writer_roundtrip — the
-    # dataframe_to_zarr tabular->tensor bridge plus the zarr DataSource
-    # read-back, on the real events table
-    out["zarr_writer_roundtrip"] = _zarr_writer_roundtrip
-    # shared-SQL battery (identical ANSI text on both engines); the
-    # hourly-rollup text grades via its streaming twin below, so the
-    # batch copy is skipped to stay inside the 50-query budget.
-    # q17/q6/q14/q10 (single-row or join+topk conditional-agg shapes that
-    # q1/q4/q13/q19/q3 already cover) yield their slots to dedup_clusters
-    # and the three training-data assembly queries; q16 (distinct-agg +
-    # NOT-IN anti-join, shapes q13/q22/set_ops_customers also exercise)
-    # yields its slot to multimodal_audio — the real WAV decode path;
-    # q9 (multi-way join + agg, the shape q5 grades) yields its slot to
-    # bloom_dedup_reference — the broadcast-Bloom incremental-dedup scale
-    # path. All rotated-out SQL stays warm in test_shared_sql_parity.py.
-    _SWAPPED_OUT = (
-        "events_hourly_rollup",
-        "q17_small_quantity_revenue",
-        "q6_forecast_revenue",
-        "q14_promo_revenue",
-        "q10_returned_items",
-        "q16_supplier_cnt",
-        "q9_product_profit",
-        # round-4 rotation for dsir_select + gopher_c4_filter:
-        "events_minmax_count",
-        "events_sessions",
-        # round-5 rotation for url_dedup + bpe_tokenize (q4's exists-agg
-        # shape is covered by q18/q22; q13's outer-join distribution by
-        # q22/the rollup):
-        "q4_order_priority",
-        "q13_customer_distribution",
-        # round-5 rotation for mix_corpora + chunk_documents:
-        "topk_customers",
-        "q19_disjunctive_revenue",
-        # round-6 rotation for webdataset_roundtrip + decontaminate:
-        "q5_local_supplier_volume",
-        "window_running_total",
-        # round-6 rotation (second pass) for c4_clean + scrub_pii +
-        # dedup_minhash_stream:
-        "q22_inactive_customers",
-        "set_ops_customers",
-        # round-6 rotation (fourth pass) for snapshot_delta:
-        "q3_unshipped_revenue",
-        # round-7 rotation for zarr_source_scan + resize_images (q1 stays
-        # the entry() flagship):
-        "q1_pricing_summary",
-        "q18_large_orders",
-        # round-7 rotation (second pass) for zarr_writer_roundtrip:
-        "events_multi_grain_rollup",
-    )
-    for name, sql in shared.items():
-        if name not in _SWAPPED_OUT:
-            out[name] = _sql_query(sql)
-    # dedup_ngram_signature (GROUP BY of the rolling_min_hash expression
-    # text_fingerprints already grades per-row) yields its slot to
-    # semantic_dedup_pairs — the k-means scale path was the last ungraded
-    # 100 TB operator; the signature text stays warm in the parity pytest.
-    # Round-6: top_bigrams yields its slot to perplexity_buckets — the
-    # n-gram+agg+topk shapes it graded stay covered by dedup_ngram_spans
-    # / decontaminate (grams) and q3/q18/mix_corpora (top-k); its text
-    # stays warm in the parity suite.
-    # round-7: corpus_clean's slot moved to domain_cap_sample (see above)
-    for name, sql in _text_sql("spark").items():
-        if name not in (
-            "dedup_ngram_signature",
-            "text_fingerprints",
-            "sample_split_stats",
-            "top_bigrams",
-            "text_langid",
-            "corpus_clean",
-            # r10: slot moved to pyramid_roundtrip (see above)
-            "text_doc_metrics",
-            # r11: slot moved to pipeline_spill_roundtrip (see above)
-            "dedup_exact",
-        ):
-            out[name] = _sql_query(sql)
-    # round-12 rotation: perplexity_buckets (CCNet tercile split — its
-    # trigram-LM scoring path stays graded via quality_filter in-gate
-    # and pinned numerically in test_lmscore.py; the windowed-quantile
-    # bucketing shape via stratified_sample) yields its slot to
-    # audio_near_dup — the audio fingerprint path, the last pytest-only
-    # extension-operator family member (r11 verdict ask #5)
-    out["audio_near_dup"] = _audio_near_dup_q
-    # events_props_json's slot moved to warc_roundtrip (r6 third pass);
-    # its dialect-pair text stays warm in test_shared_sql_parity.py
-    # streaming twins + bespoke joins
-    # round-9 rotation: events_hourly_rollup_stream (micro-batch windowed
-    # agg — shape stays graded via events_sessions_stream +
-    # streaming_domain_cap + pipeline_stream_append, text warm in the
-    # parity suite) yields its slot to streaming_hamming_dedup, the
-    # cross-modal 64-bit-signature ingest dedup
-    out["streaming_hamming_dedup"] = _stream_hamming_q
-    out["events_sessions_stream"] = _events_sessions_stream
-    # round-8 rotation: events_dedup_stream (streaming EXACT dedup — its
-    # first-seen-wins state shape stays graded via dedup_minhash_stream
-    # and warm in test_streaming.py) yields its slot to
-    # streaming_domain_cap — the ingest-time per-host admission cap
-    out["streaming_domain_cap"] = _stream_domain_cap_q
-    out["asof_last_order"] = _asof_last_order
-    out["range_join_orders"] = _range_join_orders
-    out["skew_salted_join"] = _skew_salted_join
-    assert len(out) == 50, f"driver grades at most 50 queries, got {len(out)}"
-    return out
+def queries() -> dict[str, Query]:
+    """The ``GRADED`` Spark queries, in grading order."""
+    table = _catalog()
+    return {n: table[n][0] for n in GRADED}
 
 
 def oracle_sql() -> dict[str, str]:
-    out = dict(_shared_sql())  # identical ANSI text runs on DuckDB
-    out.update(_text_sql("duckdb"))
-    out["warc_roundtrip"] = _WARC_ORACLE
-    # round-9 rotation: the hourly-rollup text leaves the gate entirely
-    # (slot moved to streaming_hamming_dedup); it stays warm in the
-    # parity suite
-    out.pop("events_hourly_rollup")
-    out["streaming_hamming_dedup"] = _STREAM_HAMMING_ORACLE
-    # round-4 rotation: the batch events_sessions slot moved to
-    # dsir_select; its SQL still grades the streaming twin
-    out["events_sessions_stream"] = out.pop("events_sessions")
-    out.pop("events_minmax_count")  # slot moved to gopher_c4_filter
-    # round-5 rotation: slots moved to url_dedup + bpe_tokenize
-    out.pop("q4_order_priority")
-    out.pop("q13_customer_distribution")
-    out["dsir_select"] = _dsir_oracle()
-    out["gopher_c4_filter"] = _gopher_oracle()
-    out["phash_near_dup"] = _PHASH_NEAR_DUP_ORACLE  # r9: url_dedup slot
-    out["bpe_tokenize"] = _bpe_oracle()
-    out.pop("text_fingerprints")  # slot moved to dedup_lines
-    out["dedup_lines"] = _dedup_lines_oracle()
-    # round-5 rotation: slots moved to mix_corpora + chunk_documents
-    out.pop("topk_customers")
-    out.pop("q19_disjunctive_revenue")
-    out["mix_corpora"] = _mix_corpora_oracle()
-    out["stratified_sample"] = _STRATIFIED_SAMPLE_ORACLE  # r9: chunk_documents slot
-    # round-5 rotation: slot moved to quality_filter
-    out.pop("sample_split_stats")
-    out["quality_filter"] = _quality_filter_oracle()
-    out["webdataset_roundtrip"] = _WDS_ORACLE
-    out["decontaminate"] = _decontaminate_oracle()
-    out["audio_near_dup"] = _AUDIO_NEAR_DUP_ORACLE  # r12: perplexity slot
-    # round-6 rotation (second pass): slots moved to c4_clean +
-    # scrub_pii + dedup_minhash_stream
-    out.pop("q22_inactive_customers")
-    out.pop("set_ops_customers")
-    out.pop("text_langid")
-    out["c4_clean"] = _c4_clean_oracle()
-    out["scrub_pii"] = _scrub_pii_oracle()
-    out["dedup_minhash_stream"] = _STREAM_MINHASH_ORACLE
-    out["quality_classifier_score"] = _quality_classifier_oracle()  # r9: ann_pq slot
-    out.pop("q3_unshipped_revenue")  # slot moved to snapshot_delta
-    out["snapshot_delta"] = _snapshot_delta_oracle()
-    # round-8 rotation: events_dedup_stream's slot moved to
-    # streaming_domain_cap; _DEDUP_STREAM_ORACLE stays warm in pytest
-    out["streaming_domain_cap"] = _STREAM_DOMAIN_CAP_ORACLE
-    out["asof_last_order"] = _ASOF_ORACLE
-    out["range_join_orders"] = _RANGE_JOIN_ORACLE
-    out["skew_salted_join"] = _SKEW_JOIN_ORACLE
-    # round-8 rotation: ann_cosine_topk's slot moved to ivf_pq_topk
-    # (_ANN_ORACLE stays the bench extra-matched oracle)
-    out["ivf_pq_topk"] = _ivf_pq_oracle_sql()
-    out["embedding_near_dup"] = _NEAR_DUP_ORACLE
-    # multimodal_stats' slot moved to ann_pq_topk (r6 second pass); its
-    # sha-fake blob aggregate (_MULTIMODAL_ORACLE) stays warm in pytest
-    out["manifest_outer_product"] = _MANIFEST_ORACLE
-    # hash-family replications + pinned pipeline constants
-    for swapped in (
-        "q17_small_quantity_revenue",
-        "q6_forecast_revenue",
-        "q14_promo_revenue",
-        "q10_returned_items",
-        "q16_supplier_cnt",  # slot swapped for multimodal_audio
-    ):
-        out.pop(swapped)  # slots swapped for dedup_clusters + assembly queries
-    out.pop("dedup_ngram_signature")  # slot swapped for semantic_dedup_pairs
-    out["semantic_dedup_pairs"] = _semdedup_oracle()
-    out["dedup_ngram_spans"] = _span_dedup_oracle()
-    out["pack_sequences"] = _pack_oracle()
-    # corpus_shards' slot moved to tfrecord_roundtrip (r8 second pass);
-    # its shard-stat shape stays warm in test_packing.py
-    out["tfrecord_roundtrip"] = _TFR_ORACLE
-    # round-8 rotation: dedup_minhash_pairs' slot moved to
-    # remove_duplicate_spans (_MINHASH_ORACLE keeps feeding the
-    # stream-minhash verification + pytest)
-    out["remove_duplicate_spans"] = _span_removal_oracle()
-    out["dedup_clusters"] = _CLUSTERS_ORACLE
-    out["dedup_simhash"] = _SIMHASH_ORACLE
-    out["ann_lsh_topk"] = _lsh_oracle_sql()
-    out["ann_ivf_topk"] = _IVF_ORACLE
-    out["bloom_dedup_reference"] = _BLOOM_ORACLE
-    out["multimodal_features"] = _MULTIMODAL_FEATURES_ORACLE
-    out["multimodal_audio"] = _AUDIO_ORACLE
-    # round-7 rotation: q1 (stays the entry() flagship + parity suite),
-    # q18 and corpus_clean yield their slots to the zarr DataSource scan,
-    # resize_images, and domain_cap_sample
-    out.pop("q1_pricing_summary")
-    out.pop("q18_large_orders")
-    out.pop("corpus_clean")
-    out["zarr_source_scan"] = _ZARR_SOURCE_ORACLE
-    out["resize_images"] = _resize_images_oracle()
-    out["domain_cap_sample"] = _domain_cap_oracle()
-    # round-7 second pass: slot moved from events_multi_grain_rollup
-    out.pop("events_multi_grain_rollup")
-    out["zarr_writer_roundtrip"] = _ZARR_WRITER_ORACLE
-    # round-10 rotation: text_doc_metrics' slot moved to
-    # pyramid_roundtrip; its dialect text stays warm in the parity suite
-    # and timed as a bench extra-matched pair
-    out.pop("text_doc_metrics")
-    out["pyramid_roundtrip"] = _pyramid_oracle_sql()
-    # round-11 rotation: dedup_exact's slot moved to
-    # pipeline_spill_roundtrip; its dialect text stays warm in the
-    # parity suite and timed as a bench extra-matched pair
-    out.pop("dedup_exact")
-    out.update(_pipeline_oracle_sql())
-    return out
+    """The DuckDB twin of every ``queries()`` entry, in the same order."""
+    table = _catalog()
+    return {n: table[n][1] for n in GRADED}

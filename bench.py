@@ -59,9 +59,6 @@ HEADLINE = [
     "skew_salted_join",
     "dedup_lines",
     "quality_filter",
-    # r12 rotation: perplexity_buckets left the gate (slot moved to
-    # audio_near_dup); its LM-scoring wall stays timed as a SPARK_ONLY
-    # extra and its operator stays pinned in test_lmscore.py
     "audio_near_dup",
     "bloom_dedup_reference",
     "semantic_dedup_pairs",
@@ -77,16 +74,15 @@ HEADLINE = [
     "dedup_ngram_spans",
     "pack_sequences",
     "tfrecord_roundtrip",
-    # round-9 rotation slots
     "phash_near_dup",
     "quality_classifier_score",
     "stratified_sample",
     "streaming_hamming_dedup",
 ]
 
-# Identical-work dual-engine pairs timed for the matched subset but outside
-# the graded 50 (each rotated out of the correctness gate in an earlier
-# round; both engines run the same semantics). Order is battery order.
+# Identical-work dual-engine pairs of the catalog timed for the matched
+# subset but outside the graded 50 (both engines run the same semantics).
+# Order is battery order.
 EXTRA_MATCHED = (
     "ann_cosine_topk",
     "url_dedup",
@@ -218,28 +214,8 @@ def _scratch_root() -> str | None:
 
 def _extra_matched() -> dict:
     """name -> (Spark query fn, DuckDB SQL) for ``EXTRA_MATCHED``."""
-    shared = entrymod._shared_sql()
-    text_spark = entrymod._text_sql("spark")
-    text_duck = entrymod._text_sql("duckdb")
-    pairs = {
-        "ann_cosine_topk": (entrymod._ann_topk, entrymod._ANN_ORACLE),
-        "url_dedup": (entrymod._url_dedup_q, entrymod._url_dedup_oracle()),
-        "chunk_documents": (
-            entrymod._chunk_documents_q,
-            entrymod._chunk_documents_oracle(),
-        ),
-        "corpus_shards": (entrymod._corpus_shards, entrymod._shards_oracle()),
-    }
-    for n in (
-        "text_doc_metrics",
-        "dedup_ngram_signature",
-        "text_fingerprints",
-        "dedup_exact",
-    ):
-        pairs[n] = (entrymod._sql_query(text_spark[n]), text_duck[n])
-    for n in ("q1_pricing_summary", "q18_large_orders", "q9_product_profit"):
-        pairs[n] = (entrymod._sql_query(shared[n]), shared[n])
-    return {n: pairs[n] for n in EXTRA_MATCHED}
+    table = entrymod._catalog()
+    return {n: table[n] for n in EXTRA_MATCHED}
 
 
 def _bench_zarr_800mb(spark, work: str, cpus: int) -> dict:
@@ -622,7 +598,7 @@ def _run(spark, cpus: int, sf_dir: str, sf: float, work: str) -> None:
     for n, (fn, osql) in _extra_matched().items():
         fns[n], oracles[n] = fn, osql
         matched.append(n)
-    fns["perplexity_buckets"] = entrymod._perplexity_buckets_q
+    fns["perplexity_buckets"] = entrymod._catalog()["perplexity_buckets"][0]
     # one untimed run of the battery's first query so position 1 is not special
     _materialize(fns[HEADLINE[0]](spark, sf_dir))
     mark("warmup")

@@ -1334,17 +1334,6 @@ def _probe_dap4(url: str, timeout: float) -> Tuple[str, Optional[str]]:
     return "dap4", text
 
 
-def negotiate_dap_protocol(url: str, timeout: float = 30.0) -> str:
-    """Cached protocol for a url (one probe per process; see
-    :func:`_probe_dap4` for the decision rules)."""
-    cached = _PROTOCOL_CACHE.get(url)
-    if cached:
-        return cached
-    proto, _ = _probe_dap4(url, timeout)
-    _PROTOCOL_CACHE[url] = proto
-    return proto
-
-
 def open_dap(
     url: str,
     projection: Optional[List[str]] = None,

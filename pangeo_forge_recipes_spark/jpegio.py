@@ -68,15 +68,6 @@ def _dct_matrix() -> np.ndarray:
 _M = _dct_matrix()
 
 
-def idct_8x8(coeffs: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of one or more 8x8 blocks (…, 8, 8)."""
-    return _M.T @ coeffs @ _M
-
-
-def fdct_8x8(pixels: np.ndarray) -> np.ndarray:
-    return _M @ pixels @ _M.T
-
-
 def _extend(v: int, t: int) -> int:
     """T.81 EXTEND: map the t-bit magnitude v to its signed value."""
     return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v

@@ -33,7 +33,6 @@ single-partition case matches a pure-numpy reference bit-for-bit).
 
 from __future__ import annotations
 
-import struct
 import zlib
 from typing import Dict, Iterator, List, Optional, Tuple
 
@@ -345,41 +344,3 @@ def classifier_filter(
     learned analogue of :func:`.filters.gopher_quality_filter`."""
     scored = score_quality(df, model, text_col)
     return scored.where(F.col("quality_prob") >= F.lit(threshold))
-
-
-def model_to_bytes(model: Dict[str, object]) -> bytes:
-    """Serialize a trained model (portable little-endian layout)."""
-    w = np.asarray(model["w"], dtype="<f8")
-    head = struct.pack(
-        "<QdB", int(model["dim"]), float(model["b"]), 1 if model["bigrams"] else 0
-    )
-    return head + w.tobytes()
-
-
-def model_from_bytes(raw: bytes) -> Dict[str, object]:
-    dim, b, bg = struct.unpack_from("<QdB", raw, 0)
-    w = np.frombuffer(raw, dtype="<f8", offset=struct.calcsize("<QdB"), count=dim)
-    return {"w": w.copy(), "b": b, "dim": int(dim), "bigrams": bool(bg)}
-
-
-def threshold_for_keep_rate(
-    df: DataFrame,
-    model: Dict[str, object],
-    keep_rate: float,
-    text_col: str = "text",
-    relative_error: float = 0.0001,
-) -> float:
-    """Calibrate the filter threshold to keep ~``keep_rate`` of the
-    corpus: the (1 - keep_rate) quantile of the model's scores.
-    Production pipelines pick thresholds by target volume, not by 0.5
-    (CCNet keeps the head of the perplexity ordering the same way).
-
-    One scoring pass + a Greenwald-Khanna approximate quantile
-    (``relative_error`` trades driver memory for precision — 1e-4 is
-    exact to a hundredth of a percentile, O(1/ε) driver state,
-    100 TB-safe)."""
-    if not 0.0 < keep_rate <= 1.0:
-        raise ValueError(f"keep_rate={keep_rate} must be in (0, 1]")
-    scored = score_quality(df, model, text_col)
-    q = scored.approxQuantile("quality_prob", [1.0 - keep_rate], relative_error)
-    return float(q[0])

@@ -45,19 +45,6 @@ def exact_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> Dat
     )
 
 
-def ngram_signature_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id", n: int = 5) -> DataFrame:
-    """Near-dup grouping by the winnowing-style rolling fingerprint (min md5
-    over char n-grams — a 1-permutation minhash). SQL-expressible, so it
-    carries a DuckDB oracle."""
-    e = TextExprs("spark", col)
-    sig = F.expr(e.rolling_min_hash(n))
-    return (
-        df.withColumn("signature", sig)
-        .groupBy("signature")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_members"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

@@ -10,8 +10,7 @@ re-expressed as Spark DataFrame transformations:
 - PII scrubbing (emails / IPv4 / phone-shaped spans) via JVM-side
   ``regexp_replace`` chains,
 - benchmark-contamination detection by word-n-gram overlap against an
-  evaluation set (broadcast semi-join — the corpus never shuffles),
-- URL/domain blocklist filtering (broadcast anti-join).
+  evaluation set (broadcast semi-join — the corpus never shuffles).
 
 Everything scalar stays in built-in Spark SQL expressions (whole-stage
 codegen, no Python in the hot path). :func:`top_ngram_fraction` is
@@ -20,17 +19,13 @@ map-only since r9 (a per-row sorted-run fold — zero exchanges);
 the (small, broadcast) eval set.
 
 100 TB notes: every function here is a narrow map or a broadcast
-semi/anti join against a *small* side (an eval benchmark, a
-blocklist); nothing in this module shuffles the corpus itself.
+semi join against a *small* side (an eval benchmark); nothing in this
+module shuffles the corpus itself.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
-
 from pyspark.sql import DataFrame, functions as F
-
-from ..session import local_df
 
 
 # ---------------------------------------------------------------------------
@@ -139,116 +134,6 @@ def top_ngram_fraction_expr(tokens_col: str, n: int = 2) -> str:
         f"th -> {body}), 1)"
     )
     return f"({inner}) * {n} / greatest(size({tokens_col}), 1)"
-
-
-def with_gopher_quality_metrics(df: DataFrame, col: str = "text") -> DataFrame:
-    """Add the remaining published Gopher quality signals (all pure SQL,
-    per-document, map-only):
-
-    - ``symbol_word_ratio`` — occurrences of '#' or '...'/'…' per word,
-    - ``bullet_line_frac`` — fraction of lines starting with a bullet
-      marker (-, *, •),
-    - ``ellipsis_line_frac`` — fraction of lines ending in an ellipsis,
-    - ``alpha_word_frac`` — fraction of words containing at least one
-      alphabetic character.
-
-    Combined with :func:`with_repetition_metrics`,
-    :func:`top_ngram_fraction` and the token/word-length/stopword
-    expressions in :mod:`..functions.textexprs`, this completes the
-    published Gopher rule family."""
-    # bind the word and line arrays ONCE per row — the four metrics
-    # otherwise each re-split the document (the cost tokens_col binding
-    # fixed in the gopher driver query)
-    bound = df.withColumn(
-        "__gq_w", F.expr(f"filter(split({col}, ' '), w -> w != '')")
-    ).withColumn(
-        "__gq_l",
-        F.expr(
-            f"filter(transform(split({col}, '\\n'), l -> trim(l)),"
-            " l -> l != '')"
-        ),
-    )
-    n_words = "greatest(size(__gq_w), 1)"
-    hashes = f"(length({col}) - length(replace({col}, '#', '')))"
-    # '...' counted via length delta / 3; '…' counted directly
-    dots = f"cast((length({col}) - length(replace({col}, '...', ''))) / 3 as int)"
-    uni = f"(length({col}) - length(replace({col}, '…', '')))"
-    n_lines = "greatest(size(__gq_l), 1)"
-    bullet = "size(filter(__gq_l, l -> l rlike '^[-*\\u2022]'))"
-    ellipsis = "size(filter(__gq_l, l -> l rlike '(\\\\.\\\\.\\\\.|\\u2026)$'))"
-    alpha = "size(filter(__gq_w, w -> w rlike '[A-Za-z]'))"
-    return (
-        bound.withColumn(
-            "symbol_word_ratio",
-            F.expr(f"cast({hashes} + {dots} + {uni} as double) / {n_words}"),
-        )
-        .withColumn(
-            "bullet_line_frac", F.expr(f"cast({bullet} as double) / {n_lines}")
-        )
-        .withColumn(
-            "ellipsis_line_frac",
-            F.expr(f"cast({ellipsis} as double) / {n_lines}"),
-        )
-        .withColumn(
-            "alpha_word_frac", F.expr(f"cast({alpha} as double) / {n_words}")
-        )
-        .drop("__gq_w", "__gq_l")
-    )
-
-
-def dup_ngram_char_frac(
-    df: DataFrame, id_col: str = "doc_id", col: str = "text", n: int = 5
-) -> DataFrame:
-    """Fraction of a document's tokens covered by word ``n``-grams that
-    occur MORE THAN ONCE within the document (Gopher's duplicated
-    n-gram character-fraction family, token-granular: covered positions
-    are the union of every duplicated gram's [i, i+n) span, so
-    overlapping repeats are not double-counted).
-
-    Shape: explode grams with positions → per-(doc, gram) counts →
-    re-explode the spans of duplicated grams → countDistinct(position).
-    Two map-side-combining aggregations; shuffle keys are 8-byte gram
-    hashes. Linear in corpus size."""
-    from ..functions.textexprs import TextExprs
-
-    # token_ngrams binds the split array ONCE (single-element-array
-    # transform trick) and guards short documents — inlining the split
-    # in a per-element lambda would re-tokenize per gram, O(tokens²)/doc
-    e = TextExprs("spark", col)
-    grams = df.select(
-        F.col(id_col),
-        F.expr(f"greatest(size(split({col}, ' ')), 1)").alias("__n_tokens"),
-        F.posexplode(F.expr(e.token_ngrams(n))).alias("__pos", "__gram"),
-    ).withColumn("__gh", F.xxhash64("__gram"))
-    dup_spans = (
-        grams.groupBy(id_col, "__n_tokens", "__gh")
-        .agg(
-            F.count("*").alias("__cnt"),
-            F.collect_list("__pos").alias("__starts"),
-        )
-        .filter(F.col("__cnt") > 1)
-        .select(
-            id_col,
-            "__n_tokens",
-            F.explode(
-                F.expr(
-                    f"flatten(transform(__starts,"
-                    f" s -> sequence(s, s + {n - 1})))"
-                )
-            ).alias("__covered"),
-        )
-        .groupBy(id_col, "__n_tokens")
-        .agg(F.countDistinct("__covered").alias("__n_covered"))
-        .select(
-            id_col,
-            (F.col("__n_covered") / F.col("__n_tokens")).alias(
-                f"dup_{n}gram_char_frac"
-            ),
-        )
-    )
-    return df.join(dup_spans, id_col, "left").fillna(
-        {f"dup_{n}gram_char_frac": 0.0}
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -497,40 +382,3 @@ def dedup_lines(
     if drop_empty_docs:
         out = out.filter(F.col("n_lines_kept") > 0)
     return out
-
-
-# ---------------------------------------------------------------------------
-# URL / domain blocklist
-# ---------------------------------------------------------------------------
-
-def _domain_expr(url_col: str):
-    host = F.expr(f"parse_url({url_col}, 'HOST')")
-    bare = F.coalesce(host, F.col(url_col))
-    return F.lower(F.regexp_replace(bare, r"^www\.", ""))
-
-
-def domain_blocklist_filter(
-    df: DataFrame,
-    url_col: str,
-    blocked: Optional[Iterable[str]] = None,
-    blocked_df: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Drop rows whose URL's registered host (``www.``-stripped,
-    lowercased) appears in a blocklist — pass either an in-memory
-    iterable or a DataFrame with a ``domain`` column.
-
-    Blocklists are small (≤ millions of rows): broadcast anti-join, so
-    the corpus side stays a map-only stage with no shuffle.
-    """
-    if (blocked is None) == (blocked_df is None):
-        raise ValueError("pass exactly one of `blocked` or `blocked_df`")
-    if blocked_df is None:
-        blocked_df = local_df(
-            df.sparkSession, [(d,) for d in blocked], "domain string"
-        )
-    bl = blocked_df.select(F.lower(F.col("domain")).alias("__bldom")).distinct()
-    return (
-        df.withColumn("__dom", _domain_expr(url_col))
-        .join(F.broadcast(bl), F.col("__dom") == F.col("__bldom"), "left_anti")
-        .drop("__dom")
-    )

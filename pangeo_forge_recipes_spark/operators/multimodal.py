@@ -1,5 +1,5 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
-decode / feature-extract / resize / frame-sample stages as Arrow batch
+decode / feature-extract / resize stages as Arrow batch
 steps on :func:`..parallel.map_batches`, so a chain of them (e.g.
 ``resize_images(attach_png_media(docs))``) runs as ONE ``mapInArrow`` —
 one Python worker per task, not one per stage.
@@ -182,60 +182,6 @@ def decode_audio(df: DataFrame) -> DataFrame:
     return map_batches(df, decode, schema, ["doc_id", "media"])
 
 
-def audio_features(decoded: DataFrame) -> DataFrame:
-    """Per-clip features over decoded samples: duration, RMS energy,
-    zero-crossing rate, peak amplitude — the audio analogue of
-    :func:`extract_features`."""
-    schema = (
-        "doc_id long, duration_s double, rms double, "
-        "zero_crossing_rate double, peak double"
-    )
-
-    def feats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            dur, rms, zcr, peak = [], [], [], []
-            for px, rate in zip(
-                batch.column("samples").to_numpy(zero_copy_only=False),
-                batch.column("sample_rate").to_numpy(zero_copy_only=False),
-            ):
-                arr = np.asarray(px, dtype="float64")
-                n = max(arr.size, 1)
-                dur.append(arr.size / rate if rate else 0.0)
-                rms.append(float(np.sqrt(np.mean(arr**2))) if arr.size else 0.0)
-                zcr.append(float(np.count_nonzero(np.diff(np.signbit(arr)))) / n)
-                peak.append(float(np.max(np.abs(arr))) if arr.size else 0.0)
-            yield arrow_batch(schema, [_ids(batch), dur, rms, zcr, peak])
-
-    return map_batches(decoded, feats, schema, ["doc_id", "samples", "sample_rate"])
-
-
-def attach_jpeg_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    width: int = 16,
-    height: int = 16,
-    subsample: bool = False,
-) -> DataFrame:
-    """Synthesize REAL baseline JPEG payloads (encoded by
-    :mod:`..jpegio`): a smooth doc-dependent luminance ramp, so decode
-    error stays within quantization bounds tests can assert."""
-    from ..jpegio import encode_jpeg
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yy, xx = np.mgrid[0:height, 0:width]
-        for batch in batches:
-            ids = _ids(batch, id_col)
-            blobs = []
-            for d in ids:
-                img = (128 + 60 * np.sin((xx + int(d)) / 5.0) * np.cos(yy / 4.0)).astype(
-                    np.uint8
-                )
-                blobs.append(encode_jpeg(img, quality=95, subsample=subsample))
-            yield _media_batch(ids, blobs, "image/jpeg", width, height, 1)
-
-    return map_batches(df, build, MEDIA_SCHEMA, [id_col])
-
-
 def decode_image(df: DataFrame, keep_dims: bool = False) -> DataFrame:
     """Decode binary → (doc_id, pixels array<float>) as one Arrow batch
     step. With ``keep_dims=True`` the grayscale (height, width) ride
@@ -351,28 +297,6 @@ def extract_features(
             yield arrow_batch(schema, cols)
 
     return map_batches(decoded, feats, schema, ["doc_id", "pixels"])
-
-
-def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
-    """'Video' frame sampling: slice the binary payload into n_frames
-    segments, keep every ``every``-th → one row per kept frame."""
-    schema = "doc_id long, frame int, frame_bytes binary"
-
-    def frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, frame_idx, frame_bytes = [], [], []
-            for doc_id, blob, n in zip(
-                _ids(batch), _blobs(batch), batch.column("n_frames").to_pylist()
-            ):
-                n = max(int(n), 1)
-                size = max(len(blob) // n, 1)
-                for i in range(0, n, every):
-                    ids.append(doc_id)
-                    frame_idx.append(i)
-                    frame_bytes.append(blob[i * size : (i + 1) * size])
-            yield arrow_batch(schema, [ids, frame_idx, frame_bytes])
-
-    return map_batches(df, frames, schema, ["doc_id", "media", "n_frames"])
 
 
 def _resize_plane_batch(

@@ -833,9 +833,7 @@ def _ivf_pq_encode_rows(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Map-only IVF assign + PQ encode against a FIXED model — the one
-    encode used by both build and append (three drifting copies of this
-    loop was a review finding)."""
+    """Map-only IVF assign + PQ encode against a FIXED model."""
     m, ksub, dsub = codebooks.shape
     bc = df.sparkSession.sparkContext.broadcast((centroids, codebooks))
 
@@ -924,12 +922,12 @@ def _index_meta_io(path: str):
     return load, save
 
 
-def _write_index_rows_s3(rows: DataFrame, path: str, generation: int) -> int:
+def _write_index_rows_s3(rows: DataFrame, path: str) -> int:
     """Write encoded (vec_id, centroid, codes) rows into the s3 index:
     ONE shuffle co-locates each centroid's rows, tasks sort by centroid
     and stream pyarrow-encoded parts of ≤131072 rows per object to
-    ``vectors/centroid=<c>/part-<pid>-<seq>-g<gen>.parquet``. Part keys
-    are deterministic in (partition id, sequence, generation), so a
+    ``vectors/centroid=<c>/part-<pid>-<seq>.parquet``. Part keys
+    are deterministic in (partition id, sequence), so a
     retried task overwrites its own objects — idempotent, like the
     local writer. Returns the number of rows written (summed from the
     per-part manifest, truthful under nondeterministic inputs)."""
@@ -968,7 +966,7 @@ def _write_index_rows_s3(rows: DataFrame, path: str, generation: int) -> int:
             pq.write_table(t, sink)
             key = (
                 f"vectors/centroid={cur_centroid}/"
-                f"part-{pid:05d}-{seq:04d}-g{generation}.parquet"
+                f"part-{pid:05d}-{seq:04d}.parquet"
             )
             store.put(key, sink.getvalue())
             written.append((int(cur_centroid), len(buf_ids)))
@@ -1074,7 +1072,7 @@ def build_ivf_pq_index(
     rows = _ivf_pq_encode_rows(df, centroids, codebooks, id_col, vec_col)
     _load, save_meta = _index_meta_io(path)
     if on_s3:
-        n_vectors = _write_index_rows_s3(rows, path, generation=0)
+        n_vectors = _write_index_rows_s3(rows, path)
         save_meta(centroids=centroids, codebooks=codebooks)
     else:
         _os.makedirs(path, exist_ok=True)
@@ -1229,43 +1227,3 @@ def query_ivf_pq_index(
         )
     )
     return ranked
-
-
-
-def append_to_ivf_pq_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incrementally grow a :func:`build_ivf_pq_index` artifact: new
-    vectors encode with the SAVED model (centroids + codebooks load
-    from ``meta.npz`` — retraining would silently invalidate every code
-    already on disk) and append into the same ``centroid=*`` partition
-    layout, one map-only pass with no shuffle and no rewrite of
-    existing files. The daily-arrivals half of the serving loop:
-    build once, append increments, query with partition pruning
-    throughout. Returns the number of vectors appended."""
-    import os as _os
-
-    on_s3 = _check_index_path(path)
-    load_meta, _save = _index_meta_io(path)
-    meta = load_meta()
-    centroids, codebooks = meta["centroids"], meta["codebooks"]
-    rows = _ivf_pq_encode_rows(df, centroids, codebooks, id_col, vec_col)
-    if on_s3:
-        from ..storage import object_store_for
-
-        # generation = count of existing part objects: makes this
-        # append's part keys disjoint from every earlier write, while a
-        # RETRY within the append rewrites the same keys (idempotent)
-        gen = 1 + sum(1 for _ in object_store_for(path).list_prefix("vectors/"))
-        return _write_index_rows_s3(rows, path, generation=gen)
-    spark = df.sparkSession
-    vdir = _os.path.join(path, "vectors")
-    # truthful count without a second scan of df: parquet row counts come
-    # from file footers (metadata-only jobs), so the delta is what was
-    # ACTUALLY written even if df is nondeterministic (review finding)
-    before = spark.read.parquet(vdir).count()
-    rows.write.mode("append").partitionBy("centroid").parquet(vdir)
-    return int(spark.read.parquet(vdir).count() - before)

@@ -1,5 +1,5 @@
-"""Text analysis operators: token counting, quality scoring, language ID,
-document fingerprinting.
+"""Text analysis operators: token counting, quality scoring, deterministic
+splits, corpus mixing and stratified sampling.
 
 All hot paths are built-in Spark SQL expressions (JVM, whole-stage
 codegen) rendered from the dialect templates in
@@ -37,18 +37,6 @@ def with_quality(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def with_lang_id(df: DataFrame, col: str = "text") -> DataFrame:
-    e = TextExprs("spark", col)
-    return df.withColumn("pred_lang", F.expr(e.lang_id()))
-
-
-def with_fingerprints(df: DataFrame, col: str = "text") -> DataFrame:
-    e = TextExprs("spark", col)
-    return df.withColumn("fingerprint", F.expr(e.fingerprint_md5())).withColumn(
-        "rolling_fingerprint", F.expr(e.rolling_min_hash(5))
-    )
-
-
 def with_split(
     df: DataFrame, id_col: str = "doc_id", train: int = 90, val: int = 5
 ) -> DataFrame:
@@ -58,19 +46,6 @@ def with_split(
     e = TextExprs("spark")
     return df.withColumn(
         "split", F.expr(e.split_label(e._f("str", x=id_col), train, val))
-    )
-
-
-def bigram_counts(df: DataFrame, col: str = "text", k: int = 20) -> DataFrame:
-    """Top-``k`` whitespace-token bigrams: explode → hash groupBy →
-    ordered limit (TakeOrdered — no global sort)."""
-    e = TextExprs("spark", col)
-    return (
-        df.select(F.explode(F.expr(e.token_bigrams())).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), "bigram")
-        .limit(k)
     )
 
 

@@ -25,6 +25,10 @@ def _default_driver_mem() -> str:
 
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
+# the directory holding this package: Python workers see only their working
+# directory and $PYTHONPATH, so a driver started elsewhere must hand it on
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "pangeo-forge-recipes-spark",
@@ -84,7 +88,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, worker_path) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

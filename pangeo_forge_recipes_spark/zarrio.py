@@ -24,7 +24,7 @@ import math
 import os
 import struct
 import zlib
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -158,35 +158,6 @@ class LocalStore(Store):
                 return f.read()
             f.seek(offset)
             return f.read(length)
-
-
-class MemoryStore(Store):
-    """Dict-backed store: scratch pipelines, tests, and the smallest
-    possible reference implementation of the Store contract."""
-
-    def __init__(self):
-        self._data: Dict[str, bytes] = {}
-
-    def get(self, key: str) -> bytes:
-        return self._data[key]
-
-    def put(self, key: str, value: bytes) -> None:
-        self._data[key] = bytes(value)
-
-    def exists(self, key: str) -> bool:
-        return key in self._data
-
-    def list_prefix(self, prefix: str) -> Iterator[str]:
-        for k in sorted(self._data):
-            if k.startswith(prefix):
-                yield k
-
-    def rm_prefix(self, prefix: str) -> None:
-        for k in [k for k in self._data if k.startswith(prefix)]:
-            del self._data[k]
-
-    def size(self, key: str) -> int:
-        return len(self._data[key])
 
 
 def _fletcher32_verify_strip(buf: bytes) -> bytes:

@@ -124,27 +124,6 @@ def test_half_probe_reads_fewer_lists(spark, emb, index):
     assert probed.count() < full.count()
 
 
-def test_append_grows_index_with_saved_model(spark, emb, tmp_path):
-    path = str(tmp_path / "grow")
-    lo = emb.where("vec_id < 400")
-    hi = emb.where("vec_id >= 400")
-    sim.build_ivf_pq_index(lo, path, n_centroids=16, m=8, nbits=4)
-    n = sim.append_to_ivf_pq_index(hi, path)
-    assert n == hi.count()
-    full = spark.read.parquet(os.path.join(path, "vectors"))
-    assert full.count() == emb.count()
-    # appended vectors are queryable and results match an index built the
-    # same way end-to-end: same model (built on `lo`'s md5 sample — the
-    # append NEVER retrains), so codes for any vector are identical
-    q = emb.where("vec_id >= 400").limit(5)
-    out = sim.query_ivf_pq_index(spark, path, q, k=2, nprobe=16)
-    got_ids = {r["query_id"] for r in out.collect()}
-    assert got_ids == {r["vec_id"] for r in q.collect()}
-    # a vector present in both halves' encode paths has ONE code row per
-    # append (no rewrite of existing partitions)
-    assert full.where("vec_id = 0").count() == 1
-
-
 def test_empty_queries_short_circuit(spark, emb, index):
     """r8 advisor finding: zero query rows made the centroid .isin()
     raise a Py4J error; now it returns the empty contract frame."""

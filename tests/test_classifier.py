@@ -91,14 +91,6 @@ def test_tree_reduce_path_matches_flat(spark, labeled):
     assert tree["b"] == pytest.approx(flat["b"], abs=1e-9)
 
 
-def test_model_serialization_roundtrip(spark, labeled):
-    model = clf.train_quality_classifier(labeled, dim=1 << 10, epochs=3)
-    back = clf.model_from_bytes(clf.model_to_bytes(model))
-    assert np.array_equal(back["w"], model["w"])
-    assert back["b"] == model["b"]
-    assert back["dim"] == model["dim"] and back["bigrams"] == model["bigrams"]
-
-
 def test_classifier_filter_plan_is_map_side(spark, labeled):
     model = clf.train_quality_classifier(labeled, dim=1 << 10, epochs=3)
     out = clf.classifier_filter(labeled, model, threshold=0.5)
@@ -119,15 +111,6 @@ def test_scores_on_real_corpus(spark, labeled):
     rows = scored.select("doc_id", "quality_prob").collect()
     assert len(rows) == 100
     assert all(0.0 <= r["quality_prob"] <= 1.0 for r in rows)
-
-
-def test_threshold_for_keep_rate(spark, labeled):
-    model = clf.train_quality_classifier(labeled, dim=1 << 12, epochs=20)
-    thr = clf.threshold_for_keep_rate(labeled, model, keep_rate=0.5)
-    kept = clf.classifier_filter(labeled, model, threshold=thr).count()
-    assert 6 <= kept <= 10  # ~half of 16, quantile-boundary slack
-    with pytest.raises(ValueError):
-        clf.threshold_for_keep_rate(labeled, model, keep_rate=0.0)
 
 
 def test_md5_hash_variant_matches_duckdb():

@@ -15,10 +15,10 @@ import pytest
 from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
 from pangeo_forge_recipes_spark.aggregation import dataset_to_schema
 from pangeo_forge_recipes_spark.dap4io import (
+    _PROTOCOL_CACHE,
     Dap4Server,
     dap4_schema,
     dap_schema,
-    negotiate_dap_protocol,
     open_dap,
     parse_dmr,
     read_dap4,
@@ -101,16 +101,16 @@ def test_negotiation_and_openers_route(served):
     from pangeo_forge_recipes_spark.dap2io import serve_ndsets
 
     srv, ds = served
-    assert negotiate_dap_protocol(srv.url_for("full")) == "dap4"
     got = open_with_ndset(srv.url_for("full"), file_type=FileType.opendap)
+    assert _PROTOCOL_CACHE[srv.url_for("full")] == "dap4"
     assert_equal(got, ds)
     assert got.data_vars["bar"].data.dtype == np.dtype("i8")
     sch = read_schema(srv.url_for("full"), file_type=FileType.opendap)
     assert sch["dims"] == {"time": 6, "lat": 18, "lon": 36}
     # DAP2-only endpoint: .dmr 404s, negotiation falls back, open works
     with serve_ndsets({"d2": ds}) as old:
-        assert negotiate_dap_protocol(old.url_for("d2")) == "dap2"
         got2 = open_with_ndset(old.url_for("d2"), file_type=FileType.opendap)
+        assert _PROTOCOL_CACHE[old.url_for("d2")] == "dap2"
         assert_equal(got2, ds)
         assert got2.data_vars["bar"].data.dtype == np.dtype("f8")  # widened
         # pinning the protocol skips negotiation

@@ -1,5 +1,5 @@
 """Corpus-hygiene filter operators: repetition metrics, C4 line
-cleaning, PII scrubbing, contamination, blocklists — with independent
+cleaning, PII scrubbing, contamination — with independent
 Python reimplementations as oracles and plan-shape gates (no Python
 eval nodes in scalar paths, broadcast joins where promised)."""
 
@@ -9,8 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pangeo_forge_recipes_spark.operators import filters
-
-from .local_frames import frames_built_locally
 
 
 @pytest.fixture()
@@ -162,25 +160,6 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_domain_blocklist(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "https://www.spam.example/path?q=1"),
-            (2, "https://good.example/else"),
-            (3, "spam.example"),  # bare domain, no scheme
-            (4, "https://SPAM.example/other"),  # case-insensitive host
-        ],
-        "doc_id bigint, url string",
-    )
-    with frames_built_locally():
-        kept = filters.domain_blocklist_filter(df, "url", blocked=["spam.example"])
-    assert {r["doc_id"] for r in kept.collect()} == {2}
-    assert kept.columns == ["doc_id", "url"]
-
-    with pytest.raises(ValueError):
-        filters.domain_blocklist_filter(df, "url")
-
-
 def test_scalar_filters_have_no_python_nodes(docs):
     """Repetition metrics, C4 cleaning and PII scrub must stay JVM-side
     (no BatchEvalPython / ArrowEvalPython in the physical plan)."""
@@ -302,84 +281,3 @@ def test_dedup_lines_plan_broadcasts_frequent_set(spark):
     df = spark.createDataFrame(_LINE_DOCS, "doc_id long, text string")
     plan = dedup_lines(df)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # corpus lines never shuffle for the anti-join
-
-
-def test_gopher_quality_metrics_python_oracle(spark):
-    """symbol/bullet/ellipsis/alpha signals match a straightforward
-    Python implementation of the published Gopher definitions."""
-    rows = [
-        (1, "A normal sentence here.\nAnother decent line follows."),
-        (2, "- bullet one\n- bullet two\nplain line"),
-        (3, "trailing thoughts...\nmore…\nand # tags # here #"),
-        (4, "12345 67890 --- ###"),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in filters.with_gopher_quality_metrics(df).collect()
-    }
-
-    def oracle(text):
-        words = [w for w in text.split(" ") if w != ""]
-        nw = max(len(words), 1)
-        sym = text.count("#") + text.count("...") + text.count("…")
-        lines = [l.strip() for l in text.split("\n")]
-        lines = [l for l in lines if l]
-        nl = max(len(lines), 1)
-        bullet = sum(l[0] in "-*•" for l in lines)
-        ell = sum(l.endswith("...") or l.endswith("…") for l in lines)
-        alpha = sum(any(c.isalpha() and c.isascii() for c in w) for w in words)
-        return (sym / nw, bullet / nl, ell / nl, alpha / nw)
-
-    for i, text in rows:
-        sym, bullet, ell, alpha = oracle(text)
-        got = out[i]
-        assert got["symbol_word_ratio"] == pytest.approx(sym), (i, "sym")
-        assert got["bullet_line_frac"] == pytest.approx(bullet), (i, "bullet")
-        assert got["ellipsis_line_frac"] == pytest.approx(ell), (i, "ell")
-        assert got["alpha_word_frac"] == pytest.approx(alpha), (i, "alpha")
-    # plan stays JVM-side, no shuffle
-    plan = (
-        filters.with_gopher_quality_metrics(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_dup_ngram_char_frac_python_oracle(spark):
-    """Duplicated-n-gram coverage matches the union-of-spans Python
-    oracle; overlapping repeats are not double-counted and docs with no
-    repeats read 0.0."""
-    rows = [
-        (1, "a b c a b c a b c"),          # heavy repetition
-        (2, "all words unique in this doc"),
-        (3, "x y x y x y x y"),            # overlapping repeats
-        (4, "one two three one two three"),
-    ]
-    n = 2
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r[f"dup_{n}gram_char_frac"]
-        for r in filters.dup_ngram_char_frac(df, n=n).collect()
-    }
-
-    def oracle(text):
-        toks = text.split(" ")
-        grams = [tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-        from collections import Counter
-
-        cnt = Counter(grams)
-        covered = set()
-        for i, g in enumerate(grams):
-            if cnt[g] > 1:
-                covered.update(range(i, i + n))
-        return len(covered) / max(len(toks), 1)
-
-    for i, text in rows:
-        assert out[i] == pytest.approx(oracle(text)), (i, out[i], oracle(text))
-    assert out[2] == 0.0
-    assert out[1] == 1.0  # every token covered by a duplicated bigram

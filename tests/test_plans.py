@@ -103,18 +103,6 @@ def test_single_shuffle_for_aggregation(tables):
     assert plan.count("HashAggregate") == 2
 
 
-def test_bigram_counts_uses_take_ordered_not_global_sort(spark):
-    """Top-k over exploded bigrams must plan as TakeOrderedAndProject —
-    a per-partition heap + single driver merge — never a full global sort
-    of every distinct n-gram (unbounded at corpus scale)."""
-    from pangeo_forge_recipes_spark.operators.text import bigram_counts
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _simple_plan(bigram_counts(docs, k=20))
-    assert "TakeOrderedAndProject" in plan
-    assert "rangepartitioning" not in plan.lower()
-
-
 def test_text_expressions_stay_jvm_side(spark):
     """The sampling split and quality scores are pure built-in SQL
     expressions — no Python evaluation node may appear in the plan."""

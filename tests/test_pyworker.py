@@ -124,3 +124,39 @@ def test_driver_import_does_not_freeze():
         check=True,
     )
     assert out.stdout.strip() == "0"
+
+
+def test_workers_import_package_from_any_working_directory(tmp_path):
+    """A driver started outside the repository, with no $PYTHONPATH, still
+    runs Python UDFs that import the package: ``get_spark`` hands the
+    package's parent directory to the workers."""
+    import pangeo_forge_recipes_spark
+
+    repo = os.path.dirname(os.path.dirname(pangeo_forge_recipes_spark.__file__))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from pangeo_forge_recipes_spark.session import get_spark
+
+spark = get_spark(master="local[1]")
+
+@F.udf("string")
+def package_name(_):
+    import pangeo_forge_recipes_spark
+    return pangeo_forge_recipes_spark.__name__
+
+print("GOT", spark.range(1).select(package_name("id")).collect()[0][0])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "GOT pangeo_forge_recipes_spark" in out.stdout, out.stderr[-3000:]

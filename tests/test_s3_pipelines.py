@@ -193,8 +193,8 @@ def test_fsspec_target_surface_on_s3(s3):
 
 
 def test_ivf_pq_index_on_s3(spark, s3):
-    """The serving-tier index on the object store: build → query →
-    append entirely over s3, results identical to the local artifact,
+    """The serving-tier index on the object store: build → query
+    entirely over s3, results identical to the local artifact,
     and the query's GETs bounded to the probed centroids' objects."""
     import pytest as _pytest
 
@@ -202,7 +202,7 @@ def test_ivf_pq_index_on_s3(spark, s3):
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
     emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
-    lo, hi = emb.where("vec_id < 400"), emb.where("vec_id >= 400")
+    lo = emb.where("vec_id < 400")
 
     import tempfile
 
@@ -235,15 +235,6 @@ def test_ivf_pq_index_on_s3(spark, s3):
         # the probed part keys, and the empty frame when none match
         for probed in (range(16), []):
             assert_local_scan(sim._read_index_rows_s3(spark, "s3://annidx/idx", probed))
-        # append with the saved model, then appended ids are queryable
-        n = sim.append_to_ivf_pq_index(hi, "s3://annidx/idx")
-        assert n == hi.count()
-        out = sim.query_ivf_pq_index(
-            spark, "s3://annidx/idx", hi.limit(3), k=2, nprobe=16
-        )
-        assert {r["query_id"] for r in out.collect()} == {
-            r["vec_id"] for r in hi.limit(3).collect()
-        }
     # unknown scheme still raises loudly (gs:// became VALID in r9)
     with _pytest.raises(NotImplementedError):
         sim.build_ivf_pq_index(lo, "hdfs://nope/idx")

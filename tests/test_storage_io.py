@@ -506,24 +506,6 @@ def test_sharded_partial_reads_touch_only_needed_bytes(tmp_path):
     assert calls["get"] == 1 and calls["range"] == 0
 
 
-def test_memory_store_contract(tmp_path):
-    import numpy as np
-
-    from pangeo_forge_recipes_spark.zarrio import MemoryStore, create_group, open_group
-
-    store = MemoryStore()
-    g = create_group(store)
-    arr = g.create_array("x", shape=(4, 4), chunks=[2, 2], dtype="int64",
-                         fill_value=0)
-    data = np.arange(16).reshape(4, 4)
-    arr[:, :] = data
-    np.testing.assert_array_equal(open_group(store)["x"].read(), data)
-    assert store.size("x/c/0/0") > 0
-    assert store.get_range("x/c/0/0", 0, 4) == store.get("x/c/0/0")[:4]
-    store.rm_prefix("x")
-    assert not store.exists("x/zarr.json")
-
-
 def test_store_summary(tmp_path):
     from pangeo_forge_recipes_spark.dsio import store_summary
     from pangeo_forge_recipes_spark.zarrio import create_group

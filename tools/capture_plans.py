@@ -18,7 +18,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from pangeo_forge_recipes_spark.session import get_spark
+from bench import bench_session
 
 
 def main() -> None:
@@ -30,7 +30,7 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark, _ = bench_session("pfrs-capture-plans")
     qs = entrymod.queries()
     for name, fn in qs.items():
         if only and name not in only:

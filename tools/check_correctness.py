@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB at the same sf, compare
-row-count + schema + order-insensitive value hash.
+row-count + schema + order-insensitive value hash. A query without an
+oracle fails. Runs on ``bench.bench_session``'s session shape.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -18,7 +19,6 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from pangeo_forge_recipes_spark.session import get_spark
 
 TABLES = entrymod.TABLES
 
@@ -41,7 +41,10 @@ def frame_summary(pdf: pd.DataFrame):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    # imported here: perfbench imports this module for frame_summary alone
+    from bench import bench_session
+
+    spark, _ = bench_session("pfrs-check-correctness")
 
     con = duckdb.connect()
     for t in TABLES:
@@ -64,9 +67,8 @@ def main():
             continue
         t1 = time.time()
         if name not in oracles:
-            print(f"[ROWS-ONLY] {name}: {len(spark_pdf)} rows  ({t1-t0:.1f}s)")
-            if len(spark_pdf) == 0:
-                print(f"    WARNING: zero rows")
+            print(f"[FAIL-NO-ORACLE] {name}: {len(spark_pdf)} rows  ({t1-t0:.1f}s)")
+            failures.append(name)
             continue
         try:
             duck_pdf = con.execute(oracles[name]).fetchdf()
@@ -78,7 +80,10 @@ def main():
         n_d, cols_d, h_d, rows_d = frame_summary(duck_pdf)
         ok = n_s == n_d and cols_s == cols_d and h_s == h_d
         status = "OK" if ok else "MISMATCH"
-        print(f"[{status}] {name}: spark {n_s} rows / duck {n_d} rows  ({t1-t0:.1f}s)")
+        print(
+            f"[{status}] {name}: spark {n_s} rows / duck {n_d} rows"
+            f"  hash {h_s}/{h_d}  ({t1-t0:.1f}s)"
+        )
         if not ok:
             failures.append(name)
             if cols_s != cols_d:

@@ -17,13 +17,12 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session
 from pangeo_forge_recipes_spark.operators.dedup import hamming_near_dup
-from pangeo_forge_recipes_spark.session import get_spark
 
 
 def main() -> None:
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      app_name="pfrs-reusecheck")
+    spark, _ = bench_session("pfrs-reusecheck")
     sc = spark.sparkContext
     acc = sc.accumulator(0)
     n = 4000
