@@ -28,6 +28,7 @@ operator or a charter extension operator.
 from __future__ import annotations
 
 import atexit
+import functools
 import json
 import os
 import shutil
@@ -2799,24 +2800,6 @@ _PQ_K = 3
 _PQ_CODEBOOKS = [[[0.04309, 0.075986, 0.02288, 0.139787, 0.07087, -0.03871, 0.001957, -0.093104], [-0.081568, -0.119998, 0.036767, -0.048956, 0.035551, 0.128642, -0.06316, 0.116767], [0.116772, 0.018359, -0.010428, -0.099027, -0.142931, -0.088135, -0.009717, 0.08504], [-0.111138, -0.016621, -0.05079, -0.003703, -0.139237, -0.079475, -0.080764, -0.020952], [0.099634, -0.135298, -0.045095, -0.005251, -0.011664, 0.068558, -0.041823, -0.123985], [-0.184513, 0.017663, -0.01791, -0.000333, 0.078101, 0.092125, 0.141006, -0.010095], [0.064051, -0.104133, 0.02898, 0.117747, 0.055261, -0.00832, -0.158507, 0.076374], [0.018045, 0.113764, -0.177231, -0.032647, 0.002206, 0.057233, -0.018243, 0.12967], [-0.032371, -0.015162, 0.011063, 0.028298, 0.047398, -0.202435, 0.105437, 0.126742], [-0.059057, -0.012699, 0.0117, 0.1863, -0.117626, 0.044835, 0.054939, 0.056545], [0.190882, -0.002649, 0.015146, -0.031965, 0.069568, 0.033823, 0.012181, 0.140649], [-0.057816, 0.094038, 0.006907, 0.059497, 0.065533, 0.111649, -0.202715, -0.066341], [-0.054262, -0.078086, -0.122073, -0.110734, 0.142207, 0.070531, 0.066159, -0.099648], [0.015693, -0.00013, 0.110455, -0.062284, -0.042112, -0.063276, 0.091976, -0.08039], [0.00086, 0.137744, 0.069871, -0.075291, -0.093292, 0.141445, 0.000754, -0.036113], [-0.020845, -0.016, 0.066965, -0.08545, 0.141367, -0.097384, -0.10737, 0.024402]], [[-0.124351, -0.085724, 0.050194, 0.097733, 0.040407, 0.099461, 0.031425, 0.033278], [0.110536, -0.026989, -0.05723, 0.010883, 0.064158, -0.125376, 0.139335, 0.004815], [0.136494, 0.014579, -0.028348, 0.001764, -0.177362, -0.056798, 0.008018, -0.049183], [0.015306, -0.073331, 0.184701, -0.069564, 0.054258, -0.07826, -0.006205, 0.11072], [0.040844, -0.143298, -0.068412, -0.034887, 0.037426, 0.203634, -0.009586, 0.015159], [-0.005661, -0.00277, 0.009506, -0.200868, -0.093317, 0.082365, -0.034325, 0.088556], [-0.107162, 0.027234, 0.029412, -0.005505, -0.095987, -0.011932, -0.158948, -0.110646], [0.009929, -0.001835, 0.059093, 0.193467, -0.074164, -0.011586, -0.151203, 0.062576], [0.111688, 0.11412, -0.008426, 0.107966, 0.003367, 0.127828, 0.125371, 0.103086], [0.067729, 0.087479, 0.039212, -0.108078, 0.139874, 0.061223, -0.052967, -0.031462], [-0.005371, -0.05525, -0.082162, -0.005339, 0.029961, -0.034684, -0.091292, 0.182698], [-0.089534, 0.157719, -0.083378, 0.221048, 0.056136, -0.106574, -0.013856, -0.020129], [-0.085331, 0.145472, -0.025445, -0.06335, 0.077196, -0.101261, 0.048807, -0.024699], [-0.034363, -0.126435, 0.036666, -0.04758, -0.057789, -0.069246, 0.022796, -0.149615], [-0.043369, -0.007936, -0.183997, 0.115988, 0.011917, 0.056874, 0.061538, -0.019686], [-0.010441, 0.152557, 0.130953, 0.023669, -0.07768, 0.063298, 0.060778, -0.072959]], [[-0.067065, 0.041504, -0.105055, 0.017967, -0.072832, -0.032716, -0.116648, -0.064133], [-0.06305, -0.051512, 0.187524, 0.018478, -0.003642, 0.144084, -0.003691, 0.006179], [0.137897, -0.060232, -0.021218, -0.051552, -0.122461, -0.088933, -0.020247, 0.050758], [0.010387, 0.157602, 0.007172, -0.071385, -0.017288, -0.10901, 0.143751, -0.084879], [-0.10535, -0.047926, -0.027238, 0.077101, -0.016225, -0.023684, 0.119159, 0.137818], [0.114761, -0.027575, 0.116249, 0.110341, 0.053187, -0.017539, -0.103239, 0.017909], [0.122982, -0.021706, -0.013242, -0.074547, -0.072843, 0.063831, 0.005489, -0.153784], [-0.113932, 0.192102, 0.139822, -0.118439, -0.155748, -0.056003, -0.051857, -0.122175], [-0.051746, 0.008709, 0.040874, -0.105273, 0.139979, 0.02189, 0.128817, -0.232471], [0.062139, 0.116555, 0.004043, -0.104883, 0.137653, 0.013383, -0.015446, 0.01507], [0.03767, 0.074249, 0.062062, -0.090586, -0.155154, 0.125478, 0.055118, 0.147046], [0.019128, -0.052785, -0.112985, 0.111774, 0.031085, -0.051255, 0.08239, -0.096206], [-0.066885, -0.034821, 0.113833, -0.002866, -0.01227, -0.155682, -0.043088, 0.051028], [-0.107728, -0.196762, -0.072418, -0.038863, 0.033471, 0.008704, -0.084048, 0.003499], [-0.070145, 0.134139, 0.010841, 0.095628, -0.00645, 0.075536, 0.030934, -0.040369], [0.071772, -0.038745, -0.116662, 0.030748, 0.065451, 0.108757, 0.004168, 0.146538]], [[0.106138, 0.078095, -0.034466, 0.010813, 0.057461, 0.12636, -0.093183, 0.008154], [0.044742, -0.137635, 0.087374, -0.035993, 0.023206, -0.252532, -0.020813, -0.035052], [-0.092619, 0.020406, 0.022796, 0.063582, -0.184246, 0.003192, 0.124529, -0.059115], [0.031003, -0.102328, -0.070821, -0.070451, -0.087142, -0.003327, 0.027948, 0.089553], [-0.063061, -0.040948, -0.030697, 0.085826, 0.092079, -0.094067, -0.112212, -0.078831], [0.052034, 0.201307, 0.097485, -0.047728, 0.003991, -0.128689, 0.028872, -0.02345], [0.011133, -0.130294, 0.070362, 0.054343, 0.09055, -0.006119, 0.110637, 0.017332], [0.005676, 0.037125, -0.023954, 0.033824, -0.156724, -0.036853, -0.154173, -0.020254], [-0.080374, 0.003938, 0.182852, -0.025706, 0.013324, 0.149314, -0.027288, -0.067504], [0.106907, 0.136569, -0.035791, -0.002557, 0.009749, -0.021396, 0.029344, 0.195654], [-0.080374, 0.121454, -0.128819, 0.029877, 0.005379, -0.152909, 0.087852, -0.110364], [0.128092, 0.078863, -0.015794, 0.001079, -0.018653, 0.070846, 0.14297, -0.084645], [-0.094726, -0.017083, -0.051316, -0.140766, 0.094203, 0.002179, 0.021267, -0.112861], [0.039905, -0.101054, -0.104232, 0.148538, -0.019092, 0.068368, 0.031611, -0.082534], [-0.167754, 0.029468, -0.115623, 0.053406, 0.045032, 0.063598, -0.079389, 0.121547], [0.005775, 0.061259, 0.161466, 0.025122, 0.005769, -0.045349, -0.031136, 0.15078]], [[0.055214, -0.131186, -0.103039, -0.055191, -0.028759, -0.040149, 0.025639, -0.014938], [-0.003136, 0.010746, 0.052837, 0.066706, -0.20459, -0.139105, 0.104547, 0.0905], [-0.087864, 0.049451, -0.02738, -0.016962, 0.040539, -0.106694, -0.11584, -0.106779], [0.053933, 0.185424, -0.006986, -0.062983, -0.042053, 0.058131, 0.14769, 0.05084], [0.006256, -0.021309, 0.070176, 0.14768, 0.01801, -0.039086, -0.171147, -0.013436], [0.002145, -0.073083, 0.035979, -0.190877, 0.009268, -0.134633, -0.039899, 0.055581], [-0.136663, 0.005517, -0.030135, -0.081535, -0.095486, 0.107253, -0.066987, -0.071547], [-0.078265, 0.063162, -0.063741, 0.013198, -0.090213, 0.046874, -0.063277, 0.146012], [-0.011349, -0.046548, -0.008408, 0.077982, 0.207731, 0.035813, 0.065438, -0.06987], [-0.184619, -0.072488, 0.081095, 0.0189, 0.055081, 0.034118, 0.040604, 0.029038], [0.064675, -0.083748, 0.007549, 0.044775, 0.014798, 0.095571, 0.005307, 0.169964], [0.018575, 0.056312, 0.00356, -0.008925, -0.101905, -0.06866, -0.007177, -0.212237], [0.0307, 0.008577, -0.117301, 0.195111, 0.010809, -0.043805, 0.077624, -0.00951], [0.155228, 0.142979, 0.014172, -0.00242, 0.073956, -0.099167, -0.0751, -0.015427], [0.131712, -0.008382, 0.033274, -0.062245, 0.01883, 0.175899, -0.021145, -0.02526], [0.03371, -0.005454, 0.186978, 0.053467, -0.040091, 0.010132, 0.09182, -0.084729]], [[0.122656, -0.120946, -0.041414, -0.023418, -0.134751, 0.039163, -0.057886, 0.057583], [-0.072875, 0.131977, 0.064233, 0.023265, 0.156481, -0.060389, 0.136463, 0.052777], [0.061332, 0.116219, -0.055683, -0.090585, 0.012497, -0.128837, -0.024102, -0.089689], [-0.050585, 0.176805, -0.117345, -0.062747, -0.042923, 0.0094, 0.062226, 0.075603], [-0.017327, 0.006085, 0.088638, -0.043719, -0.011054, -0.11419, -0.18147, 0.016985], [-0.083909, 0.021828, -0.040088, 0.020965, -0.111588, -0.1741, 0.009363, 0.034367], [-0.007452, -0.016474, 0.107844, 0.060668, -0.035989, 0.091626, -0.113037, -0.146887], [-0.054813, -0.047172, -0.123914, 0.085738, 0.138163, 0.029689, -0.0869, 0.094268], [0.068328, 0.041633, -0.015312, 0.154009, -0.162525, 0.088509, 0.082992, -0.059092], [0.079415, 0.030422, 0.221521, -0.027139, -0.013666, 0.011168, 0.074836, -0.052105], [-0.153025, -0.015432, -0.075047, -0.146692, -0.036856, 0.037095, -0.102698, 0.001911], [-0.126349, -0.088173, 0.07177, 0.069895, -0.067499, 0.034315, 0.025784, 0.088278], [0.075613, -0.128035, 0.030028, -0.121615, 0.081334, -0.032737, 0.020803, 0.034322], [0.059781, -0.029403, -0.079258, 0.013906, 0.045739, 0.175683, 0.074933, 0.011988], [-0.030612, -0.107821, -0.09317, 0.071977, 0.020451, -0.055398, 0.086383, -0.112267], [0.051908, 0.104428, 0.015667, 0.025395, 0.008259, 0.036612, -0.082399, 0.169188]], [[-0.030303, -0.108012, -0.073947, -0.059952, -0.026543, 0.114012, -0.050741, -0.119528], [0.081852, 0.086739, 0.105441, -0.061284, 0.011601, -0.039919, -0.133562, -0.029615], [0.018251, -0.103482, 0.195818, 0.063631, -0.004467, 0.051064, 0.08216, 0.009106], [0.061635, 0.040336, -0.166746, 0.028024, 0.042248, -0.029386, 0.001359, 0.060026], [-0.025556, -0.127434, 0.023643, -0.080054, 0.166245, -0.00479, -0.091087, 0.05605], [-0.136552, 0.040047, 0.061236, 0.035626, 0.055237, 0.131466, -0.078143, 0.056285], [-0.092724, -0.043915, -0.049074, -0.074942, -0.16519, -0.092974, -0.049995, 0.053247], [0.10355, 0.093342, 0.072738, -0.036206, 0.103864, -0.031543, 0.116451, 0.034893], [-0.066209, 0.036631, -0.02756, 0.141938, -0.160897, 0.104092, 0.069223, -0.039732], [-0.122985, 0.00562, -0.028746, -0.074713, 0.121471, -0.046852, 0.081794, -0.091877], [-0.013934, 0.06937, 0.064054, 0.013445, -0.095272, -0.015171, -0.078658, -0.226414], [-0.018214, -0.163839, 0.021913, 0.002239, -0.006504, -0.169624, -0.032528, -0.080847], [-0.045181, 0.018637, 0.025269, 0.16284, 0.073726, -0.099998, 0.025203, 0.035266], [0.155092, -0.140646, 0.019727, 0.018813, -0.030486, 0.05048, -0.034005, 0.091326], [0.1013, 0.032972, -0.056822, -0.185793, -0.051796, 0.042949, 0.114652, -0.038216], [-0.096329, -0.044773, -0.029297, 0.020073, -0.068452, 0.068079, 0.109374, 0.09668]], [[0.114848, 0.116859, 0.100221, -0.036653, 0.054846, 0.101447, -0.083574, -0.057163], [-0.075491, -0.040822, 0.097873, 0.021483, -0.06619, -0.096209, 0.142151, -0.065565], [-0.084407, 0.173525, -0.01468, -0.015936, -0.094242, 0.002147, -0.081894, 0.087696], [0.03846, -0.197982, -0.026047, -0.123123, 0.048246, 0.005211, -0.014385, 0.06805], [0.057655, 0.014953, 0.066524, 0.054217, -0.098196, -0.135494, -0.066355, 0.054729], [-0.135757, -0.028206, 0.026931, -0.113569, 0.072977, 0.075058, 0.054576, 0.029823], [-0.039511, 0.016005, -0.131625, 0.142836, -0.002086, 0.001944, 0.086442, -0.032048], [-0.004338, -0.044086, -0.050678, -0.025868, -0.143986, 0.097966, -0.057924, -0.054033], [0.063633, 0.065904, -0.010566, -0.208741, -0.052486, -0.031751, 0.072385, -0.083159], [-0.095543, -0.023823, -0.005332, -0.059184, 0.068241, -0.006101, -0.066279, -0.179936], [0.060487, 0.033167, -0.084522, 0.054111, 0.135075, -0.015654, -0.049617, 0.132981], [-0.061375, -0.037395, 0.139097, 0.105088, 0.054836, 0.031987, -0.114741, -0.068841], [0.151337, -0.06352, -0.050145, 0.05099, 0.047891, -0.157592, 0.008786, -0.16762], [0.079851, -0.120099, -0.001222, 0.104506, -0.007334, 0.140791, 0.048432, -0.030945], [0.071995, 0.008525, 0.066325, -0.016879, -0.010612, 0.060833, 0.141592, 0.144954], [0.029258, 0.038994, -0.196181, -0.096418, 0.052886, -0.133473, 0.000684, 0.002609]]]
 
 
-def _ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN self-search (operators/similarity
-    pq_topk): the corpus encodes to m=8 4-bit codes against the pinned
-    codebooks (map-only, broadcast model), then asymmetric-distance
-    search scores every query against the byte codes via one
-    (m, 16) lookup table per query batch — the 16-32x-compressed tier
-    of the ANN family. The oracle re-derives codes, LUTs and rankings
-    from the same pinned tensor with DuckDB list functions."""
-    import numpy as np
-
-    from pangeo_forge_recipes_spark.operators.similarity import pq_topk
-
-    _register(spark, sf_dir)
-    emb = spark.table("embeddings")
-    books = np.array(_PQ_CODEBOOKS, dtype=np.float64)
-    return pq_topk(emb, k=_PQ_K, codebooks=books)
-
-
 def _ivf_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF×PQ composition (operators/similarity ivf_pq_topk) — the
     billion-vector tier: inverted lists bound each query's candidate set
@@ -3090,9 +3073,9 @@ def _spill_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r10 VERDICT ask #1): the zarr round-trip oracle re-run with
     ``rechunk_shuffle="spill"`` forced — decode once, spill each piece's
     NDS1 frame to target-adjacent scratch, metadata-only exchange,
-    range-read on combine (transforms.open_split_spill_df /
-    rechunk_and_store). Chunks are deliberately MISALIGNED with the file
-    grain (4 files x 2 steps -> chunks of 5) so every target chunk
+    range-read on combine (transforms.open_split_fragments_df with a
+    scratch root / rechunk_and_store). Chunks are deliberately MISALIGNED
+    with the file grain (4 files x 2 steps -> chunks of 5) so every target chunk
     combines fragments from multiple sources through the spill wire
     format. The query asserts
     full element equality against the generator AND that the scratch
@@ -3711,10 +3694,14 @@ GRADED = (
 Query = Callable[[SparkSession, str], DataFrame]
 
 
+@functools.cache
 def _catalog() -> dict[str, tuple[Query, str]]:
     """name -> (Spark query, DuckDB SQL computing the same result): every
     matched pair, the ``GRADED`` ones and the ungraded ones that
-    ``bench.py`` times and ``tests/test_shared_sql_parity.py`` checks."""
+    ``bench.py`` times and ``tests/test_shared_sql_parity.py`` checks.
+    Built once per process: building it only renders SQL text (the
+    queries register their tables when they run), so callers share one
+    table and must not mutate it."""
     shared = _shared_sql()
     text_duck = _text_sql("duckdb")
     pipeline = _pipeline_oracle_sql()

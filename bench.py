@@ -12,7 +12,7 @@ Four sections, in this order:
    ``cpus`` threads to the FAIR scheduler — the headline ``value``;
 3. ×10 stress growth of the dedup/ANN scale paths;
 4. 800 MB ``store_to_zarr`` MB/s: npz shuffled / aligned / shuffled_refs
-   / sharded variants, and the zarr-source payload / reference pair.
+   / sharded variants, and the zarr-source spill / reference pair.
 
 Nothing waits on host state; the artifact records it instead: the
 environment once (``perfbench/procstat.environment``) and the host's
@@ -224,7 +224,7 @@ def _bench_zarr_800mb(spark, work: str, cpus: int) -> dict:
     file-aligned variant as many write tasks as a 32-core host has
     cores; on fewer cores every variant still fills the session).
 
-    npz set, one rotation: ``shuffled`` (payload rechunk to 32-step
+    npz set, one rotation: ``shuffled`` (spill rechunk to 32-step
     chunks, straddling files), ``aligned`` (8-step chunks, the
     zero-shuffle path), ``shuffled_refs`` (the metadata-only exchange)
     and ``sharded`` (16-step chunks in 32-step shards: the same stored-
@@ -232,9 +232,9 @@ def _bench_zarr_800mb(spark, work: str, cpus: int) -> dict:
     container encode against the raw chunk encode).
 
     zarr-source pair: the same data as 32 chunk-lazy zarr stores, where
-    payload mode reads every source whole and ships the corpus through
-    the exchange, while reference mode shuffles (group_key, url) rows and
-    each write task range-reads exactly its group's chunks.
+    spill mode reads every source whole and ships the corpus through the
+    exchange and scratch, while reference mode shuffles (group_key, url)
+    rows and each write task range-reads exactly its group's chunks.
 
     Every run is followed by sync + store removal (the next run must not
     pay this one's dirty pages); fixture synthesis is thread-pooled and
@@ -315,17 +315,17 @@ def _bench_zarr_800mb(spark, work: str, cpus: int) -> dict:
 
     chunks32 = {"target_chunks": {"time": 32}}
     npz_variants = {
-        "shuffled": {**chunks32, "rechunk_shuffle": "payload"},
+        "shuffled": {**chunks32, "rechunk_shuffle": "spill"},
         "aligned": {"target_chunks": {"time": per}},
         "shuffled_refs": {**chunks32, "rechunk_shuffle": "reference"},
         "sharded": {
             "target_chunks": {"time": 16},
             "target_shards": {"time": 32},
-            "rechunk_shuffle": "payload",
+            "rechunk_shuffle": "spill",
         },
     }
     zarr_variants = {
-        "payload": {**chunks32, "rechunk_shuffle": "payload"},
+        "spill": {**chunks32, "rechunk_shuffle": "spill"},
         "reference": {**chunks32, "rechunk_shuffle": "reference"},
     }
     try:
@@ -353,7 +353,7 @@ def _bench_zarr_800mb(spark, work: str, cpus: int) -> dict:
     out["sharded_over_chunked"] = ratio("shuffled", "sharded")
     out["reference_mode_lazy"] = {
         **{label: row(label) for label in zarr_variants},
-        "reference_over_payload_speedup": ratio("payload", "reference"),
+        "reference_over_spill_speedup": ratio("spill", "reference"),
     }
     return out
 

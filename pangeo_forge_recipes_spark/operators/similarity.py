@@ -15,7 +15,6 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -33,6 +32,10 @@ from ..session import local_df
 #: 2 GiB ≈ 4M 64-d float64 vectors — comfortably inside a local driver,
 #: far below what a cluster driver tolerates, and overridable per call.
 DEFAULT_BROADCAST_BOUND_BYTES = 2 << 30
+
+#: :func:`lsh_ann_topk` broadcasts its capped candidate side when the
+#: vectors estimate at most this many bytes; above it the join shuffles.
+LSH_BROADCAST_BYTES = 256 << 20
 
 
 def estimate_collect_bytes(
@@ -299,14 +302,11 @@ def lsh_ann_topk(
     # broadcast gate, hint a broadcast so the probe side streams with no
     # exchange at all. Above the gate (or on estimate failure) the hint
     # is skipped and the planner keeps the shuffle join.
-    bound = int(
-        os.environ.get("SPARK_GRAFT_LSH_BROADCAST_BYTES", str(256 << 20))
-    )
     try:
         _, _, est = estimate_collect_bytes(vecs, vec_col)
     except Exception:
-        est = bound + 1
-    if est <= bound:
+        est = LSH_BROADCAST_BYTES + 1
+    if est <= LSH_BROADCAST_BYTES:
         r = F.broadcast(r)
     pairs = l.join(r, "bucket").filter(F.col("vec_id") != F.col("neighbor_id"))
 

@@ -24,8 +24,8 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   ``transforms.py:276-301,428-554``);
 * the rechunk is the engine's **single data shuffle**, one pipeline in
   every mode: pieces (open → split → explode by variable) → transport →
-  one write kernel. The payload and spill modes group on the chunk key
-  with ``groupBy(group_key).applyInArrow``; the reference mode
+  one write kernel. The spill mode groups on the chunk key with
+  ``groupBy(group_key).applyInArrow``; the reference mode
   range-partitions its ``(group_key, url)`` rows (reference flags the
   same GroupByKey as the one perf hazard, ``transforms.py:414``);
 * combine + region-write are **fused in the same task** — a combined chunk
@@ -80,7 +80,10 @@ from .types import CombineOp, Dimension, Index, augment_index_with_start_stop
 from .zarrio import consolidate_metadata as _consolidate_metadata
 
 MANIFEST_SCHEMA = "index string, url string"
-SPLIT_SCHEMA = "group_key string, index string, payload binary"
+SPLIT_SCHEMA = (
+    "group_key string, index string, payload binary, "
+    "url string, offset bigint, length bigint"
+)
 REFS_SCHEMA = "group_key string, index string, url string"
 STATUS_SCHEMA = "group_key string, index string, n_vars int, nbytes bigint"
 SCHEMAS_SCHEMA = "index string, schema string"
@@ -350,10 +353,10 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
 # ---------------------------------------------------------------------------
 # rechunk (reference ``Rechunk``, ``transforms.py:401-417``): every mode is
 # pieces → transport → one write kernel. ``_pieces`` turns a manifest row
-# into single-variable pieces keyed by target chunk ⊕ variable; payload,
-# reference and spill differ only in how a piece reaches its group, and the
-# aligned path writes each piece as a one-piece group. ``_write_group``
-# combines and writes a group the same way for all four.
+# into single-variable pieces keyed by target chunk ⊕ variable; reference
+# and spill differ only in how a piece reaches its group, and the aligned
+# path writes each piece as a one-piece group. ``_write_group`` combines
+# and writes a group the same way for all three.
 # ---------------------------------------------------------------------------
 
 
@@ -441,49 +444,75 @@ def _frame_size(parts) -> int:
     return sum(memoryview(p).nbytes for p in parts)
 
 
+#: pieces whose frame is at most this many bytes ride the shuffle inline
+#: (coords, tiny edge chunks) — a scratch round-trip per 100-byte
+#: coordinate would be pure request overhead
+SPILL_INLINE_BYTES = 1 << 20
+
 #: a binary column's offsets are int32, so one split batch carries at most
-#: this many payload bytes; a batch is flushed before it would pass them
+#: this many inline payload bytes; a batch is flushed before it would pass
+#: them (spilled frames travel as ``(url, offset, length)`` and do not count)
 _SPLIT_BATCH_BYTES = 2**31 - 1
 
 
 def _frame_batches(
-    pieces: Iterator[Tuple[str, Index, NDDataset]]
+    pieces: Iterator[Tuple[str, Index, NDDataset]],
+    scratch_url: Optional[str],
+    inline_bytes: int,
 ) -> Iterator[pa.RecordBatch]:
-    """Pack pieces into :data:`SPLIT_SCHEMA` record batches whose payload
-    column is built over ONE buffer that each NDS1 frame part is written
-    into directly — one Python-side copy per payload byte. Raises
-    ``ValueError`` naming the group key when a single frame is over
-    :data:`_SPLIT_BATCH_BYTES`."""
+    """Pack pieces into :data:`SPLIT_SCHEMA` record batches. A frame of at
+    most ``inline_bytes`` (every frame when ``scratch_url`` is None) is
+    written straight into the batch's ONE payload buffer — one
+    Python-side copy per byte; a larger frame is appended to the
+    ``scratch_url`` object and its row carries ``(url, offset, length)``.
+    Raises ``ValueError`` naming the group key when a single inline frame
+    is over :data:`_SPLIT_BATCH_BYTES`."""
 
-    def batch(keys, idxs, data, offsets) -> pa.RecordBatch:
+    def batch(keys, idxs, data, offsets, spans) -> pa.RecordBatch:
         payload = pa.Array.from_buffers(
             pa.binary(),
             len(keys),
             [None, pa.py_buffer(np.asarray(offsets, dtype=np.int32)), pa.py_buffer(data)],
         )
+        urls, offs, lens = zip(*spans) if spans else ((), (), ())
         return pa.RecordBatch.from_arrays(
-            [pa.array(keys, pa.string()), pa.array(idxs, pa.string()), payload],
-            names=["group_key", "index", "payload"],
+            [pa.array(keys, pa.string()), pa.array(idxs, pa.string()), payload,
+             pa.array(urls, pa.string()), pa.array(offs, pa.int64()),
+             pa.array(lens, pa.int64())],
+            names=["group_key", "index", "payload", "url", "offset", "length"],
         )
 
-    keys, idxs, data, offsets = [], [], bytearray(), [0]
+    keys, idxs, data, offsets, spans = [], [], bytearray(), [0], []
+    spilled, pos = [], 0
     for key, sub_idx, single in pieces:
         parts = single.frame_parts()
         size = _frame_size(parts)
-        if size > _SPLIT_BATCH_BYTES:
-            raise ValueError(
-                f"piece {key!r} frames to {size} bytes, over the "
-                f"{_SPLIT_BATCH_BYTES}-byte limit of one Arrow binary batch"
-            )
-        if keys and len(data) + size > _SPLIT_BATCH_BYTES:
-            yield batch(keys, idxs, data, offsets)
-            keys, idxs, data, offsets = [], [], bytearray(), [0]
+        if scratch_url and size > inline_bytes:
+            spilled.append(parts)
+            span = (scratch_url, pos, size)
+            pos += size
+        else:
+            if size > _SPLIT_BATCH_BYTES:
+                raise ValueError(
+                    f"piece {key!r} frames to {size} bytes, over the "
+                    f"{_SPLIT_BATCH_BYTES}-byte limit of one Arrow binary batch"
+                )
+            if keys and len(data) + size > _SPLIT_BATCH_BYTES:
+                yield batch(keys, idxs, data, offsets, spans)
+                keys, idxs, data, offsets, spans = [], [], bytearray(), [0], []
+            for part in parts:
+                data += part
+            span = ("", -1, -1)
         keys.append(key)
         idxs.append(sub_idx.to_json())
-        for part in parts:
-            data += part
         offsets.append(len(data))
-    yield batch(keys, idxs, data, offsets)
+        spans.append(span)
+    if spilled:
+        with open_output_stream(scratch_url) as f:
+            for parts in spilled:
+                for part in parts:
+                    f.write(part)
+    yield batch(keys, idxs, data, offsets, spans)
 
 
 def open_split_fragments_df(
@@ -493,19 +522,36 @@ def open_split_fragments_df(
     schema: Optional[XarraySchema] = None,
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
+    scratch_root: Optional[str] = None,
 ) -> DataFrame:
-    """Payload split: open → [preprocess] → split in ONE Python step
-    (fused with :func:`index_items` before it), emitting ``(group_key,
-    index, payload)`` rows whose payload is the piece's NDS1 frame. The MB-scale bytes cross JVM↔Python once
-    before the shuffle; each source file's pieces leave as one record
-    batch (more only past :data:`_SPLIT_BATCH_BYTES`)."""
+    """The eager split: open → [preprocess] → split in ONE Python step
+    (fused with :func:`index_items` before it), decoding each source
+    once and emitting :data:`SPLIT_SCHEMA` rows. A piece's NDS1 frame
+    rides inline in ``payload`` when it is at most
+    :data:`SPILL_INLINE_BYTES`; a larger one is appended to ONE scratch
+    object per source under ``scratch_root`` (keyed by the source's
+    index, so a retried task rewrites the same object) and its row
+    carries ``(url, offset, length)``. With ``scratch_root`` None every
+    frame goes inline. Each source's pieces leave as one record batch
+    (more only past :data:`_SPLIT_BATCH_BYTES` of inline bytes);
+    :func:`rechunk_and_store` combines either kind of row."""
+
+    # read here, on the driver, so the step ships the driver's value
+    inline_bytes = SPILL_INLINE_BYTES
 
     def open_split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for idx_json, url in _rows(batch, "index", "url"):
+                scratch_url = (
+                    f"{scratch_root.rstrip('/')}/spill-"
+                    f"{hashlib.md5(idx_json.encode()).hexdigest()}.raw"
+                    if scratch_root else None
+                )
                 yield from _frame_batches(
                     _pieces(idx_json, url, file_type, target_chunks, schema,
-                            xarray_open_kwargs, preprocess)
+                            xarray_open_kwargs, preprocess),
+                    scratch_url,
+                    inline_bytes,
                 )
 
     return map_batches(df, open_split, SPLIT_SCHEMA)
@@ -515,35 +561,27 @@ def rechunk_and_store(
     df_split: DataFrame,
     target_store_path: str,
 ) -> DataFrame:
-    """Fused combine+write for the payload and spill shuffles: each
+    """Fused combine+write for the spill shuffle: each
     ``groupBy(group_key)`` group assembles its target chunk and writes
     its aligned region in the same task (reference ``transforms.py:414``
     + ``StoreDatasetFragments``); only status rows return.
 
     The group crosses JVM→Python as Arrow data (``applyInArrow``). A
     row's NDS1 frame is its ``payload`` cell, read as a zero-copy
-    ``np.frombuffer`` view over the Arrow buffer — or, for spill rows
-    with ``url`` set, one range-get of ``(url, offset, length)``."""
-    has_url = "url" in df_split.columns
-    status_schema = pa.schema(
-        [("group_key", pa.string()), ("index", pa.string()),
-         ("n_vars", pa.int32()), ("nbytes", pa.int64())]
-    )
+    ``np.frombuffer`` view over the Arrow buffer — or, when ``url`` is
+    set, one range-get of ``(url, offset, length)``. Scratch is read
+    only here, after the split stage has committed."""
 
     def combine_write(tbl: pa.Table) -> pa.Table:
         frags = []
         for batch in tbl.to_batches():
-            idx_col, payload_col = batch.column("index"), batch.column("payload")
-            urls = batch.column("url").to_pylist() if has_url else [None] * batch.num_rows
-            for i, url in enumerate(urls):
-                if url:
-                    off, length = batch.column("offset")[i].as_py(), batch.column("length")[i].as_py()
-                    buf = url_range_get(url, off, length)
-                else:
-                    buf = payload_col[i].as_buffer()
-                frags.append((Index.from_json(idx_col[i].as_py()), NDDataset.from_bytes(buf)))
+            payload_col = batch.column("payload")
+            rows = _rows(batch, "index", "url", "offset", "length")
+            for i, (idx_json, url, off, length) in enumerate(rows):
+                buf = url_range_get(url, off, length) if url else payload_col[i].as_buffer()
+                frags.append((Index.from_json(idx_json), NDDataset.from_bytes(buf)))
         row = _write_group(tbl.column("group_key")[0].as_py(), frags, target_store_path)
-        return pa.Table.from_pylist([row], schema=status_schema)
+        return pa.Table.from_batches([arrow_batch(STATUS_SCHEMA, [[v] for v in row.values()])])
 
     return df_split.groupBy("group_key").applyInArrow(combine_write, STATUS_SCHEMA)
 
@@ -685,77 +723,6 @@ def rechunk_refs_and_store(
     return part.mapInArrow(run, STATUS_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# spill shuffle — eager formats made chunk-lazy for the price of one
-# scratch write (r9 verdict #5: in payload mode the corpus crosses
-# Python→JVM, the shuffle, and JVM→Python, and that transport is the
-# tax). Spill mode decodes each source ONCE, writes each spilled piece's
-# NDS1 frame to a scratch object next to the target, shuffles
-# O(#fragments) metadata rows, and the payload-mode combine range-reads
-# exactly its pieces — the reference-mode exchange pattern, available to
-# formats that cannot byte-range-serve their own chunks.
-# ---------------------------------------------------------------------------
-
-SPILL_SCHEMA = (
-    "group_key string, index string, payload binary, "
-    "url string, offset bigint, length bigint"
-)
-
-#: pieces whose frame is at most this many bytes ride the shuffle inline
-#: (coords, tiny edge chunks) — a scratch round-trip per 100-byte
-#: coordinate would be pure request overhead
-SPILL_INLINE_BYTES = 1 << 20
-
-
-def open_split_spill_df(
-    df: DataFrame,
-    scratch_root: str,
-    file_type: Union[str, FileType] = FileType.npz,
-    target_chunks: Optional[Dict[str, int]] = None,
-    schema: Optional[XarraySchema] = None,
-    xarray_open_kwargs: Optional[dict] = None,
-    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-) -> DataFrame:
-    """Open → [preprocess] → split → SPILL: each source file decodes
-    exactly once; every piece's NDS1 frame appends to ONE scratch object
-    per source (keyed by the source's index, so task retries rewrite the
-    same object — idempotent), and the emitted rows carry only
-    ``(group_key, index, scratch_url, offset, length)``. Frames of at most
-    :data:`SPILL_INLINE_BYTES` ship inline in ``payload`` instead.
-    :func:`rechunk_and_store` combines either kind of row."""
-
-    def split_spill(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for idx_json, url in _rows(batch, "index", "url"):
-                scratch_url = (
-                    scratch_root.rstrip("/")
-                    + "/spill-"
-                    + hashlib.md5(idx_json.encode()).hexdigest()
-                    + ".raw"
-                )
-                rows, spilled, pos = [], [], 0
-                for key, sub_idx, single in _pieces(
-                    idx_json, url, file_type, target_chunks, schema,
-                    xarray_open_kwargs, preprocess,
-                ):
-                    parts = single.frame_parts()
-                    size = _frame_size(parts)
-                    if size <= SPILL_INLINE_BYTES:
-                        rows.append((key, sub_idx.to_json(), b"".join(parts), "", -1, -1))
-                    else:
-                        spilled.append(parts)
-                        rows.append((key, sub_idx.to_json(), b"", scratch_url, pos, size))
-                        pos += size
-                if spilled:
-                    with open_output_stream(scratch_url) as f:
-                        for parts in spilled:
-                            for part in parts:
-                                f.write(part)
-                yield arrow_batch(SPILL_SCHEMA, zip(*rows))
-
-    return map_batches(df, split_spill, SPILL_SCHEMA)
-
-
 def open_split_store_df(
     df: DataFrame,
     store_path: str,
@@ -858,19 +825,11 @@ _CHUNK_LAZY_TYPES = frozenset({FileType.npz, FileType.zarr, FileType.kerchunk})
 def _auto_rechunk_shuffle(file_type: FileType, preprocess) -> str:
     """Default shuffle mode when the caller does not pick one: reference
     for chunk-lazy formats without a preprocessor (write tasks
-    range-read their pieces straight from the sources), payload
-    otherwise. ``"spill"`` is deliberately NOT the eager-format default:
-    on local[32]+tmpfs matched alternating A/B reads payload and spill
-    within noise of each other (0.7–1.4× across three runs — the extra
-    scratch write+read of the corpus roughly cancels the saved
-    JVM↔Python transport), so the local default keeps the simpler
-    plan. Opt into spill where its structure wins: real clusters whose
-    shuffle storage cannot absorb a full corpus write+read, or
-    object-store targets where scratch rides the same unbounded
-    storage as the output."""
+    range-read their pieces straight from the sources), spill otherwise
+    (each source decodes once)."""
     if preprocess is None and file_type in _CHUNK_LAZY_TYPES:
         return "reference"
-    return "payload"
+    return "spill"
 
 
 def store_to_zarr(
@@ -913,38 +872,27 @@ def store_to_zarr(
     object-store requests).
 
     ``rechunk_shuffle`` picks what THE shuffle moves when source and
-    target chunking misalign: ``"payload"`` ships fragment
-    bytes through the exchange (one source read; data crosses
-    shuffle disk + Python↔JVM twice); ``"reference"`` ships only
+    target chunking misalign: ``"reference"`` ships only
     ``(group_key, file_index, url)`` rows and the write tasks re-open
     their source files directly (exchange volume drops from O(data) to
     O(#fragments); sources are read a second time, but only the needed
     pieces for chunk-lazy formats). ``"spill"`` decodes each source
-    once, writes every spilled piece's NDS1 frame to a scratch object
-    next to the target, ships metadata rows, and write tasks
-    range-read exactly their frames (one extra transient write+read of
-    the corpus on target-adjacent storage; scratch removed when the
-    run completes). At 100 TB payload mode is the one that does NOT
-    scale: it writes+reads the entire corpus through shuffle storage
-    AND crosses it Python↔JVM twice (measured: the transport is the
-    whole 2-3× tax; python-side pickling is <10% of it), while
-    reference/spill keep the exchange in the megabytes regardless of
-    data size. The default (``None``) auto-picks: ``"reference"`` for
-    chunk-lazy source formats with no user preprocessor (the second
-    read touches only the needed byte ranges), ``"payload"`` otherwise
-    — on local[32] matched A/B the scratch round-trip cancels spill's
-    transport saving, so spill stays OPT-IN for deployments where
-    shuffle-storage volume is the binding constraint (a 100 TB corpus
-    through the shuffle service vs one transient object-store copy).
+    once, ships frames of at most ``SPILL_INLINE_BYTES`` inline through
+    the exchange, writes larger ones to a scratch object next to the
+    target, and write tasks range-read exactly those frames (scratch
+    removed when the run completes). The default (``None``) picks
+    ``"reference"`` for chunk-lazy source formats with no user
+    preprocessor, ``"spill"`` otherwise. The former ``"payload"`` mode,
+    which shipped every frame inline, was merged into ``"spill"`` and
+    now raises ``ValueError``.
     """
     if target_chunks and dynamic_chunking_fn:
         raise ValueError("Passing both `target_chunks` and `dynamic_chunking_fn` not allowed.")
     if rechunk_shuffle is None:
         rechunk_shuffle = _auto_rechunk_shuffle(pattern.file_type, preprocess)
-    if rechunk_shuffle not in ("payload", "reference", "spill"):
+    if rechunk_shuffle not in ("reference", "spill"):
         raise ValueError(
-            f"rechunk_shuffle must be 'payload', 'reference', or 'spill', "
-            f"got {rechunk_shuffle!r}"
+            f"rechunk_shuffle must be 'reference' or 'spill', got {rechunk_shuffle!r}"
         )
     if target_shards:
         for d, s in target_shards.items():
@@ -1023,6 +971,7 @@ def store_to_zarr(
     # fragment bytes cross JVM↔Python once before the shuffle; when chunks
     # align with file boundaries the shuffle is skipped entirely
     indexed = index_items(manifest, schema, append_offset=append_offset)
+    scratch_root = store_path.rstrip("/") + ".spill"
     shuffled = not _chunks_aligned_with_files(schema, write_chunks, append_offset)
     if shuffled and rechunk_shuffle == "reference":
         refs = open_split_refs_df(
@@ -1042,18 +991,6 @@ def store_to_zarr(
             preprocess=preprocess,
             xarray_open_kwargs=xarray_open_kwargs,
         )
-    elif shuffled and rechunk_shuffle == "spill":
-        scratch_root = store_path.rstrip("/") + ".spill"
-        spill = open_split_spill_df(
-            indexed,
-            scratch_root,
-            file_type,
-            target_chunks=write_chunks,
-            schema=schema,
-            preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
-        statuses = rechunk_and_store(spill, store_path)
     elif shuffled:
         split = open_split_fragments_df(
             indexed,
@@ -1062,6 +999,7 @@ def store_to_zarr(
             schema=schema,
             preprocess=preprocess,
             xarray_open_kwargs=xarray_open_kwargs,
+            scratch_root=scratch_root,
         )
         statuses = rechunk_and_store(split, store_path)
     else:
@@ -1084,7 +1022,7 @@ def store_to_zarr(
         # target a leaked .spill/ prefix is a transient copy of the
         # corpus sitting on paid storage
         if shuffled and rechunk_shuffle == "spill":
-            _cleanup_scratch(store_path.rstrip("/") + ".spill")
+            _cleanup_scratch(scratch_root)
 
     if consolidate_coords:
         _consolidate_coords(store_path)

@@ -75,9 +75,9 @@ def _detail(heavy: bool) -> dict:
             "shuffled_over_aligned_tax": 12.34,
             "sharded_over_chunked": 1.23,
             "reference_mode_lazy": {
-                "payload": _variant(2.5),
+                "spill": _variant(2.5),
                 "reference": _variant(2.0),
-                "reference_over_payload_speedup": 1.25,
+                "reference_over_spill_speedup": 1.25,
             },
         }
     return detail

@@ -591,15 +591,15 @@ def _store_files(root) -> dict:
 
 
 @pytest.mark.parametrize("target_chunks", [{"time": 3}, {"time": 4}])
-def test_reference_shuffle_equals_payload_shuffle(
+def test_reference_shuffle_equals_spill_shuffle(
     spark, tmp_path, target_chunks, monkeypatch
 ):
     """Every rechunk mode runs the same pieces → write kernel pipeline,
-    so the stores are byte-identical file for file: payload, reference
-    (re-reads sources on the write side), spill with pieces inline and
-    with every piece through scratch, and the aligned no-shuffle path
-    (files cut at the chunk grain). The spill combine is the payload
-    mode's ``applyInArrow`` kernel, not a pandas one."""
+    so the stores are byte-identical file for file: spill with pieces
+    inline and with every piece through scratch, reference (re-reads
+    sources on the write side), and the aligned no-shuffle path (files
+    cut at the chunk grain). The spill combine is an ``applyInArrow``
+    kernel, not a pandas one."""
     import pangeo_forge_recipes_spark.transforms as T
 
     ds = make_ds(nt=10)
@@ -613,17 +613,23 @@ def test_reference_shuffle_equals_payload_shuffle(
         T, "rechunk_and_store",
         lambda *a, **k: combined.append(real_combine(*a, **k)) or combined[-1],
     )
+    scratch = []  # the scratch objects each spill run left for cleanup
+    real_cleanup = T._cleanup_scratch
+    monkeypatch.setattr(
+        T, "_cleanup_scratch",
+        lambda root: scratch.append(os.listdir(root) if os.path.isdir(root) else [])
+        or real_cleanup(root),
+    )
 
-    def run(name, pat=pattern, mode="payload"):
+    def run(name, pat=pattern, mode="spill"):
         return store_to_zarr(
             spark, pat, str(tmp_path / name), "store.zarr",
             target_chunks=target_chunks, rechunk_shuffle=mode,
         )
 
     results = {
-        "payload": run("payload"),
+        "spill": run("spill"),
         "reference": run("reference", mode="reference"),
-        "spill": run("spill", mode="spill"),
     }
     plan = combined[-1]._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapGroupsInArrow" in plan
@@ -631,6 +637,9 @@ def test_reference_shuffle_equals_payload_shuffle(
     with monkeypatch.context() as m:
         m.setattr(T, "SPILL_INLINE_BYTES", 0)
         results["spill_scratch"] = run("spill_scratch", mode="spill")
+    # KB-scale frames all ride inline by default; at threshold 0 every
+    # source spills to its own scratch object
+    assert len(scratch) == 2 and scratch[0] == [] and len(scratch[1]) == len(paths)
     aligned_paths = split_ds_into_files(
         ds, str(tmp_path / "src_aligned"), items_per_file=target_chunks["time"]
     )
@@ -640,12 +649,12 @@ def test_reference_shuffle_equals_payload_shuffle(
 
     assert not results["aligned"].shuffled
     assert all(r.shuffled for k, r in results.items() if k != "aligned")
-    assert_equal(results["payload"].open(), ds)
-    expected = _store_files(results["payload"].path)
+    assert_equal(results["spill"].open(), ds)
+    expected = _store_files(results["spill"].path)
     for name, r in results.items():
         assert _store_files(r.path) == expected, name
-        assert r.n_chunks_written == results["payload"].n_chunks_written, name
-        assert r.bytes_written == results["payload"].bytes_written, name
+        assert r.n_chunks_written == results["spill"].n_chunks_written, name
+        assert r.bytes_written == results["spill"].bytes_written, name
 
 
 def test_reference_shuffle_with_preprocess_and_shards(spark, tmp_path):
@@ -674,36 +683,32 @@ def test_reference_shuffle_with_preprocess_and_shards(spark, tmp_path):
 
 def test_auto_rechunk_shuffle_dispatch():
     """Default (rechunk_shuffle=None) auto-picks: reference for
-    chunk-lazy formats with no preprocessor, payload otherwise. Spill
-    is opt-in (r10: matched alternating A/B on local tmpfs reads
-    payload and spill within noise — the scratch round-trip cancels
-    the saved JVM<->Python transport locally; spill's case is cluster
-    shuffle-storage volume, not local wall-clock)."""
+    chunk-lazy formats with no preprocessor, spill otherwise."""
     from pangeo_forge_recipes_spark.patterns import FileType
     from pangeo_forge_recipes_spark.transforms import _auto_rechunk_shuffle
 
     for ft in (FileType.npz, FileType.zarr, FileType.kerchunk):
         assert _auto_rechunk_shuffle(ft, None) == "reference"
-        assert _auto_rechunk_shuffle(ft, lambda i, d: (i, d)) == "payload"
+        assert _auto_rechunk_shuffle(ft, lambda i, d: (i, d)) == "spill"
     for ft in (FileType.netcdf3, FileType.netcdf4, FileType.grib):
-        assert _auto_rechunk_shuffle(ft, None) == "payload"
+        assert _auto_rechunk_shuffle(ft, None) == "spill"
 
 
 def test_auto_default_takes_reference_path_for_npz(spark, tmp_path, monkeypatch):
     """An npz recipe with the default mode runs the REFERENCE pipeline
-    (open_split_refs_df observed; the payload splitter never called) and
+    (open_split_refs_df observed; the eager splitter never called) and
     still round-trips exactly."""
     import pangeo_forge_recipes_spark.transforms as T
 
     calls = []
-    real_refs, real_payload = T.open_split_refs_df, T.open_split_fragments_df
+    real_refs, real_split = T.open_split_refs_df, T.open_split_fragments_df
     monkeypatch.setattr(
         T, "open_split_refs_df",
         lambda *a, **k: calls.append("refs") or real_refs(*a, **k),
     )
     monkeypatch.setattr(
         T, "open_split_fragments_df",
-        lambda *a, **k: calls.append("payload") or real_payload(*a, **k),
+        lambda *a, **k: calls.append("spill") or real_split(*a, **k),
     )
     ds = make_ds(nt=6)
     paths = split_ds_into_files(ds, str(tmp_path), items_per_file=2)
@@ -718,22 +723,21 @@ def test_auto_default_takes_reference_path_for_npz(spark, tmp_path, monkeypatch)
     assert_equal(result.open(), ds)
 
 
-def test_auto_default_takes_payload_path_for_netcdf3(spark, tmp_path, monkeypatch):
-    """An EAGER format (netcdf3) with the default mode keeps the payload
-    shuffle (spill is opt-in; see test_auto_rechunk_shuffle_dispatch)
-    and round-trips exactly."""
+def test_auto_default_takes_spill_path_for_netcdf3(spark, tmp_path, monkeypatch):
+    """An EAGER format (netcdf3) with the default mode takes the spill
+    shuffle, with scratch next to the store, and round-trips exactly."""
     import pangeo_forge_recipes_spark.transforms as T
     from pangeo_forge_recipes_spark.netcdf3 import write_netcdf3
 
     calls = []
-    real_spill, real_payload = T.open_split_spill_df, T.open_split_fragments_df
+    real_refs, real_split = T.open_split_refs_df, T.open_split_fragments_df
     monkeypatch.setattr(
-        T, "open_split_spill_df",
-        lambda *a, **k: calls.append("spill") or real_spill(*a, **k),
+        T, "open_split_refs_df",
+        lambda *a, **k: calls.append("refs") or real_refs(*a, **k),
     )
     monkeypatch.setattr(
         T, "open_split_fragments_df",
-        lambda *a, **k: calls.append("payload") or real_payload(*a, **k),
+        lambda *a, **k: calls.append(k["scratch_root"]) or real_split(*a, **k),
     )
     ds = make_ds(nt=6)
     paths = []
@@ -748,7 +752,7 @@ def test_auto_default_takes_payload_path_for_netcdf3(spark, tmp_path, monkeypatc
         spark, pattern, str(tmp_path / "t"), "s.zarr",
         target_chunks={"time": 3},
     )
-    assert result.shuffled and calls == ["payload"]
+    assert result.shuffled and calls == [result.path + ".spill"]
     assert_equal(result.open(), ds, check_attrs=False)
 
 
@@ -758,11 +762,13 @@ def test_reference_shuffle_rejects_unknown_mode(spark, tmp_path):
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
-    with pytest.raises(ValueError, match="rechunk_shuffle"):
-        store_to_zarr(
-            spark, pattern, str(tmp_path / "t"), "s.zarr",
-            target_chunks={"time": 2}, rechunk_shuffle="bogus",
-        )
+    # "payload" (every frame inline) was merged into "spill"
+    for mode in ("bogus", "payload"):
+        with pytest.raises(ValueError, match="rechunk_shuffle"):
+            store_to_zarr(
+                spark, pattern, str(tmp_path / "t"), "s.zarr",
+                target_chunks={"time": 2}, rechunk_shuffle=mode,
+            )
 
 
 def test_kerchunk_two_concat_dims(spark, tmp_path):
@@ -933,7 +939,7 @@ def test_spill_shuffle_inline_small_pieces(spark, tmp_path):
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
-    spill_df = T.open_split_spill_df(
+    spill_df = T.open_split_fragments_df(
         T.index_items(
             T.manifest_df(spark, pattern),
             sch := T.determine_schema(
@@ -941,10 +947,10 @@ def test_spill_shuffle_inline_small_pieces(spark, tmp_path):
                 pattern.combine_dim_keys,
             ),
         ),
-        str(tmp_path / "scratch"),
         "npz",
         target_chunks={"time": 3},
         schema=sch,
+        scratch_root=str(tmp_path / "scratch"),
     )
     rows = spill_df.collect()
     assert rows and all(r["url"] == "" and len(r["payload"]) > 0 for r in rows)
@@ -952,10 +958,11 @@ def test_spill_shuffle_inline_small_pieces(spark, tmp_path):
 
 
 def test_split_batches_flush_before_int32_offsets(tmp_path, monkeypatch):
-    """The payload split's binary column has int32 offsets: a batch is
-    flushed before its buffer would pass the byte limit, the rows stay
-    the same and in the same order, and a single frame over the limit
-    raises naming its group key."""
+    """The split's binary column has int32 offsets: a batch is flushed
+    before its inline bytes would pass the limit, the rows stay the same
+    and in the same order, and a single inline frame over the limit
+    raises naming its group key. Frames that go through scratch travel
+    as ``(url, offset, length)`` and do not count against the limit."""
     import pyarrow as pa
 
     import pangeo_forge_recipes_spark.transforms as T
@@ -966,24 +973,53 @@ def test_split_batches_flush_before_int32_offsets(tmp_path, monkeypatch):
     idx_json = Index(
         {Dimension("time", CombineOp.CONCAT): IndexedPosition(0, dimsize=4)}
     ).to_json()
+    scratch = str(tmp_path / "scratch" / "spill-0.raw")
 
-    def batches():
+    def batches(scratch_url=None, inline_bytes=0):
         pieces = T._pieces(idx_json, path, "npz", {"time": 1}, None, None, None)
-        return list(T._frame_batches(pieces))
+        return list(T._frame_batches(pieces, scratch_url, inline_bytes))
+
+    def inline_bytes(b):
+        return sum(map(len, b.column("payload").to_pylist()))
 
     whole = batches()
     assert len(whole) == 1
+    keys = whole[0].column("group_key").to_pylist()
     frames = whole[0].column("payload").to_pylist()
     limit = 2 * max(len(f) for f in frames)  # ~11 KB
     monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", limit)
     flushed = batches()
     assert len(flushed) > 2
-    assert all(sum(map(len, b.column("payload").to_pylist())) <= limit for b in flushed)
+    assert all(inline_bytes(b) <= limit for b in flushed)
     assert pa.Table.from_batches(flushed).equals(pa.Table.from_batches(whole))
 
+    # with scratch: data-variable frames spill, coordinate frames stay inline
+    coord_max = max(len(f) for k, f in zip(keys, frames) if "|c:" in k)
+    monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", 2**31 - 1)
+    unflushed = batches(scratch, coord_max)
+    assert len(unflushed) == 1
+    limit = 2 * coord_max
+    monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", limit)
+    spilled = batches(scratch, coord_max)
+    assert len(spilled) > 2
+    assert all(inline_bytes(b) <= limit for b in spilled)
+    assert any(sum(n for n in b.column("length").to_pylist() if n > 0) > limit for b in spilled)
+    table = pa.Table.from_batches(spilled)
+    assert table.equals(pa.Table.from_batches(unflushed))
+    with open(scratch, "rb") as f:
+        raw = f.read()
+    for row, frame in zip(table.to_pylist(), frames):
+        if row["url"]:
+            assert row["url"] == scratch and row["payload"] == b""
+            assert raw[row["offset"]:row["offset"] + row["length"]] == frame
+        else:
+            assert row["payload"] == frame and len(frame) <= coord_max
+    assert sum(1 for row in table.to_pylist() if row["url"]) == sum("|d:" in k for k in keys)
+
     monkeypatch.setattr(T, "_SPLIT_BATCH_BYTES", max(len(f) for f in frames) - 1)
-    with pytest.raises(ValueError, match=r"\|d:bar' frames to \d+ bytes"):
-        batches()
+    for scratch_url in (None, scratch):
+        with pytest.raises(ValueError, match=r"\|d:bar' frames to \d+ bytes"):
+            batches(scratch_url, 2**31)
 
 
 TRANSFORMS = os.path.join(

@@ -142,14 +142,13 @@ def _keep(index, ds):
 
 
 STORE_CASES = {
-    "payload": dict(target_chunks={"time": 3}, rechunk_shuffle="payload"),
     "reference": dict(target_chunks={"time": 3}, rechunk_shuffle="reference"),
     "spill": dict(target_chunks={"time": 3}, rechunk_shuffle="spill"),
     "aligned": dict(target_chunks={"time": 2}),
     "prune": dict(target_chunks={"time": 3}, prune=2),
     "max_concurrency": dict(target_chunks={"time": 3}, max_concurrency=2),
     "preprocess": dict(target_chunks={"time": 3}, preprocess=_keep),
-    "distributed_manifest": dict(target_chunks={"time": 3}, rechunk_shuffle="payload"),
+    "distributed_manifest": dict(target_chunks={"time": 3}, rechunk_shuffle="spill"),
 }
 
 
@@ -352,7 +351,7 @@ print(json.dumps(got))
 def test_fused_stage_task_retry_writes_identical_bytes(tmp_path):
     """On ``local[2,2]`` (one retry per task) a ``preprocess`` raises on a
     task's first attempt for one chosen file: once in the fused schema
-    scan+fold task and once in the fused index+split task of a payload
+    scan+fold task and once in the fused index+split task of a spill
     bake, and a refs ``preprocess`` once in the fused kerchunk scan+merge
     task. The retried runs write a store and a ``reference.json``
     sha256-identical to a clean run."""

@@ -112,7 +112,7 @@ def test_lazy_cf_datetime_decode_applies_at_materialization(src_store):
 def test_reference_mode_rechunk_from_zarr_sources(spark, tmp_path):
     """The reference shuffle's target workload: chunk-lazy zarr sources,
     target chunks straddling source stores (true shuffle), write tasks
-    range-reading only their pieces. End state must equal payload mode."""
+    range-reading only their pieces. End state must equal spill mode."""
     ds = make_ds(nt=12)
     tmp = str(tmp_path)
     npz_paths = split_ds_into_files(ds, tmp, items_per_file=3)
@@ -137,10 +137,11 @@ def test_reference_mode_rechunk_from_zarr_sources(spark, tmp_path):
     )
     assert res.shuffled  # 4 straddles the 3-step stores
     assert_equal(res.open(), ds, check_attrs=False)
-    res_payload = store_to_zarr(
-        spark, pattern, tmp, "out_pay.zarr", target_chunks={"time": 4}
+    res_spill = store_to_zarr(
+        spark, pattern, tmp, "out_spill.zarr", target_chunks={"time": 4},
+        rechunk_shuffle="spill",
     )
-    assert_equal(res_payload.open(), res.open(), check_attrs=False)
+    assert_equal(res_spill.open(), res.open(), check_attrs=False)
 
 
 def test_lazy_array_slicing_composition():

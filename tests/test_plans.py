@@ -248,5 +248,13 @@ def test_round6_driver_query_plan_shapes(spark):
         assert "ENSURE_REQUIREMENTS" not in plan  # map-only computation
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
-    pq_plan = _simple_plan(entrymod._ann_pq_q(spark, SF_DIR))
+    # pq_topk self-search: the corpus encodes to m=8 4-bit codes against
+    # the pinned codebooks, then every query scores against the byte codes
+    import numpy as np
+
+    from pangeo_forge_recipes_spark.operators.similarity import pq_topk
+
+    books = np.array(entrymod._PQ_CODEBOOKS, dtype=np.float64)
+    pq = pq_topk(spark.table("embeddings"), k=entrymod._PQ_K, codebooks=books)
+    pq_plan = _simple_plan(pq)
     assert "Join" not in pq_plan  # broadcast codes, never a join

@@ -579,8 +579,8 @@ def test_glob_regex_single_level_property(segments, meta):
 )
 @settings(max_examples=100, deadline=None)
 def test_spill_wire_property(ndim, dtype, seed):
-    """NDS1 round-trip of a single-variable piece (the frame the payload
-    and spill shuffles ship) for arbitrary small shapes/dtypes."""
+    """NDS1 round-trip of a single-variable piece (the frame the spill
+    shuffle ships) for arbitrary small shapes/dtypes."""
     from pangeo_forge_recipes_spark.ndset import NDDataset, Variable
 
     rng = np.random.RandomState(seed % (2**31))
