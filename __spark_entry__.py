@@ -69,10 +69,7 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
         "lineitem"
     ):
         return
-    for old in _CACHED.pop(id(spark), []):
-        old.unpersist()
-    for k in [k for k in _MINHASH_PAIRS if k[0] == id(spark)]:
-        _MINHASH_PAIRS.pop(k).unpersist()
+    _unregister(spark)
     # the testdata parquet uses TIMESTAMP(NANOS); Spark needs the legacy
     # switch, and NTZ literals keep timestamp comparisons timezone-free
     # (matching DuckDB's naive timestamps)
@@ -102,6 +99,17 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
                 _CACHED.setdefault(id(spark), []).append(df)
             df.createOrReplaceTempView(t)
     _REGISTERED[id(spark)] = os.path.abspath(sf_dir)
+
+
+def _unregister(spark: SparkSession) -> None:
+    """Unpersist what ``_register`` and the MinHash pairs cached for
+    ``spark`` and forget its registration; the next ``_register`` reads
+    and caches the tables afresh."""
+    for old in _CACHED.pop(id(spark), []):
+        old.unpersist()
+    for k in [k for k in _MINHASH_PAIRS if k[0] == id(spark)]:
+        _MINHASH_PAIRS.pop(k).unpersist()
+    _REGISTERED.pop(id(spark), None)
 
 
 def _scratch(prefix: str) -> str:

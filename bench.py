@@ -199,9 +199,12 @@ def _median(vals):
 
 def _scratch_root() -> str | None:
     """/dev/shm when tmpfs and MemAvailable leave room for the 800 MB
-    section's ~2.5 GB of sources and stores (tmpfs pages are RAM and
-    compete with the pinned heap), else the default temp dir. Called
-    after the session is up, so the heap is already counted."""
+    section's ~2.5 GB of sources and stores beside a heap that may still
+    grow to ``spark.driver.memory`` (tmpfs pages are RAM), else the
+    default temp dir. Called after the session is up; its heap starts
+    small, so a 15 GB host (6.4 GB heap ceiling) has ~15 GB available
+    here and writes the stores to tmpfs. ``environment.stores_on`` records
+    which."""
     try:
         ok = (
             shutil.disk_usage("/dev/shm").free > 5 * 1024**3
@@ -567,9 +570,13 @@ def _run(spark, cpus: int, sf_dir: str, sf: float, work: str) -> None:
     detail = {
         "metric": "headline_suite_wall_concurrent",
         "unit": "sec",
-        "environment": procstat.environment(
-            ROOT, work, cpus, spark.conf.get("spark.driver.memory")
-        ),
+        "environment": {
+            **procstat.environment(ROOT, work, cpus, spark.conf.get("spark.driver.memory")),
+            "jvm_input_arguments": list(
+                spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+                .getInputArguments()
+            ),
+        },
         "section_walls": {},
         "section_host_cpu": {},
         "sf": sf,

@@ -10,8 +10,9 @@ from pyspark.sql.types import StructType
 
 
 def _default_driver_mem() -> str:
-    """min(16g, ~40 % of MemTotal): the heap is pinned and pre-touched
-    (see below), so it must fit the host with room for Python workers."""
+    """min(16g, ~40 % of MemTotal): the ceiling the heap may grow to (see
+    below), leaving the rest of the host to Python workers and the page
+    cache (6,437 MB on a 15 GB host)."""
     try:
         with open("/proc/meminfo") as f:
             for line in f:
@@ -24,6 +25,16 @@ def _default_driver_mem() -> str:
 
 
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+
+# The driver JVM's options. Its heap starts at the JVM default (1/64 of
+# RAM) and G1 grows it on demand up to spark.driver.memory, never giving
+# any back (MaxHeapFreeRatio=100), so it cannot oscillate between commit
+# and uncommit after a heavy phase. On a 4-core / 15 GB host a heap pinned
+# at its 6,437 MB ceiling and pre-touched held 6,879 MB RSS right after
+# start (442 MB growing on demand); a fixed heap, touched or not, still
+# lets G1 cycle eden through all of it (a 1 GB one peaked at ~2.3 GB RSS
+# on perfbench's daily_netcdf4, ~1.5 GB growing on demand).
+JVM_OPTIONS = "-XX:MaxHeapFreeRatio=100"
 
 # the directory holding this package: Python workers see only their working
 # directory and $PYTHONPATH, so a driver started elsewhere must hand it on
@@ -66,20 +77,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.speculation", "false")
-        # local-mode driver IS the executor. Two measured pitfalls on the
-        # target box (32 threads / 128 GiB): an oversized, growable heap
-        # (48g, default Xms) makes G1 commit/uncommit pages continuously
-        # after a heavy mapInPandas phase — identical SQL queries then
-        # oscillate 0.6s..3.4s run to run; pinning the heap (Xms == Xmx +
-        # AlwaysPreTouch) removes the jitter at any size. 16g holds the
-        # cached sf-scale tables plus 32 concurrent task buffers without
-        # old-gen churn; smaller hosts get ~40 % of MemTotal, since a
-        # pre-touched heap larger than free memory fails JVM start.
+        # local-mode driver IS the executor: its heap grows to
+        # spark.driver.memory as JVM_OPTIONS (above) lets it
         .config("spark.driver.memory", _DRIVER_MEM)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.extraJavaOptions", JVM_OPTIONS)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # pin a timezone so NTZ↔LTZ casts (needed because watermarks only

@@ -220,8 +220,20 @@ MEDIA_QUERIES = {
 }
 
 
+@pytest.fixture
+def catalog_tables(spark):
+    """The catalog's tables as the media queries register them, dropped
+    again afterwards: a query materializes the cached spread tables, and a
+    materialized cache prints its repartition ``Exchange`` twice in later
+    plans (AQE's final and initial plan), which plan-shape tests count."""
+    yield
+    entry._unregister(spark)
+
+
 @pytest.mark.parametrize("name", list(MEDIA_QUERIES))
-def test_media_queries_run_one_python_node_per_stage(spark, executed_plans, name):
+def test_media_queries_run_one_python_node_per_stage(
+    spark, catalog_tables, executed_plans, name
+):
     """Each media query's operator chain runs as ONE Python node: the
     near-dup chains in their signature table's ``localCheckpoint``, the
     others in the final ``collect``."""
