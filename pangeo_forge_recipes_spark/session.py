@@ -34,7 +34,14 @@ _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 # start (442 MB growing on demand); a fixed heap, touched or not, still
 # lets G1 cycle eden through all of it (a 1 GB one peaked at ~2.3 GB RSS
 # on perfbench's daily_netcdf4, ~1.5 GB growing on demand).
-JVM_OPTIONS = "-XX:MaxHeapFreeRatio=100"
+# G1 treats Spark's memory pages (4 MB at a 1 GB ceiling) as humongous
+# objects, and each one allocated while the old generation is above the
+# marking threshold starts a concurrent cycle. At the default threshold
+# (45 %) a ~130 MB old generation on the ~254 MB starting heap sat above
+# it, so G1 paused back to back and its pause-time rule grew the heap by
+# a different 30-240 MB in each run (perfbench operator_mix peak RSS
+# 1,640-1,858 MB over ten runs); marking from 70 % ends those bursts.
+JVM_OPTIONS = "-XX:MaxHeapFreeRatio=100 -XX:InitiatingHeapOccupancyPercent=70"
 
 # the directory holding this package: Python workers see only their working
 # directory and $PYTHONPATH, so a driver started elsewhere must hand it on
