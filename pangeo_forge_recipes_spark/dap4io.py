@@ -881,29 +881,14 @@ def scan_dmrpp(
 
 
 def _dmrpp_codec_chain(name: str, filters: List[str], itemsize: int) -> list:
-    """The codec names the HDF5 scanner emits, so the reference store
-    decodes DMR++-scanned chunks with the exact same chain."""
-    codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
-    for f in filters:
-        if f == "shuffle":
-            codecs.append(
-                {
-                    "name": "hdf5-shuffle",
-                    "configuration": {"elementsize": itemsize},
-                }
-            )
-        elif f == "deflate":
-            codecs.append({"name": "gzip", "configuration": {"level": 1}})
-        elif f == "fletcher32":
-            # position in the chain mirrors the document's pipeline
-            # order; the store verifies+strips at the right layer
-            codecs.append({"name": "hdf5-fletcher32"})
-        else:
-            raise NotImplementedError(
-                f"{name}: DMR++ compressionType {f!r} unsupported "
-                "(shuffle/deflate/fletcher32 only)"
-            )
-    return codecs
+    """The HDF5 scanner's codec chain for a DMR++ filter list, so the
+    reference store decodes DMR++-scanned chunks with the same chain."""
+    from .hdf5io import _DEFLATE, _FLETCHER32, _SHUFFLE, hdf5_codec_chain
+
+    # the compressionType names of HDF5's built-in filters that need no
+    # client data; any other name is refused by the mapping
+    ids = {"deflate": _DEFLATE, "shuffle": _SHUFFLE, "fletcher32": _FLETCHER32}
+    return hdf5_codec_chain([(ids.get(f, f), ()) for f in filters], itemsize, name)
 
 
 def _chunk_refs(refs, name, shape, chunk_shape, chunks, href) -> None:

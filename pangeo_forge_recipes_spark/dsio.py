@@ -491,9 +491,15 @@ def npz_schema(path_or_buf) -> XarraySchema:
 # ---------------------------------------------------------------------------
 
 
+# codec name -> the create_array compressor that writes it, in either
+# format (a v2 store's gzip compressor reads back as ``gzip-frame``)
+_COMPRESSORS = {"gzip": "gzip", "gzip-frame": "gzip", "zstd": "zstd", "blosc": "blosc"}
+
+
 def consolidate_dimension_coordinates(target_store) -> None:
     """Rewrite every dimension-coordinate array as a single chunk for read
-    performance (reference ``rechunking.py:251-283``)."""
+    performance (reference ``rechunking.py:251-283``), with the array's
+    own compressor."""
     store = _store_for(target_store)
     group = open_group(store)
     names = group.array_names()
@@ -505,6 +511,7 @@ def consolidate_dimension_coordinates(target_store) -> None:
         arr = group[dim]
         data = arr.read()
         meta = dict(arr.meta)
+        codecs = [c["name"] for c in (arr._sharding or meta)["codecs"]]
         del group[dim]
         new = group.create_array(
             dim,
@@ -514,7 +521,7 @@ def consolidate_dimension_coordinates(target_store) -> None:
             fill_value=arr.fill_value,
             attributes=meta.get("attributes", {}),
             dimension_names=meta.get("dimension_names"),
-            compressor="gzip" if arr.compressed else None,
+            compressor=next((_COMPRESSORS[n] for n in codecs if n in _COMPRESSORS), None),
         )
         new[tuple(slice(0, s) for s in arr.shape)] = data
 

@@ -25,9 +25,11 @@ files):
   garbage), lzf (pure-python decode of h5py's filter 32000), szip
   (pure-python CCSDS 121 extended-Rice decode, module :mod:`.szip`),
   bzip2 (hdf5plugin's registered filter 307 — stdlib ``bz2``), lz4
-  (registered filter 32004, public block framing over LZ4 blocks) and
-  zstd (registered filter 32015, one plain zstd frame); others raise
-  a clear error
+  (registered filter 32004, public block framing over LZ4 blocks),
+  zstd (registered filter 32015, one plain zstd frame), blosc,
+  bitshuffle and zfp. :func:`hdf5_codec_chain` maps a filter pipeline
+  to the codec chain ``ZarrArray`` walks (also for DMR++ sidecars); a
+  filter whose codec has no table entry raises a clear error
 * dimension naming: ``_ARRAY_DIMENSIONS`` (xarray/kerchunk convention),
   netCDF4 ``DIMENSION_LIST`` object references, or dimension-scale
   ``NAME``/``CLASS`` attributes; falls back to ``phony_dim_<i>``
@@ -849,6 +851,71 @@ def lzf_compress(data: bytes) -> bytes:
     return bytes(out)
 
 
+# HDF5 filter id -> codec name: a filter is supported when its codec has
+# an entry in ZarrArray's codec table
+_FILTER_CODECS = {
+    _DEFLATE: "gzip", _SHUFFLE: "hdf5-shuffle", _FLETCHER32: "hdf5-fletcher32",
+    _SZIP: "hdf5-szip", _BZIP2: "hdf5-bzip2", _LZF: "hdf5-lzf", _LZ4: "hdf5-lz4",
+    _ZSTD: "hdf5-zstd", _BLOSC: "hdf5-blosc", _BITSHUFFLE: "hdf5-bitshuffle",
+    _ZFP: "hdf5-zfp",
+}
+
+
+def hdf5_codec_chain(
+    filters, itemsize: int, where: str, endian: str = "little"
+) -> List[dict]:
+    """The codec chain of an HDF5 filter pipeline ``[(filter id, client
+    data)]``: ``bytes``, then one codec per filter in the pipeline's
+    (application) order, which ``ZarrArray`` walks forward to encode and
+    in reverse to decode. Shared by the HDF5 and DMR++ scanners."""
+    from .zarrio import _codecs
+
+    unsupported = [
+        fid for fid, _ in filters if _FILTER_CODECS.get(fid) not in _codecs()
+    ]
+    if unsupported:
+        raise NotImplementedError(
+            f"{where}: HDF5 filters {unsupported} unsupported (only "
+            f"{', '.join(_FILTER_CODECS.values())})"
+        )
+    chain = [{"name": "bytes", "configuration": {"endian": endian}}]
+    for fid, cd in filters:
+        codec = {"name": _FILTER_CODECS[fid]}
+        if fid == _SHUFFLE:
+            codec["configuration"] = {"elementsize": itemsize}
+        elif fid == _DEFLATE:
+            codec["configuration"] = {"level": 1}
+        elif fid == _BITSHUFFLE:
+            # bshuf_h5filter cd values: (major, minor, elem_size,
+            # block_size_elems [0 = library default], compression
+            # [0 none / 2 LZ4 / 3 zstd], level)
+            cdt = tuple(cd) + (0, 0, 0, 0, 0)
+            comp = {0: "none", 2: "lz4", 3: "zstd"}.get(int(cdt[4]))
+            if comp is None:
+                raise NotImplementedError(
+                    f"{where}: bitshuffle internal compression code "
+                    f"{cdt[4]} unsupported"
+                )
+            codec["configuration"] = {
+                # the filter transposed with ITS recorded elem size (cd[2],
+                # set by set_local from the HDF5 type) — trust it over the
+                # mapped numpy itemsize when present
+                "elementsize": int(cdt[2]) or itemsize,
+                "blockelems": int(cdt[3]),
+                "compression": comp,
+            }
+        elif fid == _SZIP:
+            om, bpp, ppb, pps = (tuple(cd) + (0, 0, 0, 0))[:4]
+            codec["configuration"] = {
+                "options_mask": int(om),
+                "bits_per_pixel": int(bpp),
+                "pixels_per_block": int(ppb),
+                "pixels_per_scanline": int(pps),
+            }
+        chain.append(codec)
+    return chain
+
+
 def scan_hdf5(path: str, inline_threshold: int = 300) -> dict:
     """Kerchunk-style virtual-Zarr references into an HDF5/netCDF4 file
     (native analog of kerchunk ``SingleHdf5ToZarr``; reference
@@ -877,47 +944,6 @@ def scan_hdf5(path: str, inline_threshold: int = 300) -> dict:
             attributes = {
                 k: v for k, v in info["attrs"].items() if k not in _NC_HIDDEN_ATTRS
             }
-            filters = info.get("filters", [])
-            unsupported = [
-                fid
-                for fid, _ in filters
-                if fid not in (
-                    _DEFLATE, _SHUFFLE, _FLETCHER32, _SZIP, _LZF, _BZIP2,
-                    _LZ4, _ZSTD, _BLOSC, _BITSHUFFLE, _ZFP,
-                )
-            ]
-            if unsupported:
-                raise NotImplementedError(
-                    f"{path}:{name}: HDF5 filters {unsupported} unsupported "
-                    "(only deflate, shuffle, fletcher32, szip, bzip2, lzf, "
-                    "lz4, zstd, blosc, bitshuffle, zfp)"
-                )
-            if any(fid == _ZFP for fid, _ in filters) and len(filters) > 1:
-                # H5Z-ZFP chunks are self-contained typed streams; a
-                # stacked byte filter around them has no archive
-                # presence and would need intermediate sizes the file
-                # does not record
-                raise NotImplementedError(
-                    f"{path}:{name}: zfp stacked with other filters "
-                    "unsupported (zfp alone only)"
-                )
-            n_fletch = sum(1 for fid, _ in filters if fid == _FLETCHER32)
-            if n_fletch and (
-                n_fletch > 1
-                or (
-                    filters[-1][0] != _FLETCHER32
-                    and filters[0][0] != _FLETCHER32
-                )
-            ):
-                # both real-world placements are supported — h5py appends
-                # the checksum filter LAST (wraps the compressed stream),
-                # netcdf-c registers it FIRST (wraps the raw stream,
-                # before shuffle/deflate); a mid-chain placement would
-                # need the intermediate stream re-checksummed mid-decode
-                raise NotImplementedError(
-                    f"{path}:{name}: fletcher32 in mid-pipeline position "
-                    "— unsupported placement (first or last only)"
-                )
             if info.get("layout") == "chunked":
                 chunk_shape = info["chunk"]
             else:
@@ -925,83 +951,12 @@ def scan_hdf5(path: str, inline_threshold: int = 300) -> dict:
             meta = _array_meta(
                 info["shape"], chunk_shape, np_dtype.name, attributes, dims
             )
-            if np_dtype.byteorder == ">":
-                meta["codecs"] = [
-                    {"name": "bytes", "configuration": {"endian": "big"}}
-                ]
-            # codecs in HDF5 application order (shuffle before deflate);
-            # the store decodes in reverse
-            extra = []
-            for fid, cd in filters:
-                if fid == _SHUFFLE:
-                    extra.append(
-                        {
-                            "name": "hdf5-shuffle",
-                            "configuration": {"elementsize": np_dtype.itemsize},
-                        }
-                    )
-                elif fid == _DEFLATE:
-                    extra.append({"name": "gzip", "configuration": {"level": 1}})
-                elif fid == _FLETCHER32:
-                    extra.append({"name": "hdf5-fletcher32"})
-                elif fid == _LZF:
-                    extra.append({"name": "hdf5-lzf"})
-                elif fid == _BZIP2:
-                    extra.append({"name": "hdf5-bzip2"})
-                elif fid == _LZ4:
-                    extra.append({"name": "hdf5-lz4"})
-                elif fid == _ZSTD:
-                    extra.append({"name": "hdf5-zstd"})
-                elif fid == _BLOSC:
-                    # the chunk payload is one self-describing Blosc1
-                    # frame — the client values (versions, typesize,
-                    # clevel, shuffle, compressor) are advisory
-                    extra.append({"name": "hdf5-blosc"})
-                elif fid == _ZFP:
-                    # each chunk is a self-contained zfp stream with a
-                    # full header (the H5Z-ZFP design); cd_values are
-                    # advisory and ignored
-                    extra.append({"name": "hdf5-zfp"})
-                elif fid == _BITSHUFFLE:
-                    # bshuf_h5filter cd values: (major, minor, elem_size,
-                    # block_size_elems [0 = library default], compression
-                    # [0 none / 2 LZ4 / 3 zstd], level)
-                    cdt = tuple(cd) + (0, 0, 0, 0, 0)
-                    comp = {0: "none", 2: "lz4", 3: "zstd"}.get(int(cdt[4]))
-                    if comp is None:
-                        raise NotImplementedError(
-                            f"{path}:{name}: bitshuffle internal "
-                            f"compression code {cdt[4]} unsupported"
-                        )
-                    extra.append(
-                        {
-                            "name": "hdf5-bitshuffle",
-                            "configuration": {
-                                # the filter transposed with ITS recorded
-                                # elem size (cd[2], set by set_local from
-                                # the HDF5 type) — trust it over the
-                                # mapped numpy itemsize when present
-                                "elementsize": int(cdt[2]) or np_dtype.itemsize,
-                                "blockelems": int(cdt[3]),
-                                "compression": comp,
-                            },
-                        }
-                    )
-                elif fid == _SZIP:
-                    om, bpp, ppb, pps = (tuple(cd) + (0, 0, 0, 0))[:4]
-                    extra.append(
-                        {
-                            "name": "hdf5-szip",
-                            "configuration": {
-                                "options_mask": int(om),
-                                "bits_per_pixel": int(bpp),
-                                "pixels_per_block": int(ppb),
-                                "pixels_per_scanline": int(pps),
-                            },
-                        }
-                    )
-            if extra:
-                meta["codecs"] = meta["codecs"] + extra
+            meta["codecs"] = hdf5_codec_chain(
+                info.get("filters", []),
+                np_dtype.itemsize,
+                f"{path}:{name}",
+                "big" if np_dtype.byteorder == ">" else "little",
+            )
             if info.get("fill"):
                 fill = np.frombuffer(info["fill"], dtype=np_dtype, count=1)[0]
                 meta["fill_value"] = (

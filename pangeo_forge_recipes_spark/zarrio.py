@@ -8,6 +8,17 @@ what the pipeline needs (reference usages: template init
 consolidation ``rechunking.py:251-283``, metadata consolidation
 ``writers.py:72-92``).
 
+A chunk is encoded by walking its array's ``codecs`` list forward and
+decoded by walking it in reverse, through one table from codec name to
+(kind, encode, decode, size): :func:`_codecs`. The chain keeps the Zarr v3
+core order: array->array codecs (``transpose``), then one array->bytes
+codec (``bytes``, ``sharding_indexed``, ``grib2-msg``), then bytes->bytes
+codecs (compressors, checksums and the HDF5 filters in their file's
+pipeline order). A codec whose one-shot decode needs its decoded size
+(zstd, snappy, hdf5-zstd, szip) gets it where the chain fixes it, and
+raises ``NotImplementedError`` elsewhere. Adding a codec is adding one
+table entry.
+
 Storage goes through the tiny :class:`Store` key/value interface so the same
 writer code targets local disk today and an object store (s3/gcs keys map
 1:1) on a real cluster. All writes are idempotent puts of deterministic
@@ -18,13 +29,15 @@ boundaries touch disjoint keys, so concurrent executors never contend
 
 from __future__ import annotations
 
+import bz2
+import functools
 import itertools
 import json
 import math
 import os
 import struct
 import zlib
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -231,12 +244,252 @@ def _all_fill(block: np.ndarray, fill) -> bool:
     return bool(np.all(block == f))
 
 
+# -- codec pipeline (see the module docstring) ------------------------------
+# ``encode(za, conf, value, rep)`` and ``decode(za, conf, value, rep)`` get
+# ``rep``, what the encoder takes in and the decoder gives back: the array's
+# shape for array->array and array->bytes codecs, the byte count for
+# bytes->bytes codecs (None where the chain does not fix it).
+# ``size(za, conf, rep)`` is what the encoder puts out.
+
+AA, AB, BB = "array->array", "array->bytes", "bytes->bytes"
+
+
+class Codec(NamedTuple):
+    kind: str
+    encode: Callable
+    decode: Callable
+    size: Callable = lambda za, conf, rep: None
+
+
+def _same(za, conf, n):
+    return n
+
+
+def _plus4(za, conf, n):
+    return None if n is None else n + 4
+
+
+def _plain(fn: Callable) -> Callable:
+    """A codec function of the buffer alone."""
+    return lambda za, conf, buf, rep: fn(buf)
+
+
+def _read_only(name: str) -> Callable:
+    def encode(za, conf, value, rep):
+        raise NotImplementedError(
+            f"{name}: arrays under this codec are read-only; re-store "
+            "through the Zarr pipeline instead"
+        )
+
+    return encode
+
+
+def _decoded_size(name: str, n: Optional[int]) -> int:
+    """The decoded size a one-shot decoder needs: given where the chain
+    fixes it, a named refusal elsewhere."""
+    if n is None:
+        raise NotImplementedError(
+            f"{name} stacked above a codec whose output size the chain "
+            "does not fix: its one-shot decode needs the decoded size"
+        )
+    return n
+
+
+def _sized(name: str, fn: Callable) -> Callable:
+    return lambda za, conf, buf, n: fn(buf, _decoded_size(name, n))
+
+
+def _endian(conf: dict) -> str:
+    return ">" if conf.get("endian") == "big" else "<"
+
+
+def _bytes_encode(za, conf, arr, shape):
+    return np.ascontiguousarray(
+        arr, dtype=za.dtype.newbyteorder(_endian(conf))
+    ).tobytes()
+
+
+def _bytes_decode(za, conf, buf, shape):
+    arr = np.frombuffer(buf, dtype=za.dtype.newbyteorder(_endian(conf)))
+    arr = arr.astype(za.dtype, copy=False)
+    if shape == za.chunks:
+        return za._pad_reshape(arr)
+    if arr.size != int(np.prod(shape, dtype=np.int64)):
+        raise NotImplementedError("ragged (short) chunk under a transpose codec")
+    return arr.reshape(shape)
+
+
+def _grib2_decode(za, conf, buf, shape):
+    from .grib2io import decode_grib2_message
+
+    return za._pad_reshape(
+        decode_grib2_message(buf).astype(za.dtype, copy=False).ravel()
+    )
+
+
+def _crc32c_decode(buf: bytes) -> bytes:
+    from .codecs import crc32c
+
+    if len(buf) < 4 or crc32c(buf[:-4]) != int.from_bytes(buf[-4:], "little"):
+        raise ValueError("crc32c checksum mismatch")
+    return buf[:-4]
+
+
+def _blosc_encode(za, conf, buf, n):
+    from .codecs import blosc_compress
+
+    return blosc_compress(
+        buf,
+        typesize=za.dtype.itemsize,
+        cname=conf.get("cname", "lz4"),
+        shuffle={0: False, 1: True, 2: "bit"}.get(int(conf.get("shuffle", 1)), True),
+        blocksize=int(conf.get("blocksize", 0)),
+    )
+
+
+def _bitshuffle(fn: Callable) -> Callable:
+    return lambda za, conf, buf, n: fn(
+        buf,
+        int(conf.get("elementsize", za.dtype.itemsize)),
+        conf.get("compression", "lz4"),
+        int(conf.get("blockelems", 0)),
+    )
+
+
+def _szip_args(conf: dict) -> tuple:
+    keys = ("options_mask", "bits_per_pixel", "pixels_per_block", "pixels_per_scanline")
+    return tuple(conf[k] for k in keys)
+
+
+def _zfp_decode(za, conf, buf, n):
+    # a zfp chunk is a self-contained typed stream (full header + blocks)
+    from .zfpio import decompress_zfp
+
+    arr = decompress_zfp(buf).astype(za.dtype.newbyteorder("<"), copy=False)
+    return arr.tobytes()
+
+
+def _numcodecs_size(za, conf, n):
+    dtype = np.dtype(conf.get("dtype", za.dtype))
+    astype = np.dtype(conf.get("astype") or dtype)
+    return None if n is None else n // dtype.itemsize * astype.itemsize
+
+
+def _numcodecs_decode(za, conf, buf, n):
+    from .codecs import decode_v2_filter
+
+    return decode_v2_filter(buf, conf, za.dtype).tobytes()
+
+
+def _gzip_frame_encode(za, conf, buf, n):
+    co = zlib.compressobj(int(conf.get("level", 1)), zlib.DEFLATED, 31)
+    return co.compress(buf) + co.flush()
+
+
+# wbits 47 reads a zlib (RFC 1950) or a gzip (RFC 1952) stream
+_inflate = _plain(lambda buf: zlib.decompress(buf, 47))
+
+
+@functools.lru_cache(maxsize=None)
+def _codecs() -> dict:
+    """The codec table (built on first use: its codecs live in modules
+    that import this one)."""
+    from . import codecs as c
+    from . import hdf5io as h
+    from . import szip
+
+    def fletcher32_encode(buf):
+        return buf + struct.pack("<I", h.hdf5_fletcher32(buf))
+
+    def shuffle(fn):
+        return lambda za, conf, buf, n: fn(buf, int(conf.get("elementsize", 0)))
+
+    numcodecs = Codec(BB, _read_only("numcodecs filter"), _numcodecs_decode, _numcodecs_size)
+    return {
+        "transpose": Codec(
+            AA,
+            lambda za, conf, arr, shape: np.transpose(arr, conf["order"]),
+            lambda za, conf, arr, shape: arr.transpose(np.argsort(conf["order"])),
+            lambda za, conf, shape: tuple(shape[i] for i in conf["order"]),
+        ),
+        "bytes": Codec(
+            AB, _bytes_encode, _bytes_decode,
+            lambda za, conf, shape: int(np.prod(shape, dtype=np.int64)) * za.dtype.itemsize,
+        ),
+        "sharding_indexed": Codec(
+            AB,
+            lambda za, conf, arr, shape: za._encode_shard(np.asarray(arr, dtype=za.dtype)),
+            lambda za, conf, buf, shape: za._decode_shard(buf),
+        ),
+        "grib2-msg": Codec(AB, _read_only("grib2-msg"), _grib2_decode),
+        # the engine writes zlib streams under ``gzip`` (as HDF5 deflate
+        # stores them); ``gzip-frame`` is numcodecs' GZip (RFC 1952)
+        "gzip": Codec(
+            BB,
+            lambda za, conf, buf, n: zlib.compress(buf, int(conf.get("level", 1))),
+            _inflate,
+        ),
+        "gzip-frame": Codec(BB, _gzip_frame_encode, _inflate),
+        "zstd": Codec(
+            BB,
+            lambda za, conf, buf, n: c.zstd_compress(buf, int(conf.get("level", 1))),
+            _sized("zstd", c.zstd_decompress),
+        ),
+        "lz4": Codec(BB, _plain(c.numcodecs_lz4_compress), _plain(c.numcodecs_lz4_decompress)),
+        "snappy": Codec(
+            BB,
+            _plain(functools.partial(c._stream_compress, "snappy")),
+            _sized("snappy", c.snappy_decompress),
+        ),
+        "blosc": Codec(BB, _blosc_encode, _plain(c.blosc_decompress)),
+        "crc32c": Codec(
+            BB,
+            _plain(lambda buf: buf + int(c.crc32c(buf)).to_bytes(4, "little")),
+            _plain(_crc32c_decode),
+            _plus4,
+        ),
+        # HDF5 filters, in the file's recorded pipeline order
+        "hdf5-shuffle": Codec(BB, shuffle(c.shuffle_bytes), shuffle(c.unshuffle_bytes), _same),
+        "hdf5-fletcher32": Codec(
+            BB, _plain(fletcher32_encode), _plain(_fletcher32_verify_strip), _plus4
+        ),
+        "hdf5-lzf": Codec(BB, _plain(h.lzf_compress), _plain(h.lzf_decompress)),
+        "hdf5-bzip2": Codec(
+            BB, _plain(functools.partial(bz2.compress, compresslevel=9)), _plain(bz2.decompress)
+        ),
+        "hdf5-lz4": Codec(BB, _plain(h.hdf5_lz4_compress), _plain(h.hdf5_lz4_decompress)),
+        # the HDF5 zstd filter stores no size header
+        "hdf5-zstd": Codec(BB, _plain(c.zstd_compress), _sized("hdf5-zstd", c.zstd_decompress)),
+        # one self-describing Blosc1 frame either way
+        "hdf5-blosc": Codec(
+            BB,
+            lambda za, conf, buf, n: c.blosc_compress(buf, typesize=za.dtype.itemsize),
+            _plain(c.blosc_decompress),
+        ),
+        "hdf5-bitshuffle": Codec(
+            BB, _bitshuffle(h.hdf5_bitshuffle_compress), _bitshuffle(h.hdf5_bitshuffle_decompress)
+        ),
+        "hdf5-szip": Codec(
+            BB,
+            lambda za, conf, buf, n: szip.szip_compress(buf, *_szip_args(conf)),
+            lambda za, conf, buf, n: szip.szip_decompress(
+                buf, _decoded_size("hdf5-szip", n) // za.dtype.itemsize, *_szip_args(conf)
+            ),
+        ),
+        # the scanned chain records no zfp mode, so there is nothing to
+        # encode with; decode yields the chunk's raw little-endian bytes
+        "hdf5-zfp": Codec(BB, _read_only("hdf5-zfp"), _zfp_decode),
+        "numcodecs-delta": numcodecs,
+        "numcodecs-fixedscaleoffset": numcodecs,
+        "numcodecs-quantize": numcodecs,
+    }
+
+
 class ZarrArray:
-    """One Zarr v3 array node: regular chunk grid, ``bytes`` (little-endian)
-    codec with optional ``gzip`` compression (or the ``sharding_indexed``
-    container codec: many inner chunks per stored object plus a
-    crc32c-protected offset index), edge chunks stored full-size and
-    padded with the fill value."""
+    """One Zarr v3 array node: regular chunk grid, a codec chain walked
+    through :func:`_codecs` (``sharding_indexed`` stores many inner chunks
+    per object plus a crc32c-protected offset index), edge chunks stored
+    full-size and padded with the fill value."""
 
     def __init__(self, store: Store, path: str, meta: dict):
         self.store = store
@@ -281,137 +534,6 @@ class ZarrArray:
         return self.meta.get("dimension_names")
 
     @property
-    def compressed(self) -> bool:
-        return any(c["name"] == "gzip" for c in self.meta["codecs"])
-
-    @property
-    def _hdf5_comp_chain(self) -> List[str]:
-        """HDF5 compression filters (lzf / bzip2 id 307 / lz4 id 32004 /
-        zstd id 32015) in the file's recorded pipeline order — the order
-        ``scan_hdf5`` found them in the filter pipeline message. Encode
-        walks this forward, decode reversed; a fixed application order
-        would corrupt files that stack two compressors the other way."""
-        family = (
-            "hdf5-lzf", "hdf5-bzip2", "hdf5-lz4", "hdf5-zstd", "hdf5-blosc",
-            "hdf5-bitshuffle",
-        )
-        return [c["name"] for c in self.meta["codecs"] if c["name"] in family]
-
-    def _hdf5_comp_apply(self, name: str, buf: bytes, encode: bool) -> bytes:
-        """Apply one HDF5 compression filter in the given direction."""
-        if name == "hdf5-lzf":
-            from .hdf5io import lzf_compress, lzf_decompress
-
-            return lzf_compress(buf) if encode else lzf_decompress(buf)
-        if name == "hdf5-bzip2":
-            import bz2
-
-            return bz2.compress(buf, 9) if encode else bz2.decompress(buf)
-        if name == "hdf5-lz4":
-            from .hdf5io import hdf5_lz4_compress, hdf5_lz4_decompress
-
-            return hdf5_lz4_compress(buf) if encode else hdf5_lz4_decompress(buf)
-        if name == "hdf5-blosc":
-            # one self-describing Blosc1 frame either way
-            from .codecs import blosc_compress, blosc_decompress
-
-            if encode:
-                return blosc_compress(buf, typesize=self.dtype.itemsize)
-            return blosc_decompress(buf)
-        if name == "hdf5-bitshuffle":
-            from .hdf5io import (
-                hdf5_bitshuffle_compress,
-                hdf5_bitshuffle_decompress,
-            )
-
-            cfg = next(
-                c.get("configuration", {})
-                for c in self.meta["codecs"]
-                if c["name"] == "hdf5-bitshuffle"
-            )
-            elem = int(cfg.get("elementsize", self.dtype.itemsize))
-            comp = cfg.get("compression", "lz4")
-            blk = int(cfg.get("blockelems", 0))
-            if encode:
-                return hdf5_bitshuffle_compress(buf, elem, comp, blk)
-            return hdf5_bitshuffle_decompress(buf, elem, comp, blk)
-        # hdf5-zstd: the HDF5 filter stores no size header and pyarrow's
-        # one-shot decoder demands the destination size, so decode is
-        # only possible where that size is knowable — innermost filter
-        # (output = raw chunk stream of chunk-nbytes)
-        from .codecs import zstd_compress, zstd_decompress
-
-        if encode:
-            return zstd_compress(buf)
-        chain = self._hdf5_comp_chain
-        if chain and chain[0] != "hdf5-zstd":
-            raise NotImplementedError(
-                "hdf5-zstd stacked above another compression filter: the "
-                "intermediate stream size is not recorded in the file and "
-                "zstd one-shot decode requires it"
-            )
-        return zstd_decompress(
-            buf,
-            int(np.prod(self.chunks, dtype=np.int64)) * self.dtype.itemsize,
-        )
-
-    @property
-    def _szip_config(self) -> Optional[dict]:
-        """HDF5 szip filter parameters (virtual references into
-        szip-compressed files; decoded by :mod:`.szip`)."""
-        for c in self.meta["codecs"]:
-            if c["name"] == "hdf5-szip":
-                return c.get("configuration", {})
-        return None
-
-    @property
-    def _compression(self):
-        """(name, configuration) of the non-zlib compression codec, if any
-        — blosc / zstd / lz4 / snappy / gzip-frame, from zarr v2 stores
-        or v3 codec chains (decoded via :mod:`.codecs`)."""
-        for c in self.meta["codecs"]:
-            if c["name"] in ("blosc", "zstd", "lz4", "snappy", "gzip-frame"):
-                return c["name"], c.get("configuration", {})
-        return None
-
-    @property
-    def _fletcher32_position(self) -> Optional[str]:
-        """``"outer"`` when the checksum wraps the stored (compressed)
-        stream — h5py appends the filter last; ``"inner"`` when it wraps
-        the raw pre-shuffle/deflate bytes — netcdf-c registers it first;
-        None when absent."""
-        names = [c["name"] for c in self.meta["codecs"]]
-        if "hdf5-fletcher32" not in names:
-            return None
-        structural = ("bytes", "transpose", "sharding_indexed", "hdf5-fletcher32")
-        others = [i for i, n in enumerate(names) if n not in structural]
-        i = names.index("hdf5-fletcher32")
-        if not others or i > max(others):
-            return "outer"
-        return "inner"
-
-    @property
-    def _shuffle_elementsize(self) -> int:
-        """Element size of the byte-transpose (HDF5 shuffle) codec, 0 if
-        absent. Emitted by the HDF5 scanner for shuffle-filtered chunks;
-        encode order is bytes → shuffle → gzip (HDF5 pipeline order), so
-        decode is gunzip → unshuffle → frombuffer."""
-        for c in self.meta["codecs"]:
-            if c["name"] == "hdf5-shuffle":
-                return int(c.get("configuration", {}).get("elementsize", 0))
-        return 0
-
-    @property
-    def _stored_byteorder(self) -> str:
-        """Endianness declared by the ``bytes`` codec ("<" default — but
-        virtual references into big-endian containers, e.g. NetCDF3,
-        declare "big")."""
-        for c in self.meta["codecs"]:
-            if c["name"] == "bytes":
-                return ">" if c.get("configuration", {}).get("endian") == "big" else "<"
-        return "<"
-
-    @property
     def nchunks(self) -> Tuple[int, ...]:
         return tuple(
             -(-s // c) if s else 0 for s, c in zip(self.shape, self.chunks)
@@ -427,13 +549,6 @@ class ZarrArray:
             parts = ["c"] + [str(i) for i in chunk_idx]
             name = sep.join(parts) if chunk_idx else "c"
         return f"{self.path}/{name}" if self.path else name
-
-    # -- codec ----------------------------------------------------------------
-    @property
-    def _is_grib_msg(self) -> bool:
-        """Whole-GRIB2-message codec (virtual references only): each chunk
-        is a complete message carrying its own packing parameters."""
-        return any(c["name"] == "grib2-msg" for c in self.meta["codecs"])
 
     # -- sharding (zarr v3 ``sharding_indexed`` codec, ZEP 2) ------------------
     @property
@@ -524,23 +639,25 @@ class ZarrArray:
         return [*encs, index]
 
     def _decode_shard(self, buf: bytes) -> np.ndarray:
-        from .codecs import crc32c as _crc32c
+        return self._read_shard(
+            lambda off, n: buf[off:] if off < 0 else buf[off : off + n]
+        )
 
+    def _read_shard(self, get_range, needed: Optional[set] = None) -> np.ndarray:
+        """Decode a shard's inner chunks (those in ``needed``, or all)
+        from ``get_range(offset, length)`` reads of the shard object (a
+        negative offset reads that many bytes from its end)."""
         cfg = self._sharding
         inner_shape = tuple(int(c) for c in cfg["chunk_shape"])
         grid, index_nbytes, has_crc = self._shard_layout()
-        if len(buf) < index_nbytes:
-            raise ValueError(
-                f"shard object shorter ({len(buf)}) than its index "
-                f"({index_nbytes} bytes)"
-            )
         at_start = cfg.get("index_location", "end") == "start"
-        index_buf = buf[:index_nbytes] if at_start else buf[-index_nbytes:]
+        index_buf = get_range(0 if at_start else -index_nbytes, index_nbytes)
+        if len(index_buf) < index_nbytes:
+            raise ValueError(
+                f"shard object shorter than its index ({index_nbytes} bytes)"
+            )
         if has_crc:
-            stored = int.from_bytes(index_buf[-4:], "little")
-            if _crc32c(index_buf[:-4]) != stored:
-                raise ValueError("shard index crc32c mismatch")
-            index_buf = index_buf[:-4]
+            index_buf = _crc32c_decode(index_buf)
         entries = np.frombuffer(index_buf, dtype="<u8").reshape(-1, 2)
         inner = self._inner_array()
         out = np.full(self.chunks, self.fill_value, dtype=self.dtype)
@@ -548,132 +665,44 @@ class ZarrArray:
             itertools.product(*[range(g) for g in grid])
         ):
             off, nb = int(entries[flat, 0]), int(entries[flat, 1])
-            if off == self._SHARD_MISSING:
+            if off == self._SHARD_MISSING or (needed is not None and idx not in needed):
                 continue
-            block = inner._decode_chunk(buf[off : off + nb])
+            block = inner._decode_chunk(get_range(off, nb))
             sl = tuple(
                 slice(i * c, min((i + 1) * c, s))
                 for i, c, s in zip(idx, inner_shape, self.chunks)
             )
             out[sl] = block[tuple(slice(0, s.stop - s.start) for s in sl)]
         return out
+
+    def _steps(self) -> list:
+        """``[(codec, configuration, rep)]`` for ``meta["codecs"]`` in
+        order, where ``rep`` is what the codec's encoder takes in and its
+        decoder gives back (see :func:`_codecs`). Raises on an unknown
+        codec name or a chain out of the spec's order."""
+        steps, rep, in_bytes = [], self.chunks, False
+        for c in self.meta["codecs"]:
+            codec = _codecs().get(c["name"])
+            if codec is None:
+                raise NotImplementedError(f"codec {c['name']!r} unsupported")
+            if (codec.kind == BB) != in_bytes:
+                raise ValueError(
+                    f"codec {c['name']!r} out of order in "
+                    f"{[x['name'] for x in self.meta['codecs']]}: array->array "
+                    "codecs, then one array->bytes codec, then bytes->bytes"
+                )
+            conf = c.get("configuration", {})
+            steps.append((codec, conf, rep))
+            rep = codec.size(self, conf, rep)
+            in_bytes = in_bytes or codec.kind == AB
+        if not in_bytes:
+            raise ValueError("codec chain has no array->bytes codec")
+        return steps
 
     def _encode_chunk(self, arr: np.ndarray) -> bytes:
-        if self._sharding is not None:
-            return self._encode_shard(np.asarray(arr, dtype=self.dtype))
-        if self._is_grib_msg:
-            raise NotImplementedError(
-                "grib2-msg arrays are read-only virtual references; write "
-                "through the Zarr path instead"
-            )
-        if any(c["name"].startswith("numcodecs-") for c in self.meta["codecs"]):
-            raise NotImplementedError(
-                "arrays with numcodecs filter chains are read-only; re-store "
-                "through the Zarr pipeline instead"
-            )
-        tr = next(
-            (c for c in self.meta["codecs"] if c["name"] == "transpose"), None
-        )
-        if tr is not None:
-            arr = np.transpose(arr, list(tr["configuration"]["order"]))
-        buf = np.ascontiguousarray(arr, dtype=self.dtype.newbyteorder("<")).tobytes()
-        fpos = self._fletcher32_position
-        if fpos == "inner":
-            from .hdf5io import hdf5_fletcher32
-
-            buf += struct.pack("<I", hdf5_fletcher32(buf))
-        es = self._shuffle_elementsize
-        if es > 1:
-            n = len(buf) // es * es
-            buf = (
-                np.frombuffer(buf[:n], dtype=np.uint8).reshape(-1, es).T.tobytes()
-                + buf[n:]
-            )
-        if self.compressed:
-            buf = zlib.compress(buf, 1)
-        # HDF5 compression filters in the file's recorded pipeline
-        # (application) order — a real file may declare them in any order
-        for name in self._hdf5_comp_chain:
-            buf = self._hdf5_comp_apply(name, buf, encode=True)
-        szp = self._szip_config
-        if szp is not None:
-            from .szip import szip_compress
-
-            buf = szip_compress(
-                buf,
-                szp["options_mask"],
-                szp["bits_per_pixel"],
-                szp["pixels_per_block"],
-                szp["pixels_per_scanline"],
-            )
-        comp = self._compression
-        if comp is not None:
-            from . import codecs as _codecs
-
-            name, conf = comp
-            if name == "blosc":
-                buf = _codecs.blosc_compress(
-                    buf,
-                    typesize=self.dtype.itemsize,
-                    cname=conf.get("cname", "lz4"),
-                    shuffle={0: False, 1: True, 2: "bit"}.get(
-                        int(conf.get("shuffle", 1)), True
-                    ),
-                    blocksize=int(conf.get("blocksize", 0)),
-                )
-            elif name == "zstd":
-                buf = _codecs.zstd_compress(buf, int(conf.get("level", 1)))
-            elif name == "lz4":
-                buf = _codecs.numcodecs_lz4_compress(buf)
-            elif name == "snappy":
-                buf = _codecs._stream_compress("snappy", buf)
-            elif name == "gzip-frame":
-                co = zlib.compressobj(1, zlib.DEFLATED, 31)
-                buf = co.compress(buf) + co.flush()
-        if fpos == "outer":
-            from .hdf5io import hdf5_fletcher32
-
-            buf += struct.pack("<I", hdf5_fletcher32(buf))
-        return buf
-
-    def _read_shard_selected(
-        self, key: str, needed: set
-    ) -> np.ndarray:
-        """Partial shard read: byte-range GET of the index plus ONLY the
-        needed inner chunks — on an object store a region read touches
-        O(index + requested chunks) bytes, not the whole shard object."""
-        from .codecs import crc32c as _crc32c
-
-        cfg = self._sharding
-        inner_shape = tuple(int(c) for c in cfg["chunk_shape"])
-        grid, index_nbytes, has_crc = self._shard_layout()
-        if cfg.get("index_location", "end") == "start":
-            index_buf = self.store.get_range(key, 0, index_nbytes)
-        else:
-            index_buf = self.store.get_range(key, -index_nbytes, index_nbytes)
-        if has_crc:
-            stored = int.from_bytes(index_buf[-4:], "little")
-            if _crc32c(index_buf[:-4]) != stored:
-                raise ValueError("shard index crc32c mismatch")
-            index_buf = index_buf[:-4]
-        entries = np.frombuffer(index_buf, dtype="<u8").reshape(-1, 2)
-        inner = self._inner_array()
-        out = np.full(self.chunks, self.fill_value, dtype=self.dtype)
-        for flat, idx in enumerate(
-            itertools.product(*[range(g) for g in grid])
-        ):
-            if idx not in needed:
-                continue
-            off, nb = int(entries[flat, 0]), int(entries[flat, 1])
-            if off == self._SHARD_MISSING:
-                continue
-            block = inner._decode_chunk(self.store.get_range(key, off, nb))
-            sl = tuple(
-                slice(i * c, min((i + 1) * c, s))
-                for i, c, s in zip(idx, inner_shape, self.chunks)
-            )
-            out[sl] = block[tuple(slice(0, s.stop - s.start) for s in sl)]
-        return out
+        for codec, conf, rep in self._steps():
+            arr = codec.encode(self, conf, arr, rep)
+        return arr
 
     def _shard_chunks_for(
         self, rel_start: Sequence[int], rel_stop: Sequence[int]
@@ -692,111 +721,9 @@ class ZarrArray:
         )
 
     def _decode_chunk(self, buf: bytes) -> np.ndarray:
-        if self._sharding is not None:
-            return self._decode_shard(buf)
-        if self._is_grib_msg:
-            from .grib2io import decode_grib2_message
-
-            arr = decode_grib2_message(buf).astype(self.dtype, copy=False).ravel()
-            return self._pad_reshape(arr)
-        fpos = self._fletcher32_position
-        if fpos == "outer":
-            # checksum wraps the stored stream (h5py places the filter
-            # last): verify + strip FIRST
-            buf = _fletcher32_verify_strip(buf)
-        if any(c["name"] == "hdf5-zfp" for c in self.meta["codecs"]):
-            # a zfp chunk is a self-contained TYPED stream (full header
-            # + blocks): it decodes straight to the chunk array, not to
-            # a byte stream for further unfiltering
-            from .zfpio import decompress_zfp
-
-            arr = decompress_zfp(buf).astype(self.dtype, copy=False).ravel()
-            return self._pad_reshape(arr)
-        # HDF5 compression filters decode in REVERSE of the file's
-        # recorded pipeline (application) order — the order-insensitive
-        # membership checks this replaces would decode stacked filters
-        # declared in the opposite order to garbage
-        for name in reversed(self._hdf5_comp_chain):
-            buf = self._hdf5_comp_apply(name, buf, encode=False)
-        szp = self._szip_config
-        if szp is not None:
-            from .szip import szip_decompress
-
-            buf = szip_decompress(
-                buf,
-                int(np.prod(self.chunks, dtype=np.int64)),
-                szp["options_mask"],
-                szp["bits_per_pixel"],
-                szp["pixels_per_block"],
-                szp["pixels_per_scanline"],
-            )
-        comp = self._compression
-        if comp is not None:
-            from . import codecs as _codecs
-
-            name, conf = comp
-            nbytes = int(
-                np.prod(self.chunks, dtype=np.int64)
-            ) * self.dtype.itemsize
-            if name == "blosc":
-                buf = _codecs.blosc_decompress(buf)
-            elif name == "zstd":
-                buf = _codecs.zstd_decompress(buf, nbytes)
-            elif name == "lz4":
-                buf = _codecs.numcodecs_lz4_decompress(buf)
-            elif name == "snappy":
-                buf = _codecs.snappy_decompress(buf, nbytes)
-            elif name == "gzip-frame":
-                buf = zlib.decompress(buf, 31)
-        if self.compressed:
-            buf = zlib.decompress(buf)
-        es = self._shuffle_elementsize
-        if es > 1:
-            # HDF5 shuffle semantics: only the first floor(n/es)*es bytes
-            # are transposed, any remainder (e.g. an inner fletcher32
-            # trailer) rides verbatim at the end
-            n = len(buf) // es * es
-            if n:
-                buf = (
-                    np.frombuffer(buf[:n], dtype=np.uint8)
-                    .reshape(es, -1)
-                    .T.tobytes()
-                    + buf[n:]
-                )
-        if fpos == "inner":
-            # checksum wraps the RAW stream (netcdf-c registers the
-            # filter first): strip after the other filters undid
-            buf = _fletcher32_verify_strip(buf)
-        filts = [
-            c for c in self.meta["codecs"] if c["name"].startswith("numcodecs-")
-        ]
-        if filts:
-            from . import codecs as _codecs
-
-            arr = None
-            for c in reversed(filts):
-                arr = _codecs.decode_v2_filter(
-                    buf, c["configuration"], self.dtype
-                )
-                buf = arr.tobytes()
-            arr = arr.astype(self.dtype, copy=False)
-        else:
-            arr = np.frombuffer(
-                buf, dtype=self.dtype.newbyteorder(self._stored_byteorder)
-            ).astype(self.dtype, copy=False)
-        tr = next(
-            (c for c in self.meta["codecs"] if c["name"] == "transpose"), None
-        )
-        if tr is not None:
-            order = list(tr["configuration"]["order"])
-            full = int(np.prod(self.chunks, dtype=np.int64))
-            if arr.size != full:
-                raise NotImplementedError(
-                    "ragged (short) chunk under a transpose codec"
-                )
-            shape = [self.chunks[i] for i in order]
-            return arr.reshape(shape).transpose(np.argsort(order))
-        return self._pad_reshape(arr)
+        for codec, conf, rep in reversed(self._steps()):
+            buf = codec.decode(self, conf, buf, rep)
+        return buf
 
     def _pad_reshape(self, arr: np.ndarray) -> np.ndarray:
         full = int(np.prod(self.chunks, dtype=np.int64))
@@ -910,7 +837,11 @@ class ZarrArray:
                         [b - cs for b, cs in zip(o_stop, c_start)],
                     )
                     if len(needed) < total:
-                        chunk_data = self._read_shard_selected(key, needed)
+                        # partial shard read: byte-range GETs of the index
+                        # plus ONLY the needed inner chunks
+                        chunk_data = self._read_shard(
+                            functools.partial(self.store.get_range, key), needed
+                        )
                     else:
                         chunk_data = self._decode_chunk(self.store.get(key))
                 else:
@@ -979,14 +910,7 @@ def _v2_to_v3_array_meta(zarray: dict, zattrs: dict) -> dict:
         raise NotImplementedError(
             f"zarr v2 dtype {zarray['dtype']!r} unsupported"
         )
-    codecs: List[dict] = [
-        {
-            "name": "bytes",
-            "configuration": {
-                "endian": "big" if dt.byteorder == ">" else "little"
-            },
-        }
-    ]
+    codecs: List[dict] = []
     if zarray.get("order", "C") == "F":
         # column-major chunks = the v3 transpose codec with reversed axes
         ndim = len(zarray["shape"])
@@ -996,6 +920,14 @@ def _v2_to_v3_array_meta(zarray: dict, zattrs: dict) -> dict:
                 "configuration": {"order": list(range(ndim - 1, -1, -1))},
             }
         )
+    codecs.append(
+        {
+            "name": "bytes",
+            "configuration": {
+                "endian": "big" if dt.byteorder == ">" else "little"
+            },
+        }
+    )
     for filt in zarray.get("filters") or []:
         if filt.get("id") == "shuffle":
             codecs.append(
@@ -1009,11 +941,6 @@ def _v2_to_v3_array_meta(zarray: dict, zattrs: dict) -> dict:
                 }
             )
         elif filt.get("id") in ("delta", "fixedscaleoffset", "quantize"):
-            if any(c["name"] == "hdf5-shuffle" for c in codecs):
-                raise NotImplementedError(
-                    "zarr v2 filter chain with shuffle BEFORE an array "
-                    "filter unsupported (shuffle must be last)"
-                )
             codecs.append(
                 {"name": f"numcodecs-{filt['id']}", "configuration": dict(filt)}
             )

@@ -3,6 +3,9 @@
 Usage: python tools/time_queries.py <sf_dir> <query> [query ...]
 Env: TQ_RUNS (default 3).
 
+Each query runs once untimed before its TQ_RUNS timed runs, so its first
+timed run does not carry the query's own compile and first-stage cost.
+
 Uses bench.py's session shape (``local[cpus]``, ``cpus`` shuffle
 partitions), warm-up and noop sink for quick A/B of one operator without
 the full battery.
@@ -29,6 +32,7 @@ def main() -> None:
     warm_session(spark, sf_dir)
     for name in names:
         fn = qs[name]
+        _materialize(fn(spark, sf_dir))  # untimed warm run
         walls = []
         for _ in range(runs):
             t0 = time.perf_counter()
