@@ -2,8 +2,8 @@
 
 Semantics-parity reimplementation of reference ``pangeo_forge_recipes/
 rechunking.py:17-242``. These pure functions run inside Spark tasks:
-``split_fragment`` inside a flatMap stage, ``combine_fragments`` inside
-``groupBy(group_key).applyInArrow`` — the engine's single data shuffle
+``split_fragment`` inside the split stage, ``combine_fragments`` inside
+the combine-write task after the engine's single data shuffle
 (the reference flags the same GroupByKey as *the* perf hazard,
 ``transforms.py:414``).
 """

@@ -22,12 +22,12 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   **map-side partial folds finished on the driver**, one job each and no
   shuffle (reference combine-globally and bucketed reduces,
   ``transforms.py:276-301,428-554``);
-* the rechunk is the engine's **single data shuffle**, one pipeline in
-  every mode: pieces (open → split → explode by variable) → transport →
-  one write kernel. The spill mode groups on the chunk key with
-  ``groupBy(group_key).applyInArrow``; the reference mode
-  range-partitions its ``(group_key, url)`` rows (reference flags the
-  same GroupByKey as the one perf hazard, ``transforms.py:414``);
+* the rechunk is the engine's **single data shuffle** (reference flags
+  the same GroupByKey as the one perf hazard, ``transforms.py:414``):
+  pieces (open → split → explode by variable) → transport → one
+  exchange placed by target chunk and sorted by group key → one
+  combine-write loop. Spill and reference differ only in how a row
+  becomes its fragment;
 * combine + region-write are **fused in the same task** — a combined chunk
   is written where it is assembled and never crosses another exchange
   (Beam gets this via runner fusion; we get it by construction), only tiny
@@ -354,9 +354,9 @@ def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> 
 # rechunk (reference ``Rechunk``, ``transforms.py:401-417``): every mode is
 # pieces → transport → one write kernel. ``_pieces`` turns a manifest row
 # into single-variable pieces keyed by target chunk ⊕ variable; reference
-# and spill differ only in how a piece reaches its group, and the aligned
-# path writes each piece as a one-piece group. ``_write_group`` combines
-# and writes a group the same way for all three.
+# and spill reach their groups through one exchange (``_combine_write``),
+# and the aligned path writes each piece as a one-piece group.
+# ``_write_group`` combines and writes a group the same way for all three.
 # ---------------------------------------------------------------------------
 
 
@@ -557,33 +557,60 @@ def open_split_fragments_df(
     return map_batches(df, open_split, SPLIT_SCHEMA)
 
 
-def rechunk_and_store(
-    df_split: DataFrame,
-    target_store_path: str,
+def _combine_write(
+    df: DataFrame, store_path: str,
+    fragments: Callable[[pa.RecordBatch], Iterator[Tuple[Index, NDDataset]]],
 ) -> DataFrame:
-    """Fused combine+write for the spill shuffle: each
-    ``groupBy(group_key)`` group assembles its target chunk and writes
-    its aligned region in the same task (reference ``transforms.py:414``
-    + ``StoreDatasetFragments``); only status rows return.
+    """The one rechunk exchange and combine-write loop of both shuffled
+    modes. A row goes to partition (sum of the indices of its target
+    chunk, the ``[[dim, index], ...]`` before the first ``|`` of
+    ``group_key``) mod ``spark.sql.shuffle.partitions``: an explicit
+    count AQE does not coalesce, so small rows that are costly to
+    combine still run at the session's width, and chunks spread
+    round-robin with no sampling job (a hash put 8 chunks 1/2/3/2 on 4
+    tasks). Sorted by ``group_key``, the variables of one chunk, which
+    read the same sources, run consecutively in one task; the loop turns
+    each row into its fragment (``fragments``), gathers a group's rows
+    and writes it with :func:`_write_group`. Only status rows return."""
+    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    chunk = F.from_json(F.substring_index("group_key", "|", 1), "array<array<string>>")
+    place = F.aggregate(chunk, F.lit(0), lambda acc, dim: acc + dim[1].cast("int"))
+    exchanged = df.repartitionById(nparts, place).sortWithinPartitions("group_key")
 
-    The group crosses JVM→Python as Arrow data (``applyInArrow``). A
-    row's NDS1 frame is its ``payload`` cell, read as a zero-copy
-    ``np.frombuffer`` view over the Arrow buffer — or, when ``url`` is
-    set, one range-get of ``(url, offset, length)``. Scratch is read
-    only here, after the split stage has committed."""
+    def combine_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        key, frags, done = None, [], []
+        for batch in batches:
+            keys = batch.column("group_key").to_pylist()
+            for gk, frag in zip(keys, fragments(batch)):
+                if gk != key and frags:
+                    done.append(_write_group(key, frags, store_path))
+                    frags = []
+                key = gk
+                frags.append(frag)
+        if frags:
+            done.append(_write_group(key, frags, store_path))
+            yield arrow_batch(STATUS_SCHEMA, zip(*(row.values() for row in done)))
 
-    def combine_write(tbl: pa.Table) -> pa.Table:
-        frags = []
-        for batch in tbl.to_batches():
-            payload_col = batch.column("payload")
-            rows = _rows(batch, "index", "url", "offset", "length")
-            for i, (idx_json, url, off, length) in enumerate(rows):
-                buf = url_range_get(url, off, length) if url else payload_col[i].as_buffer()
-                frags.append((Index.from_json(idx_json), NDDataset.from_bytes(buf)))
-        row = _write_group(tbl.column("group_key")[0].as_py(), frags, target_store_path)
-        return pa.Table.from_batches([arrow_batch(STATUS_SCHEMA, [[v] for v in row.values()])])
+    return exchanged.mapInArrow(combine_write, STATUS_SCHEMA)
 
-    return df_split.groupBy("group_key").applyInArrow(combine_write, STATUS_SCHEMA)
+
+def rechunk_and_store(df_split: DataFrame, target_store_path: str) -> DataFrame:
+    """Fused combine+write for the spill shuffle (reference
+    ``transforms.py:414`` + ``StoreDatasetFragments``) through
+    :func:`_combine_write`: each group assembles its target chunk and
+    writes its aligned region in the same task. A row's NDS1 frame is its
+    ``payload`` cell, read as a zero-copy view over the Arrow buffer — or,
+    when ``url`` is set, one range-get of ``(url, offset, length)``.
+    Scratch is read only here, after the split stage has committed."""
+
+    def fragments(batch: pa.RecordBatch) -> Iterator[Tuple[Index, NDDataset]]:
+        payload = batch.column("payload")
+        rows = _rows(batch, "index", "url", "offset", "length")
+        for i, (idx_json, url, off, length) in enumerate(rows):
+            buf = url_range_get(url, off, length) if url else payload[i].as_buffer()
+            yield Index.from_json(idx_json), NDDataset.from_bytes(buf)
+
+    return _combine_write(df_split, target_store_path, fragments)
 
 
 def open_split_refs_df(
@@ -625,12 +652,11 @@ def open_split_refs_df(
 
 
 # per-worker-process LRU of opened+preprocessed sources for the reference
-# write path: groups land on workers in key-hash order, so consecutive
-# tasks frequently revisit the same file. Two entries bound memory at two
-# source files per worker; Spark Python workers are single-threaded.
-_REFS_OPEN_CACHE: "OrderedDict[Tuple[str, str, str], Dict[str, tuple]]" = (
-    OrderedDict()
-)
+# write path: a task writes its groups in ``group_key`` order, so the
+# variables of one chunk, and the consecutive groups that straddle the
+# same source files, revisit an open source. Two entries bound memory at
+# two source files per worker; Spark Python workers are single-threaded.
+_REFS_OPEN_CACHE: "OrderedDict[Tuple[str, str, str], Dict[str, tuple]]" = OrderedDict()
 _REFS_OPEN_CACHE_CAP = 2
 
 
@@ -643,12 +669,13 @@ def rechunk_refs_and_store(
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
 ) -> DataFrame:
-    """Combine+write for the reference shuffle: each group re-opens its
-    source files (process-level LRU), re-runs the deterministic
-    :func:`_pieces`, takes only its own pieces, then combines and writes
-    them with the same kernel as every other mode. Determinism of the
-    split (pure function of index ⊕ chunk grid) is what makes shuffling
-    references instead of payloads sound."""
+    """Combine+write for the reference shuffle through
+    :func:`_combine_write`: each row re-opens its source file
+    (process-level LRU), re-runs the deterministic :func:`_pieces` and
+    takes only its own piece; the group is then combined and written by
+    the same kernel as every other mode. Determinism of the split (pure
+    function of index ⊕ chunk grid) is what makes shuffling references
+    instead of payloads sound."""
     # distinct token per pipeline run: reused Python workers keep the
     # module-level cache alive across jobs, and (url, idx_json) alone
     # would serve a STALE dataset to a later run with a different
@@ -685,42 +712,14 @@ def rechunk_refs_and_store(
             _REFS_OPEN_CACHE.popitem(last=False)
         return pieces
 
-    def combine_write(gk_full: str, rows: List[Tuple[str, str]]) -> dict:
+    def fragments(batch: pa.RecordBatch) -> Iterator[Tuple[Index, NDDataset]]:
         # the split is deterministic, so every shuffled reference MUST
         # resolve to a piece — a KeyError here means source files changed
         # between the split and write stages
-        frags = [open_pieces(url, idx_json)[gk_full] for idx_json, url in rows]
-        return _write_group(gk_full, frags, target_store_path)
+        for gk, idx_json, url in _rows(batch, "group_key", "index", "url"):
+            yield open_pieces(url, idx_json)[gk]
 
-    # range-partition + in-partition sort instead of a hash groupBy: all
-    # suffixes of one chunk — and lexicographically adjacent chunks, which
-    # are the ones straddling the same source files — run CONSECUTIVELY on
-    # the same worker, so the per-process open cache turns the "one open
-    # per group" cost into ~one open per file per partition. Groups stay
-    # whole because repartitionByRange keys each group to one partition.
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cur_key: Optional[str] = None
-        cur_rows: List[Tuple[str, str]] = []
-        done: List[dict] = []
-        for batch in batches:
-            for gk, idx_json, url in _rows(batch, "group_key", "index", "url"):
-                if gk != cur_key:
-                    if cur_key is not None:
-                        done.append(combine_write(cur_key, cur_rows))
-                    cur_key, cur_rows = gk, []
-                cur_rows.append((idx_json, url))
-        if cur_key is not None:
-            done.append(combine_write(cur_key, cur_rows))
-        if done:
-            yield arrow_batch(STATUS_SCHEMA, zip(*(row.values() for row in done)))
-
-    nparts = int(
-        df_refs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    part = df_refs.repartitionByRange(nparts, "group_key").sortWithinPartitions(
-        "group_key"
-    )
-    return part.mapInArrow(run, STATUS_SCHEMA)
+    return _combine_write(df_refs, target_store_path, fragments)
 
 
 def open_split_store_df(
@@ -734,10 +733,10 @@ def open_split_store_df(
 ) -> DataFrame:
     """Zero-shuffle fast path: open → [preprocess] → split → write, all in
     one map stage. Valid only when every piece is a complete target chunk
-    (``_chunks_aligned_with_files``) — then the groupBy would place
-    exactly one piece per group and the shuffle would move every byte
-    across the cluster for nothing. Each piece goes through the same
-    write kernel as a one-piece group."""
+    (``_chunks_aligned_with_files``) — then the exchange would place
+    exactly one piece per group and move every byte across the cluster
+    for nothing. Each piece goes through the same write kernel as a
+    one-piece group."""
 
     def split_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -872,7 +871,8 @@ def store_to_zarr(
     object-store requests).
 
     ``rechunk_shuffle`` picks what THE shuffle moves when source and
-    target chunking misalign: ``"reference"`` ships only
+    target chunking misalign; both modes run the same exchange and
+    combine-write loop. ``"reference"`` ships only
     ``(group_key, file_index, url)`` rows and the write tasks re-open
     their source files directly (exchange volume drops from O(data) to
     O(#fragments); sources are read a second time, but only the needed

@@ -49,6 +49,9 @@ class FakeS3:
         self.lock = threading.Lock()
         self.requests: list = []  # (method, bucket, key, query) log
         self.fail_queue: list = []  # statuses consumed FIFO (retry tests)
+        # (method, bucket, key, client address) -> a status to refuse that
+        # one request with, or None (targeted failures in retry tests)
+        self.refuse = None
         self._next_upload = [0]
         srv = self
         verify = verify_signatures
@@ -202,6 +205,12 @@ class FakeS3:
                     if srv.fail_queue:
                         status = srv.fail_queue.pop(0)
                         self._err(status, "SlowDown", "injected")
+                        return False
+                    refused = srv.refuse and srv.refuse(
+                        self.command, bucket, key, self.client_address
+                    )
+                    if refused:
+                        self._err(refused, "AccessDenied", "injected")
                         return False
                 return self._check_sig(query)
 

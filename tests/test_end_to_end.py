@@ -598,8 +598,8 @@ def test_reference_shuffle_equals_spill_shuffle(
     so the stores are byte-identical file for file: spill with pieces
     inline and with every piece through scratch, reference (re-reads
     sources on the write side), and the aligned no-shuffle path (files
-    cut at the chunk grain). The spill combine is an ``applyInArrow``
-    kernel, not a pandas one."""
+    cut at the chunk grain). Both shuffled modes run the one rechunk
+    exchange (:func:`_assert_one_rechunk_exchange`)."""
     import pangeo_forge_recipes_spark.transforms as T
 
     ds = make_ds(nt=10)
@@ -607,12 +607,7 @@ def test_reference_shuffle_equals_spill_shuffle(
     pattern = pattern_from_file_sequence(
         paths, "time", nitems_per_file=2, file_type="npz"
     )
-    combined = []
-    real_combine = T.rechunk_and_store
-    monkeypatch.setattr(
-        T, "rechunk_and_store",
-        lambda *a, **k: combined.append(real_combine(*a, **k)) or combined[-1],
-    )
+    combined = _spy_rechunks(monkeypatch)
     scratch = []  # the scratch objects each spill run left for cleanup
     real_cleanup = T._cleanup_scratch
     monkeypatch.setattr(
@@ -631,9 +626,9 @@ def test_reference_shuffle_equals_spill_shuffle(
         "spill": run("spill"),
         "reference": run("reference", mode="reference"),
     }
-    plan = combined[-1]._jdf.queryExecution().optimizedPlan().toString()
-    assert "FlatMapGroupsInArrow" in plan
-    assert "FlatMapGroupsInPandas" not in plan
+    assert [name for name, _ in combined] == ["rechunk_and_store", "rechunk_refs_and_store"]
+    for _, df in combined:
+        _assert_one_rechunk_exchange(spark, df)
     with monkeypatch.context() as m:
         m.setattr(T, "SPILL_INLINE_BYTES", 0)
         results["spill_scratch"] = run("spill_scratch", mode="spill")
@@ -655,6 +650,112 @@ def test_reference_shuffle_equals_spill_shuffle(
         assert _store_files(r.path) == expected, name
         assert r.n_chunks_written == results["spill"].n_chunks_written, name
         assert r.bytes_written == results["spill"].bytes_written, name
+
+
+def _spy_rechunks(monkeypatch) -> list:
+    """``(name, statuses DataFrame)`` of every rechunk front called from
+    here on."""
+    import pangeo_forge_recipes_spark.transforms as T
+
+    combined = []
+    for name in ("rechunk_and_store", "rechunk_refs_and_store"):
+        real = getattr(T, name)
+        monkeypatch.setattr(
+            T, name,
+            lambda *a, name=name, real=real, **k: combined.append((name, real(*a, **k)))
+            or combined[-1][1],
+        )
+    return combined
+
+
+def _assert_one_rechunk_exchange(spark, statuses):
+    """The rechunk's plan shape: one ``Exchange`` that places each row by
+    the chunk part of ``group_key`` into the explicit
+    ``spark.sql.shuffle.partitions`` (a count AQE keeps), then a sort and
+    one ``MapInArrow``; no range exchange and no grouped kernel."""
+    plan = statuses._jdf.queryExecution().executedPlan().toString()
+    nparts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange shufflepartitionidpassthrough(" in plan, plan
+    assert "substring_index(group_key" in plan, plan
+    assert f"), {nparts}), REPARTITION_BY_NUM" in plan, plan
+    assert "MapInArrow combine_write" in plan, plan
+    for absent in ("rangepartitioning", "RangePartitioning", "FlatMapGroupsIn"):
+        assert absent not in plan, plan
+
+
+def _bake_jobs(spark, bake):
+    """Run ``bake()`` under its own job group; return its job count and
+    the ``SparkStageInfo`` of every stage that ran a task, in stage id
+    order (AQE's later jobs list the stages they skip, which run none)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"bake-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        bake()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds})
+    stages = [tracker.getStageInfo(s) for s in stage_ids]
+    return len(jobs), [s for s in stages if s and s.numCompletedTasks]
+
+
+def test_rechunk_runs_one_exchange_at_session_width(spark, tmp_path, monkeypatch):
+    """The rechunk exchange partitions into an explicit count, so AQE
+    cannot coalesce it: a spill bake with every frame in scratch
+    (KB-scale rows that are costly to combine) runs its combine-write
+    stage with ``spark.sql.shuffle.partitions`` tasks (AQE coalesces a
+    ``groupBy`` exchange of such rows to 1). A reference bake runs 4
+    jobs — the schema partials, the split's shuffle map stage, the
+    combine-write stage and the status count — and none samples range
+    bounds. Each chunk lands in partition (chunk index) mod count."""
+    import pangeo_forge_recipes_spark.transforms as T
+
+    ds = make_ds(nt=40)
+    paths = split_ds_into_files(ds, str(tmp_path / "src"), items_per_file=2)
+    pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    combined = _spy_rechunks(monkeypatch)
+
+    def bake(name, mode, **kwargs):
+        return lambda: store_to_zarr(
+            spark, pattern, str(tmp_path / name), "s.zarr",
+            target_chunks={"time": 3}, rechunk_shuffle=mode, **kwargs,
+        )
+
+    with monkeypatch.context() as m:
+        m.setattr(T, "SPILL_INLINE_BYTES", 0)
+        _, stages = _bake_jobs(spark, bake("spill", "spill"))
+    # schema partials, split, combine-write, status count
+    assert [s.numTasks for s in stages][2:] == [nparts, 1], [
+        (s.stageId, s.numTasks) for s in stages
+    ]
+    assert stages[2].numCompletedTasks == nparts
+    n_jobs, _ = _bake_jobs(spark, bake("reference", "reference", consolidate_coords=False))
+    assert n_jobs == 4
+    for _, df in combined:
+        _assert_one_rechunk_exchange(spark, df)
+    # a chunk's partition is its index mod the count, for every variable
+    # of the chunk: 14 chunks fill 4 partitions 4/4/3/3 (re-running the
+    # reference statuses rewrites the same bytes: its coordinates were
+    # left unconsolidated)
+    import json
+
+    from pyspark.sql import functions as F
+
+    placed = combined[-1][1].select("group_key", F.spark_partition_id().alias("p")).collect()
+    chunks = {}
+    for r in placed:
+        chunks.setdefault(json.loads(r["group_key"].split("|")[0])[0][1], set()).add(r["p"])
+    assert sorted(chunks) == list(range(14))
+    assert all(parts == {t % nparts} for t, parts in chunks.items()), chunks
+    for name in ("spill", "reference"):
+        assert_equal(open_zarr_group(str(tmp_path / name / "s.zarr")), ds)
 
 
 def test_reference_shuffle_with_preprocess_and_shards(spark, tmp_path):
@@ -1028,16 +1129,18 @@ TRANSFORMS = os.path.join(
 # shuffling DataFrame calls -> the top-level functions of transforms.py
 # allowed to make them
 SHUFFLE_OWNERS = {
-    "groupBy": {"rechunk_and_store", "rechunk_refs_and_store"},
-    "repartitionByRange": {"rechunk_and_store", "rechunk_refs_and_store"},
+    "groupBy": set(),
+    "repartitionByRange": set(),
+    "repartitionById": {"_combine_write"},
     "repartition": {"open_urls_with_fsspec"},
 }
 
 
 def test_transforms_shuffles_only_in_the_rechunk():
-    """The README's "one data shuffle": in transforms.py, groupBy and
-    repartitionByRange appear only in the rechunk write stages, and
-    repartition only in open_urls_with_fsspec's concurrency cap."""
+    """The README's "one data shuffle": transforms.py calls neither
+    groupBy nor repartitionByRange; the one rechunk exchange
+    (repartitionById in _combine_write) and open_urls_with_fsspec's
+    concurrency cap (repartition) are its only other shuffles."""
     with open(TRANSFORMS) as f:
         tree = ast.parse(f.read(), TRANSFORMS)
     offenders = []

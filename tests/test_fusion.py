@@ -448,3 +448,92 @@ def test_fused_operator_chain_task_retry_returns_identical_rows(tmp_path):
     assert got["True"] == got["False"]
     for nodes, rows in got["True"].values():
         assert nodes == 1 and len(rows) >= 48
+
+
+WRITE_RETRY_SCRIPT = """
+import hashlib, json, os, sys
+from pangeo_forge_recipes_spark import pattern_from_file_sequence, store_to_zarr
+from pangeo_forge_recipes_spark import transforms as T
+from pangeo_forge_recipes_spark.s3io import configure_spark_s3
+from pangeo_forge_recipes_spark.session import get_spark
+from tests.fake_s3 import FakeS3
+
+src, marker = sys.argv[1:3]
+paths = sorted(os.path.join(src, f) for f in os.listdir(src))
+pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=2, file_type="npz")
+srv = FakeS3()
+flaky = {"bucket": None}
+puts = {}  # (bucket, client address) -> chunk keys stored over that connection
+
+
+def refuse(method, bucket, key, client):
+    # a write task stores its groups one after another over its worker's
+    # keep-alive connection: refuse, once per flaky bake, the first chunk
+    # PUT that follows another one on the same connection
+    if method != "PUT" or bucket != flaky["bucket"] or "/c/" not in key:
+        return None
+    prior = puts.setdefault((bucket, client), [])
+    if not prior:
+        prior.append(key)
+        return None
+    flaky["bucket"] = None
+    with open(os.path.join(marker, bucket), "w") as f:
+        json.dump({"refused": key, "after": prior}, f)
+    return 403  # not retried by the client: the task fails
+
+
+srv.refuse = refuse
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+configure_spark_s3(spark, **srv.client_kwargs())
+inline = T.SPILL_INLINE_BYTES
+got = {}
+for case, mode, T.SPILL_INLINE_BYTES in (
+    ("spill", "spill", inline), ("spill-scratch", "spill", 0), ("reference", "reference", inline),
+):
+    for run in ("clean", "flaky"):
+        bucket = f"{run}-{case}"
+        flaky["bucket"] = bucket if run == "flaky" else None
+        store_to_zarr(
+            spark, pattern, f"s3://{bucket}/t", "store.zarr", target_chunks={"time": 3},
+            rechunk_shuffle=mode,
+        )
+        got.setdefault(case, {})[run] = {
+            key: hashlib.sha256(body).hexdigest()
+            for (b, key), body in list(srv.objects.items()) if b == bucket
+        }
+spark.stop()
+srv.stop()
+print(json.dumps(got))
+"""
+
+
+def test_write_task_retry_after_a_put_writes_identical_bytes(tmp_path):
+    """On ``local[2,2]`` (one retry per task) with the store on a fake S3
+    server, the server refuses one chunk PUT with a non-retryable 403 in
+    each flaky bake: the first chunk PUT that follows another one over
+    the same worker connection, so the combine-write task fails on its
+    first attempt after it has already written at least one group (the
+    marker file lists the chunks stored before the refusal). The retried
+    task rewrites its groups, and the stores of spill (frames inline),
+    spill (every frame through scratch) and reference are
+    sha256-identical to clean bakes."""
+    ds = make_ds(nt=12)
+    split_ds_into_files(ds, str(tmp_path / "src"), items_per_file=2)
+    marker = tmp_path / "failures"
+    marker.mkdir()
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", WRITE_RETRY_SCRIPT, str(tmp_path / "src"), str(marker)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert sorted(os.listdir(marker)) == ["flaky-reference", "flaky-spill", "flaky-spill-scratch"]
+    for name in os.listdir(marker):
+        with open(marker / name) as f:
+            failure = json.load(f)
+        assert "/c/" in failure["refused"] and failure["after"], failure
+    for case, runs in got.items():
+        assert runs["flaky"] == runs["clean"], case
+        assert sum("/c/" in key for key in runs["clean"]) > 5, case
+        assert not any(".spill/" in key for key in runs["clean"]), case
