@@ -77,7 +77,7 @@ from .rechunking import combine_fragments, group_key_to_json, split_fragment
 from .session import local_df
 from .storage import CacheFSSpecTarget, FSSpecTarget, open_output_stream, url_range_get
 from .types import CombineOp, Dimension, Index, augment_index_with_start_stop
-from .zarrio import consolidate_metadata as _consolidate_metadata
+from .zarrio import consolidate_metadata as _consolidate_metadata, open_group
 
 MANIFEST_SCHEMA = "index string, url string"
 SPLIT_SCHEMA = (
@@ -408,10 +408,7 @@ def _pieces(
     chunk grid, so re-running it yields the same keys (what the reference
     shuffle relies on)."""
     ds = open_with_ndset(
-        url,
-        file_type=FileType(file_type),
-        load=load,
-        xarray_open_kwargs=xarray_open_kwargs,
+        url, file_type=FileType(file_type), load=load, xarray_open_kwargs=xarray_open_kwargs
     )
     index = Index.from_json(idx_json)
     if preprocess is not None:
@@ -557,25 +554,69 @@ def open_split_fragments_df(
     return map_batches(df, open_split, SPLIT_SCHEMA)
 
 
+def _target_grid(
+    store_path: str, written: Optional[Dict[str, Optional[int]]] = None
+) -> Dict[str, Tuple[int, int]]:
+    """``{dim: (first, count)}`` of the target chunk grid, read from the
+    store's array metadata on the driver. Without ``written``: every dim
+    of the store, from chunk 0. With it (each chunked dim mapped to the
+    size of the data being written, or None for all of it): only those
+    dims, from the chunk that holds the data's first element, since an
+    append writes its data at the end of the dim."""
+    grid: Dict[str, Tuple[int, int]] = {}
+    group = open_group(store_path)
+    for name in group.array_names():
+        arr = group[name]
+        dims = arr.dimension_names or ()
+        for dim, size, chunk, n in zip(dims, arr.shape, arr.chunks, arr.nchunks):
+            if written is not None and dim not in written:
+                continue
+            first = (size - ((written or {}).get(dim) or size)) // chunk
+            if n - first > grid.get(dim, (0, 0))[1]:
+                grid[dim] = (first, n - first)
+    return grid
+
+
 def _combine_write(
     df: DataFrame, store_path: str,
     fragments: Callable[[pa.RecordBatch], Iterator[Tuple[Index, NDDataset]]],
+    written: Optional[Dict[str, Optional[int]]] = None,
 ) -> DataFrame:
     """The one rechunk exchange and combine-write loop of both shuffled
-    modes. A row goes to partition (sum of the indices of its target
-    chunk, the ``[[dim, index], ...]`` before the first ``|`` of
-    ``group_key``) mod ``spark.sql.shuffle.partitions``: an explicit
-    count AQE does not coalesce, so small rows that are costly to
-    combine still run at the session's width, and chunks spread
-    round-robin with no sampling job (a hash put 8 chunks 1/2/3/2 on 4
-    tasks). Sorted by ``group_key``, the variables of one chunk, which
-    read the same sources, run consecutively in one task; the loop turns
-    each row into its fragment (``fragments``), gathers a group's rows
-    and writes it with :func:`_write_group`. Only status rows return."""
+    modes. A row's target chunk (``group_key`` before the first ``|``)
+    gets its row-major number in :func:`_target_grid`, which picks one of
+    ``spark.sql.shuffle.partitions``: an explicit count AQE does not
+    coalesce, and no job samples bounds. ``written=None`` (spill: rows
+    carry their bytes) deals chunks out one by one, balanced on any grid
+    or append; with ``written`` (reference: rows re-open sources) each
+    task takes an equal contiguous run, so the chunks a source spans meet
+    in one task's open cache. A task runs its rows in (chunk number,
+    ``group_key``) order; the loop makes each row a fragment
+    (``fragments``), gathers a group and writes it with
+    :func:`_write_group`. Spark cuts input batches at ``maxRecordsPerBatch``
+    rows or ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB), and a
+    group's inline frames are views into their batches, so a worker holds
+    about one target chunk plus two batches."""
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    grid = _target_grid(store_path, written)
+    first, count = (
+        F.create_map(*(F.lit(v) for d, fn in grid.items() for v in (d, fn[i])))
+        .cast("map<string,bigint>") for i in (0, 1)
+    )
     chunk = F.from_json(F.substring_index("group_key", "|", 1), "array<array<string>>")
-    place = F.aggregate(chunk, F.lit(0), lambda acc, dim: acc + dim[1].cast("int"))
-    exchanged = df.repartitionById(nparts, place).sortWithinPartitions("group_key")
+    number = F.aggregate(
+        chunk, F.lit(0).cast("long"),
+        lambda acc, dim: acc * F.coalesce(count[dim[0]], F.lit(1))
+        + dim[1].cast("long") - F.coalesce(first[dim[0]], F.lit(0)),
+    )
+    slot = F.col("chunk")
+    if written is not None:
+        slot = F.floor(slot * nparts / int(np.prod([n for _, n in grid.values()])))
+    exchanged = (
+        df.withColumn("chunk", number)
+        .repartitionById(nparts, F.pmod(slot, F.lit(nparts)).cast("int"))
+        .sortWithinPartitions("chunk", "group_key")
+    )
 
     def combine_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         key, frags, done = None, [], []
@@ -652,10 +693,10 @@ def open_split_refs_df(
 
 
 # per-worker-process LRU of opened+preprocessed sources for the reference
-# write path: a task writes its groups in ``group_key`` order, so the
-# variables of one chunk, and the consecutive groups that straddle the
-# same source files, revisit an open source. Two entries bound memory at
-# two source files per worker; Spark Python workers are single-threaded.
+# write path: a task writes one contiguous run of target chunks in chunk
+# order, so the variables of one chunk, and the neighbouring chunks that
+# straddle the same source file, revisit an open source. Two entries bound
+# memory at two source files per worker; Python workers are single-threaded.
 _REFS_OPEN_CACHE: "OrderedDict[Tuple[str, str, str], Dict[str, tuple]]" = OrderedDict()
 _REFS_OPEN_CACHE_CAP = 2
 
@@ -719,7 +760,9 @@ def rechunk_refs_and_store(
         for gk, idx_json, url in _rows(batch, "group_key", "index", "url"):
             yield open_pieces(url, idx_json)[gk]
 
-    return _combine_write(df_refs, target_store_path, fragments)
+    chunked = determine_target_chunks(schema, target_chunks, False) if schema else target_chunks
+    written = {d: (schema or {"dims": {}})["dims"].get(d) for d in chunked or {}}
+    return _combine_write(df_refs, target_store_path, fragments, written)
 
 
 def open_split_store_df(
@@ -932,8 +975,7 @@ def store_to_zarr(
     # Open | Preprocessor | StoreToZarr→DetermineSchema) — schema-only
     # output, so fragment payloads never cross Arrow twice
     schemas = read_schemas_df(
-        manifest, file_type, xarray_open_kwargs=xarray_open_kwargs,
-        preprocess=preprocess,
+        manifest, file_type, xarray_open_kwargs=xarray_open_kwargs, preprocess=preprocess
     )
     schema = determine_schema(schemas, pattern.combine_dim_keys)
 
@@ -957,14 +999,8 @@ def store_to_zarr(
 
     # driver-side, metadata-only target init
     schema_to_zarr(
-        schema,
-        store_path,
-        target_chunks=target_chunks,
-        attrs=attrs,
-        append_dim=append_dim,
-        compressor=compressor,
-        target_shards=target_shards,
-        zarr_format=zarr_format,
+        schema, store_path, target_chunks=target_chunks, attrs=attrs, append_dim=append_dim,
+        compressor=compressor, target_shards=target_shards, zarr_format=zarr_format,
     )
 
     # pass 2: data — open/preprocess/split fused into one Arrow stage so
@@ -973,45 +1009,18 @@ def store_to_zarr(
     indexed = index_items(manifest, schema, append_offset=append_offset)
     scratch_root = store_path.rstrip("/") + ".spill"
     shuffled = not _chunks_aligned_with_files(schema, write_chunks, append_offset)
+    opts = dict(
+        target_chunks=write_chunks, schema=schema, preprocess=preprocess,
+        xarray_open_kwargs=xarray_open_kwargs,
+    )
     if shuffled and rechunk_shuffle == "reference":
-        refs = open_split_refs_df(
-            indexed,
-            file_type,
-            target_chunks=write_chunks,
-            schema=schema,
-            preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
-        statuses = rechunk_refs_and_store(
-            refs,
-            store_path,
-            file_type=file_type,
-            target_chunks=write_chunks,
-            schema=schema,
-            preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
+        refs = open_split_refs_df(indexed, file_type, **opts)
+        statuses = rechunk_refs_and_store(refs, store_path, file_type=file_type, **opts)
     elif shuffled:
-        split = open_split_fragments_df(
-            indexed,
-            file_type,
-            target_chunks=write_chunks,
-            schema=schema,
-            preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-            scratch_root=scratch_root,
-        )
+        split = open_split_fragments_df(indexed, file_type, scratch_root=scratch_root, **opts)
         statuses = rechunk_and_store(split, store_path)
     else:
-        statuses = open_split_store_df(
-            indexed,
-            store_path,
-            file_type,
-            target_chunks=write_chunks,
-            schema=schema,
-            preprocess=preprocess,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
+        statuses = open_split_store_df(indexed, store_path, file_type, **opts)
     try:
         agg = statuses.agg(
             F.count("*").alias("n"),
@@ -1030,11 +1039,8 @@ def store_to_zarr(
         _consolidate_metadata(store_path)
 
     return StoreResult(
-        path=store_path,
-        schema=schema,
-        n_chunks_written=int(agg["n"]),
-        bytes_written=int(agg["b"]),
-        shuffled=shuffled,
+        path=store_path, schema=schema, n_chunks_written=int(agg["n"]),
+        bytes_written=int(agg["b"]), shuffled=shuffled,
     )
 
 
@@ -1198,12 +1204,9 @@ def write_combined_reference(
     manifest = manifest_df(spark, pattern)
     refs_df = open_with_kerchunk_df(
         manifest, pattern.file_type, concat_dims=concat_dims,
-        inline_threshold=inline_threshold,
-        kerchunk_open_kwargs=kerchunk_open_kwargs,
+        inline_threshold=inline_threshold, kerchunk_open_kwargs=kerchunk_open_kwargs,
     )
-    combined = combine_references_df(
-        refs_df, concat_dims, max_refs_per_merge, preprocess=preprocess
-    )
+    combined = combine_references_df(refs_df, concat_dims, max_refs_per_merge, preprocess=preprocess)
 
     outpath = os.path.join(target.root_path, store_name, output_file_name)
     ext = os.path.splitext(output_file_name)[-1]

@@ -705,6 +705,20 @@ def _bake_jobs(spark, bake):
     return len(jobs), [s for s in stages if s and s.numCompletedTasks]
 
 
+def _placement(statuses) -> dict:
+    """Re-run a rechunk's statuses and map each target chunk, as a tuple
+    of ``(dim, index)``, to the partitions its groups ran in."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    placed = {}
+    for r in statuses.select("group_key", F.spark_partition_id().alias("p")).collect():
+        chunk = tuple(tuple(d) for d in json.loads(r["group_key"].split("|")[0]))
+        placed.setdefault(chunk, set()).add(r["p"])
+    return placed
+
+
 def test_rechunk_runs_one_exchange_at_session_width(spark, tmp_path, monkeypatch):
     """The rechunk exchange partitions into an explicit count, so AQE
     cannot coalesce it: a spill bake with every frame in scratch
@@ -713,7 +727,7 @@ def test_rechunk_runs_one_exchange_at_session_width(spark, tmp_path, monkeypatch
     ``groupBy`` exchange of such rows to 1). A reference bake runs 4
     jobs — the schema partials, the split's shuffle map stage, the
     combine-write stage and the status count — and none samples range
-    bounds. Each chunk lands in partition (chunk index) mod count."""
+    bounds."""
     import pangeo_forge_recipes_spark.transforms as T
 
     ds = make_ds(nt=40)
@@ -740,22 +754,69 @@ def test_rechunk_runs_one_exchange_at_session_width(spark, tmp_path, monkeypatch
     assert n_jobs == 4
     for _, df in combined:
         _assert_one_rechunk_exchange(spark, df)
-    # a chunk's partition is its index mod the count, for every variable
-    # of the chunk: 14 chunks fill 4 partitions 4/4/3/3 (re-running the
-    # reference statuses rewrites the same bytes: its coordinates were
-    # left unconsolidated)
-    import json
-
-    from pyspark.sql import functions as F
-
-    placed = combined[-1][1].select("group_key", F.spark_partition_id().alias("p")).collect()
-    chunks = {}
-    for r in placed:
-        chunks.setdefault(json.loads(r["group_key"].split("|")[0])[0][1], set()).add(r["p"])
-    assert sorted(chunks) == list(range(14))
-    assert all(parts == {t % nparts} for t, parts in chunks.items()), chunks
+    # the reference run writes 14 chunks in equal contiguous runs, every
+    # variable of a chunk with it (re-running its statuses rewrites the
+    # same bytes: its coordinates were left unconsolidated)
+    placed = _placement(combined[-1][1])
+    assert sorted(placed) == [(("time", t),) for t in range(14)]
+    assert all(parts == {t * nparts // 14} for ((_, t),), parts in placed.items()), placed
     for name in ("spill", "reference"):
         assert_equal(open_zarr_group(str(tmp_path / name / "s.zarr")), ds)
+
+
+def test_rechunk_placement_balances_grids_and_keeps_file_runs(spark, tmp_path, monkeypatch):
+    """Where each mode places its target chunks on 4 partitions. Spill
+    rows carry their bytes, so spill deals the row-major chunk numbers
+    out one by one: a 2x2 (lat, time) grid fills every partition once,
+    and the 4 chunks an append adds to a 10-chunk store land on 4
+    partitions. Reference rows re-open their sources, so reference splits
+    the chunks it writes into equal contiguous runs: the 3 or 4 three-step
+    chunks each 8-step file spans run in at most 2 tasks (dealt out one
+    by one, they would open the file in 3 or 4),
+    the 2x2 grid again fills every partition once, and the appended
+    chunks, numbered from the first one written, fill all 4."""
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert nparts == 4
+    combined = _spy_rechunks(monkeypatch)
+
+    def bake(name, ds, per, target, mode, **kwargs):
+        src = str(tmp_path / name / "src")
+        paths = split_ds_into_files(ds, src, items_per_file=per)
+        pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=per, file_type="npz")
+        store_to_zarr(
+            spark, pattern, str(tmp_path / name), "s.zarr", target_chunks=target,
+            rechunk_shuffle=mode, consolidate_coords=False, **kwargs,
+        )
+        return _placement(combined[-1][1])
+
+    ds = make_ds(nt=32)
+    runs = bake("runs", ds, 8, {"time": 3}, "reference")
+    assert sorted(runs) == [(("time", t),) for t in range(11)]
+    assert all(parts == {t * 4 // 11} for ((_, t),), parts in runs.items()), runs
+    for f in range(4):  # the 3-4 chunks a file spans run in at most 2 tasks
+        spanned = range(f * 8 // 3, (f * 8 + 7) // 3 + 1)
+        assert len(set().union(*(runs[(("time", t),)] for t in spanned))) <= 2, (f, runs)
+    assert_equal(open_zarr_group(str(tmp_path / "runs" / "s.zarr")), ds)
+    ds = make_ds(nt=10)
+    for mode in ("spill", "reference"):
+        grid = bake(f"grid-{mode}", ds, 2, {"time": 5, "lat": 9}, mode)
+        assert len(grid) == 4 and sorted(p for ps in grid.values() for p in ps) == [0, 1, 2, 3]
+        assert_equal(open_zarr_group(str(tmp_path / f"grid-{mode}" / "s.zarr")), ds)
+    whole = make_ds(nt=28)
+    for mode in ("spill", "reference"):
+        name = f"append-{mode}"
+        bake(name, whole.isel(time=slice(0, 20)), 1, {"time": 2}, mode)
+        src = str(tmp_path / name / "more")
+        paths = split_ds_into_files(whole.isel(time=slice(20, 28)), src, items_per_file=1)
+        pattern = pattern_from_file_sequence(paths, "time", nitems_per_file=1, file_type="npz")
+        store_to_zarr(
+            spark, pattern, str(tmp_path / name), "s.zarr", target_chunks={"time": 2},
+            rechunk_shuffle=mode, consolidate_coords=False, append_dim="time",
+        )
+        added = _placement(combined[-1][1])
+        assert sorted(added) == [(("time", t),) for t in range(10, 14)], added
+        assert sorted(p for ps in added.values() for p in ps) == [0, 1, 2, 3], (mode, added)
+        assert_equal(open_zarr_group(str(tmp_path / name / "s.zarr")), whole)
 
 
 def test_reference_shuffle_with_preprocess_and_shards(spark, tmp_path):
