@@ -48,10 +48,18 @@ TABLES = (
 ).split()
 
 
-# view registration is ~1s of driver work (10 parquet footer reads); every
-# query callable calls _register, so memoize per (session, sf_dir)
-_REGISTERED: dict[int, str] = {}
+# Registering a directory reads its parquet footers and caches the spread
+# tables: ~1 s of driver work and four Spark jobs for a documents +
+# embeddings corpus, and every query callable calls _register. The memo is
+# keyed on (id(spark), abspath(sf_dir), (table, st_mtime_ns, st_size) of each
+# table file present), so a rewritten file re-registers. A hit also needs
+# tableExists on a table that directory registered, which guards against
+# id() reuse after an old session is garbage-collected. _REGISTER_LOCK makes
+# registration single-flight: concurrent first calls would otherwise each
+# unpersist the cache another thread's query is reading.
+_REGISTERED: dict[int, tuple] = {}
 _CACHED: dict[int, list] = {}
+_REGISTER_LOCK = threading.RLock()
 
 # the driver fixtures are written as ONE parquet row group per table, so a
 # plain scan is one unsplittable task no matter the cluster size. Spread the
@@ -62,24 +70,41 @@ _SPREAD_TABLES = {"lineitem", "orders", "events", "customer", "part",
                   "documents", "embeddings"}
 
 
+def _table_files(sf_dir: str) -> tuple:
+    """``(table, st_mtime_ns, st_size)`` of each ``TABLES`` file present in
+    ``sf_dir``, in ``TABLES`` order."""
+    out = []
+    for t in TABLES:
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        except FileNotFoundError:
+            continue
+        out.append((t, st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
 def _register(spark: SparkSession, sf_dir: str) -> None:
-    # the tableExists probe guards against id() reuse after an old session
-    # is garbage-collected
-    if _REGISTERED.get(id(spark)) == os.path.abspath(sf_dir) and spark.catalog.tableExists(
-        "lineitem"
-    ):
-        return
-    _unregister(spark)
+    """Register each table file of ``sf_dir`` as a temp view of ``spark``,
+    the ``_SPREAD_TABLES`` as cached spread copies. A no-op when ``spark``
+    last registered this directory with the same files; otherwise what the
+    session registered before is unpersisted first (``_unregister``)."""
     # the testdata parquet uses TIMESTAMP(NANOS); Spark needs the legacy
     # switch, and NTZ literals keep timestamp comparisons timezone-free
-    # (matching DuckDB's naive timestamps)
+    # (matching DuckDB's naive timestamps). Set on every call, so a query
+    # types the same whether or not the memo hits.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
-    ts_cols = {"orders": ["o_orderdate"], "lineitem": ["l_shipdate"], "events": ["ts"]}
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
+    with _REGISTER_LOCK:
+        files = _table_files(sf_dir)
+        key = (os.path.abspath(sf_dir), files)
+        if files and _REGISTERED.get(id(spark)) == key and spark.catalog.tableExists(
+            files[0][0]
+        ):
+            return
+        _unregister(spark)
+        ts_cols = {"orders": ["o_orderdate"], "lineitem": ["l_shipdate"], "events": ["ts"]}
+        for t, _, _ in files:
+            df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
             for c in ts_cols.get(t, []):
                 if dict(df.dtypes).get(c) == "bigint":
                     # nanosAsLong read the column as raw int64 nanoseconds
@@ -98,18 +123,19 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
                 df = df.repartition(width).cache()
                 _CACHED.setdefault(id(spark), []).append(df)
             df.createOrReplaceTempView(t)
-    _REGISTERED[id(spark)] = os.path.abspath(sf_dir)
+        _REGISTERED[id(spark)] = key
 
 
 def _unregister(spark: SparkSession) -> None:
     """Unpersist what ``_register`` and the MinHash pairs cached for
     ``spark`` and forget its registration; the next ``_register`` reads
     and caches the tables afresh."""
-    for old in _CACHED.pop(id(spark), []):
-        old.unpersist()
-    for k in [k for k in _MINHASH_PAIRS if k[0] == id(spark)]:
-        _MINHASH_PAIRS.pop(k).unpersist()
-    _REGISTERED.pop(id(spark), None)
+    with _REGISTER_LOCK:
+        for old in _CACHED.pop(id(spark), []):
+            old.unpersist()
+        for k in [k for k in _MINHASH_PAIRS if k[0] == id(spark)]:
+            _MINHASH_PAIRS.pop(k).unpersist()
+        _REGISTERED.pop(id(spark), None)
 
 
 def _scratch(prefix: str) -> str:
@@ -1259,10 +1285,11 @@ def _minhash_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (id(spark), os.path.abspath(sf_dir))
     # lock so concurrent bench threads build it once
     with _MINHASH_PAIRS_LOCK:
-        cached = _MINHASH_PAIRS.get(key)
-        if cached is not None and _REGISTERED.get(id(spark)) == key[1]:
-            return cached
+        # a registration miss (new session, rewritten files) drops the pairs
         _register(spark, sf_dir)
+        cached = _MINHASH_PAIRS.get(key)
+        if cached is not None:
+            return cached
         pairs = minhash_dedup(
             spark.table("documents"), threshold=_MINHASH_THRESHOLD
         ).persist()
